@@ -985,83 +985,97 @@ def _vocab_mapped(df, col: str, vocab, unk: str):
     )
 
 
-def lm_perplexity(
-    raw, ref, id_col: str, text_col: str,
+def _gram_cols(n: int) -> list[str]:
+    """Column names of an n-gram row, oldest context first:
+    (p{n-1}, …, p1, w) — a level-k table keys on the LAST k of an
+    order-n row's columns, so every backoff probe is a plain USING
+    join."""
+    return [f"p{i}" for i in range(n - 1, 0, -1)] + ["w"]
+
+
+def _grams(df, n: int, key: list[str], text_col: str, tokenizer,
+           outer: bool = False):
+    """(key…, p{n-1}, …, p1, w): one row per run of n consecutive
+    tokens, via arrays_zip over n shifted slices — ALL native
+    expressions. The lambda-HOF form (transform + element_at) evaluated
+    interpreted per element AND re-ran the embedded tokenizer regex
+    split per element_at (no common-subexpression elimination inside
+    HOF lambdas): measured 7.3 s → 0.68 s at sf0.1 on the raw corpus,
+    same rows. ``outer``: keep a doc with < n tokens as one all-NULL
+    placeholder row (explode_outer of the NULL array), so every doc
+    reaches a per-key aggregate without a join-back."""
+    t = tokenizer(F.col(text_col))
+    sz = F.size(t)
+    width = sz - (n - 1)
+    zipped = F.when(
+        sz >= n, F.arrays_zip(*[F.slice(t, i + 1, width) for i in range(n)])
+    )
+    ex = F.explode_outer(zipped) if outer else F.explode(zipped)
+    return df.select(*key, ex.alias("g")).select(
+        *key, *[F.col("g")[str(i)].alias(c) for i, c in enumerate(_gram_cols(n))]
+    )
+
+
+def lm_fit(
+    ref, text_col: str, order: int = 2,
     vocab_size: int = 1024, quant: int = 10_000,
     alpha_num: int = 2, alpha_den: int = 5, unk: str = "<unk>",
     tokenizer=tokens,
 ):
-    """CCNet-style n-gram LM scoring (Wenzek et al. 2019,
-    arXiv:1911.00359 §4.3 "LM filtering"): score every RAW document by
-    its total negative log-likelihood under a bigram LM with stupid
-    backoff (Brants et al. 2007) fit on the REF corpus — the
-    literature's quality-selection axis next to DSIR's
-    importance-vs-target (`dsir_scores`): DSIR asks "does this look
-    like the target?", perplexity asks "is this fluent under a
-    reference LM?" (CCNet, LLaMA, and RedPajama all gate on it).
+    """Fit an order-n n-gram LM with stupid backoff (Brants et al.
+    2007, "Large Language Models in Machine Translation" §4 — the
+    distributed web-scale LM recipe: relative frequencies, no
+    normalization, a fixed backoff penalty α per level) on the REF
+    corpus. Returns (vocab, tables): ``tables[k-1]`` is level k's cost
+    table keyed by the last k `_gram_cols`, cost column ``q{k}``.
 
     Model (everything integer until a single ln per TABLE row, the
     `dsir_scores` lr discipline — never a float op per token):
       vocab  = top ``vocab_size`` ref unigrams by (count desc, word);
                every other token maps to ``unk``
-      seen   (prev,w) in ref:  p = c2(prev,w) / c1(prev)
-      unseen (backoff):        p = α · (c1(w)+1) / (N + V + 1),
-               α = alpha_num/alpha_den (stupid backoff's fixed penalty;
-               add-1 on the vocab-closed unigram so p > 0 always)
-      per-transition cost q = round(-ln p · quant)  (exact BIGINT; the
-               ln argument is an exact-integer ratio both engines form
-               bit-identically)
+      level k ≥ 2, seen k-gram:  S = α^(n−k) · c_k / c_{k−1}(context)
+      level 1 (any word):        S = α^(n−1) · (c1(w)+1) / (N + V + 1)
+      α = alpha_num/alpha_den; add-1 on the vocab-closed unigram keeps
+      S > 0; context counts are the plain (k−1)-gram counts — stupid
+      backoff is deliberately unnormalized, so the document-edge count
+      mismatch the paper accepts is accepted here too.
+      cost q_k = round(−ln S · quant), exact BIGINT: α_num^(n−k)·c_k and
+      α_den^(n−k)·c_{k−1} are formed in integers and each cast to double
+      once, so every ln argument is an exact-integer ratio both engines
+      form bit-identically.
+    The bigram (n=2) is seen-bigram, else α·unigram; the trigram adds
+    the seen-trigram level on top. ``tables[0]`` also carries ``q_uni``,
+    the same unigram cost at α⁰ — the context-free add-1 baseline
+    DoReMi's excess loss is measured against.
 
-    Returns (id, n_trans, nll_q) for EVERY raw document: n_trans =
-    max(len(toks)-1, 0) scored transitions, nll_q = Σ q as BIGINT
-    (mean NLL in nats = nll_q / (quant·n_trans)). Docs with < 2 tokens
-    score (0, 0).
+    Scale: the tables are MODEL-sized — ≤ V+1 unigrams, ≤ observed
+    vocab-closed k-grams — and broadcast at scoring; fitting is one
+    unigram pass (feeding vocab, c1 and N) plus one explode+count pass
+    per order over the ref corpus, each map-side partial. Eager jobs:
+    the unigram pass and vocab are materialized (blocks, not a
+    CacheManager pin — the minhash-shingle discipline), and so is each
+    c_k with 2 ≤ k < n, which feeds two tables. At Brants-scale corpora
+    where a k-gram table outgrows a broadcast, the paper's answer is
+    sharding the probe by n-gram hash — here that is the same equi-join
+    without the broadcast hint, which AQE picks automatically when the
+    build side stops fitting.
 
-    Scale: the LM tables are MODEL-sized, not corpus-sized — vocab ≤ V
-    rows, unigram table ≤ V+1, bigram table ≤ observed (vocab-closed)
-    bigrams — all broadcast; fitting is one explode+count pass over the
-    ref corpus and scoring is one explode + two broadcast probes + a
-    per-doc partial-aggregated sum over the raw corpus. No window, no
-    global sort, no corpus-keyed shuffle except the final per-doc agg
-    (r12: the every-doc contract rides the scoring explode itself via
-    ``explode_outer`` — short docs keep a placeholder row excluded from
-    the sums by a pre-vocab-mapping flag — instead of the former
-    ``raw.select(doc).distinct()`` + left-join-back, which cost a second
-    corpus-keyed shuffle plus a corpus-sized sort-merge join).
+    ``tokenizer``: fit/score pairing contract (see `tokens_unicode`):
+    fit and score through the one tokenizer (OOV→unk keeps the vocab
+    closed under either)."""
+    spark = ref.sparkSession
 
-    ``tokenizer``: `tokens` (ASCII default) or `tokens_unicode` — the
-    fit/score pairing contract (see `tokens_unicode`): the ref LM is
-    FIT and the raw corpus SCORED through the one tokenizer passed
-    here (OOV→unk keeps the vocab closed under either)."""
-    spark = raw.sparkSession
+    def cost(num, den, e: int):
+        return F.round(
+            -F.log(
+                (num * alpha_num**e).cast("double")
+                / (den * alpha_den**e).cast("double")
+            )
+            * quant
+        ).cast("long")
 
-    def transitions(df, outer: bool = False):
-        # (prev, w) pairs via arrays_zip over two shifted slices — ALL
-        # native expressions. The lambda-HOF form (transform + 2×
-        # element_at) evaluated interpreted per element AND re-ran the
-        # embedded tokens() regex split per element_at (no
-        # common-subexpression elimination inside HOF lambdas):
-        # measured 7.3 s → 0.68 s at sf0.1 on the raw corpus, same rows.
-        # ``outer``: keep docs with < 2 tokens as one (doc, NULL, NULL)
-        # placeholder row (explode_outer of the NULL pair array), so
-        # every raw doc reaches the per-doc aggregate without a
-        # join-back.
-        t = tokenizer(F.col(text_col))
-        n = F.size(t)
-        pairs = F.when(n >= 2, F.arrays_zip(F.slice(t, 1, n - 1), F.slice(t, 2, n - 1)))
-        ex = F.explode_outer(pairs) if outer else F.explode(pairs)
-        return df.select(
-            F.col(id_col).alias("doc"), ex.alias("p")
-        ).select(
-            "doc",
-            F.col("p")["0"].alias("prev"),
-            F.col("p")["1"].alias("w"),
-        )
-
-    # fit: one unigram pass over ref feeds vocab, c1, and N (blocks,
-    # not a CacheManager pin — the minhash-shingle discipline)
     ref_uni = ref.select(
-        F.col(id_col).alias("doc"), F.explode(tokenizer(F.col(text_col))).alias("w")
+        F.explode(tokenizer(F.col(text_col))).alias("w")
     ).localCheckpoint()
     vocab = (
         ref_uni.groupBy("w").agg(F.count(F.lit(1)).alias("n"))
@@ -1069,221 +1083,88 @@ def lm_perplexity(
         .select("w").localCheckpoint()
     )
     tot = ref_uni.agg(F.count(F.lit(1)).alias("n_tot"))
-    c1 = (
-        _vocab_mapped(ref_uni.select("w"), "w", vocab, unk)
-        .groupBy("w").agg(F.count(F.lit(1)).alias("n1"))
-    )
-    c2 = (
-        _vocab_mapped(
-            _vocab_mapped(transitions(ref), "prev", vocab, unk), "w", vocab, unk
-        )
-        .groupBy("prev", "w").agg(F.count(F.lit(1)).alias("n2"))
-    )
-    q2 = c2.join(c1.select(F.col("w").alias("prev"), "n1"), "prev").select(
-        "prev", "w",
-        F.round(-F.log(F.col("n2").cast("double") / F.col("n1")) * quant)
-        .cast("long").alias("q"),
-    )
+    counts = [
+        _vocab_mapped(ref_uni, "w", vocab, unk)
+        .groupBy("w").agg(F.count(F.lit(1)).alias("n"))
+    ]
+    for k in range(2, order + 1):
+        g = _grams(ref, k, [], text_col, tokenizer)
+        for c in _gram_cols(k):
+            g = _vocab_mapped(g, c, vocab, unk)
+        ck = g.groupBy(*_gram_cols(k)).agg(F.count(F.lit(1)).alias("n"))
+        counts.append(ck.localCheckpoint() if k < order else ck)
     dom = vocab.unionByName(spark.createDataFrame([(unk,)], "w string"))
-    q1 = (
-        dom.join(c1, "w", "left")
+    add1 = F.coalesce("n", F.lit(0)) + 1
+    denom = F.col("n_tot") + vocab_size + 1
+    tables = [
+        dom.join(counts[0], "w", "left")
         .crossJoin(F.broadcast(tot))
-        .select(
-            "w",
-            F.round(
-                -F.log(
-                    ((F.coalesce("n1", F.lit(0)) + 1) * alpha_num).cast("double")
-                    / ((F.col("n_tot") + vocab_size + 1) * alpha_den).cast("double")
-                )
-                * quant
-            ).cast("long").alias("q"),
+        .select("w", cost(add1, denom, order - 1).alias("q1"),
+                cost(add1, denom, 0).alias("q_uni"))
+    ]
+    for k in range(2, order + 1):
+        cols = _gram_cols(k)
+        ctx = counts[k - 2].select(
+            *[F.col(a).alias(b) for a, b in zip(_gram_cols(k - 1), cols[:-1])],
+            F.col("n").alias("n_ctx"),
         )
-    )
-    # score: transitions probe the seen-bigram table, fall back to the
-    # per-word backoff (both broadcast), then one per-doc integer sum.
-    # The "(0, 0) for every short/empty doc" contract rides the same
-    # explode (outer) — the __real flag is captured BEFORE vocab
-    # mapping, which would otherwise rewrite the placeholder's NULLs to
-    # unk and score them.
-    rt = _vocab_mapped(
-        _vocab_mapped(
-            transitions(raw, outer=True).withColumn(
-                "__real", F.col("w").isNotNull()
-            ),
-            "prev", vocab, unk,
-        ),
-        "w", vocab, unk,
-    )
-    real = F.col("__real")
-    return (
-        rt.join(F.broadcast(q2.withColumnRenamed("q", "q_bi")), ["prev", "w"], "left")
-        .join(F.broadcast(q1.withColumnRenamed("q", "q_uni")), "w", "left")
-        .groupBy("doc")
-        .agg(
-            F.sum(F.when(real, 1).otherwise(0)).cast("long").alias("n_trans"),
-            F.sum(F.when(real, F.coalesce("q_bi", "q_uni")).otherwise(0))
-            .cast("long").alias("nll_q"),
+        tables.append(
+            counts[k - 1].join(ctx, cols[:-1])
+            .select(*cols, cost(F.col("n"), F.col("n_ctx"), order - k).alias(f"q{k}"))
         )
-        .select(F.col("doc").alias(id_col), "n_trans", "nll_q")
-    )
+    return vocab, tables
 
 
-def lm_perplexity3(
+def lm_perplexity(
     raw, ref, id_col: str, text_col: str,
     vocab_size: int = 1024, quant: int = 10_000,
     alpha_num: int = 2, alpha_den: int = 5, unk: str = "<unk>",
-    tokenizer=tokens,
+    tokenizer=tokens, order: int = 2,
 ):
-    """Trigram LM scoring with FULL multi-order stupid backoff (Brants
-    et al. 2007, "Large Language Models in Machine Translation" §4 —
-    the distributed web-scale LM recipe: relative frequencies, no
-    normalization, a fixed backoff penalty α per level). `lm_perplexity`
-    is the bigram→unigram two-level instance; this is the paper's
-    three-level chain:
-
-      seen trigram:   S(w|a,b) = c3(a,b,w) / c2(a,b)
-      else bigram:    S(w|b)   = α · c2(b,w) / c1(b)
-      else unigram:   S(w)     = α² · (c1(w)+1) / (N + V + 1)
-
-    (α = alpha_num/alpha_den; add-1 on the vocab-closed unigram keeps
-    S > 0; context counts are the plain (k−1)-gram counts — stupid
-    backoff scores are deliberately unnormalized, so the document-edge
-    count mismatch the paper accepts is accepted here too.)
-    Per-transition cost q = round(−ln S · quant) exact BIGINT; every ln
-    argument is an exact-integer ratio both engines form bit-identically
-    (the `lm_perplexity`/`dsir_scores` discipline).
+    """CCNet-style n-gram LM scoring (Wenzek et al. 2019,
+    arXiv:1911.00359 §4.3 "LM filtering"): score every RAW document by
+    its total negative log-likelihood under the order-n stupid-backoff
+    LM `lm_fit` builds on the REF corpus (bigram by default;
+    ``order=3`` is the full trigram→bigram→unigram chain) — the
+    literature's quality-selection axis next to DSIR's
+    importance-vs-target (`dsir_scores`): DSIR asks "does this look
+    like the target?", perplexity asks "is this fluent under a
+    reference LM?" (CCNet, LLaMA, and RedPajama all gate on it). Each
+    scored transition pays the deepest level whose k-gram was seen.
 
     Returns (id, n_trans, nll_q) for EVERY raw document: n_trans =
-    max(len(toks)−2, 0) scored trigram transitions; docs with < 3
-    tokens score (0, 0).
+    max(len(toks)−(n−1), 0) scored transitions, nll_q = Σ q as BIGINT
+    (mean NLL in nats = nll_q / (quant·n_trans)). Docs with < n tokens
+    score (0, 0).
 
-    Scale: identical shape to `lm_perplexity` one order up — the LM
-    tables stay MODEL-sized (vocab-closed: ≤ observed vocab-mapped
-    trigrams/bigrams, ≤ V+1 unigrams), all broadcast; fitting is three
-    explode+count passes over the ref corpus (each map-side partial),
-    scoring one explode + three broadcast probes + a per-doc partial
-    agg. At Brants-scale corpora where the trigram table outgrows a
-    broadcast, the paper's answer is sharding the probe by n-gram hash
-    — here that is the same equi-join without the broadcast hint, which
-    AQE picks automatically when the build side stops fitting.
+    Scale: one explode + n broadcast probes + a per-doc
+    partial-aggregated sum over the raw corpus. No window, no global
+    sort, no corpus-keyed shuffle except the final per-doc agg. The
+    every-doc contract rides the scoring explode itself via
+    ``explode_outer`` — short docs keep a placeholder row excluded from
+    the sums by a flag captured BEFORE vocab mapping (which would
+    otherwise rewrite the placeholder's NULLs to unk and score them) —
+    instead of a ``raw.select(doc).distinct()`` + left-join-back, which
+    would cost a second corpus-keyed shuffle plus a corpus-sized
+    sort-merge join.
 
-    ``tokenizer``: fit/score pairing contract as in `lm_perplexity`."""
-    spark = raw.sparkSession
-
-    def grams(df, n: int, cols: list[str], outer: bool = False):
-        # n consecutive tokens via arrays_zip over n shifted slices —
-        # native expressions only (see lm_perplexity.transitions).
-        # ``outer``: keep docs with < n tokens as one all-NULL
-        # placeholder row (the lm_perplexity every-doc contract).
-        t = tokenizer(F.col(text_col))
-        sz = F.size(t)
-        width = sz - (n - 1)
-        zipped = F.when(
-            sz >= n, F.arrays_zip(*[F.slice(t, i + 1, width) for i in range(n)])
-        )
-        ex = F.explode_outer(zipped) if outer else F.explode(zipped)
-        return df.select(
-            F.col(id_col).alias("doc"), ex.alias("g")
-        ).select(
-            "doc", *[F.col("g")[str(i)].alias(c) for i, c in enumerate(cols)]
-        )
-
-    # fit — one unigram pass feeds vocab / c1 / N (blocks, not a
-    # CacheManager pin)
-    ref_uni = ref.select(
-        F.col(id_col).alias("doc"), F.explode(tokenizer(F.col(text_col))).alias("w")
-    ).localCheckpoint()
-    vocab = (
-        ref_uni.groupBy("w").agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.desc("n"), "w").limit(vocab_size)
-        .select("w").localCheckpoint()
+    ``tokenizer``: the ref LM is FIT and the raw corpus SCORED through
+    the one tokenizer passed here (see `lm_fit`)."""
+    vocab, tables = lm_fit(
+        ref, text_col, order, vocab_size, quant, alpha_num, alpha_den, unk, tokenizer
     )
-    tot = ref_uni.agg(F.count(F.lit(1)).alias("n_tot"))
-    c1 = (
-        _vocab_mapped(ref_uni.select("w"), "w", vocab, unk)
-        .groupBy("w").agg(F.count(F.lit(1)).alias("n1"))
+    rt = _grams(raw, order, [id_col], text_col, tokenizer, outer=True).withColumn(
+        "__real", F.col("w").isNotNull()
     )
-    c2 = (
-        _vocab_mapped(
-            _vocab_mapped(grams(ref, 2, ["prev", "w"]), "prev", vocab, unk),
-            "w", vocab, unk,
-        )
-        .groupBy("prev", "w").agg(F.count(F.lit(1)).alias("n2"))
-        .localCheckpoint()  # feeds both q3's context join and q2
-    )
-    c3 = _vocab_mapped(
-        _vocab_mapped(
-            _vocab_mapped(grams(ref, 3, ["p2", "p1", "w"]), "p2", vocab, unk),
-            "p1", vocab, unk,
-        ),
-        "w", vocab, unk,
-    ).groupBy("p2", "p1", "w").agg(F.count(F.lit(1)).alias("n3"))
-    q3 = c3.join(
-        c2.select(F.col("prev").alias("p2"), F.col("w").alias("p1"), "n2"),
-        ["p2", "p1"],
-    ).select(
-        "p2", "p1", "w",
-        F.round(-F.log(F.col("n3").cast("double") / F.col("n2")) * quant)
-        .cast("long").alias("q"),
-    )
-    q2 = c2.join(c1.select(F.col("w").alias("prev"), "n1"), "prev").select(
-        F.col("prev").alias("p1"), "w",
-        F.round(
-            -F.log(
-                (F.col("n2") * alpha_num).cast("double")
-                / (F.col("n1") * alpha_den).cast("double")
-            )
-            * quant
-        ).cast("long").alias("q"),
-    )
-    dom = vocab.unionByName(spark.createDataFrame([(unk,)], "w string"))
-    q1 = (
-        dom.join(c1, "w", "left")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "w",
-            F.round(
-                -F.log(
-                    ((F.coalesce("n1", F.lit(0)) + 1) * alpha_num * alpha_num).cast(
-                        "double"
-                    )
-                    / (
-                        (F.col("n_tot") + vocab_size + 1) * alpha_den * alpha_den
-                    ).cast("double")
-                )
-                * quant
-            ).cast("long").alias("q"),
-        )
-    )
-    # score: trigram transitions probe the three broadcast tables,
-    # deepest available level wins, then one per-doc integer sum. The
-    # every-doc contract rides the scoring explode itself (outer, with
-    # the pre-mapping __real flag) — no distinct + join-back shuffle
-    # (the lm_perplexity r12 rewrite, one order up).
-    rt = _vocab_mapped(
-        _vocab_mapped(
-            _vocab_mapped(
-                grams(raw, 3, ["p2", "p1", "w"], outer=True).withColumn(
-                    "__real", F.col("w").isNotNull()
-                ),
-                "p2", vocab, unk,
-            ),
-            "p1", vocab, unk,
-        ),
-        "w", vocab, unk,
-    )
+    for c in _gram_cols(order):
+        rt = _vocab_mapped(rt, c, vocab, unk)
+    for k in range(order, 0, -1):
+        rt = rt.join(F.broadcast(tables[k - 1]), _gram_cols(k), "left")
     real = F.col("__real")
-    return (
-        rt.join(F.broadcast(q3.withColumnRenamed("q", "q_tri")), ["p2", "p1", "w"], "left")
-        .join(F.broadcast(q2.withColumnRenamed("q", "q_bi")), ["p1", "w"], "left")
-        .join(F.broadcast(q1.withColumnRenamed("q", "q_uni")), "w", "left")
-        .groupBy("doc")
-        .agg(
-            F.sum(F.when(real, 1).otherwise(0)).cast("long").alias("n_trans"),
-            F.sum(F.when(real, F.coalesce("q_tri", "q_bi", "q_uni")).otherwise(0))
-            .cast("long").alias("nll_q"),
-        )
-        .select(F.col("doc").alias(id_col), "n_trans", "nll_q")
+    q = F.coalesce(*[f"q{k}" for k in range(order, 0, -1)])
+    return rt.groupBy(id_col).agg(
+        F.sum(F.when(real, 1).otherwise(0)).cast("long").alias("n_trans"),
+        F.sum(F.when(real, q).otherwise(0)).cast("long").alias("nll_q"),
     )
 
 
@@ -1293,8 +1174,8 @@ def perplexity_filter(
     alpha_num: int = 2, alpha_den: int = 5, tokenizer=tokens,
 ):
     """CCNet's LM quality gate: keep a document iff its MEAN per-token
-    NLL under the ref-fit bigram LM is at most threshold_q/quant nats —
-    evaluated as the exact integer comparison
+    NLL under the ref-fit bigram LM (`lm_fit`) is at most
+    threshold_q/quant nats — evaluated as the exact integer comparison
     ``nll_q ≤ threshold_q · n_trans`` (no float division, so the
     decision is engine-bitwise). Docs with no transitions keep
     trivially (0 ≤ 0 — nothing to judge them on; CCNet routes such
@@ -1771,18 +1652,6 @@ def length_bucket_batches(
 # --- DoReMi domain reweighting (Xie et al. 2023, arXiv:2305.10429) ---
 
 
-def token_transitions(df, id_col: str, text_col: str, tokenizer=tokens):
-    """(doc, prev, w) adjacent-token pairs via arrays_zip over two
-    shifted slices — the all-native form `lm_perplexity` uses (HOF
-    lambdas would run interpreted per element)."""
-    t = tokenizer(F.col(text_col))
-    n = F.size(t)
-    pairs = F.when(n >= 2, F.arrays_zip(F.slice(t, 1, n - 1), F.slice(t, 2, n - 1)))
-    return df.select(
-        F.col(id_col).alias("doc"), F.explode(pairs).alias("p")
-    ).select("doc", F.col("p")["0"].alias("prev"), F.col("p")["1"].alias("w"))
-
-
 def doremi_weights(
     pool, ref, id_col: str, text_col: str, domain_col: str,
     vocab_size: int = 1024, quant: int = 10_000,
@@ -1796,8 +1665,8 @@ def doremi_weights(
     Per-domain EXCESS LOSS is what the stronger reference-fit model
     still improves over a context-free baseline — here instantiated
     with the repo's LM pair: proxy = add-1 unigram, reference = bigram
-    with stupid backoff (both fit on ``ref``, `lm_perplexity`'s exact
-    construction and constants):
+    with stupid backoff (both fit on ``ref`` by `lm_fit`, with its
+    constants):
 
         exc(prev,w) = max(0, q_uni(w) − q_bi(prev,w))      [exact BIGINT]
         λq_k = round(Σ_k exc / Σ_k 1)        [quant-units/transition]
@@ -1840,7 +1709,7 @@ def doremi_weights(
     # _doremi_domain_stats was checkpointed). Blocks, not a
     # CacheManager pin — the batch block contract.
     per = _doremi_domain_stats(
-        pool, ref, id_col, text_col, domain_col,
+        pool, ref, text_col, domain_col,
         vocab_size, quant, alpha_num, alpha_den, tokenizer=tokenizer,
     ).localCheckpoint()
     # λ quantized to integer quant-units per transition, then softmax-
@@ -1884,91 +1753,38 @@ def doremi_weights(
 
 
 def _doremi_domain_stats(
-    pool, ref, id_col: str, text_col: str, domain_col: str,
+    pool, ref, text_col: str, domain_col: str,
     vocab_size: int = 1024, quant: int = 10_000,
     alpha_num: int = 2, alpha_den: int = 5, tokenizer=tokens,
 ):
     """The shared DoReMi corpus pass: per-domain excess-loss statistics
     (domain, n_docs, n_trans, excess_q, lamq) with lamq the quantized
     integer mean excess per transition (0 for domains with no scorable
-    transition, never NULL). The LM pair is `lm_perplexity`'s exact
-    construction (add-1 unigram baseline vs vocab-closed bigram with
-    stupid backoff, both fit on ``ref``); the pool contributes ONE
-    transition explode with the domain riding the explode itself —
-    no corpus-keyed join back. `doremi_weights` (one step) and
+    transition, never NULL). The LM pair is `lm_fit`'s bigram (add-1
+    unigram baseline ``q_uni`` vs the vocab-closed bigram with stupid
+    backoff, both fit on ``ref``); the pool contributes ONE transition
+    explode with the domain riding the explode itself — no corpus-keyed
+    join back. `doremi_weights` (one step) and
     `doremi_weights_trajectory` (Algorithm 1's T rounds) both start
     here, so the expensive pass is defined once."""
-    spark = pool.sparkSession
-
-    # fit on ref — lm_perplexity's construction (one unigram pass
-    # feeds vocab/c1/N; bigrams vocab-closed)
-    ref_uni = ref.select(
-        F.col(id_col).alias("doc"), F.explode(tokenizer(F.col(text_col))).alias("w")
-    ).localCheckpoint()
-    vocab = (
-        ref_uni.groupBy("w").agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.desc("n"), "w").limit(vocab_size)
-        .select("w").localCheckpoint()
-    )
-    tot = ref_uni.agg(F.count(F.lit(1)).alias("n_tot"))
     unk = "<unk>"
-    c1 = (
-        _vocab_mapped(ref_uni.select("w"), "w", vocab, unk)
-        .groupBy("w").agg(F.count(F.lit(1)).alias("n1"))
-    )
-    c2 = (
-        _vocab_mapped(
-            _vocab_mapped(
-                token_transitions(ref, id_col, text_col, tokenizer),
-                "prev", vocab, unk,
-            ),
-            "w", vocab, unk,
-        )
-        .groupBy("prev", "w").agg(F.count(F.lit(1)).alias("n2"))
-    )
-    q2 = c2.join(c1.select(F.col("w").alias("prev"), "n1"), "prev").select(
-        "prev", "w",
-        F.round(-F.log(F.col("n2").cast("double") / F.col("n1")) * quant)
-        .cast("long").alias("q_bi"),
-    )
-    # per-word table carrying BOTH the context-free baseline q_uni
-    # (add-1, no backoff penalty) and the unseen-bigram backoff cost
-    dom = vocab.unionByName(spark.createDataFrame([(unk,)], "w string"))
-    add1 = (F.coalesce("n1", F.lit(0)) + 1).cast("double")
-    denom = (F.col("n_tot") + vocab_size + 1).cast("double")
-    qw = (
-        dom.join(c1, "w", "left")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "w",
-            F.round(-F.log(add1 / denom) * quant).cast("long").alias("q_uni"),
-            F.round(-F.log(add1 * alpha_num / (denom * alpha_den)) * quant)
-            .cast("long").alias("q_bo"),
-        )
+    vocab, (q1, q2) = lm_fit(
+        ref, text_col, 2, vocab_size, quant, alpha_num, alpha_den, unk, tokenizer
     )
     # score pool transitions: excess = max(0, baseline − reference).
     # The domain rides the explode itself — no corpus-keyed join back
     # to the pool (the one shuffle a doc-keyed formulation would add).
-    t = tokenizer(F.col(text_col))
-    n = F.size(t)
-    pairs = F.when(n >= 2, F.arrays_zip(F.slice(t, 1, n - 1), F.slice(t, 2, n - 1)))
-    pt = _vocab_mapped(
-        _vocab_mapped(
-            pool.select(
-                F.col(domain_col).alias("domain"), F.explode(pairs).alias("p")
-            ).select("domain", F.col("p")["0"].alias("prev"), F.col("p")["1"].alias("w")),
-            "prev", vocab, unk,
-        ),
-        "w", vocab, unk,
-    )
+    pt = _grams(pool, 2, [domain_col], text_col, tokenizer)
+    for c in _gram_cols(2):
+        pt = _vocab_mapped(pt, c, vocab, unk)
     exc = (
-        pt.join(F.broadcast(q2), ["prev", "w"], "left")
-        .join(F.broadcast(qw), "w")
+        pt.join(F.broadcast(q2), ["p1", "w"], "left")
+        .join(F.broadcast(q1), "w")
         .select(
-            "domain",
+            F.col(domain_col).alias("domain"),
             F.greatest(
                 F.lit(0).cast("long"),
-                F.col("q_uni") - F.coalesce("q_bi", "q_bo"),
+                F.col("q_uni") - F.coalesce("q2", "q1"),
             ).alias("exc"),
         )
         .groupBy("domain")
@@ -2057,7 +1873,7 @@ def doremi_weights_trajectory(
     # live-index caller asks (the ckpt helper), batch contract
     # otherwise.
     per = ckpt(_doremi_domain_stats(
-        pool, ref, id_col, text_col, domain_col,
+        pool, ref, text_col, domain_col,
         vocab_size, quant, alpha_num, alpha_den, tokenizer=tokenizer,
     ))
     # constant-partition window over the K-row checkpoint, as in

@@ -22,553 +22,29 @@ from fiat2_spark.workloads import core, dsl, graphs, pipeline, server, stream
 
 MODULES = (pipeline, stream, server, dsl, graphs, core)
 
-# First 50 = driver-checked window. Round-5 rotation (VERDICT r4 task 1):
-# (A) all 28 queries that have NEVER held a driver row — the post-window
-# round-4 wave (gate-green in GATE_r04 at both SFs, but builder-produced
-# evidence only); (B) the two stale-premise re-checks: dsl_command_pipeline
-# (its r1/r2 row's premise was violated by the r4 _foreach_bulk_insert
-# interp rewrite) and udaf_mad (docstring cross-ref to mad_scalable changed
-# its function source this round); (C) the ten round-5 additions — every
-# query registered this round gets driver evidence in the same round;
-# (D) ten oldest-evidence refreshes — core queries holding only r1/r2
-# rows, rotated back in so no row's premise is more than a few rounds old.
-#
-# Rotation-out justification (hardened rule, tools/fingerprints.py):
-# every rotated-out query keeps a green r3/r4 row; their @q function
-# sources and oracle strings are byte-identical since the row-earning
-# round, and the module-closure deltas this round (pipeline.py gained
-# mad_scalable + the dedup_fuzzy_apply hint removal, core.py gained
-# Q6/Q15 + corr_moments NULLIF, dsl.py gained dsl_comprehension,
-# sources/io.py changed compact_files/write_zorder) are unreachable from
-# them: no rotated-out query calls dedup_fuzzy_apply's block, the new
-# query functions, or compact_files/write_zorder (grep-verified — io.py
-# consumers among queries are csv_roundtrip/sink_roundtrip/
-# partition_pruned_lookup/bucketed_join/zonemap/bfs_recursive_cte via
-# read/write_table, write_bucketed, write_sorted, register_views, all
-# untouched).
-PRIORITY_R4 = (  # kept for the r4 row-premise audit trail
-    # pipeline: text / dedup / ANN / multimodal / sampling (cms_tokens
-    # rotated out on its green CORRECTNESS_r03 row, code unchanged)
-    # text_tokens/text_quality rotate out on green CORRECTNESS_r03 rows
-    # (query blocks and every text.py helper they use byte-identical
-    # since); profile_columns (ANALYZE-style stats collection) and
-    # scalar_subquery (decorrelation evidence) take the slots
-    "scalar_subquery", "text_langid", "profile_columns",
-    # dedup_exact/dedup_minhash/dedup_simhash rotate out on green
-    # CORRECTNESS_r03 rows (query blocks and their dedup.py operators
-    # byte-identical since); full_outer_join, sample_mixture, and the
-    # RANGE-frame window take the slots
-    "full_outer_join", "sample_mixture", "window_range_frame",
-    # round-4: applyInPandas grouped UDAF (text_fingerprint rotated out
-    # on its green CORRECTNESS_r03 row, code unchanged)
-    "udaf_mad",
-    # round-4: exact percentiles without per-group arrays
-    "percentile_cont_scalable",
-    # dedup_embedding rotates out on its green CORRECTNESS_r03 row
-    # (query block and operators byte-identical since); the windowless
-    # argmax/mode takes the slot
-    "dedup_ngram_jaccard", "mode_per_group", "ann_bruteforce", "ann_lsh",
-    # multimodal: the round-4 audio member enters; multimodal_bytes and
-    # pipeline_e2e rotate out on green CORRECTNESS_r03 rows (code
-    # unchanged); the new end-to-end composition takes the flagship slot
-    "ann_ivf", "multimodal_audio_rms", "pipeline_training_set", "vocab_topn",
-    # round-4 sampling/packing additions (sample_strata / sample_group_k
-    # rotated out on their green CORRECTNESS_r03 rows, code unchanged)
-    "sample_weighted", "pack_sequences",
-    # stream: incremental maintenance / event-time (json_extract,
-    # incremental_sum/min_orders/groupby, rollup_multires,
-    # range_join_binned, and stream_stream_join all rotate out on green
-    # CORRECTNESS_r03 rows — their query blocks and the maintenance/
-    # stream_agg code they touch are additive-only since r3; the
-    # session-late pipeline ops take the slots so every registered
-    # query has driver evidence within one round of landing
-    "text_redact_pii", "span_dedup", "chunk_sliding",
-    # the scalable ordered LISTAGG, the keyed MERGE upsert,
-    # and the IVF-training centroid aggregation (round-4 wave 1)
-    "embedding_centroids", "upsert_keyed", "group_concat_scalable",
-    "bm25_retrieval", "embedding_quantize", "keyed_agg_maintenance",
-    "stratified_split",
-    # round-4: benchmark decontamination (3-gram overlap vs held-out set)
-    "decontaminate",
-    # server parity (2)
-    "server_artist_filter", "server_album_join",
-    # round-4 OLAP compositions: Q18 shape + explicit aggregate reuse
-    # (hll_users / text_salient rotated out on their green
-    # CORRECTNESS_r03 rows, code unchanged)
-    "tpch_q18_shape", "agg_reuse",
-    # round-4: char-trigram language ID (multimodal_frames rotated out
-    # on its green CORRECTNESS_r03 row)
-    "text_langid_trigram",
-    # dsl: the round-3 compiler features (table folds, table let/if);
-    # dsl_employee_join / dsl_orders_agg / dsl_command_pipeline /
-    # dsl_grandchildren / triangle / bfs rotated out on their green
-    # CORRECTNESS_r01+r02 rows
-    "dsl_fold_table", "dsl_let_if_table",
-    # csv_roundtrip re-enters: its round-4 temp-dir race fix (ADVICE r3)
-    # invalidates the r3 row's unchanged-code premise, so it needs fresh
-    # driver evidence; window_rank_family / cube_agg / sink_roundtrip
-    # rotate out on green CORRECTNESS_r03 rows over untouched code
-    "csv_roundtrip",
-    # round-3 pipeline additions (dup clustering, edit-distance dedup)
-    # + round-4 star-contraction clustering (window_frames /
-    # percentile_cont rotated out on their green CORRECTNESS_r03 rows)
-    # dedup_editdist rotates out on its green CORRECTNESS_r03 row
-    # (byte-identical since); the incremental batch-vs-corpus dedup
-    # takes the slot
-    "dedup_clusters", "dedup_clusters_star", "dedup_incremental_batch",
-    # round-4: scalable per-group ranking — row numbers and the full
-    # rank family (percentile_cont / tpch_q3_shape rotated out on their
-    # green CORRECTNESS_r03 rows)
-    "grouped_rownum_scalable", "grouped_rank_family_scalable",
-    # round-4 compo_idx multi-index maintenance (multimodal_resize and
-    # incremental_join rotated out on green CORRECTNESS_r03 rows —
-    # JoinAggView changes since r3 are additive-only) + the iterative
-    # PageRank landing with fresh driver evidence
-    "pagerank3", "incremental_multi_index",
-    # core picks: rows without other in-window evidence + fresh fixes;
-    # window_rownum re-enters because the round-4 _value_buckets
-    # refactor touched global_row_number under its r2 row
-    # (nested_collections rotates out on its green r03 row, untouched;
-    # dict_fold / groupby_agg / coq_div_mod / fold_right_concat /
-    # sql_entrypoint keep their r02 rows on unchanged code)
-    "window_rownum", "partition_pruned_lookup",
-    # round-4 late addition: Gopher-style repetition quality signals
-    # (bucketed_join rotates out on its green CORRECTNESS_r03 row —
-    # untouched since; the r4 insertions land above its region)
-    "text_repetition",
-    # round-4 rotation: the three queries registered late in round 3
-    # with no driver row yet (ADVICE r3) — first driver check this round
-    "group_concat", "salted_join", "unpivot_long",
-)
-
-PRIORITY_R5 = (  # kept for the r5 row-premise audit trail
-    # (A) the 14 TPC-H shapes never driver-checked
-    "tpch_q1_shape", "tpch_q4_shape", "tpch_q5_shape", "tpch_q7_shape",
-    "tpch_q8_shape", "tpch_q9_shape", "tpch_q10_shape", "tpch_q13_shape",
-    "tpch_q14_shape", "tpch_q16_shape", "tpch_q17_shape", "tpch_q19_shape",
-    "tpch_q21_shape", "tpch_q22_shape",
-    # (A) runtime pruning, layout, iterative, and misc never-checked
-    "dpp_partitioned_join", "bloom_pruned_join", "dedup_fuzzy_apply",
-    "kmeans_lloyd", "corr_moments", "bag_ops_all", "window_nav",
-    "zonemap_range_scan", "bfs_recursive_cte",
-    # (A) the event-analytics family
-    "funnel_conversion", "retention_cohorts", "anomaly_zscore",
-    "gapfill_daily", "length_histogram",
-    # (B) stale-premise re-checks
-    "dsl_command_pipeline", "udaf_mad",
-    # (C) round-5 additions: the last two expressible TPC-H shapes, the
-    # JVM-only MAD twin, the Notations.v comprehension-sugar program,
-    # the applied C4/Gopher corpus gate, and the kNN label-vote eval
-    "tpch_q6_shape", "tpch_q15_shape", "mad_scalable", "dsl_comprehension",
-    "quality_filter_apply", "knn_label_vote", "asof_tolerance_join",
-    "ewma_user_value", "hybrid_rrf_retrieval", "rolling_7day_revenue",
-    # (D) oldest-evidence refresh: r1/r2-row core queries. Five picks
-    # ceded slots to the extra (C) entries, chosen because their
-    # premises are the most solid of the group: eq_nullsafe /
-    # dict_ops_lookup / word_arith / coq_div_mod sit on scalars/
-    # collections code untouched since their rows, and groupby_agg
-    # holds an r3 row
-    "filter_scan", "proj_compute", "join_fk", "theta_join_nonequi",
-    "semi_join", "anti_join", "flatmap_explode", "flatmap2_zip",
-    "sort_canonical", "top_k",
-)
-# Round-6 window (kept for the r6 row-premise audit trail). The
-# fingerprint algorithm changed in r6 (same-module helper closure,
-# ADVICE r5); its rotation baseline was FINGERPRINTS_r05_rehash.json.
-PRIORITY_R6 = (
-    # (A) round-6 additions — driver evidence in the same round they land
-    "dsl_auto_index", "multimodal_wav_real", "multimodal_ppm_real",
-    "tfidf_retrieval",
-    # (B) directly-changed query bodies: q15's eager-winner cache
-    # release, knn's rank-based eval panel, agg_reuse's checkpoint-block
-    # materialization — all three r5/r4 rows' premises are broken by the
-    # cache-hygiene work
-    "tpch_q15_shape", "knn_label_vote", "agg_reuse",
-    # (C) compile/interp-reachable deltas: compile_column gained the
-    # typed-ANone cast and eval_value the pure-driver evaluator +
-    # scalar-loc substitution — every AST-compiled program transits
-    # these, so the whole DSL suite re-enters (graph AST programs are in
-    # (E))
-    "dsl_command_pipeline", "dsl_fold_table", "dsl_let_if_table",
-    "dsl_comprehension", "dsl_filter_project", "dsl_grandchildren",
-    "dsl_employee_join", "dsl_orders_agg",
-    # (D) persist→localCheckpoint migration (dedup.py shared
-    # intermediates, GroupIndex state): semantics-preserving by design,
-    # but the materialization timing changed — re-checked rather than
-    # argued
-    "dedup_minhash", "dedup_simhash", "dedup_ngram_jaccard",
-    "dedup_embedding", "dedup_clusters", "dedup_clusters_star",
-    "dedup_fuzzy_apply", "dedup_incremental_batch",
-    "incremental_groupby", "keyed_agg_maintenance", "incremental_multi_index",
-    # (E) oldest-evidence refresh: r1/r2-row queries from the r5 note,
-    # graph AST programs (bfs/triangle/grandchildren — r1/r2 rows AND
-    # compile-reachable deltas) first, then the core r1/r2 backlog
-    "bfs", "triangle", "grandchildren",
-    "if_then_else", "join_three_way", "flatmap_cross", "pivot_wide",
-    "bag_canonical", "set_of_distinct", "union_all_concat", "cons_insert",
-    "int_range", "word_range", "bag_set_insert", "word_arith",
-    "string_ops", "eq_nullsafe", "opt_match_coalesce", "agg_min_max_option",
-    "fold_right_concat", "dict_ops_lookup", "survey_join",
-    "proj_feed_pipeline", "sql_entrypoint",
-)
-# Rotation-out justification (vs FINGERPRINTS_r05_rehash.json): rotated-
-# out queries keep green r3-r5 rows. Audited precisely at round end: 126
-# rotated-out queries show fingerprint deltas, ALL from the module-level
-# import closure (compile.py/interp.py/dedup.py/maintenance.py/
-# session.py sit in every workloads module's closure), not from their
-# own @q sources or same-module helper closures. REACHABLE deltas are
-# scoped: compile.py's changes (pure-driver evaluator, typed-ANone cast,
-# n-ary join recognizer, JVM-side insert legs) execute only for
-# AST-compiled programs — every DSL/graph AST query is rotated IN under
-# (C)/(E); pure-DataFrame queries never enter compile_column/eval_value/
-# compile_expr. dedup.py + maintenance.py persist→localCheckpoint
-# consumers are rotated in under (D); SumIndex/MinIndex are untouched
-# classes, so incremental_sum/incremental_min_orders keep their rows.
-# core.py changed only in the q15/agg_reuse blocks (in (B)); pipeline.py
-# only in the knn block (in (B)) plus appended new queries; dsl.py
-# gained dsl_auto_index (appended); multimodal.py gained codec functions
-# (appended — the stubbed-operator blocks the r3/r4 multimodal rows
-# cover are byte-identical); session.py gained the sweep API (new
-# functions, unreachable from queries). Belt-and-suspenders: GATE_r06
-# re-ran EVERY rotated-out query at BOTH SFs on final HEAD (176/176) —
-# builder-level fresh evidence under the changed closure even where the
-# driver row is older.
-# Round-7 window (kept for the r7 row-premise audit trail). The
-# fingerprint algorithm changed again this round
-# (FUNCTION-LEVEL reachable closure, VERDICT r6 task 1); the rotation
-# baseline is FINGERPRINTS_r06_rehash_fnlevel.json — the r6 HEAD
-# (1bbd969) re-fingerprinted with the r7 tool in a clean worktree. The
-# rotation-out justification is now THE TOOL'S OUTPUT, not a prose
-# audit:
-#   python tools/fingerprints.py --compare FINGERPRINTS_r06_rehash_fnlevel.json
-#   → changed = exactly the 13 queries below marked (A) plus the 2 new
-#     ones (B); held_count = 163 — every rotated-out query's reachable
-#     hash is IDENTICAL to its row-earning round's.
-PRIORITY_R7 = (
-    # (A) reachable-delta rotate-ins (tool-mandated): the whole DSL
-    # family (compile.py gained the inner-LikeSet join dedup, the
-    # dict-lookup join recognizer, and the DistDictIndex fallback;
-    # autoindex.py gained order-safe reads + binder-aware choices), the
-    # GroupIndex consumers (per-insert snapshot retirement), and q15
-    # (checkpoint-pattern rewrite)
-    "dsl_auto_index", "dsl_command_pipeline", "dsl_comprehension",
-    "dsl_employee_join", "dsl_filter_project", "dsl_fold_table",
-    "dsl_grandchildren", "dsl_let_if_table", "dsl_orders_agg",
-    "incremental_groupby", "incremental_join", "incremental_multi_index",
-    "tpch_q15_shape",
-    # (B) round-7 additions — driver evidence in the round they land
-    # (text_salient / cube_agg / nested_collections / percentile_cont
-    # cede their (D) slots to the late-round additions and defer to
-    # round 8 with the other isolated-premise r3 rows: never-checked
-    # queries outrank r3-row refreshes, the r5 (A) rule)
-    "dsl_auto_index_join", "dsl_auto_index_dist", "substring_dedup",
-    "substring_dedup_apply", "hard_negatives", "shuffle_shards",
-    # (C) oldest-evidence refresh, r2 rows (the named r7 candidates)
-    "agg_sum_count", "coq_div_mod", "dict_fold", "distinct_agg",
-    "groupby_agg", "outer_join", "quantile_disc", "set_ops",
-    "topk_per_group",
-    # (D) oldest-evidence refresh, r3 rows (25 of the 31 remaining;
-    # cms_tokens / hll_users / multimodal_frames / multimodal_resize /
-    # sample_group_k / text_tokens / text_salient / cube_agg /
-    # nested_collections / percentile_cont hold the most isolated
-    # premises and defer to round 8) + pagerank3 (named candidate, r4 row)
-    "asof_join", "bucketed_join", "dedup_editdist",
-    "dedup_exact", "incremental_min_orders", "incremental_sum",
-    "json_extract", "multimodal_bytes", "pipeline_e2e", "range_join_binned",
-    "rollup_multires", "sample_strata", "sessionize", "sink_roundtrip",
-    "stream_stream_join", "stream_window_agg", "text_fingerprint",
-    "text_quality", "tpch_q3_shape", "window_frames",
-    "window_rank_family", "pagerank3",
-)
-# Round-8 window. The fingerprint RENDERER changed this round (ADVICE
-# r7: dataclass instances hash by recursed field values, not repr), so
-# the rotation baseline is FINGERPRINTS_r07_rehash_dcrender.json — the
-# r7 HEAD (bb14936) re-fingerprinted with the r8 tool in a clean
-# worktree (the tool-change-only delta is 5 DSL queries whose closures
-# render AST dataclass constants). The must-rotate-in set is the
-# tool's output:
-#   python tools/fingerprints.py --compare FINGERPRINTS_r07_rehash_dcrender.json
-#   → changed = exactly the 16 queries marked (A) below + the 2 new
-#     ones (B); held_count = 166 — every other registered query's
-#     reachable hash is IDENTICAL to its row-earning round's.
-PRIORITY_R8 = (  # kept for the r8 row-premise audit trail
-    # (A) tool-mandated reachable-delta rotate-ins: the DSL family
-    # (compile.py's cons_to_insert shape guard + autoindex.py's
-    # BitmapIdx residual rewrite sit in every AST program's closure),
-    # the minhash consumers (minhash_candidates refactor), and the
-    # chunked-reassembly rewrite of substring_dedup_apply
-    "dedup_clusters", "dedup_clusters_star", "dedup_fuzzy_apply",
-    "dedup_minhash", "dsl_auto_index", "dsl_auto_index_dist",
-    "dsl_auto_index_join", "dsl_command_pipeline", "dsl_comprehension",
-    "dsl_employee_join", "dsl_filter_project", "dsl_fold_table",
-    "dsl_grandchildren", "dsl_let_if_table", "dsl_orders_agg",
-    "substring_dedup_apply",
-    # (B) round-8 additions — driver evidence in the round they land
-    # (percentile_cont_scalable cedes its (D) slot to the late-round
-    # dsir_resample and joins the r9 tail — the same (B)-over-(D) rule
-    # as r7)
-    "dedup_semantic", "dsir_select", "dsir_resample",
-    # (C) the ten deferred r3-row queries (VERDICT r7 task 1) — the
-    # last of the r3 evidence backlog
-    "cms_tokens", "hll_users", "multimodal_frames", "multimodal_resize",
-    "sample_group_k", "text_tokens", "text_salient", "cube_agg",
-    "nested_collections", "percentile_cont",
-    # (D) oldest-evidence refresh, r4 rows (22 of the 39 remaining —
-    # the window holds 50; the 17 listed at the bottom of this comment
-    # block hold tool-verified identical premises and defer to r9 under
-    # the same (A)/(B)-over-(D) rule that deferred the r3 tail in r7)
-    "pipeline_training_set", "ann_bruteforce", "ann_ivf", "ann_lsh",
-    "bm25_retrieval", "decontaminate", "span_dedup",
-    "embedding_centroids", "embedding_quantize", "text_langid",
-    "text_langid_trigram", "text_redact_pii", "text_repetition",
-    "sample_mixture", "sample_weighted", "server_artist_filter",
-    "server_album_join", "csv_roundtrip", "upsert_keyed",
-    "tpch_q18_shape", "window_rownum",
-)
-# Round-9 window. The fingerprint tool is UNCHANGED this round, so the
-# rotation baseline is FINGERPRINTS_r08.json at r8 HEAD directly. The
-# must-rotate-in set is the tool's output; at FINAL r9 HEAD:
-#   python tools/fingerprints.py --compare FINGERPRINTS_r08.json
-#   → changed = 26, new = 12, held_count = 171 — and every changed/new
-#     name is in this window (tool-audited; the mid-round state was
-#     5 changed + 2 new, grown by the late-r9 additions (B), the
-#     _value_buckets rewrite, and the NB counts/score split). Every
-#     query whose reachable hash is IDENTICAL to its row-earning
-#     round's may rotate out; all 147 out-of-window queries hold.
-PRIORITY_R9 = (
-    # (A) tool-mandated reachable-delta rotate-ins: the Lloyd-seeding
-    # fix (rank-based k-smallest init) touches kmeans_lloyd +
-    # dedup_semantic, the pmod pair-salt fix touches dedup_semantic,
-    # the post-explode codegen'd feature hash + open-interval Gumbel
-    # touch the DSIR pair, the one-exchange reassembly touches
-    # substring_dedup_apply, and the HOF de-quadratification (native
-    # transitions/bigrams, pre-projected token column for
-    # token_segments) additionally touches span_dedup via doc_segments
-    # (quality_filter_apply cedes its (D) slot for it)
-    "dedup_semantic", "dsir_select", "dsir_resample", "kmeans_lloyd",
-    "substring_dedup_apply", "span_dedup",
-    # …and the late-r9 _value_buckets rewrite (when-sum bucket, no
-    # lambda HOF — the Catalyst window-binding fix budget_select
-    # surfaced) additionally reaches the three quantile-bucket-family
-    # queries NOT already seated above: mad_scalable, window_rownum
-    # (via global_row_number), and pipeline_training_set (via sequence
-    # packing's grouped_running_sum); funnel_conversion /
-    # retention_cohorts / anomaly_zscore cede their (D) slots
-    "mad_scalable", "window_rownum", "pipeline_training_set",
-    # (B) round-9 additions — driver evidence in the round they land
-    # (rolling_7day_revenue, ewma_user_value, and asof_tolerance_join
-    # cede their (D) slots to the late-round url_dedup,
-    # decontaminate_semantic, and boilerplate_dedup; length_histogram
-    # and hybrid_rrf_retrieval cede theirs to the still-later
-    # gopher_quality and quality_classifier, gapfill_daily cedes to
-    # budget_select, and all three join the r10 tail — the same
-    # (B)-over-(D) rule as r7/r8)
-    "perplexity_filter", "domain_filter", "url_dedup",
-    "decontaminate_semantic", "boilerplate_dedup",
-    "gopher_quality", "quality_classifier", "budget_select",
-    # …and the final-session r9 additions: DoReMi domain reweighting
-    # and the BPE tokenizer-training trio (Q17/Q19/Q21/Q22 cede their
-    # (D) refresh slots and join the r10 tail — (B)-over-(D) again; all
-    # four r5 rows sit on fingerprint-unchanged code)
-    "doremi_reweight", "bpe_pair_counts", "bpe_merges", "bpe_encode",
-    # (C) oldest-evidence refresh, the whole r4-row tail (18 — the r8
-    # comment's deferred list + percentile_cont_scalable): after r9 no
-    # driver row is older than r5
-    "chunk_sliding", "full_outer_join", "group_concat",
-    "group_concat_scalable", "grouped_rank_family_scalable",
-    "grouped_rownum_scalable", "mode_per_group", "multimodal_audio_rms",
-    "pack_sequences", "partition_pruned_lookup", "percentile_cont_scalable",
-    "profile_columns", "salted_join", "scalar_subquery",
-    "stratified_split", "unpivot_long", "vocab_topn", "window_range_frame",
-    # (D) oldest-evidence refresh, r5 rows (25 of the 44 remaining —
-    # the TPC-H family and the event-analytics/retrieval compositions;
-    # the 19 core/runtime-pruning micro queries named at the bottom of
-    # this block hold tool-verified identical premises on untouched
-    # relational/core code and defer to r10 under the (A)/(B)-over-(D)
-    # rule)
-    "tpch_q1_shape", "tpch_q4_shape", "tpch_q5_shape", "tpch_q6_shape",
-    "tpch_q7_shape", "tpch_q8_shape", "tpch_q9_shape", "tpch_q10_shape",
-    "tpch_q13_shape", "tpch_q14_shape", "tpch_q16_shape",
-)
-# Round-10 window. The fingerprint tool is UNCHANGED this round, so the
-# rotation baseline is FINGERPRINTS_r09.json at r9 HEAD directly. The
-# must-rotate-in set is the tool's output:
-#   python tools/fingerprints.py --compare FINGERPRINTS_r09.json
-#   → changed = 18, new = 4, held_count = 183 — every changed/new name
-#     is seated in (A)/(B) below. (Mid-round the tokenizer-contract
-#     note briefly sat in tokens()' docstring and flagged 51 queries;
-#     it was moved to tokens_unicode — the new function — precisely so
-#     the 33 queries whose reachable CODE is byte-identical to their
-#     row-earning round's keep their rotation-out premise.) Every
-#     out-of-window query's reachable hash is IDENTICAL to its
-#     row-earning round's; all 151 hold.
-PRIORITY_R10 = (
-    # (A) tool-mandated reachable-delta rotate-ins: the BPE family
-    # (bpe_learn's checkpoint stride + the tokenizer= parameter + the
-    # guarded oracles), the DoReMi pair (_doremi_domain_stats factor +
-    # shared stats CTEs), the NB classifier (tracked-block featurize,
-    # ADVICE r9), and the whole quantile-bucket family under the
-    # grouped_percentiles inline/prune rewrite + the 0.01 sketch
-    # relaxation (mad_scalable, percentile_cont_scalable, the
-    # grouped rank/rownum pair, window_rownum via global_row_number,
-    # and the grouped_running_sum consumers pack_sequences /
-    # budget_select / pipeline_training_set / group_concat_scalable)
-    "bpe_pair_counts", "bpe_merges", "bpe_encode", "doremi_reweight",
-    "quality_classifier", "budget_select", "mad_scalable",
-    "percentile_cont_scalable", "grouped_rownum_scalable",
-    "grouped_rank_family_scalable", "window_rownum", "pack_sequences",
-    "pipeline_training_set", "group_concat_scalable",
-    # (B) round-10 additions — driver evidence in the round they land
-    # (the late-round length_bucket_batches takes top_k's (C) slot under
-    # the standing (B)-over-(C/D) rule — top_k's r5 row sits on a
-    # tool-verified identical premise, is gate-refreshed at both SFs
-    # this round, and joins the r11 tail)
-    "bpe_encode_ids", "pipeline_tokenize_pack", "doremi_trajectory",
-    "text_unicode_pipeline", "length_bucket_batches",
-    # (C) oldest-evidence refresh: the deferred r5-row tail (31 of the
-    # 32 candidates — top_k ceded its slot above); after r10 top_k is
-    # the only driver row older than r6
-    "tpch_q17_shape", "tpch_q19_shape", "tpch_q21_shape", "tpch_q22_shape",
-    "anti_join", "asof_tolerance_join", "bag_ops_all", "bfs_recursive_cte",
-    "quality_filter_apply", "length_histogram", "hybrid_rrf_retrieval",
-    "gapfill_daily", "funnel_conversion", "retention_cohorts",
-    "anomaly_zscore", "bloom_pruned_join", "corr_moments",
-    "dpp_partitioned_join", "ewma_user_value", "filter_scan",
-    "flatmap2_zip", "flatmap_explode", "join_fk", "proj_compute",
-    "rolling_7day_revenue", "semi_join", "sort_canonical",
-    "theta_join_nonequi", "udaf_mad", "window_nav",
-    "zonemap_range_scan",
-)
-# Round-11 window (audit trail). Rotation baseline: FINGERPRINTS_r10.json
-# at r10 HEAD (the tool was unchanged that round). Must-rotate-in set was
-# the tool's output at the final engine commit:
-#   python tools/fingerprints.py --compare FINGERPRINTS_r10.json
-#   → changed = 15 (incl. the 4 new), new = 4 — every name seated in
-#     (A)/(B); every out-of-window query's reachable hash was
-#     IDENTICAL to its row-earning round's (the late-round
-#     dedup_minhash_unicode added ONLY new functions to dedup.py, so no
-#     existing dedup query's reachable hash moved — twin-agreement-
-#     tested in test_pipeline_late_ops).
-PRIORITY_R11 = (
-    # (A) tool-mandated reachable-delta rotate-ins — the tokenizer=
-    # threading through the model-based curation stack (dsir_*, the NB
-    # classifier, lm_perplexity/perplexity_filter, the DoReMi family,
-    # gopher_rules, quality_score) flags every query reaching those
-    # functions; text_unicode_pipeline rides the same delta (its
-    # reachable contract docstring moved), pipeline_e2e/text_quality
-    # reach quality_score, budget_select/quality_classifier the NB path
-    "budget_select", "doremi_reweight", "doremi_trajectory",
-    "dsir_resample", "dsir_select", "gopher_quality",
-    "perplexity_filter", "pipeline_e2e", "quality_classifier",
-    "text_quality", "text_unicode_pipeline",
-    # (B) round-11 additions — driver evidence in the round they land:
-    # the multilingual-fixture pair (corpus-scale unicode evidence),
-    # CCNet's per-language perplexity terciles, and multilingual fuzzy
-    # dedup (the late-round dedup_minhash_unicode takes the groupby_agg
-    # (D) slot under the standing (B)-over-(D) rule — groupby_agg's r7
-    # row sits on a tool-verified identical premise, its r10 timing
-    # drift is settled by the isolated probe + bench_detail_r11 commit,
-    # and it joins the r12 tail)
-    "unicode_corpus_tokens", "perplexity_filter_unicode",
-    "ccnet_bucket_assign", "dedup_minhash_unicode",
-    # (C) the oldest rows, exhaustively: top_k (r5 — the last row older
-    # than r6, deferred from its r10 slot) and ALL 34 r6-row queries,
-    # so after r11 no driver row is older than r7
-    "top_k",
-    "agg_min_max_option", "agg_reuse", "bag_canonical", "bag_set_insert",
-    "bfs", "cons_insert", "dedup_embedding", "dedup_incremental_batch",
-    "dedup_ngram_jaccard", "dedup_simhash", "dict_ops_lookup",
-    "eq_nullsafe", "flatmap_cross", "fold_right_concat", "grandchildren",
-    "if_then_else", "int_range", "join_three_way", "keyed_agg_maintenance",
-    "knn_label_vote", "multimodal_ppm_real", "multimodal_wav_real",
-    "opt_match_coalesce", "pivot_wide", "proj_feed_pipeline",
-    "set_of_distinct", "sql_entrypoint", "string_ops", "survey_join",
-    "tfidf_retrieval", "triangle", "union_all_concat", "word_arith",
-    "word_range",
-)
-
-# Round-12 window. Rotation baseline: FINGERPRINTS_r11.json at r11 HEAD.
-# Must-rotate-in set is the tool's output at the final engine commit:
-#   python tools/fingerprints.py --compare FINGERPRINTS_r11.json
-#   → changed = 23 (incl. the 3 new), new = 3 — every name seated in
-#     (A)/(B) below (reproduced at the final engine commit; the mid-
-#     round snapshot read 17/2 before fingerprint_md5's threading,
-#     lm_stupid_backoff, and the langid-scorer rewrite landed). The
-#     dedup family is flagged by DESIGN this round:
-#     the r11 minhash `_tok` twin folded back into a tokenizer=-
-#     parametric `minhash_candidates` and tokenizer= threaded through
-#     simhash / ngram-jaccard / span / substring / boilerplate (VERDICT
-#     r11 task 1), plus the 6dp rounding alignment in the minhash/
-#     ngram/embedding oracles (ADVICE r11 #3); the unicode-fixture
-#     queries ride the tokens_unicode contract-docstring update (the
-#     no-space-script contract, task 3).
-PRIORITY_R12 = (
-    # (A) tool-mandated reachable-delta rotate-ins: the tokenizer=-
-    # threaded dedup family + oracle rounding alignment...
-    "boilerplate_dedup", "dedup_clusters", "dedup_clusters_star",
-    "dedup_embedding", "dedup_fuzzy_apply", "dedup_minhash",
-    "dedup_minhash_unicode", "dedup_ngram_jaccard", "dedup_simhash",
-    "span_dedup", "substring_dedup", "substring_dedup_apply",
-    # ...and the tokens_unicode-contract riders
-    "perplexity_filter_unicode", "text_unicode_pipeline",
-    "unicode_corpus_tokens",
-    # ...and the fingerprint_md5 tokenizer threading's reachers beyond
-    # the two (C)-seated ones (dedup_exact, text_fingerprint)
-    "dedup_incremental_batch", "pipeline_e2e", "pipeline_training_set",
-    # (B) round-12 additions — driver evidence in the round they land:
-    # multiscript language ID over the multilingual fixture, the
-    # no-space-script (CJK) tokenizer contract + per-codepoint fallback,
-    # and the trigram stupid-backoff LM
-    "langid_multiscript", "cjk_segment_tokens", "lm_stupid_backoff",
-    # (C) oldest-evidence refreshes: 29 of the 35 queries whose newest
-    # driver row is r7 (the oldest evidence tier after the r11 rotation);
-    # sample_strata, shuffle_shards, tpch_q3_shape, tpch_q15_shape,
-    # window_frames, and window_rank_family defer to r13 — six seats
-    # short, all six hold green r7 rows over reachable hashes the tool
-    # verifies byte-identical since (held set, FINGERPRINTS_r11 compare)
-    "agg_sum_count", "asof_join", "bucketed_join", "coq_div_mod",
-    "dedup_editdist", "dedup_exact", "dict_fold", "distinct_agg",
-    "groupby_agg", "hard_negatives", "incremental_groupby",
-    "incremental_join", "incremental_min_orders",
-    "incremental_multi_index", "incremental_sum", "json_extract",
-    "multimodal_bytes", "outer_join", "pagerank3", "quantile_disc",
-    "range_join_binned", "rollup_multires", "sessionize", "set_ops",
-    "sink_roundtrip", "stream_stream_join", "stream_window_agg",
-    "text_fingerprint", "topk_per_group",
-)
-# Round-13 window (optimization round 2 of 2). Rotation baseline:
-# FINGERPRINTS_r12.json at r12 HEAD (tool unchanged). Must-rotate-in
-# set is the tool's output at the final engine commit:
-#   python tools/fingerprints.py --compare FINGERPRINTS_r12.json
-#   → changed = 12, new = 0, held = 197. The 12 are exactly the r13
-#     optimization reachers: the BPE-family queries via the driver-side
-#     merge loop in bpe_learn_from_words (+ the bpe_encode words=
-#     docstring caveat), the connected-components consumers via the
-#     pairs checkpoint in dup_clusters/dup_clusters_star, dedup_semantic
-#     via the lloyd_centroids docstring rename, quality_classifier /
-#     budget_select via the nb_score_from_counts contract note, and
-#     doremi_reweight via the doremi_weights eagerness note (ADVICE r12
-#     items — docstrings are part of the function-level reachable hash
-#     by design). Every out-of-window query's reachable hash is
-#     IDENTICAL to its row-earning round's (held set, tool-verified).
+# First 50 = driver-checked window. Rotation rule: run
+#   python tools/fingerprints.py --compare FINGERPRINTS_r13.json
+# at the final engine commit and seat every query it reports `changed`
+# or `new`; seats come from queries whose reachable hash held. This
+# window: the n-gram LM fits were unified into operators/text.py:lm_fit,
+# so the tool reports exactly the six LM-family queries changed
+# (held = 203). doremi_reweight was already seated; the other five
+# rotate in under (A), and five (D) refreshes whose hash held
+# (sample_mixture, sample_weighted, server_album_join,
+# server_artist_filter, text_langid) rotate out. Earlier windows are in
+# git history.
 PRIORITY = (
-    # (A) tool-mandated reachable-delta rotate-ins — the full changed
-    # set, seated verbatim
+    # (A) tool-mandated reachable-delta rotate-ins
     "bpe_encode", "bpe_encode_ids", "bpe_merges", "budget_select",
     "dedup_clusters", "dedup_clusters_star", "dedup_fuzzy_apply",
     "dedup_semantic", "doremi_reweight", "pipeline_tokenize_pack",
     "quality_classifier", "text_unicode_pipeline",
-    # (B) no new queries this round (optimization round — no features)
-    # (C) oldest-evidence refresh: the six r7-row holders deferred from
-    # their r12 seats (the deferral the r12 window comment promised)
+    "perplexity_filter", "perplexity_filter_unicode",
+    "ccnet_bucket_assign", "lm_stupid_backoff", "doremi_trajectory",
+    # (C) oldest-evidence refresh
     "sample_strata", "shuffle_shards", "tpch_q3_shape", "tpch_q15_shape",
     "window_frames", "window_rank_family",
-    # (D) oldest-evidence refresh: 32 of the 39 queries whose newest
-    # driver row is r8 (the oldest tier after (C)); text_langid_trigram,
-    # text_redact_pii, text_repetition, text_salient, text_tokens,
-    # tpch_q18_shape, and upsert_keyed defer — seven seats short, all
-    # seven hold green r8 rows over reachable hashes the tool verifies
-    # byte-identical since (held set, FINGERPRINTS_r12 compare)
+    # (D) oldest-evidence refresh
     "ann_bruteforce", "ann_ivf", "ann_lsh", "bm25_retrieval",
     "cms_tokens", "csv_roundtrip", "cube_agg", "decontaminate",
     "dsl_auto_index", "dsl_auto_index_dist", "dsl_auto_index_join",
@@ -577,18 +53,9 @@ PRIORITY = (
     "dsl_let_if_table", "dsl_orders_agg", "embedding_centroids",
     "embedding_quantize", "hll_users", "multimodal_frames",
     "multimodal_resize", "nested_collections", "percentile_cont",
-    "sample_group_k", "sample_mixture", "sample_weighted",
-    "server_album_join", "server_artist_filter", "text_langid",
+    "sample_group_k",
 )
 assert len(PRIORITY) == 50 and len(set(PRIORITY)) == 50
-assert len(PRIORITY_R12) == 50 and len(set(PRIORITY_R12)) == 50
-assert len(PRIORITY_R11) == 50 and len(set(PRIORITY_R11)) == 50
-assert len(PRIORITY_R10) == 50 and len(set(PRIORITY_R10)) == 50
-assert len(PRIORITY_R9) == 50 and len(set(PRIORITY_R9)) == 50
-assert len(PRIORITY_R8) == 50 and len(set(PRIORITY_R8)) == 50
-assert len(PRIORITY_R7) == 50 and len(set(PRIORITY_R7)) == 50
-assert len(PRIORITY_R6) == 50 and len(set(PRIORITY_R6)) == 50
-assert len(PRIORITY_R5) == 50 and len(set(PRIORITY_R5)) == 50
 
 _queries = {}
 _oracles = {}
@@ -598,23 +65,6 @@ for _m in MODULES:
 
 _missing = [n for n in PRIORITY if n not in _queries]
 assert not _missing, f"PRIORITY names not registered: {_missing}"
-# the audit-trail window must not silently rot under renames either
-_missing_r4 = [n for n in PRIORITY_R4 if n not in _queries]
-assert not _missing_r4, f"PRIORITY_R4 names no longer registered: {_missing_r4}"
-_missing_r5 = [n for n in PRIORITY_R5 if n not in _queries]
-assert not _missing_r5, f"PRIORITY_R5 names no longer registered: {_missing_r5}"
-_missing_r6 = [n for n in PRIORITY_R6 if n not in _queries]
-assert not _missing_r6, f"PRIORITY_R6 names no longer registered: {_missing_r6}"
-_missing_r7 = [n for n in PRIORITY_R7 if n not in _queries]
-assert not _missing_r7, f"PRIORITY_R7 names no longer registered: {_missing_r7}"
-_missing_r8 = [n for n in PRIORITY_R8 if n not in _queries]
-assert not _missing_r8, f"PRIORITY_R8 names no longer registered: {_missing_r8}"
-_missing_r9 = [n for n in PRIORITY_R9 if n not in _queries]
-assert not _missing_r9, f"PRIORITY_R9 names no longer registered: {_missing_r9}"
-_missing_r10 = [n for n in PRIORITY_R10 if n not in _queries]
-assert not _missing_r10, f"PRIORITY_R10 names no longer registered: {_missing_r10}"
-_missing_r11 = [n for n in PRIORITY_R11 if n not in _queries]
-assert not _missing_r11, f"PRIORITY_R11 names no longer registered: {_missing_r11}"
 
 QUERIES = {n: _queries[n] for n in PRIORITY}
 QUERIES.update((n, f) for n, f in _queries.items() if n not in QUERIES)

@@ -17,19 +17,9 @@ from fiat2_spark.functions import scalars as S
 from fiat2_spark.functions import collections as C
 from fiat2_spark.operators import aggregates as A
 from fiat2_spark.operators import relational as R
-from fiat2_spark.workloads.util import dec2, dsum, sql_dsum, tbl
+from fiat2_spark.workloads.util import dec2, dsum, registry, sql_dsum, tbl
 
-QUERIES = {}
-ORACLES = {}
-
-
-def q(name: str, oracle: str | None = None):
-    def reg(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-    return reg
+QUERIES, ORACLES, q = registry()
 
 
 # ---------------------------------------------------------------------------

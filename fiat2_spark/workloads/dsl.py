@@ -8,19 +8,9 @@ from __future__ import annotations
 from fiat2_spark.plans import ast as A
 from fiat2_spark.plans.compile import compile_expr, scalar_frame
 from fiat2_spark.plans.interp import Store
-from fiat2_spark.workloads.util import tbl
+from fiat2_spark.workloads.util import registry, tbl
 
-QUERIES = {}
-ORACLES = {}
-
-
-def q(name: str, oracle: str | None = None):
-    def reg(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-    return reg
+QUERIES, ORACLES, q = registry()
 
 
 def _store(spark, sf_dir, *names) -> Store:

@@ -11,19 +11,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from fiat2_spark.operators import relational as R
-from fiat2_spark.workloads.util import tbl
+from fiat2_spark.workloads.util import registry, tbl
 
-QUERIES = {}
-ORACLES = {}
-
-
-def q(name, oracle=None):
-    def reg(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-    return reg
+QUERIES, ORACLES, q = registry()
 
 
 _EDGES_SQL = """

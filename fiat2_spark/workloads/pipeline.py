@@ -14,19 +14,9 @@ from fiat2_spark.operators import multimodal as M
 from fiat2_spark.operators import similarity as SIM
 from fiat2_spark.operators import text as TX
 from fiat2_spark.operators import web as WEB
-from fiat2_spark.workloads.util import tbl
+from fiat2_spark.workloads.util import registry, tbl
 
-QUERIES = {}
-ORACLES = {}
-
-
-def q(name: str, oracle: str | None = None):
-    def reg(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-    return reg
+QUERIES, ORACLES, q = registry()
 
 
 # Shared SQL fragments -------------------------------------------------------
@@ -4551,7 +4541,7 @@ def cjk_segment_tokens(spark, sf_dir):
 
 # -- trigram LM with full multi-order stupid backoff --------------------------
 
-# Independent DuckDB recomputation of lm_perplexity3's three-level model
+# Independent DuckDB recomputation of lm_perplexity's order-3 model
 # (fresh CTEs rather than _LM_CTES surgery: the bigram oracle's q2 is a
 # TOP level with no alpha, this one's is a backoff level WITH alpha —
 # sharing text would hide that semantic difference, and the oracle is
@@ -4641,8 +4631,8 @@ def lm_stupid_backoff(spark, sf_dir):
     ratio, so the oracle (an independent CTE recomputation, not surgery
     over the bigram's) matches bitwise."""
     d = tbl(spark, sf_dir, "documents")
-    return TX.lm_perplexity3(
+    return TX.lm_perplexity(
         d.filter(F.col("source") != "src0"),
         d.filter(F.col("source") == "src0"),
-        "doc_id", "text", vocab_size=1024, quant=10_000,
+        "doc_id", "text", vocab_size=1024, quant=10_000, order=3,
     )

@@ -9,19 +9,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from fiat2_spark.workloads.util import tbl
+from fiat2_spark.workloads.util import registry, tbl
 
-QUERIES = {}
-ORACLES = {}
-
-
-def q(name: str, oracle: str | None = None):
-    def reg(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-    return reg
+QUERIES, ORACLES, q = registry()
 
 
 def artist_less_than(spark, sf_dir, n: int):

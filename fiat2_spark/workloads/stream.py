@@ -21,19 +21,9 @@ from fiat2_spark.streaming.maintenance import (
     SumIndex,
 )
 from fiat2_spark.streaming.stream_agg import sessionize, windowed_agg
-from fiat2_spark.workloads.util import tbl
+from fiat2_spark.workloads.util import registry, tbl
 
-QUERIES = {}
-ORACLES = {}
-
-
-def q(name: str, oracle: str | None = None):
-    def reg(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-    return reg
+QUERIES, ORACLES, q = registry()
 
 
 def _batches(df, col, n=4):

@@ -54,3 +54,20 @@ def dsum(c: Column) -> Column:
 # SQL fragment mirrors of the above (DuckDB side)
 def sql_dsum(col: str) -> str:
     return f"CAST(SUM(CAST({col} AS DECIMAL(18,2))) AS DOUBLE)"
+
+
+def registry():
+    """A workload module's registry: ``QUERIES, ORACLES, q = registry()``.
+    ``@q(name, oracle)`` records the decorated fn under ``name`` in
+    QUERIES and, when given, its DuckDB SQL in ORACLES."""
+    queries, oracles = {}, {}
+
+    def q(name: str, oracle: str | None = None):
+        def reg(fn):
+            queries[name] = fn
+            if oracle is not None:
+                oracles[name] = oracle
+            return fn
+        return reg
+
+    return queries, oracles, q

@@ -308,3 +308,14 @@ def test_semantic_corpus_random_splits_agree(spark, vecs, cut):
         got.update({r["vid"]: (r["cid"], r["is_dup"]) for r in out.collect()})
     corpus.close()
     assert got == one_shot
+
+
+def test_dup_clusters_chain_converges(spark):
+    """A chain component (diameter 4 — multiple min-label rounds) still
+    reaches the transitive closure with the convergence flag riding the
+    label-update row."""
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11)], "id_a long, id_b long"
+    )
+    got = {r["doc"]: r["cluster"] for r in dup_clusters(pairs).collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10}

@@ -1518,10 +1518,10 @@ def _py_lm_perplexity3(raw: dict[int, str], ref: dict[int, str],
 )
 @pytest.mark.slow  # >=15s model-differential sweep; default run deselects (pytest.ini)
 def test_lm_perplexity3_matches_python_model(spark, raw, ref):
-    """lm_perplexity3 ≡ the exact Python model on random small corpora —
+    """lm_perplexity(order=3) ≡ the exact Python model on random small corpora —
     all three backoff levels exercised (seen trigram, seen-bigram-only,
     unigram floor), with <3-token docs pinned to (0, 0)."""
-    from fiat2_spark.operators.text import lm_perplexity3
+    from fiat2_spark.operators.text import lm_perplexity
 
     raw_t = {i: t for i, t in enumerate(raw)}
     ref_t = {100 + i: t for i, t in enumerate(ref)}
@@ -1529,7 +1529,9 @@ def test_lm_perplexity3_matches_python_model(spark, raw, ref):
     tdf = spark.createDataFrame(list(ref_t.items()), "doc_id long, text string")
     got = {
         r["doc_id"]: (r["n_trans"], r["nll_q"])
-        for r in lm_perplexity3(rdf, tdf, "doc_id", "text", vocab_size=4).collect()
+        for r in lm_perplexity(
+            rdf, tdf, "doc_id", "text", vocab_size=4, order=3
+        ).collect()
     }
     want = _py_lm_perplexity3(raw_t, ref_t, vocab_size=4)
     assert got == want, f"\nraw={raw_t}\nref={ref_t}\ngot={got}\nwant={want}"
@@ -1671,13 +1673,13 @@ def test_script_counts_differential_fuzz(spark, texts):
 
 
 def test_lm_perplexity3_unicode_fit_score_pairing(spark):
-    """lm_perplexity3 under tokenizer=tokens_unicode on a Cyrillic
+    """lm_perplexity(order=3) under tokenizer=tokens_unicode on a Cyrillic
     corpus: the fluent document (every trigram seen in the reference)
     scores strictly lower mean NLL than reversed word salad over the
     same vocabulary (forced down the backoff chain), and the ASCII
     default scores the same corpus as empty (0, 0) — the fit/score
     pairing contract one order up from the registered bigram gate."""
-    from fiat2_spark.operators.text import lm_perplexity3, tokens_unicode
+    from fiat2_spark.operators.text import lm_perplexity, tokens_unicode
 
     sent = "быстрая лиса прыгает через ленивую собаку"
     ref = spark.createDataFrame(
@@ -1689,14 +1691,205 @@ def test_lm_perplexity3_unicode_fit_score_pairing(spark):
     )
     out = {
         r["doc_id"]: (r["n_trans"], r["nll_q"])
-        for r in lm_perplexity3(
-            raw, ref, "doc_id", "text", vocab_size=16, tokenizer=tokens_unicode
+        for r in lm_perplexity(
+            raw, ref, "doc_id", "text", vocab_size=16, tokenizer=tokens_unicode,
+            order=3,
         ).collect()
     }
     assert out[1][0] == out[2][0] == 4
     assert out[1][1] < out[2][1], out
     ascii_out = {
         r["doc_id"]: (r["n_trans"], r["nll_q"])
-        for r in lm_perplexity3(raw, ref, "doc_id", "text", vocab_size=16).collect()
+        for r in lm_perplexity(
+            raw, ref, "doc_id", "text", vocab_size=16, order=3
+        ).collect()
     }
     assert ascii_out == {1: (0, 0), 2: (0, 0)}, ascii_out
+
+
+@pytest.mark.parametrize("order", [2, 3])
+def test_lm_perplexity_every_doc_contract(spark, order):
+    """Docs with < order tokens — including empty and NULL text, and a
+    duplicate id split across rows — still score exactly one row each,
+    (0, 0) when nothing is scorable. The (0, 0) row rides the scoring
+    explode itself (explode_outer + a pre-mapping flag), not a
+    distinct() + join-back."""
+    from fiat2_spark.operators.text import lm_perplexity
+
+    rows = [
+        (1, "the cat sat on the mat"),
+        (2, "single"),
+        (3, ""),
+        (4, None),
+        (5, "two tokens"),
+        (5, "the cat"),  # duplicate id: transitions aggregate per id
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    ref = df.filter(F.col("doc_id") == 1)
+
+    out = {r["doc_id"]: (r["n_trans"], r["nll_q"])
+           for r in lm_perplexity(df, ref, "doc_id", "text", order=order).collect()}
+    assert set(out) == {1, 2, 3, 4, 5}
+    assert out[2] == (0, 0) and out[3] == (0, 0) and out[4] == (0, 0)
+    if order == 2:
+        assert out[1][0] == 5          # 6 tokens -> 5 transitions
+        assert out[5][0] == 2          # 1 + 1 transitions across the two rows
+        assert out[1][1] > 0
+    else:
+        assert out[5] == (0, 0)        # each duplicate row has only 2 tokens
+        assert out[1] == (4, out[1][1])
+
+
+def test_lm_fit_eager_jobs(spark):
+    """`lm_fit` is eager by exactly its materializations: the unigram
+    pass and the vocab, plus each context count c_k (2 ≤ k < order) —
+    3 jobs for a bigram fit, 6 for a trigram fit on a tiny corpus. A
+    fit that materializes more (or re-runs the unigram pass per order)
+    shows up here before it shows up as a slower query."""
+    from fiat2_spark.operators.text import lm_fit
+
+    ref = spark.createDataFrame(
+        [(1, "the cat sat on the mat"), (2, "the dog sat"), (3, "a cat")],
+        "doc_id long, text string",
+    )
+    sc = spark.sparkContext
+
+    def jobs(order: int) -> int:
+        group = f"lm_fit_eager_jobs_{order}"
+        sc.setJobGroup(group, group)
+        try:
+            lm_fit(ref, "text", order=order)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs(2) == 3
+    assert jobs(3) == 6
+
+
+def test_bpe_encode_words_reuse_matches_replay(spark):
+    """bpe_encode/bpe_encode_ids with the learner's words= relation are
+    row-identical to the generic merge-replay path on the same corpus."""
+    from fiat2_spark.operators.text import bpe_encode, bpe_encode_ids, bpe_learn
+
+    def rows(df, *cols):
+        return sorted(tuple(r[c] for c in cols) for r in df.collect())
+
+    docs = [(1, "low lower lowest"), (2, "new newer lowest low"),
+            (3, "low low newer"), (4, "")]
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    words, mdf = bpe_learn(df, "text", n_merges=5)
+    merges = [(r["lhs"], r["rhs"]) for r in mdf.orderBy("step").collect()]
+
+    fast = rows(bpe_encode(df, "doc_id", "text", merges, words=words),
+                "doc_id", "n_words", "n_bpe_tokens")
+    slow = rows(bpe_encode(df, "doc_id", "text", merges),
+                "doc_id", "n_words", "n_bpe_tokens")
+    assert fast == slow and fast  # non-empty, doc 4 absent from both
+
+    fast_ids = rows(bpe_encode_ids(df, "doc_id", "text", merges, words=words),
+                    "doc_id", "pos", "token_id")
+    slow_ids = rows(bpe_encode_ids(df, "doc_id", "text", merges),
+                    "doc_id", "pos", "token_id")
+    assert fast_ids == slow_ids and fast_ids
+
+
+def _learn_both_paths(spark, monkeypatch, texts, n_merges, tokenizer=None):
+    """(driver, distributed) results of bpe_learn on the same corpus:
+    each is (sorted words rows, merge list). Below
+    BPE_DRIVER_VOCAB_LIMIT the merge loop runs on collected rows; a
+    limit of 0 forces the distributed argmax loop."""
+    import fiat2_spark.operators.text as TX
+
+    df = spark.createDataFrame([(t,) for t in texts], "text string")
+    kw = {"tokenizer": tokenizer} if tokenizer is not None else {}
+    out = []
+    for limit in (TX.BPE_DRIVER_VOCAB_LIMIT, 0):
+        monkeypatch.setattr(TX, "BPE_DRIVER_VOCAB_LIMIT", limit)
+        wdf, mdf = TX.bpe_learn(df, "text", n_merges=n_merges, **kw)
+        words = sorted(
+            (r["word"], r["wrapped"], r["freq"]) for r in wdf.collect()
+        )
+        merges = [
+            (r["step"], r["lhs"], r["rhs"], r["freq"])
+            for r in mdf.orderBy("step").collect()
+        ]
+        out.append((words, merges))
+    return out
+
+
+def test_bpe_learn_driver_matches_distributed(spark, monkeypatch):
+    """The driver-side merge loop is bit-identical to the distributed
+    argmax loop: same merge list (order, pair, freq — the
+    (freq desc, lhs, rhs) tie-break decides several steps here) and
+    same final wrapped vocabulary, exercised on overlapping runs
+    (aaaa/aaa), alternations (abab) and frequency ties."""
+    texts = [
+        "aaaa aaa abab abab baba",
+        "the cat sat on the mat the cat",
+        "aa ab ba bb aa ab",
+    ]
+    (d_words, d_merges), (x_words, x_merges) = _learn_both_paths(
+        spark, monkeypatch, texts, n_merges=8
+    )
+    assert d_merges == x_merges
+    assert d_words == x_words
+    assert len(d_merges) == 8
+
+
+def test_bpe_learn_driver_matches_distributed_unicode(spark, monkeypatch):
+    """Same bit-identity under tokens_unicode with non-ASCII symbols —
+    the argmax tie-break compares symbol strings, and Python's
+    code-point order must agree with UTF8String's byte order on
+    multi-byte characters."""
+    from fiat2_spark.operators.text import tokens_unicode
+
+    texts = [
+        "été étage été étage über übel",
+        "мама мыла раму мама мыла",
+        "日本 日本語 語学 日本",
+    ]
+    (d_words, d_merges), (x_words, x_merges) = _learn_both_paths(
+        spark, monkeypatch, texts, n_merges=6, tokenizer=tokens_unicode
+    )
+    assert d_merges == x_merges
+    assert d_words == x_words
+    assert len(d_merges) == 6
+
+
+def test_bpe_learn_driver_early_break_and_empty(spark, monkeypatch):
+    """Degenerate corpora take the same early exits on both paths: a
+    vocabulary of single-symbol words merges only with the end marker
+    and then runs out of pairs before n_merges; an empty corpus yields
+    zero merges and an empty vocabulary."""
+    import fiat2_spark.operators.text as TX
+
+    (d_words, d_merges), (x_words, x_merges) = _learn_both_paths(
+        spark, monkeypatch, ["a b a", "b a"], n_merges=8
+    )
+    assert d_merges == x_merges and d_words == x_words
+    assert 0 < len(d_merges) < 8
+
+    empty = spark.createDataFrame([], "text string")
+    wdf, mdf = TX.bpe_learn(empty, "text", n_merges=4)
+    assert mdf.count() == 0 and wdf.count() == 0
+
+
+def test_bpe_learn_driver_path_runs_no_jobs_per_merge(spark):
+    """The driver path's job count is independent of n_merges: learning
+    2 vs 10 merges on the same tiny vocabulary costs the same number of
+    Spark jobs (the checkpoint materialization + the bounded probe) —
+    the per-merge argmax jobs are gone."""
+    from fiat2_spark.operators.text import bpe_learn
+
+    df = spark.createDataFrame(
+        [("aaaa aaa abab the cat sat on the mat",)], "text string"
+    )
+    sc = spark.sparkContext
+
+    def jobs(n_merges: int) -> int:
+        j0 = len(sc.statusTracker().getJobIdsForGroup(None) or [])
+        bpe_learn(df, "text", n_merges=n_merges)
+        return len(sc.statusTracker().getJobIdsForGroup(None) or []) - j0
+
+    assert jobs(10) == jobs(2)

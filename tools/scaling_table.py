@@ -1,12 +1,11 @@
 #!/usr/bin/env python
-"""SCALING_r13 table builder (VERDICT r12 item 6): reads two
-back-to-back bench detail files (32-core and 8-core, same host regime)
-and prints per-query low/high ratios WITH the control probes beside
-them, so a ratio is only quoted when the two runs' controls agree
-(within ~10%) — the r12 scaling block was unusable precisely because
-its 32-core denominator came from a contended run.
+"""Core-scaling table builder: reads two back-to-back bench detail
+files (32-core and 8-core, same host regime) and prints per-query
+low/high ratios WITH the control probes beside them, so a ratio is only
+quoted when the two runs' controls agree (within ~10%) — a ratio whose
+32-core denominator came from a contended run is unusable.
 
-Usage: python tools/scaling_table_r13.py detail_c32.json detail_c8.json
+Usage: python tools/scaling_table.py detail_c32.json detail_c8.json
 """
 
 from __future__ import annotations
