@@ -11,14 +11,26 @@ semantics (CAssign replaces the stored value wholesale).
 The catalog also fronts the test corpus: ``Catalog.from_sf_dir`` loads
 the driver's parquet tables (TESTDATA.md) and registers temp views so
 both the DataFrame API and ``spark.sql`` see the same relations.
+
+Every corpus read goes through ``parquet_table``: it resolves a table's
+schema once per SparkContext (the inference is one Spark job per read
+otherwise) and normalizes the event-time column. The cache holds schemas
+only, never data, so each read is a fresh relation.
 """
 
 from __future__ import annotations
 
+import json
 import os
+import threading
+import weakref
 from contextlib import contextmanager
+from dataclasses import dataclass
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType, TimestampNTZType
 
 TPCH_TABLES = (
     "region",
@@ -80,16 +92,119 @@ class Catalog:
     @classmethod
     def from_sf_dir(cls, spark: SparkSession, sf_dir: str, tables=TPCH_TABLES) -> "Catalog":
         """Load the driver's parquet tables for one scale factor."""
-        from fiat2_spark.workloads.util import tbl
-
         cat = cls(spark)
         for t in tables:
-            path = os.path.join(sf_dir, f"{t}.parquet")
-            if os.path.exists(path):
+            if os.path.exists(os.path.join(sf_dir, f"{t}.parquet")):
                 cat.assign(t, tbl(spark, sf_dir, t))
         return cat
 
 
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    """Convenience: read several parquet tables without registering views."""
-    return [spark.read.parquet(os.path.join(sf_dir, f"{n}.parquet")) for n in names]
+# -- table reads ------------------------------------------------------------
+
+NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
+
+@dataclass(frozen=True)
+class TableMeta:
+    """What a read needs to know about one parquet table: its Spark
+    schema and the columns stored as TIMESTAMP(NANOS), which Spark's
+    reader accepts only as long nanos (under ``NANOS_AS_LONG``)."""
+
+    schema: StructType
+    nanos: tuple[str, ...]
+
+
+# SparkContext → {abs path: (file signature, TableMeta)}. Keyed weakly on
+# the context, so a new SparkContext starts empty and a stopped one's
+# entries go with it. Two threads racing on a table's first read may both
+# infer it; either result is the same schema.
+_META: "weakref.WeakKeyDictionary[SparkContext, dict]" = weakref.WeakKeyDictionary()
+_META_LOCK = threading.Lock()
+
+
+def _files(path: str) -> list[str]:
+    """The files under a parquet path (itself, when it is a file)."""
+    if os.path.isfile(path):
+        return [path]
+    return sorted(os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs)
+
+
+def _signature(files: list[str]) -> tuple:
+    """Changes whenever a file is added, removed or rewritten."""
+    sig = []
+    for f in files:
+        st = os.stat(f)
+        sig.append((f, st.st_mtime_ns, st.st_size, st.st_ino))
+    return tuple(sig)
+
+
+def _nanos_columns(files: list[str]) -> tuple[str, ...]:
+    """Top-level columns the footer stores as TIMESTAMP(NANOS), read from
+    the first data file — the one Spark infers the schema from."""
+    import pyarrow.parquet as pq
+
+    data = [f for f in files if not os.path.basename(f).startswith(("_", "."))]
+    if not data:
+        return ()
+    schema = pq.read_metadata(data[0]).schema
+    out = []
+    for i in range(len(schema)):
+        c = schema.column(i)
+        if c.max_repetition_level == 0 and "." not in c.path and c.logical_type.type == "TIMESTAMP":
+            if json.loads(c.logical_type.to_json()).get("timeUnit") == "nanoseconds":
+                out.append(c.name)
+    return tuple(out)
+
+
+def table_meta(spark: SparkSession, path: str) -> TableMeta:
+    """A parquet table's ``TableMeta``, inferred on its first read in this
+    SparkContext and again only after the files at ``path`` change. A path
+    off the local filesystem has no signature and is inferred every time.
+    When the table holds TIMESTAMP(NANOS) columns, also sets
+    ``NANOS_AS_LONG`` — the only session conf a read touches — so the
+    reader accepts them."""
+    files = _files(path)
+    if not files:
+        return TableMeta(spark.read.parquet(path).schema, ())
+    key, sig = os.path.abspath(path), _signature(files)
+    with _META_LOCK:
+        cache = _META.setdefault(spark.sparkContext, {})
+    hit = cache.get(key)
+    meta = hit[1] if hit is not None and hit[0] == sig else None
+    nanos = meta.nanos if meta is not None else _nanos_columns(files)
+    if nanos:
+        spark.conf.set(NANOS_AS_LONG, "true")
+    if meta is None:
+        meta = TableMeta(spark.read.parquet(path).schema, nanos)
+        cache[key] = (sig, meta)
+    return meta
+
+
+def normalize_ts(df: DataFrame, meta: TableMeta, event_time: str | None = None) -> DataFrame:
+    """Surface timestamps the way DuckDB (the oracle) does. TIMESTAMP(NANOS)
+    columns arrive as long nanos and are truncated to micros. The
+    ``event_time`` column, when stored as TIMESTAMP(MICROS) with
+    isAdjustedToUTC=false, arrives as TIMESTAMP_NTZ — a type watermarks and
+    epoch casts reject — and is cast to TIMESTAMP; its wall-clock rendering
+    (what the oracle compares) is invariant under the session tz."""
+    for c in meta.nanos:
+        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000").cast("long")))
+    if event_time in meta.schema.names and isinstance(meta.schema[event_time].dataType, TimestampNTZType):
+        df = df.withColumn(event_time, F.col(event_time).cast("timestamp"))
+    return df
+
+
+def parquet_table(spark: SparkSession, path: str, event_time: str | None = None) -> DataFrame:
+    """Read a parquet table with its cached schema (no inference job) and
+    normalized timestamps. Each call returns a fresh relation, so
+    self-joins keep distinct attribute ids."""
+    meta = table_meta(spark, path)
+    return normalize_ts(spark.read.schema(meta.schema).parquet(path), meta, event_time)
+
+
+def tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """One corpus table. ``events.ts`` has shipped as TIMESTAMP(NANOS),
+    TIMESTAMP(MICROS) with and without isAdjustedToUTC; every encoding
+    reads as the same TIMESTAMP values."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    return parquet_table(spark, path, event_time="ts" if name == "events" else None)

@@ -17,7 +17,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from fiat2_spark.catalog import TPCH_TABLES
+from fiat2_spark.catalog import TPCH_TABLES, Catalog
 
 _FORMATS = ("parquet", "orc", "json", "csv")
 
@@ -183,11 +183,7 @@ def compact_files(
 
 def register_views(spark: SparkSession, sf_dir: str, tables=TPCH_TABLES) -> None:
     """Register the testdata tables as temp views for spark.sql use."""
-    from fiat2_spark.workloads.util import tbl
-
-    for t in tables:
-        if os.path.exists(os.path.join(sf_dir, f"{t}.parquet")):
-            tbl(spark, sf_dir, t).createOrReplaceTempView(t)
+    Catalog.from_sf_dir(spark, sf_dir, tables)
 
 
 def to_json_records(df: DataFrame, n: int | None = None) -> list[str]:

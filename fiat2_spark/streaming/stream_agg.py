@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fiat2_spark.catalog import normalize_ts, table_meta
+
 
 def windowed_agg(events: DataFrame, window: str = "5 minutes", watermark: str = "10 minutes") -> DataFrame:
     """Tumbling-window count/sum per event_type. Works identically on a
@@ -47,33 +49,7 @@ def run_streaming_window_smoke(spark: SparkSession, parquet_path: str) -> list:
     """Drive the windowed aggregation as a real streaming query against
     the events parquet via the memory sink; returns the collected rows.
     `processAllAvailable` makes it synchronous for tests."""
-    import os
-    import tempfile
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    static = spark.read.parquet(parquet_path)  # ts arrives as long nanos
-    # FileStreamSource wants a directory; stage the file via symlink
-    stage = tempfile.mkdtemp(prefix="fiat2_stream_")
-    os.symlink(os.path.abspath(parquet_path), os.path.join(stage, "part-0.parquet"))
-    stream = stream_from_parquet(spark, stage, static.schema)
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000").cast("long"))
-        )
-    elif dict(stream.dtypes).get("ts") == "timestamp_ntz":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    agg = windowed_agg(stream)
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("fiat2_stream_smoke")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        return spark.sql("SELECT * FROM fiat2_stream_smoke").collect()
-    finally:
-        q.stop()
+    return run_streaming_smoke(spark, parquet_path, windowed_agg, "fiat2_stream_smoke", mode="complete")
 
 
 def keyed_agg(events: DataFrame) -> DataFrame:
@@ -239,22 +215,15 @@ def stateful_ewma(events: DataFrame) -> DataFrame:
 
 def _staged_stream(spark: SparkSession, parquet_path: str):
     """File-source stream over a single parquet file (staged via symlink
-    into a temp dir), with the events nanos→timestamp normalization."""
+    into a temp dir), with the cached static schema and the events
+    timestamp normalization of every batch read."""
     import os
     import tempfile
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    static = spark.read.parquet(parquet_path)
+    meta = table_meta(spark, parquet_path)
     stage = tempfile.mkdtemp(prefix="fiat2_stream_")
     os.symlink(os.path.abspath(parquet_path), os.path.join(stage, "part-0.parquet"))
-    stream = stream_from_parquet(spark, stage, static.schema)
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000").cast("long"))
-        )
-    elif dict(stream.dtypes).get("ts") == "timestamp_ntz":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
+    return normalize_ts(stream_from_parquet(spark, stage, meta.schema), meta, event_time="ts")
 
 
 def run_streaming_smoke(spark: SparkSession, parquet_path: str, plan, name: str, mode: str = "update") -> list:

@@ -10,35 +10,10 @@ with 2-digit cents, so DECIMAL(18,2) is lossless.
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-
-def tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    if name == "events":
-        # events.ts has shipped as both TIMESTAMP(NANOS) (older testdata,
-        # which Spark's vectorized reader rejects unless surfaced as long
-        # nanos) and TIMESTAMP(MICROS). Adapt to what's on disk: when the
-        # column arrives as long nanos, truncate to micros — exactly what
-        # DuckDB does when it surfaces the column as (microsecond)
-        # TIMESTAMP, so the oracle sees identical values.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        if dict(df.dtypes).get("ts") == "bigint":
-            df = df.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts div 1000").cast("long"))
-            )
-        elif dict(df.dtypes).get("ts") == "timestamp_ntz":
-            # Newer testdata ships TIMESTAMP(MICROS) (isAdjustedToUTC=false),
-            # which Spark surfaces as TIMESTAMP_NTZ — a type watermarks and
-            # epoch casts reject. Cast to TIMESTAMP: the wall-clock rendering
-            # (what the oracle compares) is invariant under the session tz.
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
-    return spark.read.parquet(path)
+from fiat2_spark.catalog import tbl  # noqa: F401  (the workload modules' table read)
 
 
 def dec2(c: Column) -> Column:

@@ -140,6 +140,146 @@ def test_tbl_adapts_all_historical_events_ts_encodings(spark):
         assert len(got["nanos"]) == 5
 
 
+def _read_jobs(spark, sf_dir, name, group):
+    """tbl() under its own job group → (DataFrame, jobs it started)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        df = tbl(spark, sf_dir, name)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return df, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _write(path, **cols):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table({k: pa.array(v, pa.int64()) for k, v in cols.items()}), path)
+
+
+def test_tbl_infers_each_schema_once(spark):
+    """A table's first read pays the one schema-inference job; a second
+    read of the unchanged table starts none, and still returns a fresh
+    relation (a self-join keeps distinct attribute ids)."""
+    with tempfile.TemporaryDirectory() as d:
+        _write(os.path.join(d, "t.parquet"), k=[1, 2, 3])
+        a, first = _read_jobs(spark, d, "t", "tbl_once_1")
+        b, second = _read_jobs(spark, d, "t", "tbl_once_2")
+        assert (first, second) == (1, 0)
+        assert a.join(b, a["k"] == b["k"]).count() == 3
+
+
+def test_tbl_sees_table_rewritten_at_same_path(spark):
+    """The schema cache is keyed on the files' stat signature: a table
+    rewritten in place with an added column shows it on the next read,
+    which re-infers once; the read after that is free again."""
+    with tempfile.TemporaryDirectory() as d:
+        path = os.path.join(d, "t.parquet")
+        _write(path, k=[1, 2])
+        _read_jobs(spark, d, "t", "tbl_rewrite_1")
+        _, cached = _read_jobs(spark, d, "t", "tbl_rewrite_2")
+        _write(path, k=[1, 2], extra=[7, 8])
+        df, reinfer = _read_jobs(spark, d, "t", "tbl_rewrite_3")
+        _, again = _read_jobs(spark, d, "t", "tbl_rewrite_4")
+        assert df.columns == ["k", "extra"]
+        assert sorted(r["extra"] for r in df.collect()) == [7, 8]
+        assert (cached, reinfer, again) == (0, 1, 0)
+
+
+def test_tbl_micros_events_leave_nanos_conf_unset(spark):
+    """Only a footer holding TIMESTAMP(NANOS) may set nanosAsLong; the
+    MICROS events every corpus ships must leave session conf alone (it is
+    shared by the serving threads)."""
+    from fiat2_spark.catalog import NANOS_AS_LONG
+
+    spark.conf.unset(NANOS_AS_LONG)
+    with tempfile.TemporaryDirectory() as d:
+        os.symlink(os.path.join(SF_SMOKE, "events.parquet"), os.path.join(d, "events.parquet"))
+        for sf_dir in (d, SF_SMOKE, d):  # cold and cached reads
+            assert dict(tbl(spark, sf_dir, "events").dtypes)["ts"] == "timestamp"
+    assert spark.conf.get(NANOS_AS_LONG) == "false"
+
+
+def test_tbl_schema_cache_under_racing_threads(spark):
+    """More threads than cores race on first reads of two tables (the
+    serving boundary's shape): every read sees its table's own schema,
+    and afterwards each table is cached."""
+    import sys
+    import threading
+
+    with tempfile.TemporaryDirectory() as d:
+        _write(os.path.join(d, "a.parquet"), x=[1])
+        _write(os.path.join(d, "b.parquet"), y=[2], z=[3])
+        want = {"a": ["x"], "b": ["y", "z"]}
+        got, errors = [], []
+
+        def read(name):
+            try:
+                got.append((name, tbl(spark, d, name).columns))
+            except Exception as e:  # surfaced by the assert below
+                errors.append(e)
+
+        threads = [threading.Thread(target=read, args=("ab"[i % 2],)) for i in range(os.cpu_count() + 2)]
+        old = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=120)
+        finally:
+            sys.setswitchinterval(old)
+        assert not any(t.is_alive() for t in threads) and not errors, errors
+        assert len(got) == len(threads) and all(cols == want[n] for n, cols in got)
+        assert [_read_jobs(spark, d, n, f"tbl_race_{n}")[1] for n in "ab"] == [0, 0]
+
+
+_NEW_CONTEXT_SCRIPT = """
+import os, sys, tempfile
+sys.path.insert(0, sys.argv[1])
+import pyarrow as pa, pyarrow.parquet as pq
+from fiat2_spark.session import get_spark
+from fiat2_spark.workloads.util import tbl
+
+def jobs(spark, d, group):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        tbl(spark, d, "t")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+d = tempfile.mkdtemp()
+pq.write_table(pa.table({"k": [1, 2]}), os.path.join(d, "t.parquet"))
+spark = get_spark(master="local[1]", shuffle_partitions=1)
+counts = [jobs(spark, d, "first"), jobs(spark, d, "cached")]
+spark.stop()
+spark = get_spark(master="local[1]", shuffle_partitions=1)
+counts.append(jobs(spark, d, "new_context"))
+spark.stop()
+print(counts)
+"""
+
+
+def test_new_spark_context_starts_with_empty_schema_cache():
+    """Schemas are cached per SparkContext: after a stop and a new
+    context in the same process, the first read infers again. Runs in
+    its own small process, since one process holds one SparkContext."""
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="512m")
+    out = subprocess.run(
+        [sys.executable, "-c", _NEW_CONTEXT_SCRIPT, root],
+        env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert out.stdout.strip().splitlines()[-1] == "[1, 0, 1]"
+
+
 def test_http_serving_shim_matches_query(spark):
     """The HTTP process boundary (serving.py, mirroring Lib.hs:28-46):
     both routes answer over a real socket with the same JSON records

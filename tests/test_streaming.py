@@ -8,6 +8,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from fiat2_spark.catalog import normalize_ts, table_meta
 from fiat2_spark.streaming.stream_agg import (
     keyed_agg,
     run_streaming_smoke,
@@ -63,20 +64,15 @@ def test_streaming_dedup(spark):
     import os
     import tempfile
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     src = f"{SF_SMOKE}/events.parquet"
-    static = spark.read.parquet(src)
+    meta = table_meta(spark, src)
     stage = tempfile.mkdtemp(prefix="fiat2_dedup_")
     os.symlink(os.path.abspath(src), os.path.join(stage, "a.parquet"))
     os.symlink(os.path.abspath(src), os.path.join(stage, "b.parquet"))  # replay
 
     from fiat2_spark.streaming.stream_agg import stream_from_parquet
 
-    stream = stream_from_parquet(spark, stage, static.schema)
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000").cast("long")))
-    elif dict(stream.dtypes).get("ts") == "timestamp_ntz":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    stream = normalize_ts(stream_from_parquet(spark, stage, meta.schema), meta, "ts")
     q = (
         streaming_dedup(stream, ["event_id"])
         .writeStream.outputMode("append")
@@ -89,7 +85,7 @@ def test_streaming_dedup(spark):
         got = spark.sql("SELECT count(*) AS n, count(DISTINCT event_id) AS d FROM dedup_smoke").collect()[0]
     finally:
         q.stop()
-    assert got["n"] == got["d"] == static.select("event_id").distinct().count()
+    assert got["n"] == got["d"] == tbl(spark, SF_SMOKE, "events").select("event_id").distinct().count()
 
 
 def test_streaming_interval_join_matches_batch(spark):
@@ -108,19 +104,13 @@ def test_streaming_interval_join_matches_batch(spark):
     import os
     import tempfile
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     src = f"{SF_SMOKE}/events.parquet"
-    static = spark.read.parquet(src)
+    meta = table_meta(spark, src)
     stage = tempfile.mkdtemp(prefix="fiat2_ssj_")
     os.symlink(os.path.abspath(src), os.path.join(stage, "a.parquet"))
 
     def staged():
-        s = stream_from_parquet(spark, stage, static.schema)
-        if dict(s.dtypes).get("ts") == "bigint":
-            s = s.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000").cast("long")))
-        elif dict(s.dtypes).get("ts") == "timestamp_ntz":
-            s = s.withColumn("ts", F.col("ts").cast("timestamp"))
-        return s
+        return normalize_ts(stream_from_parquet(spark, stage, meta.schema), meta, "ts")
 
     joined = interval_join(
         staged().filter(F.col("event_type") == "click"),
@@ -259,15 +249,13 @@ def test_streaming_static_enrichment_matches_batch(spark):
     dim = spark.createDataFrame(
         [(i, f"u{i % 4}") for i in range(50)], "user_id long, cohort string"
     )
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     src = f"{SF_SMOKE}/events.parquet"
-    static = spark.read.parquet(src)
     stage = tempfile.mkdtemp(prefix="fiat2_enrich_")
     os.symlink(os.path.abspath(src), os.path.join(stage, "a.parquet"))
 
     from fiat2_spark.streaming.stream_agg import stream_from_parquet
 
-    stream = stream_from_parquet(spark, stage, static.schema)
+    stream = stream_from_parquet(spark, stage, table_meta(spark, src).schema)
     joined = stream.select("event_id", "user_id").join(F.broadcast(dim), "user_id")
     q = (
         joined.writeStream.outputMode("append")
@@ -283,7 +271,7 @@ def test_streaming_static_enrichment_matches_batch(spark):
     got = {(r["event_id"], r["cohort"]) for r in rows}
     want = {
         (r["event_id"], r["cohort"])
-        for r in static.select("event_id", "user_id").join(dim, "user_id").collect()
+        for r in tbl(spark, SF_SMOKE, "events").select("event_id", "user_id").join(dim, "user_id").collect()
     }
     assert got == want and len(want) > 0
 

@@ -1444,10 +1444,10 @@ def test_cjk_nospace_contract_crafted_rows(spark):
         con.close()
 
 
-def _py_lm_perplexity3(raw: dict[int, str], ref: dict[int, str],
+def _py_lm_perplexity_trigram(raw: dict[int, str], ref: dict[int, str],
                        vocab_size: int = 4, quant: int = 10_000,
                        alpha_num: int = 2, alpha_den: int = 5):
-    """Exact Python mirror of `lm_perplexity3`: trigram MLE, then
+    """Exact Python mirror of `lm_perplexity(order=3)`: trigram MLE, then
     α·bigram, then α²·add-1 unigram (Brants et al. 2007 full stupid
     backoff) — the third independent realization next to the Spark
     plan and the DuckDB oracle."""
@@ -1517,7 +1517,7 @@ def _py_lm_perplexity3(raw: dict[int, str], ref: dict[int, str],
     ),
 )
 @pytest.mark.slow  # >=15s model-differential sweep; default run deselects (pytest.ini)
-def test_lm_perplexity3_matches_python_model(spark, raw, ref):
+def test_lm_perplexity_trigram_matches_python_model(spark, raw, ref):
     """lm_perplexity(order=3) ≡ the exact Python model on random small corpora —
     all three backoff levels exercised (seen trigram, seen-bigram-only,
     unigram floor), with <3-token docs pinned to (0, 0)."""
@@ -1533,7 +1533,7 @@ def test_lm_perplexity3_matches_python_model(spark, raw, ref):
             rdf, tdf, "doc_id", "text", vocab_size=4, order=3
         ).collect()
     }
-    want = _py_lm_perplexity3(raw_t, ref_t, vocab_size=4)
+    want = _py_lm_perplexity_trigram(raw_t, ref_t, vocab_size=4)
     assert got == want, f"\nraw={raw_t}\nref={ref_t}\ngot={got}\nwant={want}"
 
 
@@ -1672,7 +1672,7 @@ def test_script_counts_differential_fuzz(spark, texts):
         con.close()
 
 
-def test_lm_perplexity3_unicode_fit_score_pairing(spark):
+def test_lm_perplexity_trigram_unicode_fit_score_pairing(spark):
     """lm_perplexity(order=3) under tokenizer=tokens_unicode on a Cyrillic
     corpus: the fluent document (every trigram seen in the reference)
     scores strictly lower mean NLL than reversed word salad over the
