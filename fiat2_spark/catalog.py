@@ -12,10 +12,11 @@ The catalog also fronts the test corpus: ``Catalog.from_sf_dir`` loads
 the driver's parquet tables (TESTDATA.md) and registers temp views so
 both the DataFrame API and ``spark.sql`` see the same relations.
 
-Every corpus read goes through ``parquet_table``: it resolves a table's
-schema once per SparkContext (the inference is one Spark job per read
-otherwise) and normalizes the event-time column. The cache holds schemas
-only, never data, so each read is a fresh relation.
+Every corpus read (``tbl`` and the streaming sources) takes its schema
+from ``table_meta``, which infers it once per SparkContext (inference is
+one Spark job per read otherwise), and its timestamps from
+``normalize_ts``. The cache holds schemas only, never data, so each read
+is a fresh relation.
 """
 
 from __future__ import annotations
@@ -194,17 +195,12 @@ def normalize_ts(df: DataFrame, meta: TableMeta, event_time: str | None = None) 
     return df
 
 
-def parquet_table(spark: SparkSession, path: str, event_time: str | None = None) -> DataFrame:
-    """Read a parquet table with its cached schema (no inference job) and
-    normalized timestamps. Each call returns a fresh relation, so
-    self-joins keep distinct attribute ids."""
-    meta = table_meta(spark, path)
-    return normalize_ts(spark.read.schema(meta.schema).parquet(path), meta, event_time)
-
-
 def tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """One corpus table. ``events.ts`` has shipped as TIMESTAMP(NANOS),
-    TIMESTAMP(MICROS) with and without isAdjustedToUTC; every encoding
-    reads as the same TIMESTAMP values."""
+    """One corpus table, read with its cached schema (no inference job)
+    as a fresh relation, so self-joins keep distinct attribute ids.
+    ``events.ts`` has shipped as TIMESTAMP(NANOS) and as TIMESTAMP(MICROS)
+    with and without isAdjustedToUTC; every encoding reads as the same
+    TIMESTAMP values."""
     path = os.path.join(sf_dir, f"{name}.parquet")
-    return parquet_table(spark, path, event_time="ts" if name == "events" else None)
+    meta = table_meta(spark, path)
+    return normalize_ts(spark.read.schema(meta.schema).parquet(path), meta, "ts" if name == "events" else None)

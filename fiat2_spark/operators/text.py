@@ -187,8 +187,8 @@ def tokens_unicode(text: Column) -> Column:
     (`bpe_word_table` / `bpe_pair_counts` / `bpe_learn` / `bpe_encode`
     / `bpe_encode_ids`), the model-based selection stack (`dsir_*`,
     `nb_*`, `lm_perplexity`/`perplexity_filter`, `doremi_*`) and the
-    heuristic scorers (`quality_score`, `gopher_rules`). Operators that take a TOKEN COLUMN
-    (`lang_scores`, `stopword_ratio`, `token_count`,
+    heuristic scorers (`quality_score`, `gopher_rules`). Operators that
+    take a TOKEN COLUMN (`lang_scores`, `stopword_ratio`, `token_count`,
     `repetition_stats`) compose with either tokenizer unchanged.
     Two residual English/Latin specifics survive a `tokens_unicode`
     corpus: the STOPWORDS lists are ASCII function words (langid and
