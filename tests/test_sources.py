@@ -236,7 +236,7 @@ def test_tbl_schema_cache_under_racing_threads(spark):
 
 
 _NEW_CONTEXT_SCRIPT = """
-import os, sys, tempfile
+import os, sys
 sys.path.insert(0, sys.argv[1])
 import pyarrow as pa, pyarrow.parquet as pq
 from fiat2_spark.session import get_spark
@@ -251,7 +251,7 @@ def jobs(spark, d, group):
         sc.setLocalProperty("spark.jobGroup.id", None)
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
-d = tempfile.mkdtemp()
+d = sys.argv[2]
 pq.write_table(pa.table({"k": [1, 2]}), os.path.join(d, "t.parquet"))
 spark = get_spark(master="local[1]", shuffle_partitions=1)
 counts = [jobs(spark, d, "first"), jobs(spark, d, "cached")]
@@ -263,7 +263,7 @@ print(counts)
 """
 
 
-def test_new_spark_context_starts_with_empty_schema_cache():
+def test_new_spark_context_starts_with_empty_schema_cache(tmp_path):
     """Schemas are cached per SparkContext: after a stop and a new
     context in the same process, the first read infers again. Runs in
     its own small process, since one process holds one SparkContext."""
@@ -273,7 +273,7 @@ def test_new_spark_context_starts_with_empty_schema_cache():
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="512m")
     out = subprocess.run(
-        [sys.executable, "-c", _NEW_CONTEXT_SCRIPT, root],
+        [sys.executable, "-c", _NEW_CONTEXT_SCRIPT, root, str(tmp_path)],
         env=env, capture_output=True, text=True, timeout=300,
     )
     assert out.returncode == 0, out.stderr[-3000:]
