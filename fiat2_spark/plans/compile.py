@@ -25,6 +25,7 @@ column ``value``.
 
 from __future__ import annotations
 
+import functools
 import itertools
 from typing import Any
 
@@ -51,6 +52,14 @@ class _ALit(A.Atom):
     AST by _lift_table_aggs (not part of the reference surface)."""
 
     v: Any
+
+
+@dataclass(frozen=True)
+class _AAggRef(A.Atom):
+    """Internal: column ``name`` of the one-row aggregate that
+    _lift_table_aggs lifts table folds into (see _TableAggs)."""
+
+    name: str
 
 
 @dataclass(frozen=True)
@@ -285,6 +294,8 @@ def _atom_column(a: A.Atom) -> Column:
             return _py_to_col(v)
         case _AFoldVal(v):
             return _collected_to_col(v)
+        case _AAggRef(name):
+            return F.col(name)
         case A.AWord(n) | A.AInt(n):
             return F.lit(n).cast("long")
         case A.ABool(b):
@@ -1033,11 +1044,15 @@ def _retag_list(v: list, tag: str) -> list:
 
 def eval_value(e: A.Expr, env: dict, store, spark: SparkSession) -> Any:
     """Evaluate a scalar-typed expression to a Python value. Table-rooted
-    aggregates (EACFold/EACIFold/OLength over a table) are computed as
-    DataFrame aggregations; the residual scalar expression is evaluated
-    in a single-row select — unless the whole expression is pure driver
-    work (_try_driver_eval), which short-circuits without a Spark job."""
-    lifted = _lift_table_aggs(e, env, store, spark)
+    aggregates (sum/count/min/max/length and general folds over a table)
+    are lifted into one aggregate per source table (_TableAggs); that
+    one-row aggregate is collected ONCE for the whole expression and its
+    values spliced back as literals. The residual is then evaluated
+    driver-side when it is pure driver work (_try_driver_eval), else in
+    a single-row select — so an expression without table aggregates
+    that the driver can evaluate starts no Spark job."""
+    aggs = _TableAggs(env, store, spark)
+    lifted = aggs.splice(_lift_table_aggs(e, env, store, spark, aggs))
     v = _try_driver_eval(lifted, env)
     if v is not _NO_DRIVER:
         return v
@@ -1049,56 +1064,68 @@ def eval_value(e: A.Expr, env: dict, store, spark: SparkSession) -> Any:
 def scalar_frame(named: dict[str, A.Expr], env: dict, store, spark: SparkSession) -> DataFrame:
     """One-row DataFrame of named scalar-typed expressions — the read
     path of the Ex_Orders / Ex_Sum command loops (sum/min reads plus
-    threshold logic, Ex_Orders.v:69-76). Table-rooted aggregates inside
-    each expression are lifted to DataFrame aggregations
-    (annotate_collection's sum/min/count recognition,
-    CollectionTransf.v:6-22); the residual scalar expression compiles to
-    a single-row select."""
-    cols = []
-    for name, e in named.items():
-        lifted = _lift_table_aggs(e, env, store, spark)
-        cols.append(compile_column(lifted, env).alias(name))
-    return spark.range(1).select(*cols)
+    threshold logic, Ex_Orders.v:69-76). Table-rooted aggregates across
+    ALL the expressions are lifted (annotate_collection's sum/min/count
+    recognition, CollectionTransf.v:6-22) into one lazy aggregate per
+    distinct source table — a fold read by two expressions is one
+    column — and the residual expressions are columns selected over
+    that one-row aggregate (cross-joined only when there are several
+    sources). Building the frame starts no Spark job, except for a
+    to_idx dict fold, which is still built eagerly (see
+    _lift_table_aggs); the aggregate runs when the frame is drained."""
+    aggs = _TableAggs(env, store, spark)
+    cols = [
+        compile_column(_lift_table_aggs(e, env, store, spark, aggs), env).alias(name)
+        for name, e in named.items()
+    ]
+    return (aggs.frame() if aggs else spark.range(1)).select(*cols)
 
 
-#: Row cap for the general-fold fallback: a non-AC fold is inherently
+#: Row cap for general (non-AC) table folds: such a fold is inherently
 #: sequential, so the table is collapsed to ONE array on one executor.
 #: The reference runs the same semantics on a single node
 #: (Interpret.v:313-319); at warehouse scale users should write
 #: AC-recognizable folds (sum/count/min/max, lifted to shuffles above)
-#: or group-bounded folds instead.
+#: or group-bounded folds instead. A fold over more rows fails its
+#: action with an error naming this limit.
 FOLD_COLLECT_LIMIT = 1_000_000
 
 
-def _fold_table(e1, e2, v, acc, e3, env, store, spark) -> Any:
-    """General (non-AC) right fold over a table — the fallback realizing
-    ``EFold`` on tables verbatim (Interpret.v:313-319; the reference's
-    ``to_idx`` fold, DictIndexImpl.v:25-33, is the motivating program).
-    Rows enter the fold in canonical sorted order (DataFrames are bags;
-    sort_array fixes the order the way ESort's canonicalization does),
-    and the whole fold runs INSIDE Spark as one ``F.aggregate`` over a
-    ``collect_list`` array — the driver never loops row-at-a-time."""
-    df = compile_expr(e1, env, store, spark)
-    n = df.count()
-    if n > FOLD_COLLECT_LIMIT:
-        raise CompileError(
-            f"general table fold over {n} rows exceeds FOLD_COLLECT_LIMIT "
-            f"({FOLD_COLLECT_LIMIT}); rewrite as an AC fold or group-bounded fold"
-        )
+def _fold_agg(df: DataFrame, init: Column, v: str, acc: str, e3: A.Expr, env: dict) -> Column:
+    """General (non-AC) right fold over the rows of ``df`` as ONE
+    aggregate expression — the fallback realizing ``EFold`` on tables
+    verbatim (Interpret.v:313-319; the reference's ``to_idx`` fold,
+    DictIndexImpl.v:25-33, is the motivating program). Rows enter the
+    fold in canonical sorted order (DataFrames are bags; sort_array
+    fixes the order the way ESort's canonicalization does) and the
+    whole fold runs INSIDE Spark as one ``F.aggregate`` over a
+    ``collect_list`` array — the driver never loops row-at-a-time.
+    The FOLD_COLLECT_LIMIT precondition is checked in the same
+    aggregate: above it the action raises instead of returning."""
     if df.columns == ["value"]:
         elem = F.col("value")
     else:
         elem = F.struct(*[F.col(c).alias(c) for c in sorted(df.columns)])
-    init = compile_column(e2, env)
-    folded = df.agg(F.sort_array(F.collect_list(elem)).alias("_arr")).select(
-        F.aggregate(
-            # right fold = left fold over the reversed (canonical) order
-            F.reverse(F.col("_arr")),
-            init,
-            lambda a, x: compile_column(e3, {**env, v: ("col", x), acc: ("col", a)}),
-        ).alias("v")
+    folded = F.aggregate(
+        # right fold = left fold over the reversed (canonical) order
+        F.reverse(F.sort_array(F.collect_list(elem))),
+        init,
+        lambda a, x: compile_column(e3, {**env, v: ("col", x), acc: ("col", a)}),
     )
-    return folded.collect()[0]["v"]
+    n = F.count(F.lit(1))
+    too_many = F.raise_error(F.concat(
+        F.lit("general table fold over "), n.cast("string"),
+        F.lit(f" rows exceeds FOLD_COLLECT_LIMIT ({FOLD_COLLECT_LIMIT}); "
+              "rewrite as an AC fold or group-bounded fold"),
+    ))
+    return F.when(n > FOLD_COLLECT_LIMIT, too_many).otherwise(folded)
+
+
+def _fold_table(e1, e2, v, acc, e3, env, store, spark) -> Any:
+    """The general fold of ``e1`` evaluated on its own — the naive
+    reference the to_idx fast path is checked against."""
+    df = compile_expr(e1, env, store, spark)
+    return df.agg(_fold_agg(df, compile_column(e2, env), v, acc, e3, env)).collect()[0][0]
 
 
 def _as_to_idx_fold(init: A.Expr, v: str, acc: str, body: A.Expr) -> str | None:
@@ -1142,8 +1169,100 @@ def _as_to_idx_fold(init: A.Expr, v: str, acc: str, body: A.Expr) -> str | None:
     return None
 
 
-def _lift_table_aggs(e: A.Expr, env: dict, store, spark) -> A.Expr:
-    def lift(sub: A.Expr) -> A.Expr:
+def _map_scalar(e: A.Expr, f) -> A.Expr:
+    """Rebuild ``e``, replacing each subterm for which ``f`` returns an
+    expression; recurses only through the scalar positions table
+    aggregates are lifted from (operators, conditionals, let, option
+    match, a dict fold's dict and init)."""
+    r = f(e)
+    if r is not None:
+        return r
+    m = lambda x: _map_scalar(x, f)  # noqa: E731
+    match e:
+        case A.EBinop(op, e1, e2):
+            return A.EBinop(op, m(e1), m(e2))
+        case A.EUnop(op, e1):
+            return A.EUnop(op, m(e1))
+        case A.EIf(p, e1, e2):
+            return A.EIf(m(p), m(e1), m(e2))
+        case A.EOptMatch(e1, en, x, es):
+            return A.EOptMatch(m(e1), m(en), x, m(es))
+        case A.ELet(e1, x, e2):
+            return A.ELet(m(e1), x, m(e2))
+        case A.EDictFold(d, e0, k, dv, dacc, body):
+            return A.EDictFold(m(d), m(e0), k, dv, dacc, body)
+    return e
+
+
+class _TableAggs:
+    """The table aggregates lifted out of scalar expressions, as ONE lazy
+    ``agg`` per distinct source table (sources match by structural AST
+    equality). Each distinct fold is one column, referenced from the
+    residual expression by an ``_AAggRef`` atom."""
+
+    def __init__(self, env: dict, store, spark: SparkSession):
+        self.env, self.store, self.spark = env, store, spark
+        self._sources: list[tuple[A.Expr, DataFrame, list[Column]]] = []
+        self._folds: list[tuple[tuple, A.Expr]] = []  # (fold key, its ref)
+        self._atom: dict[str, type] = {}  # column → atom its value splices as
+
+    def __bool__(self) -> bool:
+        return bool(self._sources)
+
+    def ref(self, t: A.Expr, kind: tuple, make, atom: type) -> A.Expr:
+        """Reference to the fold ``kind`` over source ``t``; ``make(df)``
+        builds its aggregate column the first time it is seen, and
+        ``atom`` wraps the collected value when it is spliced back."""
+        key = (t, kind)
+        for k, r in self._folds:
+            if k == key:
+                return r
+        src = next((s for s in self._sources if s[0] == t), None)
+        if src is None:
+            src = (t, compile_expr(t, self.env, self.store, self.spark), [])
+            self._sources.append(src)
+        name = f"__agg{len(self._folds)}"
+        src[2].append(make(src[1]).alias(name))
+        ref = A.EAtom(_AAggRef(name))
+        self._folds.append((key, ref))
+        self._atom[name] = atom
+        return ref
+
+    def frame(self) -> DataFrame:
+        """The one-row aggregate: one ``agg`` per source, cross-joined."""
+        return functools.reduce(
+            DataFrame.crossJoin, [df.agg(*cols) for _, df, cols in self._sources]
+        )
+
+    def splice(self, e: A.Expr) -> A.Expr:
+        """Collect the aggregate row (one action) and replace every
+        reference in ``e`` by its value."""
+        if not self:
+            return e
+        row = self.frame().collect()[0]
+
+        def value(sub):
+            if isinstance(sub, A.EAtom) and isinstance(sub.a, _AAggRef):
+                return A.EAtom(self._atom[sub.a.name](row[sub.a.name]))
+            return None
+
+        return _map_scalar(e, value)
+
+
+def _lift_table_aggs(e: A.Expr, env: dict, store, spark, aggs: _TableAggs | None = None) -> A.Expr:
+    """Replace the table-rooted aggregates in scalar expression ``e`` by
+    references into ``aggs`` (a fresh collector when omitted): EACFold
+    sum/count, EACIFold min/max (``ESetOf`` dropped — both are
+    idempotent, so ``min(set(t))`` shares ``t``'s aggregate), OLength,
+    and general EFold. Nothing runs here, with one exception: a
+    to_idx-shaped fold is built eagerly, as a driver dict or, above
+    FOLD_COLLECT_LIMIT rows, a DistDictIndex — the row count decides."""
+    if aggs is None:
+        aggs = _TableAggs(env, store, spark)
+    first = lambda df: F.col(df.columns[0])  # noqa: E731
+    count = lambda df: F.count(F.lit(1))  # noqa: E731
+
+    def lift(sub: A.Expr) -> A.Expr | None:
         match sub:
             case A.EFold(e1, e2, v, acc, e3) if is_table_expr(e1, env, store):
                 attr = _as_to_idx_fold(e2, v, acc, e3)
@@ -1170,35 +1289,25 @@ def _lift_table_aggs(e: A.Expr, env: dict, store, spark) -> A.Expr:
                         return A.EAtom(
                             _AFoldVal({r[attr]: list(r["rows"]) for r in rows})
                         )
-                val = _fold_table(e1, lift(e2), v, acc, e3, env, store, spark)
-                return A.EAtom(_AFoldVal(val))
-            case A.EACFold(ag, t) if is_table_expr(t, env, store):
-                df = compile_expr(t, env, store, spark)
-                if ag == "AGCount":
-                    return A.EAtom(_ALit(df.count()))
-                col = F.col(df.columns[0])
-                v = df.agg(F.coalesce(F.sum(col), F.lit(0)).alias("v")).collect()[0]["v"]
-                return A.EAtom(_ALit(v))
+                inner = _TableAggs(env, store, spark)
+                init = _lift_table_aggs(e2, env, store, spark, inner)
+                if inner:  # an init that reads a table is settled first
+                    init = A.EAtom(_AFoldVal(eval_value(e2, env, store, spark)))
+                return aggs.ref(
+                    e1, ("fold", init, v, acc, e3),
+                    lambda df: _fold_agg(df, compile_column(init, env), v, acc, e3, env),
+                    _AFoldVal,
+                )
+            case A.EACFold("AGCount", t) | A.EUnop("OLength", t) if is_table_expr(t, env, store):
+                return aggs.ref(t, ("count",), count, A.AInt)
+            case A.EACFold(_, t) if is_table_expr(t, env, store):
+                return aggs.ref(
+                    t, ("sum",), lambda df: F.coalesce(F.sum(first(df)), F.lit(0)), _ALit
+                )
             case A.EACIFold(ag, t) if is_table_expr(t, env, store):
-                df = compile_expr(t, env, store, spark)
-                col = F.col(df.columns[0])
                 fn = F.min if ag == "AGMin" else F.max
-                v = df.agg(fn(col).alias("v")).collect()[0]["v"]
-                return A.EAtom(_ALit(v))
-            case A.EUnop("OLength", t) if is_table_expr(t, env, store):
-                return A.EAtom(A.AInt(compile_expr(t, env, store, spark).count()))
-            case A.EBinop(op, e1, e2):
-                return A.EBinop(op, lift(e1), lift(e2))
-            case A.EUnop(op, e1):
-                return A.EUnop(op, lift(e1))
-            case A.EIf(p, e1, e2):
-                return A.EIf(lift(p), lift(e1), lift(e2))
-            case A.EOptMatch(e1, en, x, es):
-                return A.EOptMatch(lift(e1), lift(en), x, lift(es))
-            case A.ELet(e1, x, e2):
-                return A.ELet(lift(e1), x, lift(e2))
-            case A.EDictFold(d, e0, k, dv, dacc, body):
-                return A.EDictFold(lift(d), lift(e0), k, dv, dacc, body)
-        return sub
+                src = t.l if isinstance(t, A.ESetOf) else t
+                return aggs.ref(src, (ag,), lambda df: fn(first(df)), _ALit)
+        return None
 
-    return lift(e)
+    return _map_scalar(e, lift)

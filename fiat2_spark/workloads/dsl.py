@@ -109,9 +109,12 @@ def dsl_orders_agg(spark, sf_dir):
     """The Ex_Orders 'discount status' read (Ex_Orders.v:69-76): SUM and
     MIN folds over a projected table plus threshold logic, written as
     fold ASTs. The compiler's agg lifting (the annotate_collection
-    sum/min recognition, CollectionTransf.v:6-22) turns each
-    table-rooted fold into a DataFrame aggregation — a user writing
-    folds still gets partial+final agg() plans, never a driver loop."""
+    sum/min recognition, CollectionTransf.v:6-22) turns the table-rooted
+    folds into ONE lazy aggregate over one ``orders`` scan: the sum read
+    by ``sum_price`` and by ``status`` is one column, and the min over
+    the set shares the same source. Building the plan starts no Spark
+    job; draining it runs the one partial+final agg() — never a driver
+    loop."""
     proj = A.EProj(
         "LikeBag",
         A.ELoc("orders"),

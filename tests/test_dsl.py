@@ -312,3 +312,116 @@ def test_command_sugar_desugars_to_identical_ast():
         ),
     )
     assert sugar == raw
+
+
+# -- lazy table aggregates (scalar_frame / eval_value) ----------------------
+
+
+def _jobs(spark, group: str, fn):
+    """(fn(), number of Spark jobs fn started), counted under a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_dsl_orders_agg_builds_without_jobs(spark, sf_dir):
+    """The Ex_Orders read's three folds (sum, min over a set, and the sum
+    again under the threshold) are one lazy aggregate: building the
+    result plan starts no job, and draining it runs the one aggregate
+    (a shuffle-map job and a result job)."""
+    from fiat2_spark.workloads import QUERIES
+
+    build = QUERIES["dsl_orders_agg"]
+    build(spark, sf_dir)  # the first read of `orders` infers its schema
+    df, build_jobs = _jobs(spark, "dsl_orders_agg_build", lambda: build(spark, sf_dir))
+    rows, drain_jobs = _jobs(spark, "dsl_orders_agg_drain", df.collect)
+    assert (build_jobs, drain_jobs) == (0, 2)
+    assert len(rows) == 1 and rows[0]["sum_price"] > 0
+
+
+def test_scalar_frame_is_one_aggregate_per_source(spark, sf_dir):
+    """sum(proj), min(set(proj)) and the same sum read again by a second
+    expression: one Aggregate over one scan, with one sum column."""
+    from fiat2_spark.plans.compile import scalar_frame
+    from fiat2_spark.workloads.dsl import _store
+
+    proj = A.EProj("LikeBag", A.ELoc("orders"), "o", A.EAccess(A.EVar("o"), "o_custkey"))
+    total = A.EACFold("AGSum", proj)
+    df = scalar_frame(
+        {
+            "total": total,
+            "low": A.EACIFold("AGMin", A.ESetOf(proj)),
+            "total1": A.EBinop("OPlus", total, A.EAtom(A.AInt(1))),
+        },
+        {},
+        _store(spark, sf_dir, "orders"),
+        spark,
+    )
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("Aggregate [") == 1, plan
+    assert plan.count("Relation [") == 1, plan
+    assert plan.count("sum(") == 1 and plan.count("min(") == 1, plan
+    row = df.collect()[0]
+    assert row["total1"] == row["total"] + 1
+
+
+def test_table_aggregates_over_empty_source_match_python(spark):
+    """On an empty source sum and count give 0, min and max None, and a
+    general fold its init — from scalar_frame (built without a job) and
+    from eval_value, both equal to the Python twin."""
+    from test_relational_properties import _store, ev
+
+    from fiat2_spark.plans.compile import scalar_frame
+
+    empty = A.EProj(
+        "LikeBag",
+        A.EFilter(
+            "LikeBag", A.ELoc("t1"), "x",
+            A.EBinop("OLess", A.EAccess(A.EVar("x"), "a"), A.EAtom(A.AInt(0))),
+        ),
+        "x",
+        A.EAccess(A.EVar("x"), "b"),
+    )
+    named = {
+        "s": A.EACFold("AGSum", empty),
+        "n": A.EACFold("AGCount", empty),
+        "lo": A.EACIFold("AGMin", empty),
+        "hi": A.EACIFold("AGMax", A.ESetOf(empty)),
+        "f": A.EFold(
+            empty, A.EAtom(A.AInt(7)), "_v", "_acc",
+            A.EBinop("OMinus", A.EBinop("OTimes", A.EAtom(A.AInt(2)), A.EVar("_acc")), A.EVar("_v")),
+        ),
+    }
+    want = {k: ev(e, {}) for k, e in named.items()}
+    assert want == {"s": 0, "n": 0, "lo": None, "hi": None, "f": 7}
+    st = _store(spark)
+    df, build_jobs = _jobs(spark, "empty_source_build", lambda: scalar_frame(named, {}, st, spark))
+    assert build_jobs == 0
+    assert df.collect()[0].asDict() == want
+    assert {k: eval_value(e, {}, st, spark) for k, e in named.items()} == want
+
+
+def test_general_fold_limit_fails_the_action(spark, monkeypatch):
+    """FOLD_COLLECT_LIMIT stays a precondition on the lazy path: a
+    general fold over more rows builds, but its action fails with an
+    error naming the limit instead of returning rows."""
+    import fiat2_spark.plans.compile as C
+
+    st = Store()
+    st.assign("t", spark.createDataFrame([(1,), (2,), (3,)], "value long"))
+    fold = A.EFold(
+        A.ELoc("t"), A.EAtom(A.AInt(0)), "v", "acc",
+        A.EBinop("OMinus", A.EVar("v"), A.EVar("acc")),
+    )
+    monkeypatch.setattr(C, "FOLD_COLLECT_LIMIT", 3)
+    assert C.scalar_frame({"f": fold}, {}, st, spark).collect()[0]["f"] == 2
+    monkeypatch.setattr(C, "FOLD_COLLECT_LIMIT", 1)
+    df = C.scalar_frame({"f": fold}, {}, st, spark)
+    with pytest.raises(Exception, match="FOLD_COLLECT_LIMIT"):
+        df.collect()
+    with pytest.raises(Exception, match="FOLD_COLLECT_LIMIT"):
+        eval_value(fold, {}, st, spark)
