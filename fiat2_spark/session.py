@@ -16,6 +16,17 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def driver_memory_default(host_mb: int) -> str:
+    """``spark.driver.memory`` for a host with ``host_mb`` MiB: half of
+    it, leaving the rest to the Python workers and the OS, between 1 GiB
+    and 48 GiB."""
+    return f"{max(1024, min(48 * 1024, host_mb // 2))}m"
+
+
+def _host_memory_mb() -> int:
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+
+
 def get_spark(
     app_name: str = "fiat2-spark",
     master: str | None = None,
@@ -58,7 +69,11 @@ def get_spark(
             "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
             "1MB",
         )
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+            or driver_memory_default(_host_memory_mb()),
+        )
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

@@ -138,3 +138,13 @@ def test_readme_query_count_matches_registry():
     assert int(m.group(1)) == len(QUERIES), (
         f"README says {m.group(1)} queries; registry has {len(QUERIES)}"
     )
+
+
+def test_driver_memory_default_follows_host():
+    """The default driver heap is half the host's memory, floored at
+    1 GiB and capped at 48 GiB; SPARK_GRAFT_DRIVER_MEM overrides it."""
+    from fiat2_spark.session import driver_memory_default
+
+    assert driver_memory_default(15 * 1024) == "7680m"
+    assert driver_memory_default(1024) == "1024m"
+    assert driver_memory_default(256 * 1024) == "49152m"
