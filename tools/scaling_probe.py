@@ -26,7 +26,7 @@ groups and window partitions grow ~FACTOR — the realistic fact-growth
 regime for TPC-H shapes and per-entity windows.
 
 Usage: python tools/scaling_probe.py [factor] [out_md] [query ...]
-Writes SCALING_r05.md (or out_md) at the repo root; an explicit query
+Writes SCALING.md (or out_md) at the repo root; an explicit query
 list overrides the default HEAVY set. The derived-corpus marker records
 the factor (_BUILT_<factor>), so switching factors rebuilds instead of
 silently reusing the old corpus (ADVICE r5).
@@ -254,7 +254,7 @@ def run_once(spark, name: str, sf_dir: str) -> tuple[float, int]:
 
 def main() -> None:
     factor = int(sys.argv[1]) if len(sys.argv) > 1 else 10
-    out_md = sys.argv[2] if len(sys.argv) > 2 else os.path.join(REPO, "SCALING_r05.md")
+    out_md = sys.argv[2] if len(sys.argv) > 2 else os.path.join(REPO, "SCALING.md")
     queries = sys.argv[3:] or HEAVY
     spark = get_spark(app_name="fiat2-scaling-probe")
     build(spark, factor)
