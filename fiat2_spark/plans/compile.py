@@ -57,9 +57,11 @@ class _ALit(A.Atom):
 @dataclass(frozen=True)
 class _AAggRef(A.Atom):
     """Internal: column ``name`` of the one-row aggregate that
-    _lift_table_aggs lifts table folds into (see _TableAggs)."""
+    _lift_table_aggs lifts table folds into (see _TableAggs); ``wrap``
+    is the atom its collected value is spliced back as."""
 
     name: str
+    wrap: type
 
 
 @dataclass(frozen=True)
@@ -294,7 +296,7 @@ def _atom_column(a: A.Atom) -> Column:
             return _py_to_col(v)
         case _AFoldVal(v):
             return _collected_to_col(v)
-        case _AAggRef(name):
+        case _AAggRef(name, _):
             return F.col(name)
         case A.AWord(n) | A.AInt(n):
             return F.lit(n).cast("long")
@@ -1204,15 +1206,14 @@ class _TableAggs:
         self.env, self.store, self.spark = env, store, spark
         self._sources: list[tuple[A.Expr, DataFrame, list[Column]]] = []
         self._folds: list[tuple[tuple, A.Expr]] = []  # (fold key, its ref)
-        self._atom: dict[str, type] = {}  # column → atom its value splices as
 
     def __bool__(self) -> bool:
         return bool(self._sources)
 
-    def ref(self, t: A.Expr, kind: tuple, make, atom: type) -> A.Expr:
+    def ref(self, t: A.Expr, kind: tuple, make, wrap: type) -> A.Expr:
         """Reference to the fold ``kind`` over source ``t``; ``make(df)``
         builds its aggregate column the first time it is seen, and
-        ``atom`` wraps the collected value when it is spliced back."""
+        ``wrap`` is the atom its collected value is spliced back as."""
         key = (t, kind)
         for k, r in self._folds:
             if k == key:
@@ -1223,9 +1224,8 @@ class _TableAggs:
             self._sources.append(src)
         name = f"__agg{len(self._folds)}"
         src[2].append(make(src[1]).alias(name))
-        ref = A.EAtom(_AAggRef(name))
+        ref = A.EAtom(_AAggRef(name, wrap))
         self._folds.append((key, ref))
-        self._atom[name] = atom
         return ref
 
     def frame(self) -> DataFrame:
@@ -1243,7 +1243,7 @@ class _TableAggs:
 
         def value(sub):
             if isinstance(sub, A.EAtom) and isinstance(sub.a, _AAggRef):
-                return A.EAtom(self._atom[sub.a.name](row[sub.a.name]))
+                return A.EAtom(sub.a.wrap(row[sub.a.name]))
             return None
 
         return _map_scalar(e, value)
