@@ -29,12 +29,12 @@ MODULES = (pipeline, stream, server, dsl, graphs, core)
 # and seat every query it reports `changed` or `new`; seats come from
 # queries whose reachable hash held. Older baselines are in git history.
 # This window: lifting table aggregates into one lazy aggregate per
-# source (plans/compile.py) re-hashes the eleven dsl_* queries (198
-# held, at the lift commit 88aca27); all were seated already and now
-# lead under (A). The commit after it (9e030c0) derives the default
-# driver heap from host memory inside session.get_spark, which is in
-# every premise, so at the final commit the tool reports all 209
-# changed; that edit only sizes the heap, and the full-registry gate
+# source (plans/compile.py) re-hashes the eleven dsl_* queries; all were
+# seated already and now lead under (A). The same change derives the
+# default driver heap from host memory inside session.get_spark, which
+# is in every premise, so the tool reports all 209 changed; with
+# get_spark as in the base it reports exactly those eleven (198 held).
+# The get_spark edit only sizes the heap, and the full-registry gate
 # covers all 209.
 PRIORITY = (
     # (A) tool-mandated reachable-delta rotate-ins
