@@ -1292,7 +1292,10 @@ def _lift_table_aggs(e: A.Expr, env: dict, store, spark, aggs: _TableAggs | None
                 inner = _TableAggs(env, store, spark)
                 init = _lift_table_aggs(e2, env, store, spark, inner)
                 if inner:  # an init that reads a table is settled first
-                    init = A.EAtom(_AFoldVal(eval_value(e2, env, store, spark)))
+                    v0 = eval_value(e2, env, store, spark)
+                    # a fiat2 int is a long column: a bare literal would be
+                    # an int, which F.aggregate rejects against a long body
+                    init = A.EAtom(A.AInt(v0) if type(v0) is int else _AFoldVal(v0))
                 return aggs.ref(
                     e1, ("fold", init, v, acc, e3),
                     lambda df: _fold_agg(df, compile_column(init, env), v, acc, e3, env),

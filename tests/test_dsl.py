@@ -425,3 +425,16 @@ def test_general_fold_limit_fails_the_action(spark, monkeypatch):
         df.collect()
     with pytest.raises(Exception, match="FOLD_COLLECT_LIMIT"):
         eval_value(fold, {}, st, spark)
+
+
+def test_general_fold_init_reading_a_table_matches_python(spark):
+    """A general fold whose init is itself a table aggregate: the init is
+    settled first, then folded over — equal to the Python twin."""
+    from test_relational_properties import _store, ev
+
+    proj = lambda t, c: A.EProj("LikeBag", A.ELoc(t), "x", A.EAccess(A.EVar("x"), c))  # noqa: E731
+    fold = A.EFold(
+        proj("t1", "b"), A.EACFold("AGSum", proj("t2", "c")), "_v", "_acc",
+        A.EBinop("OMinus", A.EBinop("OTimes", A.EAtom(A.AInt(2)), A.EVar("_acc")), A.EVar("_v")),
+    )
+    assert eval_value(fold, {}, _store(spark), spark) == ev(fold, {})
