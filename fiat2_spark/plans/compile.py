@@ -1072,9 +1072,10 @@ def scalar_frame(named: dict[str, A.Expr], env: dict, store, spark: SparkSession
     distinct source table — a fold read by two expressions is one
     column — and the residual expressions are columns selected over
     that one-row aggregate (cross-joined only when there are several
-    sources). Building the frame starts no Spark job, except for a
-    to_idx dict fold, which is still built eagerly (see
-    _lift_table_aggs); the aggregate runs when the frame is drained."""
+    sources). Building the frame starts no Spark job, except for the
+    eager cases _lift_table_aggs names (a to_idx dict fold, a general
+    fold whose init reads a table); the aggregate runs when the frame
+    is drained."""
     aggs = _TableAggs(env, store, spark)
     cols = [
         compile_column(_lift_table_aggs(e, env, store, spark, aggs), env).alias(name)
@@ -1254,9 +1255,11 @@ def _lift_table_aggs(e: A.Expr, env: dict, store, spark, aggs: _TableAggs | None
     references into ``aggs`` (a fresh collector when omitted): EACFold
     sum/count, EACIFold min/max (``ESetOf`` dropped — both are
     idempotent, so ``min(set(t))`` shares ``t``'s aggregate), OLength,
-    and general EFold. Nothing runs here, with one exception: a
+    and general EFold. Nothing runs here, with two exceptions: a
     to_idx-shaped fold is built eagerly, as a driver dict or, above
-    FOLD_COLLECT_LIMIT rows, a DistDictIndex — the row count decides."""
+    FOLD_COLLECT_LIMIT rows, a DistDictIndex — the row count decides;
+    and a general fold whose init itself reads a table evaluates that
+    init first."""
     if aggs is None:
         aggs = _TableAggs(env, store, spark)
     first = lambda df: F.col(df.columns[0])  # noqa: E731
