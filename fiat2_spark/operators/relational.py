@@ -23,12 +23,12 @@ from typing import Callable, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-LIKE_LIST = "list"
-LIKE_BAG = "bag"
-LIKE_SET = "set"
+from fiat2_spark.plans.ast import LIKE_BAG, LIKE_SET
 
 
-def _retag(df: DataFrame, tag: str) -> DataFrame:
+def retag(df: DataFrame, tag: str) -> DataFrame:
+    """Apply a collection tag to a DataFrame: ``LikeSet`` dedups, the
+    other tags keep the rows (Interpret.v's retag)."""
     return df.distinct() if tag == LIKE_SET else df
 
 
@@ -38,7 +38,7 @@ def filter_rows(df: DataFrame, pred: Column, tag: str = LIKE_BAG) -> DataFrame:
     """Keep rows satisfying ``pred``. Catalyst pushes the predicate to the
     parquet scan (PushedFilters) — the physical realization of the
     reference's ``filter_pushdown_head`` (RelTransf.v:441-448)."""
-    return _retag(df.filter(pred), tag)
+    return retag(df.filter(pred), tag)
 
 
 # -- EProj (Language.v:143, Interpret.v:467-490) ---------------------------
@@ -51,7 +51,7 @@ def project(df: DataFrame, cols: dict[str, Column] | Sequence[str], tag: str = L
         out = df.select(*(expr.alias(name) for name, expr in sorted(cols.items())))
     else:
         out = df.select(*cols)
-    return _retag(out, tag)
+    return retag(out, tag)
 
 
 # -- EJoin (Language.v:142, Interpret.v:405-466) ---------------------------
@@ -77,7 +77,7 @@ def theta_join(
     joined = left.join(r, on=pred, how="inner")
     if result is not None:
         joined = joined.select(*(e.alias(n) for n, e in sorted(result.items())))
-    return _retag(joined, tag)
+    return retag(joined, tag)
 
 
 def salted_equi_join(
@@ -754,3 +754,32 @@ def top_k(df: DataFrame, k: int, order: Sequence[Column]) -> DataFrame:
     """ORDER BY + LIMIT: Spark plans TakeOrderedAndProject — per-partition
     heaps + driver merge, no global sort. The scale-safe top-k."""
     return df.orderBy(*order).limit(k)
+
+
+#: Row bound of `sort_small`: above any fixed key domain the registry
+#: sorts (priorities, nations, years, segments, count histograms).
+SMALL_SORT_ROWS = 10_000
+
+
+def sort_small(df: DataFrame, order: Sequence[Column | str]) -> DataFrame:
+    """Total ORDER BY for an input of at most ``SMALL_SORT_ROWS`` rows:
+    ``top_k`` with one row to spare, plus an in-plan guard that fails the
+    action, naming ``SMALL_SORT_ROWS``, when that spare row exists.
+
+    Spark plans TakeOrderedAndProject: per-partition heaps merged in one
+    task of the result job — no RangePartitioner sampling job and no
+    range-shuffle stage, which ``orderBy`` costs (2 jobs under AQE). The
+    input itself (typically a final aggregate) still runs in parallel,
+    unlike ``coalesce(1)``. TakeOrderedAndProject emits one partition,
+    so ``monotonically_increasing_id`` is each row's position in the
+    sorted output; a row in any other partition has an id ≥ 2³³, so the
+    guard can only over-fire, never let the spare row through."""
+    bound = SMALL_SORT_ROWS
+    too_many = F.raise_error(F.lit(
+        f"sort_small: input has more than SMALL_SORT_ROWS ({bound}) rows; "
+        "sort it with orderBy"
+    ))
+    pos = F.monotonically_increasing_id()
+    return top_k(df, bound + 1, order).filter(
+        F.when(pos < bound, F.lit(True)).otherwise(too_many)
+    )

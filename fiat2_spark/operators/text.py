@@ -2168,6 +2168,15 @@ def bpe_learn(df, text_col: str, n_merges: int, checkpoint_every: int = 8,
     )
 
 
+def bpe_merge_list(mdf) -> list[tuple[str, str]]:
+    """The learned merges as ``(lhs, rhs)`` pairs in learned order. The
+    merge table has one row per merge and the driver holds it anyway,
+    so it is collected and sorted on ``step`` in Python: one job, where
+    ``orderBy("step").collect()`` adds a range sort's sampling job and
+    shuffle stage."""
+    return [(r["lhs"], r["rhs"]) for r in sorted(mdf.collect(), key=lambda r: r["step"])]
+
+
 def bpe_encode(df, id_col: str, text_col: str, merges: list[tuple[str, str]],
                tokenizer=tokens, words=None):
     """Apply learned BPE merges to a corpus (Sennrich et al. 2016

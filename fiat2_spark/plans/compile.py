@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from fiat2_spark.functions import collections as CO
 from fiat2_spark.functions import scalars as S
+from fiat2_spark.operators import relational as R
 from fiat2_spark.plans import ast as A
 
 _alias_counter = itertools.count()
@@ -93,12 +94,19 @@ def _row_struct(prefix: str | None, cols: list[str]) -> Column:
     return F.struct(*[F.col(p + c).alias(c) for c in sorted(cols)])
 
 
+def _lit(v: Any) -> Column:
+    """Scalar literal. A Python int is a fiat2 int, a long column: a bare
+    ``F.lit`` types a small one int, which ``F.aggregate`` rejects as
+    the init of a long body."""
+    return F.lit(v).cast("long") if type(v) is int else F.lit(v)
+
+
 def _py_to_col(v: Any) -> Column:
     if isinstance(v, dict):
         return F.struct(*[_py_to_col(v[k]).alias(k) for k in sorted(v)])
     if isinstance(v, (list, tuple)):
         return F.array(*[_py_to_col(x) for x in v])
-    return F.lit(v)
+    return _lit(v)
 
 
 # -- pattern recognition (the reference's comprehension shapes) -------------
@@ -188,10 +196,9 @@ def compile_column(e: A.Expr, env: dict, w: int = 64) -> Column:
             return F.when(n > 0, F.flatten(mapped)).otherwise(F.array())
         case A.EFold(e1, e2, v, acc, e3):
             # right fold (Interpret.v:313-319): reverse, then left-fold
-            arr, init = cc(e1), cc(e2)
             return F.aggregate(
-                F.reverse(arr),
-                init,
+                F.reverse(cc(e1)),
+                _fold_init(e2, env),
                 lambda a, x: cc(e3, {**env, v: ("col", x), acc: ("col", a)}),
             )
         case A.EACFold(ag, e1):
@@ -287,7 +294,7 @@ def _collected_to_col(v: Any) -> Column:
         )
     if isinstance(v, (list, tuple)):
         return F.array(*[_collected_to_col(x) for x in v])
-    return F.lit(v)
+    return _lit(v)
 
 
 def _atom_column(a: A.Atom) -> Column:
@@ -472,10 +479,6 @@ def _project_dedup_uids(
     return out.dropDuplicates().drop(*uid_names)
 
 
-def _retag_df(df: DataFrame, tag: str) -> DataFrame:
-    return df.distinct() if tag == "LikeSet" else df
-
-
 def compile_expr(e: A.Expr, env: dict, store, spark: SparkSession) -> DataFrame:
     """Lower a table-typed expression to a DataFrame plan."""
     ce = lambda x, env2=None: compile_expr(x, env2 if env2 is not None else env, store, spark)  # noqa: E731
@@ -494,17 +497,17 @@ def compile_expr(e: A.Expr, env: dict, store, spark: SparkSession) -> DataFrame:
         case A.EFilter(tag, l, x, p):
             df = ce(l)
             env2 = {**env, x: _bind_row(df, None)}
-            return _retag_df(df.filter(compile_column(p, env2)), tag)
+            return R.retag(df.filter(compile_column(p, env2)), tag)
         case A.EProj(tag, l, x, r):
             df = ce(l)
             env2 = {**env, x: _bind_row(df, None)}
-            return _retag_df(_project_record(df, r, env2, spark), tag)
+            return R.retag(_project_record(df, r, env2, spark), tag)
         case A.EJoin(tag, l1, l2, x, y, p, r):
             a1, a2 = f"j{next(_alias_counter)}", f"j{next(_alias_counter)}"
             df1, df2 = ce(l1).alias(a1), ce(l2).alias(a2)
             env2 = {**env, x: _bind_row(df1, a1), y: _bind_row(df2, a2)}
             joined = df1.join(df2, on=compile_column(p, env2), how="inner")
-            return _retag_df(_project_record(joined, r, env2, spark), tag)
+            return R.retag(_project_record(joined, r, env2, spark), tag)
         case A.EFlatmap(tag, e1, x, e2):
             return _compile_flatmap(tag, e1, x, e2, env, store, spark)
         case A.ELet(e1, x, e2):
@@ -521,10 +524,7 @@ def compile_expr(e: A.Expr, env: dict, store, spark: SparkSession) -> DataFrame:
             # branch's plan is built — dead branches cost nothing
             return ce(e1) if eval_value(p, env, store, spark) else ce(e2)
         case A.ESort(tag, l):
-            df = ce(l)
-            if tag == "LikeSet":
-                df = df.distinct()
-            return df.orderBy(*sorted(df.columns))
+            return R.sort_canonical(ce(l), tag=tag)
         case A.EBagOf(l):
             return ce(l)  # DataFrames are bags natively
         case A.ESetOf(l):
@@ -642,7 +642,7 @@ def _compile_flatmap(tag, e1, x, e2, env, store, spark) -> DataFrame:
     if g is not None:
         p, r = g
         df = df1 if p is None else df1.filter(compile_column(p, env_row))
-        return _retag_df(_project_record(df, r, env_row, spark), tag)
+        return R.retag(_project_record(df, r, env_row, spark), tag)
 
     # to_join: flatmap t1 x (flatmap t2 y (if p then [r] else [])).
     # An inner LikeSet tag dedupes the body's results PER OUTER BINDING
@@ -674,7 +674,7 @@ def _compile_flatmap(tag, e1, x, e2, env, store, spark) -> DataFrame:
                 out = _project_dedup_uids(joined, r, env2, [f"{a1}.__fm_uid"])
             else:
                 out = _project_record(joined, r, env2, spark)
-            return _retag_df(out, tag)
+            return R.retag(out, tag)
 
     # to_join (n-ary, depth ≥ 3): flatmap t1 x1 (flatmap t2 x2 (… (if p
     # then [r] else []))) — the Ex_Triangle.v-style chained
@@ -736,7 +736,7 @@ def _compile_flatmap(tag, e1, x, e2, env, store, spark) -> DataFrame:
                 out = _project_dedup_uids(joined, r, env2, uid_refs)
             else:
                 out = _project_record(joined, r, env2, spark)
-            return _retag_df(out, tag)
+            return R.retag(out, tag)
 
     # dict-aux lookup join: flatmap t x (flatmap (optmatch (lookup D
     # k(x)) nil b b) y body) — the shape the auto-index rewrite
@@ -799,7 +799,7 @@ def _compile_flatmap(tag, e1, x, e2, env, store, spark) -> DataFrame:
                     p2, r2 = g2
                     if p2 is not None:
                         joined = joined.filter(compile_column(p2, env2))
-                    return _retag_df(_project_record(joined, r2, env2, spark), tag)
+                    return R.retag(_project_record(joined, r2, env2, spark), tag)
                 arr2 = compile_column(e2.e2, env2)
                 exploded2 = joined.select(F.explode(arr2).alias("_fm"))
                 from pyspark.sql import types as T
@@ -811,11 +811,11 @@ def _compile_flatmap(tag, e1, x, e2, env, store, spark) -> DataFrame:
                     )
                 else:
                     out2 = exploded2.select(F.col("_fm").alias("value"))
-                return _retag_df(out2, tag)
+                return R.retag(out2, tag)
 
     # independent table body → cross product
     if x not in A.free_vars(e2) and is_table_expr(e2, env, store):
-        return _retag_df(df1.crossJoin(compile_expr(e2, env, store, spark)), tag)
+        return R.retag(df1.crossJoin(compile_expr(e2, env, store, spark)), tag)
 
     # correlated collection-valued body → lateral explode
     arr = compile_column(e2, env_row)
@@ -827,7 +827,7 @@ def _compile_flatmap(tag, e1, x, e2, env, store, spark) -> DataFrame:
         out = exploded.select(*[F.col(f"_fm.{f.name}").alias(f.name) for f in inner_fields.fields])
     else:
         out = exploded.select(F.col("_fm").alias("value"))
-    return _retag_df(out, tag)
+    return R.retag(out, tag)
 
 
 # -- driver-side evaluation (scalar contexts of the command layer) ---------
@@ -1124,11 +1124,24 @@ def _fold_agg(df: DataFrame, init: Column, v: str, acc: str, e3: A.Expr, env: di
     return F.when(n > FOLD_COLLECT_LIMIT, too_many).otherwise(folded)
 
 
+def _fold_init(e2: A.Expr, env: dict) -> Column:
+    """A fold's init as a column. A spliced None (the min/max of an
+    empty table, or a store scalar holding None) carries no type for
+    ``F.aggregate`` to fold the body against, so it is refused by name
+    instead of failing analysis on a VOID init."""
+    if isinstance(e2, A.EAtom) and isinstance(e2.a, (_ALit, _AFoldVal)) and e2.a.v is None:
+        raise CompileError(
+            "fold init is None (e.g. the min/max of an empty table); "
+            "give the fold a non-None init or a typed ANone"
+        )
+    return compile_column(e2, env)
+
+
 def _fold_table(e1, e2, v, acc, e3, env, store, spark) -> Any:
     """The general fold of ``e1`` evaluated on its own — the naive
     reference the to_idx fast path is checked against."""
     df = compile_expr(e1, env, store, spark)
-    return df.agg(_fold_agg(df, compile_column(e2, env), v, acc, e3, env)).collect()[0][0]
+    return df.agg(_fold_agg(df, _fold_init(e2, env), v, acc, e3, env)).collect()[0][0]
 
 
 def _as_to_idx_fold(init: A.Expr, v: str, acc: str, body: A.Expr) -> str | None:
@@ -1295,13 +1308,10 @@ def _lift_table_aggs(e: A.Expr, env: dict, store, spark, aggs: _TableAggs | None
                 inner = _TableAggs(env, store, spark)
                 init = _lift_table_aggs(e2, env, store, spark, inner)
                 if inner:  # an init that reads a table is settled first
-                    v0 = eval_value(e2, env, store, spark)
-                    # a fiat2 int is a long column: a bare literal would be
-                    # an int, which F.aggregate rejects against a long body
-                    init = A.EAtom(A.AInt(v0) if type(v0) is int else _AFoldVal(v0))
+                    init = A.EAtom(_AFoldVal(eval_value(e2, env, store, spark)))
                 return aggs.ref(
                     e1, ("fold", init, v, acc, e3),
-                    lambda df: _fold_agg(df, compile_column(init, env), v, acc, e3, env),
+                    lambda df: _fold_agg(df, _fold_init(init, env), v, acc, e3, env),
                     _AFoldVal,
                 )
             case A.EACFold("AGCount", t) | A.EUnop("OLength", t) if is_table_expr(t, env, store):

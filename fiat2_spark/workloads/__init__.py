@@ -28,33 +28,34 @@ MODULES = (pipeline, stream, server, dsl, graphs, core)
 #   python tools/fingerprints.py --compare base.json
 # and seat every query it reports `changed` or `new`; seats come from
 # queries whose reachable hash held. Older baselines are in git history.
-# This window: lifting table aggregates into one lazy aggregate per
-# source (plans/compile.py) re-hashes the eleven dsl_* queries; all were
-# seated already and now lead under (A). The same change derives the
-# default driver heap from host memory inside session.get_spark, which
-# is in every premise, so the tool reports all 209 changed; with
-# get_spark as in the base it reports exactly those eleven (198 held).
-# The get_spark edit only sizes the heap, and the full-registry gate
-# covers all 209.
+# This window: result sorts over a fixed key domain move to
+# operators/relational.py:sort_small (the seven TPC-H shapes), compile.py
+# calls relational's retag/sort_canonical and types int literals long,
+# relational takes its tag constants from plans/ast.py, and the BPE
+# queries collect their merges with text.bpe_merge_list. With
+# SPARK_GRAFT_CPUS=4 (the value the base fingerprints were written
+# under; session constants read it) the tool reports 29 changed, 0 new,
+# 180 held. Fifteen were seated already and stay under (A); fourteen
+# rotate in, and (C) plus eight of (D), hashes held, rotate out.
 PRIORITY = (
     # (A) tool-mandated reachable-delta rotate-ins
     "dsl_auto_index", "dsl_auto_index_dist", "dsl_auto_index_join",
     "dsl_command_pipeline", "dsl_comprehension", "dsl_employee_join",
     "dsl_filter_project", "dsl_fold_table", "dsl_grandchildren",
     "dsl_let_if_table", "dsl_orders_agg",
+    "bpe_encode", "bpe_encode_ids", "pipeline_tokenize_pack",
+    "text_unicode_pipeline",
+    "tpch_q4_shape", "tpch_q5_shape", "tpch_q7_shape", "tpch_q8_shape",
+    "tpch_q9_shape", "tpch_q13_shape", "tpch_q22_shape",
+    "filter_scan", "join_fk", "proj_compute", "proj_feed_pipeline",
+    "sort_canonical", "survey_join", "theta_join_nonequi",
     # (B) earlier rotate-ins, hashes held
-    "bpe_encode", "bpe_encode_ids", "bpe_merges", "budget_select",
+    "bpe_merges", "budget_select",
     "dedup_clusters", "dedup_clusters_star", "dedup_fuzzy_apply",
-    "dedup_semantic", "doremi_reweight", "pipeline_tokenize_pack",
-    "quality_classifier", "text_unicode_pipeline",
+    "dedup_semantic", "doremi_reweight", "quality_classifier",
     "perplexity_filter", "perplexity_filter_unicode",
     "ccnet_bucket_assign", "lm_stupid_backoff", "doremi_trajectory",
-    # (C) oldest-evidence refresh
-    "sample_strata", "shuffle_shards", "tpch_q3_shape", "tpch_q15_shape",
-    "window_frames", "window_rank_family",
     # (D) oldest-evidence refresh
-    "ann_bruteforce", "ann_ivf", "ann_lsh", "bm25_retrieval",
-    "cms_tokens", "csv_roundtrip", "cube_agg", "decontaminate",
     "embedding_centroids", "embedding_quantize", "hll_users",
     "multimodal_frames", "multimodal_resize", "nested_collections",
     "percentile_cont", "sample_group_k",

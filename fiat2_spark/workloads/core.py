@@ -1870,7 +1870,7 @@ def tpch_q5_shape(spark, sf_dir):
         (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1997-01-01")
     )
     li = tbl(spark, sf_dir, "lineitem")
-    return (
+    rollup = (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
         .join(
@@ -1885,8 +1885,9 @@ def tpch_q5_shape(spark, sf_dir):
                 * (F.lit(1) - F.col("l_discount").cast("decimal(18,2)"))
             ).cast("double").alias("revenue")
         )
-        .orderBy(F.col("revenue").desc(), "n_name")
     )
+    # one row per nation of one region: at most |nation| rows
+    return R.sort_small(rollup, [F.col("revenue").desc(), "n_name"])
 
 
 @q(
@@ -2347,7 +2348,7 @@ def tpch_q22_shape(spark, sf_dir):
         .filter(F.col("o_orderpriority") == "1-URGENT")
         .select("o_custkey")
     )
-    return (
+    rollup = (
         c.join(F.broadcast(avg_bal))
         .filter(F.col("c_acctbal") > F.col("a"))
         .join(o_keys, F.col("c_custkey") == F.col("o_custkey"), "left_anti")
@@ -2356,8 +2357,9 @@ def tpch_q22_shape(spark, sf_dir):
             F.count(F.lit(1)).cast("long").alias("numcust"),
             F.sum(dec2(F.col("c_acctbal"))).cast("double").alias("totacctbal"),
         )
-        .orderBy("c_mktsegment")
     )
+    # one row per market segment: at most |segments| rows
+    return R.sort_small(rollup, ["c_mktsegment"])
 
 
 @q(
@@ -2582,7 +2584,7 @@ def tpch_q4_shape(spark, sf_dir):
         (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1996-04-01")
     )
     li = tbl(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
-    return (
+    rollup = (
         o.join(
             li,
             (F.col("l_orderkey") == F.col("o_orderkey"))
@@ -2591,8 +2593,9 @@ def tpch_q4_shape(spark, sf_dir):
         )
         .groupBy("o_orderpriority")
         .agg(F.count(F.lit(1)).cast("long").alias("order_count"))
-        .orderBy("o_orderpriority")
     )
+    # one row per order priority: at most |priorities| rows
+    return R.sort_small(rollup, ["o_orderpriority"])
 
 
 @q(
@@ -2778,7 +2781,7 @@ def tpch_q9_shape(spark, sf_dir):
     s = tbl(spark, sf_dir, "supplier")
     o = tbl(spark, sf_dir, "orders")
     n = tbl(spark, sf_dir, "nation")
-    return (
+    rollup = (
         li.join(F.broadcast(p), F.col("p_partkey") == F.col("l_partkey"))
         .join(F.broadcast(s), F.col("s_suppkey") == F.col("l_suppkey"))
         .join(o, F.col("o_orderkey") == F.col("l_orderkey"))
@@ -2789,8 +2792,9 @@ def tpch_q9_shape(spark, sf_dir):
                 dec2(F.col("l_extendedprice")) * (F.lit(1) - dec2(F.col("l_discount")))
             ).cast("double").alias("profit")
         )
-        .orderBy("n_name", F.col("o_year").desc())
     )
+    # one row per (nation, order year): at most |nation| x |years| rows
+    return R.sort_small(rollup, ["n_name", F.col("o_year").desc()])
 
 
 @q(
@@ -2833,7 +2837,7 @@ def tpch_q8_shape(spark, sf_dir):
     zero = F.lit(0).cast("decimal(18,2)")
     nat = n.join(F.broadcast(r), F.col("n_regionkey") == F.col("r_regionkey"))
     sup = s.join(F.broadcast(nat), F.col("s_nationkey") == F.col("n_nationkey"))
-    return (
+    rollup = (
         li.join(F.broadcast(sup), F.col("s_suppkey") == F.col("l_suppkey"))
         .join(o, F.col("o_orderkey") == F.col("l_orderkey"))
         .groupBy(F.year("o_orderdate").cast("long").alias("o_year"))
@@ -2844,8 +2848,9 @@ def tpch_q8_shape(spark, sf_dir):
                 6,
             ).alias("mkt_share")
         )
-        .orderBy("o_year")
     )
+    # one row per order year: at most |years| rows
+    return R.sort_small(rollup, ["o_year"])
 
 
 @q(
@@ -2879,11 +2884,11 @@ def tpch_q13_shape(spark, sf_dir):
         .groupBy("c_custkey")
         .agg(F.count("o_orderkey").cast("long").alias("c_count"))
     )
-    return (
-        per_cust.groupBy("c_count")
-        .agg(F.count(F.lit(1)).cast("long").alias("custdist"))
-        .orderBy(F.col("custdist").desc(), F.col("c_count").desc())
-    )
+    hist = per_cust.groupBy("c_count").agg(F.count(F.lit(1)).cast("long").alias("custdist"))
+    # one row per distinct per-customer order count: k distinct counts
+    # need at least 0 + 1 + ... + (k-1) orders, so k <= sqrt(2*|orders|) + 1
+    # (a skew that breaks SMALL_SORT_ROWS fails the guard, not the rows)
+    return R.sort_small(hist, [F.col("custdist").desc(), F.col("c_count").desc()])
 
 
 @q(
@@ -2977,7 +2982,7 @@ def tpch_q7_shape(spark, sf_dir):
     )
     sup = s.join(F.broadcast(n1), F.col("s_nationkey") == F.col("nk1"))
     cust = c.join(F.broadcast(n2), F.col("c_nationkey") == F.col("nk2"))
-    return (
+    rollup = (
         li.join(F.broadcast(sup), F.col("s_suppkey") == F.col("l_suppkey"))
         .join(o, F.col("o_orderkey") == F.col("l_orderkey"))
         .join(F.broadcast(cust), F.col("c_custkey") == F.col("o_custkey"))
@@ -2991,8 +2996,9 @@ def tpch_q7_shape(spark, sf_dir):
                 dec2(F.col("l_extendedprice")) * (F.lit(1) - dec2(F.col("l_discount")))
             ).cast("double").alias("revenue")
         )
-        .orderBy("supp_nation", "cust_nation", "l_year")
     )
+    # one row per (nation pair direction, ship year): at most 2 x |years| rows
+    return R.sort_small(rollup, ["supp_nation", "cust_nation", "l_year"])
 
 
 @q(

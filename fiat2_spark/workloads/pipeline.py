@@ -3750,7 +3750,7 @@ def bpe_encode(spark, sf_dir):
     # final vocab (words=) — the former second corpus-distinct pass +
     # merge replay is gone (r12; see operators/text.py:bpe_encode)
     words, mdf = TX.bpe_learn(d, "text", n_merges=8)
-    merges = [(r["lhs"], r["rhs"]) for r in mdf.orderBy("step").collect()]
+    merges = TX.bpe_merge_list(mdf)
     return TX.bpe_encode(d, "doc_id", "text", merges, words=words)
 
 
@@ -3830,7 +3830,7 @@ def bpe_encode_ids(spark, sf_dir):
     d = tbl(spark, sf_dir, "documents")
     # same-corpus vocabulary reuse (words=), as in bpe_encode (r12)
     words, mdf = TX.bpe_learn(d, "text", n_merges=8)
-    merges = [(r["lhs"], r["rhs"]) for r in mdf.orderBy("step").collect()]
+    merges = TX.bpe_merge_list(mdf)
     return TX.bpe_encode_ids(d, "doc_id", "text", merges, words=words)
 
 
@@ -3875,7 +3875,7 @@ def pipeline_tokenize_pack(spark, sf_dir):
     # driver-checked by the 8-merge family, and the learner's
     # per-merge argmax job is the composed query's dominant cost
     words, mdf = TX.bpe_learn(d, "text", n_merges=4)
-    merges = [(r["lhs"], r["rhs"]) for r in mdf.orderBy("step").collect()]
+    merges = TX.bpe_merge_list(mdf)
     # the token-id stream is consumed THREE times downstream (the
     # per-doc count aggregate, grouped_running_sum's sketch action on
     # that aggregate, and the final pack join probe) — checkpoint it
@@ -4024,7 +4024,7 @@ def text_unicode_pipeline(spark, sf_dir):
     df = spark.createDataFrame(_UNICODE_ROWS, "doc_id long, text string")
     tu = TX.tokens_unicode(F.col("text"))
     words, mdf = TX.bpe_learn(df, "text", n_merges=4, tokenizer=TX.tokens_unicode)
-    merges = [(r["lhs"], r["rhs"]) for r in mdf.orderBy("step").collect()]
+    merges = TX.bpe_merge_list(mdf)
     enc = TX.bpe_encode(
         df, "doc_id", "text", merges, tokenizer=TX.tokens_unicode, words=words
     ).select("doc_id", "n_bpe_tokens")

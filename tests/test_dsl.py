@@ -11,6 +11,7 @@ from fiat2_spark.plans import ast as A
 from fiat2_spark.plans.compile import compile_expr, eval_value
 from fiat2_spark.plans.interp import Store, run_command
 from fiat2_spark.plans.typecheck import synthesize, schema_type
+from tests.conftest import jobs_in_group
 
 
 EMPLOYEES = [("alice", 1, 100), ("bob", 2, 80), ("carol", 1, 120), ("dan", 3, 90)]
@@ -317,17 +318,6 @@ def test_command_sugar_desugars_to_identical_ast():
 # -- lazy table aggregates (scalar_frame / eval_value) ----------------------
 
 
-def _jobs(spark, group: str, fn):
-    """(fn(), number of Spark jobs fn started), counted under a job group."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_dsl_orders_agg_builds_without_jobs(spark, sf_dir):
     """The Ex_Orders read's three folds (sum, min over a set, and the sum
     again under the threshold) are one lazy aggregate: building the
@@ -337,8 +327,8 @@ def test_dsl_orders_agg_builds_without_jobs(spark, sf_dir):
 
     build = QUERIES["dsl_orders_agg"]
     build(spark, sf_dir)  # the first read of `orders` infers its schema
-    df, build_jobs = _jobs(spark, "dsl_orders_agg_build", lambda: build(spark, sf_dir))
-    rows, drain_jobs = _jobs(spark, "dsl_orders_agg_drain", df.collect)
+    df, build_jobs = jobs_in_group(spark, "dsl_orders_agg_build", lambda: build(spark, sf_dir))
+    rows, drain_jobs = jobs_in_group(spark, "dsl_orders_agg_drain", df.collect)
     assert (build_jobs, drain_jobs) == (0, 2)
     assert len(rows) == 1 and rows[0]["sum_price"] > 0
 
@@ -399,7 +389,7 @@ def test_table_aggregates_over_empty_source_match_python(spark):
     want = {k: ev(e, {}) for k, e in named.items()}
     assert want == {"s": 0, "n": 0, "lo": None, "hi": None, "f": 7}
     st = _store(spark)
-    df, build_jobs = _jobs(spark, "empty_source_build", lambda: scalar_frame(named, {}, st, spark))
+    df, build_jobs = jobs_in_group(spark, "empty_source_build", lambda: scalar_frame(named, {}, st, spark))
     assert build_jobs == 0
     assert df.collect()[0].asDict() == want
     assert {k: eval_value(e, {}, st, spark) for k, e in named.items()} == want

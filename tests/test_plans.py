@@ -52,6 +52,50 @@ def test_topk_no_global_sort(spark):
     assert "TakeOrderedAndProject" in p
 
 
+# result sorts over a fixed key domain (operators/relational.py:sort_small)
+FIXED_DOMAIN_SORTS = [
+    "tpch_q4_shape", "tpch_q5_shape", "tpch_q7_shape", "tpch_q8_shape",
+    "tpch_q9_shape", "tpch_q13_shape", "tpch_q22_shape",
+]
+
+
+def _order_by_form(monkeypatch):
+    """Swap sort_small for the plain range-sorted ORDER BY it replaces."""
+    from fiat2_spark.operators import relational as R
+
+    monkeypatch.setattr(R, "sort_small", lambda df, order: df.orderBy(*order))
+
+
+@pytest.mark.parametrize("name", FIXED_DOMAIN_SORTS)
+def test_fixed_domain_sort_is_top_k(spark, monkeypatch, name):
+    """The result sort plans as TakeOrderedAndProject with no range
+    exchange, and returns the orderBy form's rows in the same order."""
+    df = QUERIES[name](spark, SF_SMOKE)
+    p = plan_of(df)
+    assert "TakeOrderedAndProject" in p and "rangepartitioning" not in p
+    got = df.collect()
+    _order_by_form(monkeypatch)
+    ref = QUERIES[name](spark, SF_SMOKE)
+    assert "rangepartitioning" in plan_of(ref)
+    assert got == ref.collect() and got
+
+
+@pytest.mark.parametrize("name", ["tpch_q9_shape", "tpch_q13_shape"])
+def test_fixed_domain_sort_drops_range_jobs(spark, monkeypatch, name):
+    """A noop drain runs exactly 2 fewer jobs than the orderBy form:
+    the RangePartitioner sampling job and the range-shuffle stage."""
+    from tests.conftest import jobs_in_group
+
+    def drain(form):
+        df = QUERIES[name](spark, SF_SMOKE)  # first reads infer schemas outside the group
+        save = lambda: df.write.format("noop").mode("overwrite").save()  # noqa: E731
+        return jobs_in_group(spark, f"{name}_{form}", save)[1]
+
+    top_k = drain("sort_small")
+    _order_by_form(monkeypatch)
+    assert drain("order_by") - top_k == 2
+
+
 def test_theta_join_extracts_equi_conjunct(spark):
     # mixed predicate: equality drives a hash join, inequality is residual
     p = plan_of(QUERIES["theta_join_nonequi"](spark, SF_SMOKE))

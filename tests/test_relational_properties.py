@@ -372,6 +372,75 @@ def test_general_fold_over_table_matches_python(spark, pred):
     assert got == want, f"\npred={pred}\ngot={got}\nwant={want}"
 
 
+def _fold_store_init(spark, init):
+    """A general fold over t1.b whose init is the store scalar ``z``,
+    assigned through run_command (interp splices ``z`` as a value)."""
+    from fiat2_spark.plans.interp import run_command
+
+    st_ = _store(spark)
+    st_.assign("z", init)
+    body = A.EBinop(
+        "OMinus", A.EBinop("OTimes", A.EAtom(A.AInt(2)), A.EVar("_acc")), A.EVar("_v")
+    )
+    proj = A.EProj("LikeBag", A.ELoc("t1"), "x", A.EAccess(A.EVar("x"), "b"))
+    run_command(A.CAssign("r", A.EFold(proj, A.ELoc("z"), "_v", "_acc", body)), st_, {}, spark)
+    return st_.get("r"), A.EFold(proj, A.EAtom(A.AInt(init)), "_v", "_acc", body)
+
+
+def test_general_fold_int_store_init_matches_python(spark):
+    """An int store scalar as a general fold's init is a long literal,
+    so F.aggregate accepts it against the long body."""
+    got, twin = _fold_store_init(spark, 5)
+    assert got == ev(twin, {})
+
+
+def test_general_fold_none_init_is_named(spark):
+    """A None init has no type to fold against: it fails by name."""
+    from fiat2_spark.plans.compile import CompileError
+
+    with pytest.raises(CompileError, match="fold init is None"):
+        _fold_store_init(spark, None)
+
+
+# -- sort_small (operators/relational.py) -----------------------------------
+
+
+def test_sort_small_matches_order_by(spark):
+    """Per-partition heaps merged in one task give orderBy's rows in
+    orderBy's order."""
+    from pyspark.sql import functions as F
+
+    from fiat2_spark.operators import relational as R
+
+    df = spark.createDataFrame(T1 + T2, "a long, b long").repartition(3)
+    order = [F.col("b").desc(), "a"]
+    assert R.sort_small(df, order).collect() == df.orderBy(*order).collect()
+
+
+def test_sort_small_empty_input(spark):
+    from fiat2_spark.operators import relational as R
+
+    empty = spark.createDataFrame([], "a long, b long")
+    assert R.sort_small(empty, ["a"]).collect() == []
+    assert R.sort_small(empty.repartition(3), ["a"]).collect() == []
+
+
+def test_sort_small_bound_fails_the_action(spark, monkeypatch):
+    """Above SMALL_SORT_ROWS the plan builds, but its action fails with
+    an error naming the bound instead of returning the first rows."""
+    from fiat2_spark.operators import relational as R
+
+    df = spark.createDataFrame(T1, "a long, b long").repartition(3)
+    monkeypatch.setattr(R, "SMALL_SORT_ROWS", len(T1))
+    assert len(R.sort_small(df, ["a", "b"]).collect()) == len(T1)
+    monkeypatch.setattr(R, "SMALL_SORT_ROWS", len(T1) - 1)
+    out = R.sort_small(df, ["a", "b"])
+    with pytest.raises(Exception, match="SMALL_SORT_ROWS"):
+        out.collect()
+    with pytest.raises(Exception, match="SMALL_SORT_ROWS"):
+        out.write.format("noop").mode("overwrite").save()
+
+
 def test_inner_likeset_tag_dedupes_per_outer_binding(spark):
     """Regression (r7): an inner LikeSet-tagged flatmap dedupes its
     results PER OUTER BINDING before concatenation (Interpret.v's retag

@@ -1794,6 +1794,24 @@ def test_bpe_encode_words_reuse_matches_replay(spark):
     assert fast_ids == slow_ids and fast_ids
 
 
+def test_bpe_merge_list_is_one_job(spark):
+    """The learned merges reach the driver in one job, in learned order:
+    the orderBy("step") form's range sort costs 3 on the same table."""
+    from fiat2_spark.operators.text import bpe_learn, bpe_merge_list
+    from tests.conftest import jobs_in_group
+
+    docs = ["low lower lowest", "new newer newest lowest low", "wide wider widest"]
+    df = spark.createDataFrame([(t,) for t in docs], "text string")
+    _, mdf = bpe_learn(df, "text", n_merges=8)
+    assert mdf.count() == 8
+    merges, jobs = jobs_in_group(spark, "bpe_merge_list", lambda: bpe_merge_list(mdf))
+    ranged, range_jobs = jobs_in_group(
+        spark, "bpe_merges_order_by", lambda: mdf.orderBy("step").collect()
+    )
+    assert merges == [(r["lhs"], r["rhs"]) for r in ranged]
+    assert (jobs, range_jobs) == (1, 3)
+
+
 def _learn_both_paths(spark, monkeypatch, texts, n_merges, tokenizer=None):
     """(driver, distributed) results of bpe_learn on the same corpus:
     each is (sorted words rows, merge list). Below

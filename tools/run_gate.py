@@ -1,6 +1,9 @@
 #!/usr/bin/env python
 """Replicate the driver's correctness gate locally: run every queries()
 entry at a given sf dir and compare with its oracle_sql() via DuckDB.
+Each PASS/FAIL line ends with ``jobs=N``: the Spark jobs the query
+started (plan build plus the comparison's collect), counted under a job
+group named after the query, so two gate logs diff job counts per query.
 
 Usage: python tools/run_gate.py [sf_dir] [query_name ...]
 """
@@ -45,8 +48,10 @@ def main() -> None:
     con = duck_conn(sf_dir)
     failures = []
     names = [n for n in sorted(QUERIES) if not only or n in only]
+    sc = spark.sparkContext
     for name in names:
         t0 = time.perf_counter()
+        sc.setJobGroup(name, name)
         try:
             df = QUERIES[name](spark, sf_dir)
             if name in ORACLES:
@@ -55,8 +60,11 @@ def main() -> None:
                 ok, detail = df.count() >= 0, "rows-only"
         except Exception as ex:  # noqa: BLE001
             ok, detail = False, f"{type(ex).__name__}: {str(ex).splitlines()[0][:120]}"
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
         dt = time.perf_counter() - t0
-        print(f"{'PASS' if ok else 'FAIL'} {name:28s} {dt:6.1f}s  {detail}", flush=True)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(name))
+        print(f"{'PASS' if ok else 'FAIL'} {name:28s} {dt:6.1f}s  {detail}  jobs={jobs}", flush=True)
         if not ok:
             failures.append(name)
     print(f"\n{len(names) - len(failures)}/{len(names)} passed", flush=True)
