@@ -70,15 +70,3 @@ def list_to_set(arr: Column) -> Column:
     """list_to_set: sorted dedup (Interpret.v:126-135)."""
     return F.array_sort(F.array_distinct(arr))
 
-
-def bag_canonical_col(arr: Column) -> Column:
-    """list_to_bag canonical form: sorted (value, count) structs
-    (Interpret.v:120-124). Pure Catalyst: dedup, sort, count via filter."""
-    distinct = F.array_sort(F.array_distinct(arr))
-    return F.transform(
-        distinct,
-        lambda v: F.struct(
-            v.alias("value"),
-            F.size(F.filter(arr, lambda x: x == v)).alias("count"),
-        ),
-    )

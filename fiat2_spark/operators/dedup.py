@@ -15,8 +15,8 @@ Scale design (the part that matters at 100 TB):
   pigeonhole any pair within Hamming distance 3 shares ≥ 1 intact
   nibble, so the banded join is **lossless** for distance ≤ 3 — the
   oracle brute-forces all pairs and must agree exactly.
-* Embedding near-dup: exact mode is a blocked self-join (for oracle
-  parity); the scale path is random-hyperplane LSH (similarity.py).
+* Embedding near-dup: pairs are compared only inside random-hyperplane
+  LSH buckets (similarity.py), an equi self-join on the bucket id.
 
 No Python UDFs anywhere — signatures, bands, and verification are
 Catalyst expressions (md5 / transform / aggregate / array ops).
@@ -82,27 +82,6 @@ MINHASH_LANES = 4
 def seeded_digests(sh: Column, seed: int) -> Column:
     """Array of md5(seed ‖ '#' ‖ shingle) digests."""
     return F.transform(sh, lambda s: F.md5(F.concat(F.lit(f"{seed}#"), s)))
-
-
-def lane_min(digests: Column, lane: int) -> Column:
-    """Min of one 8-hex lane across a digest array."""
-    return F.array_min(F.transform(digests, lambda h: F.substring(h, 8 * lane + 1, 8)))
-
-
-def minhash_signature(sh: Column, n_hashes: int = 8) -> Column:
-    """MinHash signature as an array of n lexicographic-min 8-hex lanes:
-    sig_{4d+j} = min_{s∈shingles} substr(md5(d ‖ '#' ‖ s), 8j+1, 8).
-    String-min avoids any hex→int conversion and is identical across
-    engines. NOTE: when several lanes of one seed are used in a single
-    projection, prefer materializing ``seeded_digests`` as a column
-    first (see minhash_dedup_pairs) so the md5 pass isn't re-inlined
-    per lane."""
-    sigs = []
-    for d in range(-(-n_hashes // MINHASH_LANES)):
-        digests = seeded_digests(sh, d)
-        for j in range(min(MINHASH_LANES, n_hashes - d * MINHASH_LANES)):
-            sigs.append(lane_min(digests, j))
-    return F.array(*sigs)
 
 
 def minhash_bands(sig: Column, n_bands: int, rows_per_band: int) -> Column:
@@ -428,9 +407,6 @@ def dup_clusters_star(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
 
 # -- SimHash ----------------------------------------------------------------
 
-_HIGH_HEX = ["8", "9", "a", "b", "c", "d", "e", "f"]
-
-
 SIMHASH_BITS = 60     # 15 hex digits × 4 bits; stays clear of the sign bit
 SIMHASH_BANDS = 4     # 15-bit bands → pigeonhole-lossless for dist ≤ 3
 _BAND_BITS = SIMHASH_BITS // SIMHASH_BANDS
@@ -632,38 +608,6 @@ def ngram_jaccard_pairs(
 
 # -- embedding cosine near-dup ---------------------------------------------
 
-def embedding_dedup_pairs(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    threshold: float = 0.4,
-) -> DataFrame:
-    """Exact cosine near-dup pairs (id_a < id_b, cos >= threshold).
-    This is the O(n²) baseline the LSH path (similarity.ann_lsh) prunes;
-    at 100 TB run it only inside LSH buckets."""
-    from fiat2_spark.operators.similarity import cosine_pre, norm
-
-    # spread the O(n²) comparison across all cores (see ngram_jaccard_pairs);
-    # norms are hoisted per vector so each pair pays one dot-product fold
-    base = df.repartition(cpu_partitions(df, rows_per_task=200)).select(
-        F.col(id_col).alias("doc"),
-        F.col(vec_col).alias("v"),
-        norm(F.col(vec_col)).alias("nv"),
-    )
-    l, r = base.alias("l"), base.alias("r")
-    return (
-        l.join(r, F.col("l.doc") < F.col("r.doc"))
-        .select(
-            F.col("l.doc").alias("id_a"),
-            F.col("r.doc").alias("id_b"),
-            F.round(
-                cosine_pre(F.col("l.v"), F.col("r.v"), F.col("l.nv"), F.col("r.nv")), 6
-            ).alias("cos"),
-        )
-        .filter(F.col("cos") >= threshold)
-    )
-
-
 def embedding_dedup_pairs_lsh(
     df: DataFrame,
     id_col: str,
@@ -747,8 +691,7 @@ def _segmented(
 def segment_digests(base: DataFrame) -> DataFrame:
     """(doc, seg_idx, seg_key, seg_tok) from a (doc, segs) relation —
     THE segment-digest definition (md5 over space-joined tokens),
-    shared by the batch `span_dedup_stats` and the streaming
-    `SpanDedupCorpus` so the two can never drift apart."""
+    used by `span_dedup_stats`."""
     return base.select("doc", F.explode("segs").alias("s")).select(
         "doc",
         F.col("s.seg_idx").alias("seg_idx"),
@@ -1035,7 +978,7 @@ def lloyd_assign(qe: DataFrame, cent: DataFrame) -> DataFrame:
     )
 
 
-def lloyd_centroids(qe: DataFrame, k: int, iters: int, track=None) -> DataFrame:
+def lloyd_centroids(qe: DataFrame, k: int, iters: int) -> DataFrame:
     """Exact-integer Lloyd over quantized vectors: init = the k
     SMALLEST actual vids' vectors (TakeOrderedAndProject + broadcast
     semi-join — NOT ``vid < k``, which silently yields fewer/zero
@@ -1047,20 +990,8 @@ def lloyd_centroids(qe: DataFrame, k: int, iters: int, track=None) -> DataFrame:
     (r12): un-materialized, round t's plan nested every previous
     round's assign→argmin-window→update chain under the next round's
     broadcast, and the consumer's one action re-planned and re-executed
-    a t-deep tree. ``track``: optional list receiving every round's
-    checkpoint block ids — the live-index contract
-    (`SemanticDedupCorpus.recluster` releases them once its own
-    tracked centroid snapshot exists); None is the batch contract
-    (blocks belong to the returned result, session owner's sweep)."""
-    from fiat2_spark.session import local_checkpoint_tracked
-
-    def ckpt(df):
-        if track is None:
-            return df.localCheckpoint()
-        out, blocks = local_checkpoint_tracked(df)
-        track.extend(blocks)
-        return out
-
+    a t-deep tree. The blocks belong to the returned result (session
+    owner's sweep)."""
     qx = qe.select("vid", F.posexplode("qv").alias("dim", "v"))
     seeds = qe.select("vid").orderBy("vid").limit(k)
     cent = qx.join(F.broadcast(seeds), "vid").select(
@@ -1068,7 +999,7 @@ def lloyd_centroids(qe: DataFrame, k: int, iters: int, track=None) -> DataFrame:
     )
     for _ in range(iters):
         a = lloyd_assign(qe, cent)
-        cent = ckpt(
+        cent = (
             qx.join(a, "vid")
             .groupBy("cid", "dim")
             .agg(
@@ -1076,6 +1007,7 @@ def lloyd_centroids(qe: DataFrame, k: int, iters: int, track=None) -> DataFrame:
                 .cast("long")
                 .alias("qc")
             )
+            .localCheckpoint()
         )
     return cent
 
@@ -1096,17 +1028,13 @@ def cosine_near_pred(
 
 def semantic_dedup_members(
     members: DataFrame,
-    new_only: DataFrame | None = None,
     t2_num: int = 4,
     t2_den: int = 25,
     pair_salt: int = 16,
 ) -> DataFrame:
     """The SemDeDup prune over a clustered membership relation
     (vid, cid, qv, n2): mark vid duplicate iff SOME same-cluster member
-    with a smaller vid is cosine-near. When ``new_only`` is given, only
-    ITS rows are scored (against all of ``members``) — the incremental
-    form SemanticDedupCorpus.ingest uses; witnesses still come from the
-    full membership, so accumulated batch results equal the one-shot's.
+    with a smaller vid is cosine-near.
 
     Salted pair join: the MEMBERS (witness) side keys
     (cid, pmod(vid, pair_salt)), the SCORED side replicates
@@ -1118,7 +1046,6 @@ def semantic_dedup_members(
     matches and its pairs would be silently missed. At 100 TB-scale
     k ∝ n the parallelism is natural and replication is pure cost:
     pass pair_salt=1 there."""
-    scored = members if new_only is None else new_only
     dot = F.expr(
         "aggregate(zip_with(l.qv, r.qv, (x, y) -> x * y), 0L, (acc, z) -> acc + z)"
     )
@@ -1126,7 +1053,7 @@ def semantic_dedup_members(
     l = members.withColumn(
         "salt", F.pmod(F.col("vid"), F.lit(pair_salt)).cast("int")
     ).alias("l")
-    r = scored.withColumn(
+    r = members.withColumn(
         "salt", F.explode(F.sequence(F.lit(0), F.lit(pair_salt - 1)))
     ).alias("r")
     dup_ids = (
@@ -1140,7 +1067,7 @@ def semantic_dedup_members(
         .select(F.col("r.vid").alias("vid"))
         .distinct()
     )
-    return scored.join(
+    return members.join(
         dup_ids.withColumn("is_dup", F.lit(True)), "vid", "left"
     ).select("vid", "cid", F.coalesce("is_dup", F.lit(False)).alias("is_dup"))
 
@@ -1176,9 +1103,7 @@ def semantic_dedup(
 
     Engine-portable determinism (the oracle is bitwise-equal, not
     approximate): see `quantize_embeddings` / `cosine_near_pred` /
-    `lloyd_centroids` — exact integer arithmetic end to end. The
-    streaming twin is `streaming.maintenance.SemanticDedupCorpus`
-    (frozen centroids, batch ingest; agreement-tested)."""
+    `lloyd_centroids` — exact integer arithmetic end to end."""
     qe = quantize_embeddings(emb, id_col, vec_col, q)
     cent = lloyd_centroids(qe, k, iters)
     af = lloyd_assign(qe, cent)
@@ -1187,7 +1112,7 @@ def semantic_dedup(
     # re-run the whole Lloyd chain; blocks, not a CacheManager pin
     # (the minhash-shingle discipline — swept by the session owner)
     members = qe.join(af, "vid").select("vid", "cid", "qv", "n2").localCheckpoint()
-    out = semantic_dedup_members(members, None, t2_num, t2_den, pair_salt)
+    out = semantic_dedup_members(members, t2_num, t2_den, pair_salt)
     return out.select(F.col("vid").alias(id_col), "cid", "is_dup")
 
 

@@ -1,9 +1,10 @@
 """Multimodal columns: image/audio/video as opaque binary + typed
 metadata, with decode / feature-extract as Arrow-batched Pandas stages.
 
-The container has no image/audio codecs, so the decode step is STUBBED
-(`decode_media` raises NotImplementedError unless given the
-deterministic fake) — but the Spark-side plumbing is real and tested:
+No image/audio/video codec library is used, so compressed-format decode
+is not implemented (`extract_byte_features` is a deterministic fake;
+WAV and PPM have real pure-Python decoders) — but the Spark-side
+plumbing is real and tested:
 binary payload columns, metadata structs, `mapInPandas` batch iterators
 with explicit output schemas, and the partitioning story (binary blobs
 are large → keep them out of shuffles; extract features early, carry
@@ -36,28 +37,6 @@ def to_binary_table(df: DataFrame, id_col: str, payload_col: str, kind: str) -> 
             F.length(payload).alias("n_bytes"),
         ).alias("meta"),
     )
-
-
-def decode_media(kind: str):
-    """Codec-LIBRARY decoders (JPEG/MP3/H.264 …) are not available in
-    this container — gate them so the plumbing (schemas, batching) is
-    testable with the fake. Container formats simple enough for the
-    standard library have REAL tested decoders below: ``wav_decode``
-    (RIFF chunk walk, PCM16) and ``ppm_decode`` (P6 header grammar),
-    driven end-to-end by `audio_rms_wav` / `image_channel_stats_ppm`
-    and the `multimodal_wav_real` / `multimodal_ppm_real` gate
-    queries."""
-    if kind == "audio/wav":
-        return lambda b: wav_decode(b)[1]
-    if kind == "image/ppm":
-        return lambda b: ppm_decode(b)[2]
-    if kind in ("image", "audio", "video"):
-        raise NotImplementedError(
-            f"{kind} decoding requires codec libraries not present in this "
-            "environment; use extract_byte_features (deterministic fake) "
-            "to exercise the pipeline plumbing."
-        )
-    return lambda b: b
 
 
 def extract_byte_features(binary_df: DataFrame, n_partitions: int | None = None) -> DataFrame:
@@ -117,7 +96,7 @@ def sample_frames(
     fixed ``frame_size``-byte frames and keep every ``every``-th one —
     the 1→N mapInPandas shape a real frame sampler has (one input row
     fans out to many frame rows; the last frame may be short). Real
-    video decode is stubbed (`decode_media`); the frame arithmetic,
+    video decode is not implemented; the frame arithmetic,
     fan-out schema, and batching are the production plumbing. Frame
     'features' are the deterministic byte checksum so the fan-out is
     oracle-checkable. Output: (doc_id, frame_idx, frame_bytes,
@@ -198,8 +177,8 @@ def frame_rms(
     """Windowed RMS over 'audio' payloads: view each payload's bytes as
     8-bit PCM samples, cut into non-overlapping ``frame_size``-sample
     frames, and emit per-frame root-mean-square energy — the feature
-    shape of an audio VAD / loudness pass. Real audio decode is stubbed
-    (`decode_media`); the framing, int64-exact sum of squares, and the
+    shape of an audio VAD / loudness pass. Real audio decode is not
+    implemented; the framing, int64-exact sum of squares, and the
     single double division + sqrt are computed in the same operation
     order as the SQL oracle, so the doubles match bit-for-bit. Output:
     (doc_id, frame_idx, n_samples, rms)."""
@@ -231,10 +210,9 @@ def frame_rms(
 
 
 # -- real pure-Python codecs (round 6) --------------------------------------
-# The container has no codec LIBRARIES (PIL/ffmpeg stay stubbed behind
-# decode_media), but WAV (RIFF) and PPM (P6) are simple enough to decode
-# with the standard library alone — giving the NotImplementedError
-# branch a REAL, tested sibling: actual container parsing (magic bytes,
+# No codec LIBRARY (PIL/ffmpeg) is used, but WAV (RIFF) and PPM (P6)
+# are simple enough to decode with the standard library alone: actual
+# container parsing (magic bytes,
 # chunk walking, header grammar) inside the same Arrow-batched
 # mapInPandas shape, so swapping in a heavier codec changes only the
 # per-payload body.

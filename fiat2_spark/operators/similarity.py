@@ -30,10 +30,6 @@ def norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(sq, F.lit(0.0), lambda acc, x: acc + x))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
-
-
 def cosine_pre(a: Column, b: Column, na: Column, nb: Column) -> Column:
     """Cosine with per-row precomputed norms. The pair-join operators
     below hoist ``norm()`` to a per-vector projection BEFORE the join:

@@ -339,52 +339,6 @@ def char_trigrams(text: Column) -> Column:
     )
 
 
-def trigram_score_vector(text: Column) -> Column:
-    """|LANGS|-length trigram score vector in ONE pass over the
-    document's trigrams: a literal map trigram → one-hot membership
-    vector (an entry per trigram appearing in ANY profile), folded
-    with element-wise adds. One hash lookup per trigram instead of
-    |LANGS| separate set-membership passes, and the trigram extraction
-    itself runs once — the naive per-language formulation re-embedded
-    the whole extraction in each score (10× work per row and a
-    multi-MiB codegen unit)."""
-    onehot: dict[str, list[int]] = {}
-    for i, lang in enumerate(LANGS):
-        for t in TRIGRAM_PROFILES[lang]:
-            onehot.setdefault(t, [0] * len(LANGS))[i] = 1
-    keys = sorted(onehot)
-    mm = F.map_from_arrays(
-        F.array(*[F.lit(k) for k in keys]),
-        F.array(*[F.array(*[F.lit(b) for b in onehot[k]]) for k in keys]),
-    )
-    zeros = F.array_repeat(F.lit(0), len(LANGS))
-    return F.aggregate(
-        char_trigrams(text),
-        zeros,
-        lambda acc, t: F.zip_with(
-            acc,
-            F.coalesce(F.element_at(mm, t), F.array_repeat(F.lit(0), len(LANGS))),
-            lambda a, b: a + b,
-        ),
-    )
-
-
-def lang_id_trigram(text: Column) -> Column:
-    """Language ID by char-trigram profile membership: score(lang) =
-    number of the document's trigrams (with multiplicity) found in the
-    language's profile; argmax with the same deterministic tie rule as
-    ``lang_id`` ('und' when nothing matches, earliest sorted language
-    wins ties). Catches inflected forms whole-token stopword matching
-    misses ('walking' scores 'ing'/'ng ').
-
-    This is the EXPRESSION form — self-contained, composable inside any
-    projection, but it carries the ~900-entry profile map in the task
-    binary (measured: binary deserialization beat the actual scoring at
-    50 tasks). For table-scale scoring use ``trigram_scores_table``,
-    which ships the profiles once as a broadcast relation."""
-    return lang_argmax_vector(trigram_score_vector(text))
-
-
 def trigram_scores_table(df, text_col: str, keys: list[str]):
     """Relational trigram scorer — the table-scale path: explode the
     documents' trigrams, broadcast-join the (≈900-row) profile relation,
@@ -495,39 +449,6 @@ def script_id(text: Column) -> Column:
     return argmax_label(script_counts(text), [lab for lab, _ in SCRIPT_CLASSES])
 
 
-def table_scores(toks: Column, table: dict[str, list[str]]) -> dict[str, Column]:
-    """Per-key stopword-hit counts (with multiplicity) over an
-    arbitrary {label: [words]} table — `lang_scores` generalized from
-    the module-global STOPWORDS."""
-    return {
-        key: F.size(F.filter(toks, lambda t: t.isin(*table[key])))
-        for key in table
-    }
-
-
-def lang_id_table(toks: Column, table: dict[str, list[str]]) -> Column:
-    """Language ID over an arbitrary stopword table: argmax of per-key
-    hit counts in sorted-key order ('und' when nothing fires, earliest
-    sorted key wins ties — `lang_id`'s exact tie rule). With a
-    transliterated or non-Latin stopword table this identifies
-    languages the ASCII STOPWORDS lists cannot see; the caller pairs it
-    with `tokens_unicode` (the ASCII tokenizer would shred non-Latin
-    entries before they could match).
-
-    This is the EXPRESSION form — composable in any projection, right
-    for SMALL tables (a few dozen words per key), but each token pays
-    |table| interpreted isin compares inside the HOF filters. For a
-    large table (the 4-script × 10-language transliterated table is
-    1,200 entries — measured 6.9 s at sf0.1 with this form, and a
-    literal-map variant is no better: Catalyst map literals are
-    linear-scan lookups) use `stopword_scores_table`, the relational
-    twin that ships the word table once as a broadcast relation — the
-    exact `lang_id_trigram` / `trigram_scores_table` split."""
-    keys = sorted(table)
-    scores = table_scores(toks, table)
-    return argmax_label(F.array(*[scores[k] for k in keys]), keys)
-
-
 def stopword_scores_table(df, toks: Column, keys: list[str], table: dict[str, list[str]]):
     """Relational stopword scorer over an arbitrary {label: [words]}
     table — the table-scale path (`trigram_scores_table`'s design one
@@ -540,8 +461,8 @@ def stopword_scores_table(df, toks: Column, keys: list[str], table: dict[str, li
     carries |docs| × |labels| ints. ``explode_outer`` keeps token-less
     documents (they score all-zero → 'und' downstream). Returns
     ``keys`` + ``__sv`` (the sorted-label score vector for
-    `argmax_label(…, sorted(table))`), bit-equal to `lang_id_table`'s
-    expression form (agreement-tested)."""
+    `argmax_label(…, sorted(table))`; agreement-tested against a
+    Python stopword-count model)."""
     labels = sorted(table)
     member: dict[str, list[int]] = {}
     for i, k in enumerate(labels):
@@ -1359,22 +1280,13 @@ def gopher_rules(
 
 
 def _nb_bucketed(df, id_col: str, text_col: str, buckets: int, extra=(),
-                 checkpoint=True, track=None, tokenizer=tokens,
-                 outer=False):
+                 tokenizer=tokens, outer=False):
     """One featurize pass: hashed unigram+bigram buckets per doc
     (post-explode codegen'd md5 bucketing, localCheckpointed —
-    `dsir_scores`' discipline). Shared by the one-shot classifier and
-    the streaming `NBClassifierCorpus` so both realize the identical
-    feature map.
-
-    Block-lifetime contract (ADVICE r9): with ``checkpoint=True,
-    track=None`` (the batch default) the checkpoint blocks belong to
-    the returned result and are reclaimed by the session owner's
-    global sweep. A long-lived caller for whom the global sweep is
-    unsafe passes ``track`` (a list) to receive the new block ids for
-    targeted ``release_blocks`` retirement, or ``checkpoint=False``
-    to skip materialization entirely (right when the featurize pass
-    appears exactly once in the consuming plan).
+    `dsir_scores`' discipline). Shared by the training and scoring
+    sides of the classifier so both realize the identical feature map.
+    The checkpoint blocks belong to the returned result and are
+    reclaimed by the session owner's global sweep.
 
     ``outer`` (r12, scoring side only): keep zero-feature docs as one
     (doc, NULL-bucket) placeholder row via ``explode_outer``, so the
@@ -1398,45 +1310,32 @@ def _nb_bucketed(df, id_col: str, text_col: str, buckets: int, extra=(),
             feature_bucket(F.col("feat"), buckets).alias("bucket"),
         )
     )
-    if not checkpoint:
-        return out
-    if track is None:
-        return out.localCheckpoint()
-    from fiat2_spark.session import local_checkpoint_tracked
-
-    out, blocks = local_checkpoint_tracked(out)
-    track.extend(blocks)
-    return out
+    return out.localCheckpoint()
 
 
 def nb_counts(train, id_col: str, text_col: str, label_col: str, buckets: int,
-              track=None, tokenizer=tokens):
+              tokenizer=tokens):
     """The naive-Bayes sufficient statistics of a labeled corpus:
     (bucket, n_p, n_n) per observed feature bucket, the 1-row feature
     totals (tot_p, tot_n), and the 1-row doc totals (docs_p, docs_n).
     All ADDITIVE — summing two corpora's statistics equals the union's
     — which is exactly what makes the classifier incrementally
-    trainable (`NBClassifierCorpus`). Feature and doc totals stay
+    trainable. Feature and doc totals stay
     SEPARATE relations so each score-side broadcast subtree computes
     only its own aggregate (the weight table reads the feature pass,
     the bias reads one train scan — fusing them into one crossJoined
     row made BOTH broadcast subtrees pay BOTH aggregations, serially,
-    measured ~1.5x on the classifier queries).
-
-    ``track``: optional list receiving the featurize pass's checkpoint
-    block ids for targeted retirement (the `NBClassifierCorpus` path —
-    see `_nb_bucketed`'s block-lifetime contract)."""
+    measured ~1.5x on the classifier queries)."""
     tb = _nb_bucketed(train, id_col, text_col, buckets, extra=(label_col,),
-                      track=track, tokenizer=tokenizer)
+                      tokenizer=tokenizer)
     counts = tb.groupBy("bucket").agg(
         F.sum(F.col(label_col).cast("long")).alias("n_p"),
         F.sum((~F.col(label_col)).cast("long")).alias("n_n"),
     )
     # Spark's SUM over zero rows is NULL, not 0 — uncoalesced, an empty
-    # training corpus (or an empty batch folded into a live
-    # NBClassifierCorpus) would poison the totals state / the bias to
-    # NULL. The per-bucket counts need no guard: an empty corpus has no
-    # bucket rows at all.
+    # training corpus would poison the totals / the bias to NULL. The
+    # per-bucket counts need no guard: an empty corpus has no bucket
+    # rows at all.
     z = F.lit(0).cast("long")
     ftot = tb.agg(
         F.coalesce(F.sum(F.col(label_col).cast("long")), z).alias("tot_p"),
@@ -1451,8 +1350,7 @@ def nb_counts(train, id_col: str, text_col: str, label_col: str, buckets: int,
 
 def nb_score_from_counts(
     score, counts, ftot, dtot, id_col: str, text_col: str,
-    buckets: int = 256, quant: int = 10_000, checkpoint: bool = True,
-    tokenizer=tokens,
+    buckets: int = 256, quant: int = 10_000, tokenizer=tokens,
 ):
     """Classify with a model given as sufficient statistics: per-bucket
     weight w[b] = round(ln((n_p+1)·(tot_n+B) / ((n_n+1)·(tot_p+B)))·quant)
@@ -1463,13 +1361,7 @@ def nb_score_from_counts(
     mirrors). Returns (id, logit_q, pred) — ONE row per DISTINCT id
     (the `lm_perplexity` contract, r12: duplicate ids' features
     aggregate into a single score row; callers needing per-input-row
-    scores must key by a unique id).
-
-    ``checkpoint=False`` skips the score-side featurize checkpoint —
-    it appears exactly once in the returned plan, so a long-lived
-    caller (`NBClassifierCorpus.score`) avoids leaving an untracked
-    block behind at the cost of the usual lazy-plan recompute if the
-    result is evaluated more than once (ADVICE r9)."""
+    scores must key by a unique id)."""
     w = counts.crossJoin(F.broadcast(ftot)).select(
         "bucket",
         F.round(
@@ -1506,8 +1398,8 @@ def nb_score_from_counts(
     # the per-doc aggregate covers every doc — no corpus-keyed
     # join-back against the score relation (the `lm_perplexity`
     # rewrite, one corpus join fewer per scoring query)
-    sb = _nb_bucketed(score, id_col, text_col, buckets, checkpoint=checkpoint,
-                      tokenizer=tokenizer, outer=True)
+    sb = _nb_bucketed(score, id_col, text_col, buckets, tokenizer=tokenizer,
+                      outer=True)
     doc_sums = (
         sb.join(F.broadcast(w), "bucket", "left")
         .groupBy("doc")
@@ -1541,8 +1433,7 @@ def nb_classifier_scores(
     distribution"; this answers "binary keep/drop with a decision
     boundary". Composed as `nb_counts` (the additive sufficient
     statistics) feeding `nb_score_from_counts` (weights + bias +
-    integer scoring) — the streaming `NBClassifierCorpus` reuses BOTH,
-    so batch/stream agreement is structural, not coincidental.
+    integer scoring).
 
     Plan: one featurize pass per corpus; the model is a ≤B-row
     broadcast + a 1-row bias; scoring is a broadcast join + per-doc
@@ -1696,10 +1587,7 @@ def doremi_weights(
     NOTE (ADVICE r12): the K-row stats checkpoint below makes this
     function EAGER — the full pool pass runs at call time, not at the
     first action — and its blocks are untracked (batch contract: the
-    session owner's `release_checkpoint_blocks` sweep reclaims them).
-    A live-index caller, for whom the global sweep is unsafe, should
-    use `doremi_weights_trajectory(rounds=1, track=...)`, whose hook
-    exposes every loop block."""
+    session owner's `release_checkpoint_blocks` sweep reclaims them)."""
     # materialize the K-row domain stats ONCE (r12): three consumers
     # read `per` — the λ_max aggregate, the normalizing-sum aggregate,
     # and the final select — and each un-materialized reference re-ran
@@ -1815,7 +1703,7 @@ def doremi_weights_trajectory(
     eta_num: int = 1, eta_den: int = 1,
     smooth_num: int = 1, smooth_den: int = 100,
     escale: int = 10**6, ascale: int = 10**9,
-    tokenizer=tokens, track=None,
+    tokenizer=tokens,
 ):
     """Multi-round DoReMi (Xie et al. 2023 Algorithm 1): iterate the
     Group-DRO multiplicative-weights update T times and return the
@@ -1845,36 +1733,20 @@ def doremi_weights_trajectory(
     ONCE; each round is a K-row job (sum + crossJoin + arithmetic),
     localCheckpoint-truncated so the T-round lineage stays flat.
     Returns (domain, n_docs, n_trans, excess_q, weight), Σ weight ≈ 1.
-
-    ``track``: optional list receiving the loop checkpoints' block ids
-    (domain-stats + initial state + stride-4 interior + final, so
-    3 + ⌊(rounds−1)/4⌋ checkpoints) for targeted release — the
-    live-index contract
-    `bpe_learn_from_words`/`_nb_bucketed` follow (ADVICE r10); None is
-    the batch contract (blocks belong to the returned result, session
-    owner's sweep reclaims them)."""
+    The loop checkpoints (domain-stats + initial state + stride-4
+    interior + final, so 3 + ⌊(rounds−1)/4⌋ of them) belong to the
+    returned result; the session owner's sweep reclaims them."""
     w1, r1 = divmod(ascale * (smooth_den - smooth_num), smooth_den)
     w2 = ascale * smooth_num
     assert r1 == 0, "smooth_den must divide ascale*(smooth_den-smooth_num)"
 
-    def ckpt(df):
-        if track is None:
-            return df.localCheckpoint()
-        from fiat2_spark.session import local_checkpoint_tracked
-
-        out, blocks = local_checkpoint_tracked(df)
-        track.extend(blocks)
-        return out
-
     # materialize the K-row domain stats ONCE (r12, as in
     # doremi_weights): λ_max, k_dom, and the round-0 state would
-    # otherwise each re-run the corpus pass. Tracked blocks when a
-    # live-index caller asks (the ckpt helper), batch contract
-    # otherwise.
-    per = ckpt(_doremi_domain_stats(
+    # otherwise each re-run the corpus pass.
+    per = _doremi_domain_stats(
         pool, ref, text_col, domain_col,
         vocab_size, quant, alpha_num, alpha_den, tokenizer=tokenizer,
-    ))
+    ).localCheckpoint()
     # constant-partition window over the K-row checkpoint, as in
     # doremi_weights (r12): λ_max and k_dom in the same stage as the
     # state projection, no per-aggregate broadcast jobs
@@ -1897,8 +1769,7 @@ def doremi_weights_trajectory(
             F.round(F.lit(float(ascale)) / F.col("k_dom")).cast("long"),
         )
         .withColumn("asum", F.lit(0).cast("long"))
-    )
-    cur = ckpt(cur)
+    ).localCheckpoint()
     for _t in range(rounds):
         # per-round Σm as the same constant-partition window (r12):
         # each round's checkpoint is ONE K-row stage instead of an
@@ -1924,8 +1795,8 @@ def doremi_weights_trajectory(
         # re-planning ≤ 3 of them is cheaper than a materialization JOB
         # per round, while lineage stays bounded for any T
         if (_t + 1) % 4 == 0 and _t + 1 < rounds:
-            cur = ckpt(cur)
-    cur = ckpt(cur)
+            cur = cur.localCheckpoint()
+    cur = cur.localCheckpoint()
     return cur.select(
         "domain", "n_docs", "n_trans", "excess_q",
         F.round(
@@ -2073,15 +1944,12 @@ def _bpe_learn_driver(spark, schema, rows, n_merges: int):
     return wdf, mdf
 
 
-def bpe_learn_from_words(words, n_merges: int, checkpoint_every: int = 8,
-                         track=None):
+def bpe_learn_from_words(words, n_merges: int, checkpoint_every: int = 8):
     """The BPE merge loop over an EXISTING (wrapped, freq) word table
     (Sennrich et al. 2016 `learn_bpe`): repeatedly take the highest-
     frequency adjacent symbol pair (ties: lexicographic on (lhs, rhs))
     and merge it everywhere, left-to-right non-overlapping within each
-    word. Shared by `bpe_learn` (one corpus aggregation feeds it) and
-    the streaming `BpeVocabCorpus.learn` (the maintained word-count
-    state feeds it), so batch/stream merge lists agree structurally.
+    word. `bpe_learn` feeds it one corpus aggregation.
 
     Iterative by nature (each argmax depends on the previous rewrite),
     so the loop runs on the driver — and when the materialized word
@@ -2098,26 +1966,12 @@ def bpe_learn_from_words(words, n_merges: int, checkpoint_every: int = 8,
     argmax job is cheap), while an eager checkpoint is a full
     materialization JOB per merge — at a real tokenizer's ~30k merges
     the per-merge checkpoint dominates the loop, and lineage must
-    still be bounded, hence the stride.
-
-    ``track``: optional list receiving every loop checkpoint's block
-    ids — a live-index caller (`BpeVocabCorpus`), for whom the global
-    sweep is unsafe, releases them once the merge list is extracted;
-    None is the batch contract (session owner's sweep). Returns
+    still be bounded, hence the stride. The loop checkpoints belong to
+    the returned result (session owner's sweep). Returns
     (words, merges) where merges is [(step, lhs, rhs, freq)] and words
     is the final symbolized vocab (always checkpoint-materialized)."""
     spark = words.sparkSession
-
-    def ckpt(df):
-        if track is None:
-            return df.localCheckpoint()
-        from fiat2_spark.session import local_checkpoint_tracked
-
-        out, blocks = local_checkpoint_tracked(df)
-        track.extend(blocks)
-        return out
-
-    words = ckpt(words)
+    words = words.localCheckpoint()
     if BPE_DRIVER_VOCAB_LIMIT > 0:
         # bounded size-probe-and-fetch in ONE job on the checkpoint
         # blocks: coalesce(1) keeps executeTake from its adaptive
@@ -2147,10 +2001,10 @@ def bpe_learn_from_words(words, n_merges: int, checkpoint_every: int = 8,
         )
         pending += 1
         if pending >= checkpoint_every:
-            words = ckpt(words)
+            words = words.localCheckpoint()
             pending = 0
     if pending:
-        words = ckpt(words)
+        words = words.localCheckpoint()
     mdf = spark.createDataFrame(
         merges, "step int, lhs string, rhs string, freq bigint"
     )

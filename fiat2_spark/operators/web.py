@@ -74,20 +74,6 @@ def domain_filter(
     )
 
 
-def domain_stats(df: DataFrame, id_col: str, url_col: str) -> DataFrame:
-    """Per-host corpus profile (doc count + id range) — the aggregate
-    a pipeline inspects to CHOOSE its blocklist/cap (RefinedWeb curates
-    from exactly this view). One partial-agg pass keyed on host."""
-    hosts = df.select(
-        F.col(id_col).alias("doc"), url_host(F.col(url_col)).alias("host")
-    )
-    return hosts.groupBy("host").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.min("doc").alias("min_doc"),
-        F.max("doc").alias("max_doc"),
-    )
-
-
 def url_normalize(url: Column) -> Column:
     """Canonical URL — the exact-dedup KEY every crawl pipeline applies
     before any content dedup: lowercase scheme and host, strip

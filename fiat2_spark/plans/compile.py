@@ -210,7 +210,7 @@ def compile_column(e: A.Expr, env: dict, w: int = 64) -> Column:
             arr = cc(e1)
             return F.array_min(arr) if ag == "AGMin" else F.array_max(arr)
         case A.EDictFold(d, e0, k, v, acc, body):
-            entries = F.array_sort(F.map_entries(cc(d)))
+            entries = CO.dict_canonical(cc(d))
             return F.aggregate(
                 entries,
                 cc(e0),
@@ -244,13 +244,13 @@ def compile_column(e: A.Expr, env: dict, w: int = 64) -> Column:
         case A.EBagOf(l):
             return F.array_sort(cc(l))
         case A.ESetOf(l):
-            return F.array_sort(F.array_distinct(cc(l)))
+            return CO.list_to_set(cc(l))
     raise CompileError(f"cannot compile to column: {e!r}")
 
 
 def _retag_array(arr: Column, tag: str) -> Column:
     if tag == "LikeSet":
-        return F.array_sort(F.array_distinct(arr))
+        return CO.list_to_set(arr)
     if tag == "LikeBag":
         return F.array_sort(arr)
     return arr
@@ -404,7 +404,7 @@ def _binop_column(op: str, c1: Column, c2: Column, w: int) -> Column:
         case "OBagInsert":
             return CO.bag_insert(c2, c1)
         case "OSetInsert":
-            return F.array_sort(F.array_distinct(F.array_append(c2, c1)))
+            return CO.set_insert(c2, c1)
         case "OLookup":
             return CO.dict_lookup(c1, c2)
         case "ODelete":

@@ -13,8 +13,6 @@ bucket key skip the shuffle).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 from fiat2_spark.catalog import TPCH_TABLES, Catalog
@@ -92,93 +90,6 @@ def write_sorted(
         .option("parquet.block.size", rowgroup_bytes)
         .parquet(path)
     )
-
-
-def write_zorder(
-    df: DataFrame,
-    path: str,
-    cols: tuple[str, str],
-    bits_per_dim: int = 8,
-    n_ranges: int = 16,
-    rowgroup_bytes: int = 32768,
-    mode: str = "overwrite",
-) -> None:
-    """Z-ORDER clustering: multi-dimensional zone maps from ONE sorted
-    layout. Each dimension is rank-quantized onto 2^bits_per_dim
-    buckets via approxQuantile cut points (rank, not min-max — skewed
-    value distributions would otherwise collapse into one bucket), the
-    bucket indices are bit-interleaved into a Morton code, and rows are
-    range-partitioned + sorted on it. Every row group then covers a
-    small HYPER-RECTANGLE of the value space, so range predicates on
-    EITHER column prune row groups from the same layout — what
-    single-column `write_sorted` cannot give the second column. The
-    cut-point collect is 2×2^bits_per_dim scalars; everything else is
-    pure expressions. Verified by scan metrics in test_plans.py."""
-    from pyspark.sql import functions as F
-
-    z = None
-    for col in cols:
-        b = 1 << bits_per_dim
-        probs = [i / b for i in range(1, b)]
-        cuts = sorted(set(df.approxQuantile(col, probs, 0.01)))
-        if cuts:
-            cut_arr = F.array(*[F.lit(c) for c in cuts])
-            idx = F.size(F.filter(cut_arr, lambda c: c < F.col(col).cast("double")))
-        else:
-            # constant column: every quantile collapses to one value and
-            # F.array() would be array<void> (lambda comparison fails
-            # analysis) — the dimension carries no information, bucket 0
-            idx = F.lit(0)
-        dim_off = 0 if z is None else 1
-        bits = None
-        for i in range(bits_per_dim):
-            bit = F.shiftright(idx, i).bitwiseAND(F.lit(1)) * F.lit(
-                1 << (2 * i + dim_off)
-            )
-            bits = bit if bits is None else bits + bit
-        z = bits if z is None else z + bits
-    (
-        df.withColumn("__z", z)
-        .repartitionByRange(n_ranges, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode(mode)
-        .option("parquet.block.size", rowgroup_bytes)
-        .parquet(path)
-    )
-
-
-def compact_files(
-    spark: SparkSession,
-    path: str,
-    target_files: int,
-    out_path: str | None = None,
-) -> int:
-    """Small-files compaction — the operational tail of every streaming
-    or highly-parallel write: thousands of KB-sized parquet files make
-    later scans metadata-bound (one footer read + task per file). Read
-    the directory, coalesce to ``target_files`` (narrow — no shuffle;
-    partitions merge on the same executors), and rewrite. Returns the
-    number of data files written. When ``out_path`` is None the swap is
-    two renames (original aside, compacted in) so the dataset path is
-    never missing: a crash between them leaves the data at
-    ``path + ".old"`` rather than gone. (True atomicity needs a table
-    format's metadata commit — Iceberg/Delta — not a filesystem move.)"""
-    import shutil
-    import tempfile
-
-    df = spark.read.parquet(path)
-    dest = out_path or tempfile.mkdtemp(prefix="compact_", dir=os.path.dirname(path))
-    df.coalesce(target_files).write.mode("overwrite").parquet(dest)
-    if out_path is None:
-        old = path.rstrip("/") + ".old"
-        if os.path.exists(old):
-            shutil.rmtree(old)
-        os.rename(path, old)
-        os.rename(dest, path)
-        shutil.rmtree(old)
-        dest = path
-    return len([f for f in os.listdir(dest) if f.endswith(".parquet")])
 
 
 def register_views(spark: SparkSession, sf_dir: str, tables=TPCH_TABLES) -> None:

@@ -25,7 +25,7 @@ stays in parquet; only aggregates are stateful.
 
 from __future__ import annotations
 
-from typing import Any, Callable
+from typing import Any
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -214,38 +214,6 @@ class JoinAggView:
         return self.group.read()
 
 
-def join_agg_foreach_batch(stream: DataFrame, view: JoinAggView, side: str = "right"):
-    """Drive a ``JoinAggView`` from a real Structured Streaming source:
-    every micro-batch flows through the same delta-join insert path the
-    batch loop uses (``insert_left``/``insert_right``), so the
-    maintained aggregate is updated with O(|Δ| ⋈ seen) work per
-    trigger. ``foreachBatch`` is Structured Streaming's documented
-    escape hatch for custom incremental maintenance the built-in
-    stateful operators can't express — here, a two-sided join view
-    whose seen sides live outside the streaming state store.
-
-    Returns the started StreamingQuery; callers own ``stop()``. The
-    batch DataFrame handed to foreachBatch is only valid inside the
-    callback, but ``insert_*`` localCheckpoints the union immediately,
-    snapshotting the delta before the callback returns."""
-    insert = view.insert_right if side == "right" else view.insert_left
-    applied: set = set()
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        # foreachBatch may redeliver the last batch after a restart from
-        # a checkpoint; the insert path is NOT idempotent (it folds the
-        # delta into the aggregate), so guard on the batch id — the
-        # standard exactly-once recipe for non-idempotent foreachBatch
-        # sinks. (The guard is driver-resident; a production deployment
-        # persists the last applied id next to the view state.)
-        if batch_id in applied:
-            return
-        applied.add(batch_id)
-        insert(batch_df)
-
-    return stream.writeStream.outputMode("append").foreachBatch(_apply).start()
-
-
 class MaterializedView:
     """The store record {base, aux indexes} of IndexTransf.v:797-803:
     reads hit maintained aggregates; inserts update base + every index.
@@ -275,347 +243,6 @@ class MaterializedView:
         """The rewritten read path: aggregate queries answered from the
         maintained structure, not the base (sum_to_agg_lookup_head)."""
         return self.indexes[name].read()
-
-
-class DedupCorpus:
-    """Incremental corpus-growth dedup: an accumulated fingerprint set
-    plus an ``ingest`` path that keeps only documents whose fingerprint
-    is novel — the streaming-ingestion form of the
-    ``dedup_incremental_batch`` query (new crawl snapshots arrive
-    continuously; only the delta is ever deduped, the corpus is never
-    re-scanned end-to-end).
-
-    Per batch: collapse the batch per fingerprint (min id wins),
-    anti-join the seen set, append survivors to the seen set. The seen
-    state is a DataFrame of fingerprints — at production scale a
-    key-bucketed parquet table so both the anti-join and the append
-    co-locate without a shuffle; here a localCheckpointed lineage, the
-    repo's standard driver-resident-state discipline."""
-
-    def __init__(self, base: DataFrame, fp_col: str, id_col: str):
-        self.fp_col, self.id_col = fp_col, id_col
-        self.seen, self._blocks = local_checkpoint_tracked(
-            base.select(fp_col).distinct()
-        )
-        self._out_blocks: frozenset = frozenset()
-
-    def ingest(self, batch: DataFrame) -> DataFrame:
-        """Returns the batch's novel documents (one per new fingerprint,
-        min id); updates the seen set, retiring the superseded seen
-        snapshot's blocks AND the previous batch's output blocks — the
-        returned DataFrame is valid until the next ``ingest`` (the
-        index discipline: a long-lived stream never needs the global
-        checkpoint sweep, which would free live state). ``close()``
-        frees the final state + last output."""
-        collapsed = batch.groupBy(self.fp_col).agg(
-            F.min(self.id_col).alias(self.id_col)
-        )
-        novel, out_blocks = local_checkpoint_tracked(
-            collapsed.join(self.seen, self.fp_col, "left_anti")
-        )
-        prev = self._blocks | self._out_blocks
-        self.seen, self._blocks = local_checkpoint_tracked(
-            self.seen.unionByName(novel.select(self.fp_col))
-        )
-        self._out_blocks = out_blocks
-        release_blocks(self.seen.sparkSession, prev)
-        return novel
-
-    def close(self) -> int:
-        """Free the live state and last output blocks; the corpus is
-        unusable afterwards. Returns the number of blocks freed."""
-        n = release_blocks(self.seen.sparkSession, self._blocks | self._out_blocks)
-        self._blocks = self._out_blocks = frozenset()
-        return n
-
-
-def dedup_corpus_foreach_batch(stream: DataFrame, corpus: DedupCorpus, sink: list):
-    """Drive ``DedupCorpus`` from a Structured Streaming source: each
-    micro-batch is deduped against the accumulated corpus inside
-    ``foreachBatch`` and the novel rows are appended to ``sink`` (a
-    driver list here; a parquet append at scale). Returns the started
-    StreamingQuery; callers own ``stop()``."""
-
-    def _apply(batch_df: DataFrame, _batch_id: int) -> None:
-        # no batch-id guard needed: ingest is naturally idempotent — a
-        # redelivered batch's fingerprints are already in the seen set,
-        # so it contributes zero novel rows
-        sink.extend(corpus.ingest(batch_df).collect())
-
-    return stream.writeStream.outputMode("append").foreachBatch(_apply).start()
-
-
-class SpanDedupCorpus:
-    """Incremental SPAN-level corpus-growth dedup — the streaming form
-    of the `span_dedup` query (C4-style duplicated-span removal, Raffel
-    et al. 2020 §2.2) for a corpus ingested in batches: the state is
-    the accumulated set of seen segment digests; each batch keeps, per
-    document, only segments that are corpus-novel AND the batch's own
-    first occurrence.
-
-    Per batch: segment + digest the documents (text never enters the
-    state), intra-batch keeper = min(doc, seg_idx) per digest,
-    anti-join the seen set, fold survivors into the seen set. With
-    batches arriving in doc-id order the accumulated kept-segment
-    ownership equals the one-shot `span_dedup_stats` over the whole
-    corpus (tested). State is digest-only — at production scale a
-    bucketed parquet table keyed by digest so anti-join and append
-    co-locate shuffle-free."""
-
-    def __init__(self, spark, seg_len: int = 8):
-        self.seg_len = seg_len
-        self.seen, self._blocks = local_checkpoint_tracked(
-            spark.createDataFrame([], "seg_key string")
-        )
-        self._out_blocks: frozenset = frozenset()
-
-    def _segments(self, docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-        from fiat2_spark.operators.dedup import _segmented, segment_digests
-
-        return segment_digests(_segmented(docs, id_col, text_col, self.seg_len))
-
-    def ingest(self, docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-        """Returns per-doc kept stats (doc, n_kept, n_kept_tokens) for
-        this batch's corpus-novel first-occurrence segments; updates the
-        seen set, retiring the superseded snapshot AND the previous
-        batch's output blocks (results valid until the next ingest —
-        no global sweep needed while the corpus is live). Documents
-        whose segments are all already seen get no row."""
-        segs = self._segments(docs, id_col, text_col)
-        keepers = segs.groupBy("seg_key").agg(
-            F.min(F.struct("doc", "seg_idx", "seg_tok")).alias("k")
-        )
-        novel, out_blocks = local_checkpoint_tracked(
-            keepers.join(self.seen, "seg_key", "left_anti")
-        )
-        prev = self._blocks | self._out_blocks
-        self.seen, self._blocks = local_checkpoint_tracked(
-            self.seen.unionByName(novel.select("seg_key"))
-        )
-        self._out_blocks = out_blocks
-        release_blocks(self.seen.sparkSession, prev)
-        return novel.groupBy(F.col("k.doc").alias("doc")).agg(
-            F.count(F.lit(1)).cast("long").alias("n_kept"),
-            F.sum("k.seg_tok").cast("long").alias("n_kept_tokens"),
-        )
-
-    def close(self) -> int:
-        """Free the live state and last output blocks."""
-        n = release_blocks(self.seen.sparkSession, self._blocks | self._out_blocks)
-        self._blocks = self._out_blocks = frozenset()
-        return n
-
-
-class SubstringDedupCorpus:
-    """Incremental ARBITRARY-OFFSET substring dedup — the streaming
-    twin of `substring_dedup` (operators/dedup.py::substring_dedup_stats,
-    Lee et al. 2022 suffix-array dedup via k-gram anchors): the state is
-    the accumulated set of seen k-gram digests; each batch marks every
-    window whose digest is corpus-seen OR not the batch's own first
-    occurrence, merges the marked intervals per doc, and reports
-    per-doc removal stats. With batches arriving in doc-id order the
-    accumulated stats equal the one-shot `substring_dedup_stats` over
-    the whole corpus (agreement-tested). State is digest-only — at
-    production scale a digest-bucketed parquet table, like the other
-    dedup corpora; here localCheckpoint with per-ingest retirement of
-    the superseded snapshot."""
-
-    def __init__(self, spark, k: int = 8):
-        self.k = k
-        self.seen, self._blocks = local_checkpoint_tracked(
-            spark.createDataFrame([], "gram string")
-        )
-        self._out_blocks: frozenset = frozenset()
-
-    def _grams(self, docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-        from fiat2_spark.operators.text import tokens as toks_of
-
-        k = self.k
-        base = docs.select(
-            F.col(id_col).alias("doc"), toks_of(F.col(text_col)).alias("toks")
-        )
-        return base.filter(F.size("toks") >= k).select(
-            "doc",
-            F.posexplode(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("toks") - k + 1),
-                    lambda i: F.md5(F.concat_ws(" ", F.slice("toks", i, k))),
-                )
-            ).alias("pos", "gram"),
-        )
-
-    def ingest(self, docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-        """Per-doc (doc, n_spans, n_removed_tokens, n_dup_grams) for
-        this batch's marked windows; folds the batch's digests into the
-        seen set (novel only), retiring the superseded snapshot. Docs
-        with nothing marked get no row."""
-        from pyspark.sql import Window
-
-        k = self.k
-        grams = self._grams(docs, id_col, text_col)
-        firsts = grams.groupBy("gram").agg(F.min(F.struct("doc", "pos")).alias("f"))
-        in_batch_dup = (
-            grams.join(firsts, "gram")
-            .filter(
-                (F.col("doc") != F.col("f.doc")) | (F.col("pos") != F.col("f.pos"))
-            )
-            .select("doc", "pos")
-        )
-        corpus_dup = grams.join(self.seen, "gram", "left_semi").select("doc", "pos")
-        dups = corpus_dup.unionByName(in_batch_dup).distinct()
-        wdoc = Window.partitionBy("doc").orderBy("pos")
-        run_end = F.max(F.col("pos") + k).over(
-            wdoc.rowsBetween(Window.unboundedPreceding, -1)
-        )
-        marked = dups.withColumn(
-            "new_isl",
-            F.when(run_end.isNull() | (F.col("pos") > run_end), 1).otherwise(0),
-        ).withColumn(
-            "island",
-            F.sum("new_isl").over(wdoc.rowsBetween(Window.unboundedPreceding, 0)),
-        )
-        out = (
-            marked.groupBy("doc", "island")
-            .agg(
-                F.min("pos").alias("s"),
-                F.max(F.col("pos") + k).alias("e"),
-                F.count(F.lit(1)).alias("n_g"),
-            )
-            .groupBy("doc")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_spans"),
-                F.sum(F.col("e") - F.col("s")).cast("long").alias("n_removed_tokens"),
-                F.sum("n_g").cast("long").alias("n_dup_grams"),
-            )
-        )
-        out, out_blocks = local_checkpoint_tracked(out)
-        prev = self._blocks | self._out_blocks
-        self.seen, self._blocks = local_checkpoint_tracked(
-            self.seen.unionByName(grams.select("gram").distinct()).distinct()
-        )
-        self._out_blocks = out_blocks
-        release_blocks(self.seen.sparkSession, prev)
-        return out
-
-    def close(self) -> int:
-        """Free the live state and last output blocks."""
-        n = release_blocks(self.seen.sparkSession, self._blocks | self._out_blocks)
-        self._blocks = self._out_blocks = frozenset()
-        return n
-
-
-def substring_dedup_corpus_foreach_batch(
-    stream: DataFrame, corpus: "SubstringDedupCorpus", sink: list,
-    id_col: str = "doc_id", text_col: str = "text",
-):
-    """Drive ``SubstringDedupCorpus`` from a Structured Streaming
-    source. Naturally idempotent — a redelivered batch's digests are
-    already in the seen set, so every window is corpus-marked and the
-    per-doc stats repeat identically; the sink dedupes by doc."""
-
-    def _apply(batch_df: DataFrame, _batch_id: int) -> None:
-        sink.extend(corpus.ingest(batch_df, id_col, text_col).collect())
-
-    return stream.writeStream.outputMode("append").foreachBatch(_apply).start()
-
-
-def span_dedup_corpus_foreach_batch(
-    stream: DataFrame, corpus: SpanDedupCorpus, sink: list,
-    id_col: str = "doc_id", text_col: str = "text",
-):
-    """Drive ``SpanDedupCorpus`` from a Structured Streaming source:
-    each micro-batch's per-doc kept-segment stats append to ``sink``.
-    Naturally idempotent — a redelivered batch's digests are already in
-    the seen set and contribute nothing."""
-
-    def _apply(batch_df: DataFrame, _batch_id: int) -> None:
-        sink.extend(corpus.ingest(batch_df, id_col, text_col).collect())
-
-    return stream.writeStream.outputMode("append").foreachBatch(_apply).start()
-
-
-class MomentsView:
-    """Maintained per-key first/second moments — the incremental state
-    behind streaming z-score anomaly detection (the batch form is the
-    `anomaly_zscore` query): per key, (n, Σx, Σx²) accumulate in
-    DECIMAL (exact, associative, mergeable — the same partial-agg
-    property every SumAgg index in this repo leans on), and each new
-    batch is scored against the stats of the corpus SEEN SO FAR, then
-    folded in. At production scale the state is |keys| rows — always
-    broadcastable back onto the stream."""
-
-    def __init__(self, spark, key_col: str, val_col: str):
-        self.key_col, self.val_col = key_col, val_col
-        self.state, self._blocks = local_checkpoint_tracked(
-            spark.createDataFrame(
-                [], f"{key_col} string, n long, s decimal(28,2), s2 decimal(28,4)"
-            )
-        )
-
-    def _moments(self, batch: DataFrame) -> DataFrame:
-        v = F.col(self.val_col).cast("decimal(18,2)")
-        return batch.groupBy(self.key_col).agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum(v).cast("decimal(28,2)").alias("s"),
-            F.sum(v * v).cast("decimal(28,4)").alias("s2"),
-        )
-
-    def score(self, batch: DataFrame, threshold: float = 3.0) -> DataFrame:
-        """Flag |z| > threshold rows of ``batch`` against the CURRENT
-        state (keys never seen score nothing — no stats, no flag)."""
-        st = self.state.select(
-            self.key_col,
-            (F.col("s").cast("double") / F.col("n")).alias("mu"),
-            (F.col("s2").cast("double") / F.col("n")).alias("m2"),
-        )
-        z = (F.col(self.val_col) - F.col("mu")) / F.sqrt(
-            F.greatest(F.col("m2") - F.col("mu") * F.col("mu"), F.lit(1e-12))
-        )
-        return (
-            batch.join(F.broadcast(st), self.key_col)
-            .filter(F.abs(z) > threshold)
-            .select(self.key_col, self.val_col, F.round(z, 6).alias("z"))
-        )
-
-    def ingest(self, batch: DataFrame) -> None:
-        """Fold the batch's moments into the state (decimal adds —
-        order-insensitive, so batch splits can't change the state)."""
-        merged = (
-            self.state.unionByName(self._moments(batch))
-            .groupBy(self.key_col)
-            .agg(
-                F.sum("n").cast("long").alias("n"),
-                F.sum("s").cast("decimal(28,2)").alias("s"),
-                F.sum("s2").cast("decimal(28,4)").alias("s2"),
-            )
-        )
-        # NOTE: DataFrame.unpersist() would be a silent no-op on the
-        # retired checkpoint blocks (measured on this build) — targeted
-        # release by block id is the only reclamation that works
-        prev = self._blocks
-        self.state, self._blocks = local_checkpoint_tracked(merged)
-        release_blocks(self.state.sparkSession, prev)
-
-
-def moments_foreach_batch(stream: DataFrame, view: "MomentsView", sink: list,
-                          threshold: float = 3.0):
-    """Drive ``MomentsView`` from a Structured Streaming source: each
-    micro-batch is scored against the stats accumulated from all PRIOR
-    batches, then folded in — the prequential (test-then-train) order.
-    Unlike the dedup corpora (whose ingest is naturally idempotent), a
-    re-folded batch WOULD double its moments, so redelivered batch ids
-    are skipped explicitly (the same guard as the join-agg driver)."""
-
-    seen: set = set()
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id in seen:
-            return
-        seen.add(batch_id)
-        sink.extend(view.score(batch_df, threshold).collect())
-        view.ingest(batch_df)
-
-    return stream.writeStream.outputMode("append").foreachBatch(_apply).start()
 
 
 class DistDictIndex:
@@ -684,659 +311,3 @@ class DistDictIndex:
         pend = self._pending_df()
         return self.base.unionByName(pend) if pend is not None else self.base
 
-
-class SemanticDedupCorpus:
-    """Incremental SemDeDup — the streaming twin of
-    `operators.dedup.semantic_dedup` (Abbas et al. 2023) for a corpus
-    ingested in batches: centroids are FIT ONCE (pass in
-    `dedup.lloyd_centroids` over a reference corpus) and FROZEN — the
-    streaming regime, where re-clustering per batch would reshuffle
-    every past assignment. Each batch: quantize, assign to the nearest
-    frozen centroid (one broadcast distance pass), mark each new vector
-    duplicate iff some already-ingested OR earlier-in-batch (smaller
-    id) same-cluster member is cosine-near, then fold the batch into
-    the membership state.
-
-    With batches arriving in id order and the same centroids, the
-    accumulated (id, cid, is_dup) rows equal the one-shot
-    `semantic_dedup` over the whole corpus (agreement-tested) — the
-    witness set for "some smaller-id member" is exactly the state plus
-    the batch's own earlier rows.
-
-    State = the (vid, cid, qv, n2) membership, localCheckpointed with
-    per-ingest retirement of the superseded snapshot AND the previous
-    batch's output blocks (the corpus-class discipline: a live index
-    never needs the global sweep). At production scale the state is a
-    cid-bucketed parquet table so the per-batch pair join co-locates."""
-
-    def __init__(
-        self, spark, centroids: DataFrame, q: int = 1_000_000,
-        t2_num: int = 4, t2_den: int = 25, pair_salt: int = 16,
-    ):
-        self.q, self.t2_num, self.t2_den = q, t2_num, t2_den
-        self.pair_salt = pair_salt
-        self.cent, self._cent_blocks = local_checkpoint_tracked(centroids)
-        self.members, self._blocks = local_checkpoint_tracked(
-            spark.createDataFrame([], "vid long, cid long, qv array<bigint>, n2 long")
-        )
-        self._out_blocks: frozenset = frozenset()
-
-    def ingest(self, batch: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-        """Returns this batch's (vid, cid, is_dup); updates the
-        membership. Results valid until the next ingest."""
-        from fiat2_spark.operators.dedup import (
-            lloyd_assign, quantize_embeddings, semantic_dedup_members,
-        )
-
-        qe = quantize_embeddings(batch, id_col, vec_col, self.q)
-        af = lloyd_assign(qe, self.cent)
-        new_members, nm_blocks = local_checkpoint_tracked(
-            qe.join(af, "vid").select("vid", "cid", "qv", "n2")
-        )
-        out, out_blocks = local_checkpoint_tracked(
-            semantic_dedup_members(
-                self.members.unionByName(new_members),
-                new_members,
-                self.t2_num,
-                self.t2_den,
-                self.pair_salt,
-            )
-        )
-        prev = self._blocks | self._out_blocks
-        self.members, self._blocks = local_checkpoint_tracked(
-            self.members.unionByName(new_members)
-        )
-        self._out_blocks = out_blocks
-        release_blocks(self.members.sparkSession, prev | nm_blocks)
-        return out
-
-    def cluster_sizes(self) -> DataFrame:
-        """(cid, n_members) over the accumulated state — the monitor a
-        long-lived corpus watches to decide WHEN to `recluster`: batch
-        SemDeDup's pair cost is Σ|cluster|², so a cluster growing past
-        its budget is the signal the frozen-k regime has expired."""
-        return self.members.groupBy("cid").agg(
-            F.count(F.lit(1)).cast("long").alias("n_members")
-        )
-
-    def recluster(self, k: int, iters: int = 2) -> None:
-        """Re-fit the frozen centroid relation over the ACCUMULATED
-        membership and remap every member's cid — the k-growth path:
-        batch SemDeDup's 100 TB story is k ∝ n (Abbas et al. 2023 use
-        k ~ √n·const), but a long-lived corpus whose n grows 100×
-        under construction-time centroids slides into the quadratic
-        per-cluster pair regime silently. Call with k scaled to the
-        CURRENT corpus size; afterwards the state's (vid, cid)
-        clustering equals the one-shot `semantic_dedup`'s over the
-        accumulated corpus at the same (k, iters) — agreement-tested —
-        so subsequent ingests prune within refreshed, bounded clusters.
-        Already-emitted is_dup decisions are ingest-time facts and are
-        NOT revised (SemDeDup's keep-first rule is arrival-order-
-        dependent by construction). Cost: one Lloyd fit + one
-        assignment pass over the state — the same plan family as a
-        batch of equal size; superseded snapshot and centroid blocks
-        are retired."""
-        from fiat2_spark.operators.dedup import lloyd_assign, lloyd_centroids
-
-        qe = self.members.select("vid", "qv", "n2")
-        # lloyd_centroids' per-round truncation blocks (r12) ride the
-        # track list — a live index must release them itself (the
-        # global sweep would free this index's own state)
-        scratch: list = []
-        cent, cent_blocks = local_checkpoint_tracked(
-            lloyd_centroids(qe, k, iters, track=scratch)
-        )
-        release_blocks(self.members.sparkSession, frozenset(scratch))
-        af = lloyd_assign(qe, cent)
-        members, blocks = local_checkpoint_tracked(
-            qe.join(af, "vid").select("vid", "cid", "qv", "n2")
-        )
-        old = self._blocks | self._cent_blocks
-        self.cent, self._cent_blocks = cent, cent_blocks
-        self.members, self._blocks = members, blocks
-        release_blocks(self.members.sparkSession, old)
-
-    def close(self) -> int:
-        """Free centroid, state, and last-output blocks."""
-        n = release_blocks(
-            self.members.sparkSession,
-            self._blocks | self._out_blocks | self._cent_blocks,
-        )
-        self._blocks = self._out_blocks = self._cent_blocks = frozenset()
-        return n
-
-
-class DomainCapCorpus:
-    """Incremental per-domain admission control — the streaming twin of
-    `operators.web.domain_filter` for a corpus arriving in batches (a
-    crawl frontier): the blocklist is frozen at construction (curated,
-    model-sized, broadcast) and the state is the per-host ADMITTED
-    count. Each batch: extract hosts, drop blocklisted hosts with a
-    broadcast anti-join (zero batch shuffle for the drop), rank the
-    batch's rows per host by ascending id, admit while the host's
-    running total stays within the cap, fold admitted counts into the
-    state.
-
-    With id-ordered batches the accumulated admitted set equals the
-    one-shot `domain_filter` over the concatenated corpus
-    (agreement-tested): the one-shot keeps each host's ``cap`` smallest
-    ids, which id-ordered arrival admits in arrival order.
-
-    State = (host, n_admitted) — |hosts| rows, never text (the
-    corpus-class digest-only discipline); localCheckpointed with
-    per-ingest retirement of the superseded snapshot and the previous
-    batch's output blocks. At 100 TB the state is a host-bucketed
-    table and the per-batch window keys on host — the same exchange
-    family as the batch operator."""
-
-    def __init__(self, spark, blocked: DataFrame, cap: int):
-        self.cap = cap
-        self.blocked, self._bl_blocks = local_checkpoint_tracked(
-            blocked.select(F.col(blocked.columns[0]).alias("host"))
-        )
-        self.counts, self._blocks = local_checkpoint_tracked(
-            spark.createDataFrame([], "host string, n_admitted long")
-        )
-        self._out_blocks: frozenset = frozenset()
-
-    def ingest(self, batch: DataFrame, id_col: str, url_col: str) -> DataFrame:
-        """Returns this batch's admitted (doc, host); updates the
-        per-host counts. Results valid until the next ingest."""
-        from pyspark.sql import Window as W
-
-        from fiat2_spark.operators.web import url_host
-
-        hosts = batch.select(
-            F.col(id_col).alias("doc"), url_host(F.col(url_col)).alias("host")
-        )
-        ok = hosts.join(F.broadcast(self.blocked), "host", "left_anti")
-        rn = F.row_number().over(W.partitionBy("host").orderBy("doc"))
-        admitted = (
-            ok.join(self.counts, "host", "left")
-            .withColumn("rn", rn)
-            .filter(
-                F.coalesce("n_admitted", F.lit(0)) + F.col("rn") <= F.lit(self.cap)
-            )
-            .select("doc", "host")
-        )
-        out, out_blocks = local_checkpoint_tracked(admitted)
-        merged = (
-            self.counts.withColumnRenamed("n_admitted", "n_old")
-            .join(
-                out.groupBy("host").agg(F.count(F.lit(1)).alias("n_new")),
-                "host",
-                "full_outer",
-            )
-            .select(
-                "host",
-                (F.coalesce("n_old", F.lit(0)) + F.coalesce("n_new", F.lit(0)))
-                .cast("long")
-                .alias("n_admitted"),
-            )
-        )
-        prev = self._blocks | self._out_blocks
-        self.counts, self._blocks = local_checkpoint_tracked(merged)
-        self._out_blocks = out_blocks
-        release_blocks(self.counts.sparkSession, prev)
-        return out
-
-    def close(self) -> int:
-        """Free blocklist, state, and last-output blocks."""
-        n = release_blocks(
-            self.counts.sparkSession,
-            self._blocks | self._out_blocks | self._bl_blocks,
-        )
-        self._blocks = self._out_blocks = self._bl_blocks = frozenset()
-        return n
-
-
-class NBClassifierCorpus:
-    """Incrementally trained fastText/CCNet quality classifier — the
-    streaming twin of `operators.text.nb_classifier_scores` for
-    labeled training data arriving in batches (human review queues,
-    weak-label refreshes): the state is the model's ADDITIVE
-    sufficient statistics — per-bucket positive/negative feature
-    counts (≤B rows) plus the 1-row doc/feature totals — and each
-    ingest folds a labeled batch in with one featurize pass + a
-    model-sized merge. ``score()`` classifies any corpus with the
-    CURRENT accumulated model via the same `nb_score_from_counts` the
-    one-shot classifier uses, so after ingesting the same training
-    rows in ANY batch split, scores equal the one-shot's bitwise
-    (agreement-tested) — the equality is structural: naive-Bayes
-    counts of a union are the sums of the parts' counts, and weights
-    are a pure function of the counts.
-
-    State is MODEL-sized (never corpus-sized — the corpus-class
-    digest-only discipline), localCheckpointed with per-ingest
-    retirement of the superseded snapshot. At 100 TB of accumulated
-    training data the state is still ≤B+1 rows; only ingest's
-    featurize pass scales with the batch."""
-
-    def __init__(self, spark, buckets: int = 256, quant: int = 10_000,
-                 tokenizer=None):
-        from fiat2_spark.operators.text import tokens
-
-        self.buckets, self.quant = buckets, quant
-        # the fit/score pairing contract (tokens_unicode docstring):
-        # one tokenizer per model's life, used by every fold AND score
-        self.tokenizer = tokenizer or tokens
-        self.counts, self._blocks = local_checkpoint_tracked(
-            spark.createDataFrame([], "bucket long, n_p long, n_n long")
-        )
-        self.totals, self._tot_blocks = local_checkpoint_tracked(
-            spark.createDataFrame(
-                [(0, 0, 0, 0)], "tot_p long, tot_n long, docs_p long, docs_n long"
-            )
-        )
-
-    def _fold(self, batch, id_col: str, text_col: str, label_col: str,
-              sign: int) -> None:
-        """Fold a labeled batch's sufficient statistics into the state,
-        added (``sign=+1``, ingest) or subtracted (``sign=-1``,
-        retract). The batch featurize pass's checkpoint blocks are
-        TRACKED and retired together with the superseded state snapshot
-        once the merged counts/totals have materialized — the global
-        sweep is unsafe while this index is live, so nothing may leak
-        untracked blocks (ADVICE r9). On retract, bucket rows whose
-        counts return to (0, 0) are DROPPED: an unobserved bucket must
-        stay absent from the weight table (the inner score probe), so
-        ingest(A)+ingest(B)+retract(B) leaves state identical to
-        ingest(A)."""
-        from fiat2_spark.operators.text import nb_counts
-
-        scratch: list = []
-        bc, bf, bd = nb_counts(
-            batch, id_col, text_col, label_col, self.buckets, track=scratch,
-            tokenizer=self.tokenizer,
-        )
-        s = F.lit(sign)
-        merged = (
-            self.counts.withColumnRenamed("n_p", "p0").withColumnRenamed("n_n", "n0")
-            .join(bc, "bucket", "full_outer")
-            .select(
-                "bucket",
-                (F.coalesce("p0", F.lit(0)) + s * F.coalesce("n_p", F.lit(0)))
-                .cast("long").alias("n_p"),
-                (F.coalesce("n0", F.lit(0)) + s * F.coalesce("n_n", F.lit(0)))
-                .cast("long").alias("n_n"),
-            )
-            .filter((F.col("n_p") != 0) | (F.col("n_n") != 0))
-        )
-        tot = self.totals.crossJoin(
-            bf.withColumnsRenamed({"tot_p": "tp", "tot_n": "tn"})
-        ).crossJoin(
-            bd.withColumnsRenamed({"docs_p": "dp", "docs_n": "dn"})
-        ).select(
-            (F.col("tot_p") + s * F.col("tp")).cast("long").alias("tot_p"),
-            (F.col("tot_n") + s * F.col("tn")).cast("long").alias("tot_n"),
-            (F.col("docs_p") + s * F.col("dp")).cast("long").alias("docs_p"),
-            (F.col("docs_n") + s * F.col("dn")).cast("long").alias("docs_n"),
-        )
-        prev = self._blocks | self._tot_blocks | frozenset(scratch)
-        self.counts, self._blocks = local_checkpoint_tracked(merged)
-        self.totals, self._tot_blocks = local_checkpoint_tracked(tot)
-        release_blocks(self.counts.sparkSession, prev)
-
-    def ingest(self, batch, id_col: str, text_col: str, label_col: str) -> None:
-        """Fold a labeled batch into the model state."""
-        self._fold(batch, id_col, text_col, label_col, +1)
-
-    def retract(self, batch, id_col: str, text_col: str, label_col: str) -> None:
-        """Remove a previously-ingested labeled batch from the model —
-        right-to-be-forgotten / corpus-retraction unlearning. Because
-        the state is the model's ADDITIVE sufficient statistics,
-        removal is exact subtraction: after ingest(A), ingest(B),
-        retract(B) the state (and therefore every score) is identical
-        to having ingested A alone (agreement-tested). The caller's
-        contract is that the batch was in fact ingested; retracting
-        unseen data would drive counts negative."""
-        self._fold(batch, id_col, text_col, label_col, -1)
-
-    def score(self, batch, id_col: str, text_col: str):
-        """(id, logit_q, pred) under the current accumulated model.
-        With no training ingested yet, every doc scores the zero bias
-        (pred False) — the weight table is empty by construction. The
-        checkpointed state splits into trivial ftot/dtot broadcast
-        subtrees (block reads, no recomputation). The score-side
-        featurize runs UN-checkpointed (it appears exactly once in the
-        returned plan), so scoring leaves no resident blocks behind —
-        per-call block residency is zero for both ingest and score
-        (ADVICE r9; asserted in test_streaming)."""
-        from fiat2_spark.operators.text import nb_score_from_counts
-
-        return nb_score_from_counts(
-            batch, self.counts,
-            self.totals.select("tot_p", "tot_n"),
-            self.totals.select("docs_p", "docs_n"),
-            id_col, text_col, self.buckets, self.quant, checkpoint=False,
-            tokenizer=self.tokenizer,
-        )
-
-    def close(self) -> int:
-        """Free the model-state blocks."""
-        n = release_blocks(
-            self.counts.sparkSession, self._blocks | self._tot_blocks
-        )
-        self._blocks = self._tot_blocks = frozenset()
-        return n
-
-
-class BpeVocabCorpus:
-    """Incrementally maintained BPE tokenizer-training state — the
-    streaming twin of `operators.text.bpe_learn` for a corpus arriving
-    in batches: BPE's ONLY corpus-derived input is the word-frequency
-    table, and word counts are ADDITIVE, so the state is a vocab-sized
-    (word, freq) relation folded per batch with one tokenize+explode
-    pass + a model-sized merge. ``learn(n)`` runs the standard merge
-    loop on the CURRENT accumulated vocabulary — refreshing a tokenizer
-    as the corpus grows without ever re-reading it — and after
-    ingesting the same rows in ANY batch split the merge list equals
-    the one-shot `bpe_learn`'s bitwise (agreement-tested): counts of a
-    union are the sums of the parts' counts, and the merge argmax is a
-    pure function of the counts. ``retract(batch)`` is exact unlearning
-    by subtraction (words whose count returns to 0 are dropped, so they
-    can never re-enter a pair table), same contract as
-    `NBClassifierCorpus.retract`.
-
-    Block discipline: state snapshots are tracked and retired per fold;
-    ``learn``'s loop checkpoints are tracked via
-    `bpe_learn_from_words(track=...)` and released once the merge list
-    (driver-local) is extracted — zero residual blocks per call, the
-    live-index contract under which the global sweep is unsafe.
-
-    At 100 TB the state is the corpus vocabulary (~1e8 rows under
-    Heaps' law — still model-sized, shuffled only vocab-wide); only
-    ingest's tokenize pass scales with the batch."""
-
-    def __init__(self, spark, tokenizer=None):
-        from fiat2_spark.operators.text import tokens
-
-        self.tokenizer = tokenizer or tokens
-        self.words, self._blocks = local_checkpoint_tracked(
-            spark.createDataFrame([], "word string, freq long")
-        )
-
-    def _fold(self, batch, text_col: str, sign: int) -> None:
-        bc = (
-            batch.select(F.explode(self.tokenizer(F.col(text_col))).alias("word"))
-            .groupBy("word")
-            .agg(F.count(F.lit(1)).alias("bf"))
-        )
-        merged = (
-            self.words.withColumnRenamed("freq", "f0")
-            .join(bc, "word", "full_outer")
-            .select(
-                "word",
-                (
-                    F.coalesce("f0", F.lit(0))
-                    + F.lit(sign) * F.coalesce("bf", F.lit(0))
-                )
-                .cast("long")
-                .alias("freq"),
-            )
-            .filter(F.col("freq") != 0)
-        )
-        prev = self._blocks
-        self.words, self._blocks = local_checkpoint_tracked(merged)
-        release_blocks(self.words.sparkSession, prev)
-
-    def ingest(self, batch, text_col: str) -> None:
-        """Fold a batch's word counts into the vocabulary state."""
-        self._fold(batch, text_col, +1)
-
-    def retract(self, batch, text_col: str) -> None:
-        """Remove a previously-ingested batch from the vocabulary —
-        exact subtraction; the caller's contract is that the batch was
-        in fact ingested."""
-        self._fold(batch, text_col, -1)
-
-    def learn(self, n_merges: int, checkpoint_every: int = 8):
-        """Learn ``n_merges`` merges from the CURRENT accumulated
-        vocabulary (no corpus read). Returns the merge DataFrame
-        (step, lhs, rhs, freq) — driver-local rows, independent of any
-        checkpoint block; the loop's tracked blocks are released
-        before returning."""
-        from fiat2_spark.operators.text import (
-            bpe_learn_from_words,
-            bpe_symbolize,
-        )
-
-        scratch: list = []
-        wt = self.words.select(
-            bpe_symbolize(F.col("word")).alias("wrapped"), "freq"
-        )
-        _, mdf = bpe_learn_from_words(
-            wt, n_merges, checkpoint_every, track=scratch
-        )
-        # mdf is already driver-local (bpe_learn_from_words builds it
-        # via createDataFrame from the collected merge list), so it has
-        # no dependency on the loop's checkpoint blocks — release them
-        # and return it directly (ADVICE r10)
-        release_blocks(self.words.sparkSession, frozenset(scratch))
-        return mdf
-
-    def close(self) -> int:
-        """Free the vocabulary-state blocks."""
-        n = release_blocks(self.words.sparkSession, self._blocks)
-        self._blocks = frozenset()
-        return n
-
-
-class DsirCorpus:
-    """Incrementally maintained DSIR importance model — the streaming
-    twin of `operators.text.dsir_scores` (Xie et al. 2023,
-    arXiv:2302.03169) for target and raw corpora arriving in batches:
-    the model is per-bucket hashed n-gram COUNTS for each side plus the
-    1-row feature totals — all ADDITIVE sufficient statistics, so
-    ingesting the same rows in any batch split yields bitwise-identical
-    importance scores to the one-shot (agreement-tested), and
-    ``retract_*`` is exact unlearning by subtraction (zero-count
-    buckets dropped — an unobserved bucket reads as count 0 through the
-    add-1 smoothing either way, but the state must stay model-sized).
-
-    ``score(batch)`` evaluates the CURRENT log-ratio table
-    lr[b] = round(ln((n_t+1)(tot_r+B) / ((n_r+1)(tot_t+B)))·quant)
-    against a batch — e.g. maintain target+pool statistics as crawls
-    arrive, then score candidate batches on demand without re-reading
-    either corpus.
-
-    The featurize pass (tokenize → unigram∪bigram explode →
-    post-explode md5 bucket) deliberately DUPLICATES `dsir_scores`'
-    inline expression instead of factoring it out: the one-shot's
-    reachable hash must stay byte-identical so the registered
-    `dsir_select`/`dsir_resample` rows keep their rotation-out premise;
-    the bitwise batch/stream agreement test is the drift tripwire.
-
-    Block discipline (the live-index contract): each fold's featurize
-    checkpoint is tracked and retired with the superseded state
-    snapshots; ``score`` runs un-checkpointed (its featurize appears
-    exactly once in the returned plan) — zero residual blocks per call.
-    State is ≤2B+1 rows at any corpus size; only ingest's featurize
-    pass scales with the batch."""
-
-    def __init__(self, spark, buckets: int = 256, quant: int = 10_000,
-                 tokenizer=None):
-        from fiat2_spark.operators.text import tokens
-
-        self.buckets, self.quant = buckets, quant
-        # one tokenizer per model's life (the fit/score pairing
-        # contract) — every ingest/retract/score featurizes through it
-        self.tokenizer = tokenizer or tokens
-        self.tcounts, self._t_blocks = local_checkpoint_tracked(
-            spark.createDataFrame([], "bucket long, n_t long")
-        )
-        self.rcounts, self._r_blocks = local_checkpoint_tracked(
-            spark.createDataFrame([], "bucket long, n_r long")
-        )
-        self.totals, self._tot_blocks = local_checkpoint_tracked(
-            spark.createDataFrame([(0, 0)], "tot_t long, tot_r long")
-        )
-
-    def _featurize(self, batch, id_col: str, text_col: str):
-        from fiat2_spark.operators.dedup import cpu_partitions
-        from fiat2_spark.operators.text import feature_bucket, ngram_strings
-
-        return (
-            batch.repartition(cpu_partitions(batch))
-            .select(
-                F.col(id_col).alias("doc"),
-                F.explode(
-                    ngram_strings(self.tokenizer(F.col(text_col)))
-                ).alias("feat"),
-            )
-            .select(
-                "doc", feature_bucket(F.col("feat"), self.buckets).alias("bucket")
-            )
-        )
-
-    def _fold(self, batch, id_col: str, text_col: str, side: str,
-              sign: int) -> None:
-        fb, scratch = local_checkpoint_tracked(
-            self._featurize(batch, id_col, text_col)
-        )
-        bc = fb.groupBy("bucket").agg(F.count(F.lit(1)).alias("bn"))
-        btot = fb.agg(F.count(F.lit(1)).alias("bt"))
-        cur, col = (
-            (self.tcounts, "n_t") if side == "t" else (self.rcounts, "n_r")
-        )
-        merged = (
-            cur.withColumnRenamed(col, "c0")
-            .join(bc, "bucket", "full_outer")
-            .select(
-                "bucket",
-                (
-                    F.coalesce("c0", F.lit(0))
-                    + F.lit(sign) * F.coalesce("bn", F.lit(0))
-                )
-                .cast("long")
-                .alias(col),
-            )
-            .filter(F.col(col) != 0)
-        )
-        tot = self.totals.crossJoin(btot).select(
-            (F.col("tot_t") + (F.lit(sign) * F.col("bt") if side == "t" else F.lit(0)))
-            .cast("long").alias("tot_t"),
-            (F.col("tot_r") + (F.lit(sign) * F.col("bt") if side == "r" else F.lit(0)))
-            .cast("long").alias("tot_r"),
-        )
-        prev = (
-            (self._t_blocks if side == "t" else self._r_blocks)
-            | self._tot_blocks
-            | scratch
-        )
-        state, blocks = local_checkpoint_tracked(merged)
-        if side == "t":
-            self.tcounts, self._t_blocks = state, blocks
-        else:
-            self.rcounts, self._r_blocks = state, blocks
-        self.totals, self._tot_blocks = local_checkpoint_tracked(tot)
-        release_blocks(state.sparkSession, prev)
-
-    def ingest_target(self, batch, id_col: str, text_col: str) -> None:
-        """Fold a target-corpus batch into the model."""
-        self._fold(batch, id_col, text_col, "t", +1)
-
-    def ingest_raw(self, batch, id_col: str, text_col: str) -> None:
-        """Fold a raw-pool batch into the model."""
-        self._fold(batch, id_col, text_col, "r", +1)
-
-    def retract_target(self, batch, id_col: str, text_col: str) -> None:
-        """Exactly remove a previously-ingested target batch."""
-        self._fold(batch, id_col, text_col, "t", -1)
-
-    def retract_raw(self, batch, id_col: str, text_col: str) -> None:
-        """Exactly remove a previously-ingested raw batch."""
-        self._fold(batch, id_col, text_col, "r", -1)
-
-    def score(self, batch, id_col: str, text_col: str):
-        """(id, score) under the current accumulated model — the exact
-        `dsir_scores` arithmetic (one quantized ln per bucket, integer
-        per-doc sums). Docs with zero features are absent (the
-        one-shot's contract). Bucket coverage contract: features land
-        only on buckets present in the lr table (observed on at least
-        one side) — the one-shot always satisfies this because its raw
-        counts ARE the scored pool's; the streaming usage that matches
-        it bitwise is ingest_raw(pool) before score(pool). Scoring a
-        never-ingested batch silently skips its both-sides-unseen
-        buckets rather than inventing a smoothed ratio for them —
-        `coverage(batch, ...)` measures exactly that skip fraction
-        (1.0 = full one-shot parity); run it when ingest provenance
-        is uncertain."""
-        b = self.buckets
-        lr = (
-            self.tcounts.join(self.rcounts, "bucket", "full_outer")
-            .crossJoin(F.broadcast(self.totals))
-            .select(
-                "bucket",
-                F.round(
-                    F.log(
-                        (
-                            (F.coalesce("n_t", F.lit(0)) + 1)
-                            * (F.col("tot_r") + b)
-                        ).cast("double")
-                        / (
-                            (F.coalesce("n_r", F.lit(0)) + 1)
-                            * (F.col("tot_t") + b)
-                        ).cast("double")
-                    )
-                    * self.quant
-                )
-                .cast("long")
-                .alias("lr"),
-            )
-        )
-        return (
-            self._featurize(batch, id_col, text_col)
-            .join(F.broadcast(lr), "bucket")
-            .groupBy("doc")
-            .agg(F.sum("lr").alias("score"))
-            .select(F.col("doc").alias(id_col), "score")
-        )
-
-    def coverage(self, batch, id_col: str, text_col: str):
-        """The bucket-coverage tripwire for `score`'s contract
-        (VERDICT r10 task 7): the fraction of the batch's feature
-        OCCURRENCES landing on buckets present in the current lr table
-        (observed on at least one ingested side). Returns a 1-row
-        DataFrame (n_feat, n_covered, coverage) — coverage 1.0 means
-        one-shot parity holds exactly (`score` drops nothing);
-        anything below means the batch was not (fully) ingested and
-        `score` is silently skipping its both-sides-unseen buckets.
-        Cheap: the batch featurize pass + a broadcast semi-probe of
-        the ≤2B-row state — run it before scoring a pool whose ingest
-        provenance is uncertain."""
-        seen = (
-            self.tcounts.select("bucket")
-            .unionByName(self.rcounts.select("bucket"))
-            .distinct()
-            .withColumn("__seen", F.lit(1))
-        )
-        return (
-            self._featurize(batch, id_col, text_col)
-            .join(F.broadcast(seen), "bucket", "left")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_feat"),
-                F.coalesce(F.sum("__seen"), F.lit(0))
-                .cast("long")
-                .alias("n_covered"),
-            )
-            .select(
-                "n_feat",
-                "n_covered",
-                F.when(F.col("n_feat") == 0, F.lit(1.0))
-                .otherwise(
-                    F.col("n_covered").cast("double")
-                    / F.col("n_feat").cast("double")
-                )
-                .alias("coverage"),
-            )
-        )
-
-    def close(self) -> int:
-        """Free the model-state blocks."""
-        n = release_blocks(
-            self.tcounts.sparkSession,
-            self._t_blocks | self._r_blocks | self._tot_blocks,
-        )
-        self._t_blocks = self._r_blocks = self._tot_blocks = frozenset()
-        return n

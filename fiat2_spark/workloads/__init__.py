@@ -28,37 +28,38 @@ MODULES = (pipeline, stream, server, dsl, graphs, core)
 #   python tools/fingerprints.py --compare base.json
 # and seat every query it reports `changed` or `new`; seats come from
 # queries whose reachable hash held. Older baselines are in git history.
-# This window: result sorts over a fixed key domain move to
-# operators/relational.py:sort_small (the seven TPC-H shapes), compile.py
-# calls relational's retag/sort_canonical and types int literals long,
-# relational takes its tag constants from plans/ast.py, and the BPE
-# queries collect their merges with text.bpe_merge_list. With
-# SPARK_GRAFT_CPUS=4 (the value the base fingerprints were written
-# under; session constants read it) the tool reports 29 changed, 0 new,
-# 180 held. Fifteen were seated already and stay under (A); fourteen
-# rotate in, and (C) plus eight of (D), hashes held, rotate out.
+# This window: the engine surface no query reaches is deleted, the
+# block-tracking parameters only its callers passed are dropped
+# (lloyd_centroids, _nb_bucketed, nb_counts, nb_score_from_counts,
+# doremi_weights_trajectory, bpe_learn_from_words,
+# semantic_dedup_members), compile.py calls the functions/collections
+# set and dict primitives, and docstrings naming deleted definitions are
+# rewritten. With SPARK_GRAFT_CPUS=4 the tool reports 29 changed, 0 new,
+# 180 held. Twenty-two were seated already and stay under (A); seven
+# rotate in (corr_moments, dedup_embedding, langid_multiscript,
+# multimodal_audio_rms, multimodal_bytes, multimodal_wav_real,
+# span_dedup), and the seven held (D) seats rotate out.
 PRIORITY = (
     # (A) tool-mandated reachable-delta rotate-ins
     "dsl_auto_index", "dsl_auto_index_dist", "dsl_auto_index_join",
     "dsl_command_pipeline", "dsl_comprehension", "dsl_employee_join",
     "dsl_filter_project", "dsl_fold_table", "dsl_grandchildren",
     "dsl_let_if_table", "dsl_orders_agg",
-    "bpe_encode", "bpe_encode_ids", "pipeline_tokenize_pack",
+    "bpe_encode", "bpe_encode_ids", "bpe_merges", "pipeline_tokenize_pack",
     "text_unicode_pipeline",
+    "budget_select", "dedup_semantic", "doremi_reweight",
+    "doremi_trajectory", "quality_classifier", "multimodal_frames",
+    "corr_moments", "dedup_embedding", "langid_multiscript",
+    "multimodal_audio_rms", "multimodal_bytes", "multimodal_wav_real",
+    "span_dedup",
+    # (B) earlier rotate-ins, hashes held
     "tpch_q4_shape", "tpch_q5_shape", "tpch_q7_shape", "tpch_q8_shape",
     "tpch_q9_shape", "tpch_q13_shape", "tpch_q22_shape",
     "filter_scan", "join_fk", "proj_compute", "proj_feed_pipeline",
     "sort_canonical", "survey_join", "theta_join_nonequi",
-    # (B) earlier rotate-ins, hashes held
-    "bpe_merges", "budget_select",
     "dedup_clusters", "dedup_clusters_star", "dedup_fuzzy_apply",
-    "dedup_semantic", "doremi_reweight", "quality_classifier",
     "perplexity_filter", "perplexity_filter_unicode",
-    "ccnet_bucket_assign", "lm_stupid_backoff", "doremi_trajectory",
-    # (D) oldest-evidence refresh
-    "embedding_centroids", "embedding_quantize", "hll_users",
-    "multimodal_frames", "multimodal_resize", "nested_collections",
-    "percentile_cont", "sample_group_k",
+    "ccnet_bucket_assign", "lm_stupid_backoff",
 )
 assert len(PRIORITY) == 50 and len(set(PRIORITY)) == 50
 

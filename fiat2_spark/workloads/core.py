@@ -2530,7 +2530,7 @@ def corr_moments(spark, sf_dir):
     pass. Spark's native corr()/covar_samp() would give a
     statistically identical but bitwise-divergent answer; at 100 TB
     the moments form is also the one that composes with incremental
-    maintenance (MomentsView). Zero divisors (single-row or
+    maintenance (the five sums are additive). Zero divisors (single-row or
     zero-variance group) yield NULL in BOTH engines: Spark's non-ANSI
     division already returns NULL but DuckDB's IEEE division returns
     inf/NaN, so the guards here are mirrored by NULLIF in the oracle."""

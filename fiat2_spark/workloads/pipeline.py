@@ -822,8 +822,8 @@ def dedup_embedding(spark, sf_dir):
     """Embedding-cosine near-dup pairs **bounded to LSH buckets**: 4
     md5-derived random hyperplanes → 16 buckets, pairs compared only
     within a bucket (equi self-join — a hash join, ~16× fewer
-    comparisons; the unblocked O(n²) form remains available as
-    `dedup.embedding_dedup_pairs` for exact-recall audits). The oracle
+    comparisons; near-dup pairs split across buckets are missed, the
+    standard LSH recall trade). The oracle
     recomputes the identical planes and buckets in SQL, so the
     approximate path is checked exactly. Sequential-fold double math
     matches the oracle bit-for-bit before the 6-decimal rounding."""
@@ -1083,9 +1083,8 @@ def multimodal_bytes(spark, sf_dir):
     struct → Arrow-batched mapInPandas feature extraction (byte count,
     additive checksum, head hex). The oracle recomputes the bytes in
     SQL — this checks the whole Pandas-UDF path produces exactly what
-    the declarative spec says. (Real image/audio decode is stubbed —
-    decode_media raises NotImplementedError; documents are ASCII so
-    chars == bytes.)"""
+    the declarative spec says. (Real image/audio decode is not
+    implemented; documents are ASCII so chars == bytes.)"""
     d = tbl(spark, sf_dir, "documents")
     bin_tbl = M.to_binary_table(d, "doc_id", "text", "text")
     return M.extract_byte_features(bin_tbl)
@@ -2398,8 +2397,8 @@ def multimodal_wav_real(spark, sf_dir):
     can recompute the expected RMS without parsing WAV. Sample lengths
     vary per doc (192..448), so short final frames are exercised. The
     encode stage is test-vector generation; the DECODE is the product
-    path — real container parsing where `decode_media` still gates the
-    codec-library formats."""
+    path — real container parsing, where codec-library formats are not
+    implemented."""
     from collections.abc import Iterator
 
     import pandas as pd
@@ -4424,7 +4423,7 @@ def langid_multiscript(spark, sf_dir):
     r11 missing #2): a two-stage CLD-style cascade — `script_id`
     classifies the writing SCRIPT by fixed-BMP-range character counts
     (version-stable across both engines' Unicode tables), and
-    `lang_id_table` identifies the underlying LANGUAGE through a
+    a stopword scorer identifies the underlying LANGUAGE through a
     stopword table extended with the transliteration images of all 10
     STOPWORDS lists, under `tokens_unicode` (the ASCII tokenizer would
     shred the non-Latin entries before they could match). script_ok

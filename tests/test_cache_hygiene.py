@@ -59,8 +59,7 @@ def test_checkpoint_block_classifies_structurally(spark):
 def test_dataframe_unpersist_does_not_free_checkpoint_blocks(spark):
     """The property that forces targeted release by block id: on this
     build DataFrame.unpersist() leaves localCheckpoint blocks resident
-    (so a retire path built on it silently leaks — MomentsView's r6
-    ingest did exactly that). If a Spark upgrade makes this pass start
+    (so a retire path built on it silently leaks). If a Spark upgrade makes this pass start
     failing, local_checkpoint_tracked/release_blocks can be simplified."""
     release_checkpoint_blocks(spark)
     ck, blocks = local_checkpoint_tracked(spark.range(100).selectExpr("id"))
@@ -88,17 +87,3 @@ def test_group_index_insert_retires_superseded_snapshots(spark):
     rows = {r["g"]: (r["n"], r["s"]) for r in idx.read().collect()}
     assert rows == {"a": (6, 1 + 10 + 11 + 12 + 13 + 14), "b": (1, 2)}
     release_blocks(spark, idx._blocks)
-
-
-def test_moments_view_ingest_retires_superseded_snapshots(spark):
-    from fiat2_spark.streaming.maintenance import MomentsView
-
-    release_checkpoint_blocks(spark)
-    view = MomentsView(spark, "k", "v")
-    baseline = len(_resident_ids(spark))
-    for i in range(4):
-        view.ingest(spark.createDataFrame([("x", float(i))], "k string, v double"))
-        assert len(_resident_ids(spark)) == baseline, f"ingest {i} leaked"
-    st = {r["k"]: r["n"] for r in view.state.collect()}
-    assert st == {"x": 4}
-    release_blocks(spark, view._blocks)

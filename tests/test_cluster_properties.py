@@ -69,40 +69,6 @@ def test_dup_clusters_chain_diameter(spark):
         dup_clusters(pairs, max_iter=2)
 
 
-def test_dedup_corpus_random_batch_sequences(spark):
-    """DedupCorpus over randomized batch splits must always equal the
-    one-shot set difference, regardless of how arrivals are batched —
-    and the same fingerprint arriving in two different batches
-    surfaces exactly once (first-arrival wins)."""
-    import random
-
-    from fiat2_spark.streaming.maintenance import DedupCorpus
-
-    rnd = random.Random(7)
-    for _ in range(3):
-        base_fps = {f"f{i}" for i in rnd.sample(range(12), 4)}
-        arrivals = [(i, f"f{i % 12}") for i in rnd.sample(range(100, 160), 30)]
-        base = spark.createDataFrame(
-            [(i, fp) for i, fp in enumerate(sorted(base_fps))], "doc_id long, fp string"
-        )
-        corpus = DedupCorpus(base, "fp", "doc_id")
-        out = []
-        i = 0
-        while i < len(arrivals):
-            k = rnd.randint(1, 8)
-            batch = arrivals[i : i + k]
-            i += k
-            out.extend(
-                corpus.ingest(
-                    spark.createDataFrame(batch, "doc_id long, fp string")
-                ).collect()
-            )
-        got = {r["fp"] for r in out}
-        want = {fp for _, fp in arrivals} - base_fps
-        assert got == want
-        assert len(out) == len(want)  # each novel fp exactly once
-
-
 @settings(max_examples=6, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow])
 @given(edges=st.sets(
@@ -266,48 +232,6 @@ def test_semantic_dedup_sparse_negative_ids(spark):
     want = _py_semantic(table, k=3, iters=2)
     assert got == want, f"\ngot={got}\nwant={want}"
     assert got[903][1] is True and got[-7][1] is False
-
-
-@settings(max_examples=3, deadline=None,
-          suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow])
-@given(
-    vecs=st.lists(
-        st.lists(st.integers(-6, 6), min_size=4, max_size=4),
-        min_size=4, max_size=10,
-    ),
-    cut=st.integers(1, 8),
-)
-@pytest.mark.slow  # >=15s model-differential sweep; default run deselects (pytest.ini)
-def test_semantic_corpus_random_splits_agree(spark, vecs, cut):
-    """SemanticDedupCorpus over a RANDOM id-ordered 2-batch split must
-    accumulate exactly the one-shot rows (the fixed-split agreement
-    test, generalized)."""
-    from fiat2_spark.operators.dedup import (
-        lloyd_centroids, quantize_embeddings, semantic_dedup,
-    )
-    from fiat2_spark.streaming.maintenance import SemanticDedupCorpus
-
-    table = {i: v for i, v in enumerate(vecs)}
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in table.items()],
-        "vec_id long, embedding array<double>",
-    )
-    one_shot = {
-        r["vec_id"]: (r["cid"], r["is_dup"])
-        for r in semantic_dedup(
-            df, "vec_id", "embedding", k=3, iters=1, q=1, pair_salt=4
-        ).collect()
-    }
-    cent = lloyd_centroids(quantize_embeddings(df, "vec_id", "embedding", q=1), 3, 1)
-    corpus = SemanticDedupCorpus(spark, cent, q=1, pair_salt=4)
-    got = {}
-    c = min(cut, len(vecs) - 1)
-    from pyspark.sql import functions as F
-    for pred in (F.col("vec_id") < c, F.col("vec_id") >= c):
-        out = corpus.ingest(df.filter(pred), "vec_id", "embedding")
-        got.update({r["vid"]: (r["cid"], r["is_dup"]) for r in out.collect()})
-    corpus.close()
-    assert got == one_shot
 
 
 def test_dup_clusters_chain_converges(spark):

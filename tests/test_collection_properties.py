@@ -61,15 +61,12 @@ def test_dict_insert_delete_lookup(spark, d, ops, probe):
 @settings(**_SETTINGS)
 @given(arr=_ARR, v=st.integers(-9, 9))
 def test_bag_set_insert_canonical(spark, arr, v):
-    """bag_insert keeps the sorted multiset; set_insert the sorted dedup;
-    bag_canonical_col yields sorted (value, count) with counts > 0."""
+    """bag_insert keeps the sorted multiset; set_insert and list_to_set
+    the sorted dedup."""
     col = F.array(*[F.lit(x) for x in arr]).cast("array<int>") if arr else F.array().cast("array<int>")
     got_bag = _one_row(spark, C.bag_insert(col, v))
     assert got_bag == sorted(arr + [v])
     got_set = _one_row(spark, C.set_insert(col, v))
     assert got_set == sorted(set(arr + [v]))
-    got_canon = _one_row(spark, C.bag_canonical_col(col))
-    want = [(x, arr.count(x)) for x in sorted(set(arr))]
-    assert [(r["value"], r["count"]) for r in got_canon] == want
     got_l2s = _one_row(spark, C.list_to_set(col))
     assert got_l2s == sorted(set(arr))

@@ -148,3 +148,136 @@ def test_driver_memory_default_follows_host():
     assert driver_memory_default(15 * 1024) == "7680m"
     assert driver_memory_default(1024) == "1024m"
     assert driver_memory_default(256 * 1024) == "49152m"
+
+
+# Engine definitions that no root reaches but that stay on purpose.
+ALLOW = {
+    "fiat2_spark.operators.aggregates.ac_fold":
+        "public AC-fold export in operators/__init__",
+    "fiat2_spark.operators.aggregates.aci_fold":
+        "public ACI-fold export in operators/__init__",
+    "fiat2_spark.operators.text._trigram_profile":
+        "builds TRIGRAM_PROFILES at import; the closure sees only the value",
+    "fiat2_spark.plans.compile._fold_table":
+        "naive fold reference for test_to_idx_fast_path_equals_naive",
+    "fiat2_spark.plans.sugar.v": "DSL notation (Notations.v)",
+    "fiat2_spark.plans.sugar.or_": "DSL notation (Notations.v)",
+    "fiat2_spark.plans.sugar.not_": "DSL notation (Notations.v)",
+    "fiat2_spark.plans.sugar.seq": "DSL notation (Notations.v)",
+    "fiat2_spark.plans.sugar.let": "DSL notation (Notations.v)",
+    "fiat2_spark.plans.sugar.if_": "DSL notation (Notations.v)",
+    "fiat2_spark.plans.sugar.for_": "DSL notation (Notations.v)",
+}
+
+
+def _engine_defs(repo: str) -> dict[str, list[str]]:
+    """module name → its top-level function and class names."""
+    import ast
+    import os
+
+    out = {}
+    for root, _, files in os.walk(os.path.join(repo, "fiat2_spark")):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(root, f)
+            mod = os.path.relpath(path, repo)[:-3].replace(os.sep, ".")
+            mod = mod.removesuffix(".__init__")
+            with open(path, encoding="utf-8") as fh:
+                body = ast.parse(fh.read()).body
+            out[mod] = [
+                n.name for n in body
+                if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+            ]
+    return out
+
+
+def _script_roots(path: str) -> list:
+    """Engine objects a script imports from fiat2_spark or reaches by
+    attribute access on an imported fiat2_spark module."""
+    import ast
+    import importlib
+    import types
+
+    with open(path, encoding="utf-8") as fh:
+        tree = ast.parse(fh.read())
+    roots, modules = [], {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and (node.module or "").startswith("fiat2_spark"):
+            base = importlib.import_module(node.module)
+            for a in node.names:
+                obj = getattr(base, a.name, None)
+                if obj is None:
+                    obj = importlib.import_module(f"{node.module}.{a.name}")
+                if isinstance(obj, types.ModuleType):
+                    modules[a.asname or a.name] = obj
+                else:
+                    roots.append(obj)
+        elif isinstance(node, ast.Import):
+            for a in node.names:
+                if a.name.startswith("fiat2_spark"):
+                    mod = importlib.import_module(a.name)
+                    if a.asname:
+                        modules[a.asname] = mod
+                    else:
+                        modules["fiat2_spark"] = importlib.import_module("fiat2_spark")
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Attribute):
+            chain = []
+            while isinstance(node, ast.Attribute):
+                chain.append(node.attr)
+                node = node.value
+            if not (isinstance(node, ast.Name) and node.id in modules):
+                continue
+            obj = modules[node.id]
+            for attr in reversed(chain):
+                obj = getattr(obj, attr, None)
+                if not isinstance(obj, types.ModuleType):
+                    break
+            if obj is not None and not isinstance(obj, types.ModuleType):
+                roots.append(obj)
+    return roots
+
+
+def test_every_engine_definition_is_reached():
+    """Every top-level fiat2_spark function and class is reachable from
+    what runs: the registered queries, every definition in `workloads/`
+    (oracle builders run at import), `serving.make_server`/`main`,
+    `get_spark`, and what `examples/` and `perfbench/` use. The closure
+    is the one the rotation fingerprints hash
+    (`tools.fingerprints._reachable_sources`). Code reached only by
+    tests is unchecked by the gate and the benchmark: delete it with
+    its tests, make a query reach it, or list it in ALLOW with a
+    reason."""
+    import importlib
+    import os
+
+    from fiat2_spark import serving
+    from fiat2_spark.session import get_spark
+    from fiat2_spark.workloads import QUERIES
+    from tools.fingerprints import _reachable_sources
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    defs = _engine_defs(repo)
+    roots = [*QUERIES.values(), serving.make_server, serving.main, get_spark]
+    for mod, names in defs.items():
+        if mod.startswith("fiat2_spark.workloads"):
+            m = importlib.import_module(mod)
+            roots += [getattr(m, n) for n in names]
+    for d in ("examples", "perfbench"):
+        for f in sorted(os.listdir(os.path.join(repo, d))):
+            if f.endswith(".py"):
+                roots += _script_roots(os.path.join(repo, d, f))
+
+    labels = [lbl for lbl, _ in _reachable_sources(*roots)]
+    whole = {lbl.removeprefix("module:") for lbl in labels if lbl.startswith("module:")}
+    reached = set(labels)
+    unreached = sorted(
+        f"{mod}.{n}"
+        for mod, names in defs.items() if mod not in whole
+        for n in names
+        if f"{mod}.{n}" not in reached
+        and not any(lbl.startswith(f"{mod}.{n}.") for lbl in reached)
+    )
+    assert sorted(set(unreached) - set(ALLOW)) == [], "unreached engine definitions"
+    assert sorted(set(ALLOW) - set(unreached)) == [], "stale ALLOW entries"

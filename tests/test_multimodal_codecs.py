@@ -1,5 +1,5 @@
-"""Pure-Python WAV (RIFF) and PPM (P6) codecs — the real-decode
-siblings of the stubbed `decode_media` formats. No Spark needed: these
+"""Pure-Python WAV (RIFF) and PPM (P6) codecs — the formats the
+multimodal operators really decode. No Spark needed: these
 pin the container grammar (round-trip, chunk walking, comment handling)
 and the malformed-input failure modes the mapInPandas operators rely
 on."""

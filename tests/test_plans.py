@@ -803,48 +803,6 @@ def test_sorted_layout_skips_row_groups(spark):
     assert skipped * 3 < full  # zone maps pruned most row groups
 
 
-def test_zorder_layout_skips_on_both_dimensions(spark):
-    """write_zorder must give BOTH columns row-group skipping from one
-    layout — the property neither single-column sort can: a range
-    filter on either dimension reads well under the full table, while
-    the unsorted layout reads everything."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from fiat2_spark.sources.io import write_zorder
-
-    ev = spark.read.parquet(f"{SF_SMOKE}/events.parquet").select(
-        "event_id", "user_id", "value"
-    )
-    tmp = tempfile.mkdtemp()
-    write_zorder(ev, tmp + "/z", ("value", "user_id"), n_ranges=64)
-
-    def scan_output_rows(path: str, cond) -> int:
-        df = spark.read.parquet(path).filter(cond)
-        df.collect()
-        plan = df._jdf.queryExecution().executedPlan()
-
-        def leaves(n):
-            cs = [n.children().apply(i) for i in range(n.children().size())]
-            return [n] if not cs else [x for c in cs for x in leaves(c)]
-
-        total = 0
-        for leaf in leaves(plan):
-            it = leaf.metrics().iterator()
-            while it.hasNext():
-                kv = it.next()
-                if kv._1() == "numOutputRows":
-                    total += kv._2().value()
-        return total
-
-    n = ev.count()
-    on_value = (F.col("value") >= 10.0) & (F.col("value") < 30.0)
-    on_user = (F.col("user_id") >= 100) & (F.col("user_id") < 110)
-    assert scan_output_rows(tmp + "/z", on_value) * 3 < n * 2  # < 2/3 read
-    assert scan_output_rows(tmp + "/z", on_user) * 3 < n * 2
-
-
 def test_aqe_splits_skewed_join_partitions(spark):
     """The automatic half of the skew story (`salted_equi_join` is the
     manual half): under cluster conditions (no broadcast; thresholds

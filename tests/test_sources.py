@@ -345,30 +345,6 @@ def test_schema_evolution_merge_read(spark):
     assert pinned.filter(F.col("id") == 3).collect()[0]["text"] == "c"
 
 
-def test_compact_files_reduces_file_count_preserving_rows(spark, tmp_path):
-    """compact_files must collapse a fragmented directory to the target
-    file count without changing content (count + checksum)."""
-    from pyspark.sql import functions as F
-
-    from fiat2_spark.sources.io import compact_files
-
-    src = str(tmp_path / "frag")
-    df = spark.range(0, 10000).withColumn("v", F.col("id") * 2)
-    df.repartition(64).write.parquet(src)
-    import os
-
-    assert len([f for f in os.listdir(src) if f.endswith(".parquet")]) == 64
-    before = spark.read.parquet(src).agg(
-        F.count(F.lit(1)).alias("n"), F.sum("v").alias("s")
-    ).collect()[0]
-    n_files = compact_files(spark, src, 4)
-    assert n_files <= 4
-    after = spark.read.parquet(src).agg(
-        F.count(F.lit(1)).alias("n"), F.sum("v").alias("s")
-    ).collect()[0]
-    assert (before["n"], before["s"]) == (after["n"], after["s"])
-
-
 def test_csv_corrupt_records_are_quarantined(spark, tmp_path):
     """Malformed ingest rows must not kill the job OR silently vanish:
     PERMISSIVE mode quarantines them into the corrupt-record column
@@ -390,37 +366,3 @@ def test_csv_corrupt_records_are_quarantined(spark, tmp_path):
     bad = df.filter(F.col("_corrupt").isNotNull())
     assert good.count() == 2 and bad.count() == 2
     assert sorted(r["a"] for r in good.collect()) == [1, 7]
-
-
-def test_write_zorder_constant_column(spark, tmp_path):
-    """A constant (or near-constant) dimension collapses every
-    approxQuantile cut point to one value; the zero-cut path must fall
-    back to a literal 0 bucket instead of an array<void> analysis error,
-    and the OTHER dimension must still carry real skipping structure."""
-    from pyspark.sql import functions as F
-
-    from fiat2_spark.sources.io import write_zorder
-
-    df = spark.range(0, 5000).select(
-        F.lit(7.0).alias("const"), (F.col("id") % 97).cast("double").alias("var")
-    )
-    out = str(tmp_path / "z_const")
-    write_zorder(df, out, ("const", "var"), n_ranges=8)
-    back = spark.read.parquet(out)
-    assert back.count() == 5000
-    assert back.agg(F.countDistinct("const")).first()[0] == 1
-
-
-def test_compact_files_inplace_keeps_rows(spark, tmp_path):
-    """In-place mode: after the rename-aside swap the dataset path holds
-    the compacted copy, no .old sibling survives, rows are intact."""
-    import os
-
-    from fiat2_spark.sources.io import compact_files
-
-    src = str(tmp_path / "frag")
-    spark.range(0, 1000).repartition(32).write.parquet(src)
-    n_files = compact_files(spark, src, 2)
-    assert n_files <= 2
-    assert spark.read.parquet(src).count() == 1000
-    assert not os.path.exists(src + ".old")

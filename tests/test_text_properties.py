@@ -1165,22 +1165,25 @@ def test_translate_fixture_differential_fuzz(spark, texts, pick):
     assert got == want, f"\ntexts={texts!r}\ngot={got}\nwant={want}"
 
 
-def test_doremi_trajectory_track_hook_zero_residency(spark):
-    """The track= block hook on doremi_weights_trajectory (ADVICE r10):
-    with a track list, every loop checkpoint's block ids are captured
-    and targeted release leaves zero of them resident; the result is
-    unaffected by tracking."""
-    from fiat2_spark.operators.text import doremi_weights_trajectory
-    from fiat2_spark.session import _is_checkpoint_block, release_blocks
+def test_doremi_trajectory_loop_checkpoints_release(spark):
+    """doremi_weights_trajectory's loop materializes exactly 3
+    checkpoints for rounds=3 (domain-stats + initial state + final;
+    interior checkpoints land every 4th round), counted as new resident
+    checkpoint blocks beyond the LM fit's own, and targeted release
+    leaves none of them resident."""
+    from fiat2_spark.operators.text import (
+        _doremi_domain_stats,
+        doremi_weights_trajectory,
+    )
+    from fiat2_spark.session import cache_entries, release_blocks
 
     def ckpt_ids():
-        return {
-            rid
-            for rid, rdd in dict(
-                spark.sparkContext._jsc.getPersistentRDDs()
-            ).items()
-            if _is_checkpoint_block(rdd)
-        }
+        return {int(e[1:e.index("]")]) for e in cache_entries(spark)[0]}
+
+    def new_blocks(fn):
+        before = ckpt_ids()
+        out = fn()
+        return out, ckpt_ids() - before
 
     ref = spark.createDataFrame(
         [(100, "the cat sat on the mat the cat ran")],
@@ -1191,26 +1194,21 @@ def test_doremi_trajectory_track_hook_zero_residency(spark):
          (2, "blork flem grup snee wub", "salad")],
         "doc_id long, text string, dom string",
     )
-    blocks: list = []
-    rows_tracked = {
-        r["domain"]: r["weight"]
-        for r in doremi_weights_trajectory(
-            pool, ref, "doc_id", "text", "dom", rounds=3, vocab_size=16,
-            track=blocks,
-        ).collect()
-    }
-    # checkpoint-stride 4 (r12): domain-stats + initial state + final
-    # for rounds=3 — interior checkpoints only land every 4th round
-    assert len(blocks) == 3
-    release_blocks(spark, frozenset(blocks))
-    assert not (set(blocks) & ckpt_ids()), "tracked blocks must release"
-    rows_plain = {
+    _, fit_blocks = new_blocks(lambda: _doremi_domain_stats(
+        pool, ref, "text", "dom", 16, 10_000, 2, 5,
+    ))
+    rows, traj_blocks = new_blocks(lambda: {
         r["domain"]: r["weight"]
         for r in doremi_weights_trajectory(
             pool, ref, "doc_id", "text", "dom", rounds=3, vocab_size=16,
         ).collect()
-    }
-    assert rows_tracked == rows_plain
+    })
+    assert len(traj_blocks) - len(fit_blocks) == 3
+    assert set(rows) == {"seen", "salad"}
+    assert abs(sum(rows.values()) - 1.0) < 1e-5
+    released = fit_blocks | traj_blocks
+    release_blocks(spark, frozenset(released))
+    assert not (released & ckpt_ids()), "loop blocks must release"
 
 
 @settings(max_examples=5, deadline=None,
@@ -1351,7 +1349,7 @@ def test_script_id_crafted_rows(spark):
 
 def test_langid_multiscript_matches_ascii_langid(spark):
     """Transliteration invariance (the property the multiscript
-    stopword table is built on): lang_id_table over the multilingual
+    stopword table is built on): stopword language ID over the multilingual
     fixture under tokens_unicode predicts EXACTLY what the plain ASCII
     lang_id predicts on the original documents — per-char
     transliteration commutes with tokenization and stopword matching.
@@ -1537,16 +1535,18 @@ def test_lm_perplexity_trigram_matches_python_model(spark, raw, ref):
     assert got == want, f"\nraw={raw_t}\nref={ref_t}\ngot={got}\nwant={want}"
 
 
-def test_stopword_scores_table_agrees_with_expression_form(spark):
-    """The relational stopword scorer (broadcast profile join) is
-    bit-equal to lang_id_table's expression form on the same table —
-    the `lang_id_trigram`/`trigram_scores_table` agreement contract,
-    one level up."""
+def test_stopword_scores_table_matches_python_model(spark):
+    """The relational stopword scorer (broadcast profile join) plus
+    `argmax_label` equals a Python model of stopword language ID over
+    the same table: per-label hit counts with multiplicity, argmax in
+    sorted-label order, earliest label on ties, 'und' when nothing
+    fires — including a token-less document (explode_outer)."""
+    import re
+
     from pyspark.sql import functions as F
 
     from fiat2_spark.operators.text import (
         argmax_label,
-        lang_id_table,
         stopword_scores_table,
         tokens_unicode,
     )
@@ -1562,22 +1562,27 @@ def test_stopword_scores_table_agrees_with_expression_form(spark):
         (3, "και εδώ το φως να δεις"),
         (4, "xyzzy plugh"),          # no hits → und
         (5, ""),                      # token-less → und (explode_outer)
+        (6, "the и"),                 # tie → earliest sorted label (el < en < ru)
     ]
+
+    def model(text):
+        toks = [t for t in re.split(r"[^\w]+|_", text.lower()) if t]
+        labels = sorted(table)
+        scores = [sum(t in table[k] for t in toks) for k in labels]
+        best = max(scores)
+        return "und" if best == 0 else labels[scores.index(best)]
+
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    toks = tokens_unicode(F.col("text"))
-    expr = {
-        r["doc_id"]: r["p"]
-        for r in df.select("doc_id", lang_id_table(toks, table).alias("p")).collect()
-    }
-    sv = stopword_scores_table(df, toks, ["doc_id"], table)
+    sv = stopword_scores_table(df, tokens_unicode(F.col("text")), ["doc_id"], table)
     rel = {
         r["doc_id"]: r["p"]
         for r in sv.select(
             "doc_id", argmax_label(F.col("__sv"), sorted(table)).alias("p")
         ).collect()
     }
-    assert rel == expr and expr[1] == "en" and expr[2] == "ru" and expr[3] == "el"
-    assert expr[4] == "und" and expr[5] == "und"
+    assert rel == {i: model(t) for i, t in rows}
+    assert rel[1] == "en" and rel[2] == "ru" and rel[3] == "el"
+    assert rel[4] == "und" and rel[5] == "und" and rel[6] == "en"
 
 
 _CJK_FRAGS = [

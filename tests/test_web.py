@@ -5,7 +5,7 @@ the operator's contract directly)."""
 
 from __future__ import annotations
 
-from fiat2_spark.operators.web import domain_filter, domain_stats, url_host
+from fiat2_spark.operators.web import domain_filter, url_host
 from pyspark.sql import functions as F
 
 
@@ -42,18 +42,6 @@ def test_domain_filter_blocklist_and_cap(spark):
     )
     # a.com capped at its 2 smallest ids; evil.com dropped; c.com normalized
     assert got == [(1, "a.com"), (2, "a.com"), (4, "b.com"), (7, "c.com")], got
-
-
-def test_domain_stats(spark):
-    df = spark.createDataFrame(
-        [(1, "https://a.com/1"), (9, "https://a.com/2"), (4, "https://b.com/1")],
-        "doc_id long, url string",
-    )
-    got = {
-        r["host"]: (r["n_docs"], r["min_doc"], r["max_doc"])
-        for r in domain_stats(df, "doc_id", "url").collect()
-    }
-    assert got == {"a.com": (2, 1, 9), "b.com": (1, 4, 4)}, got
 
 
 def test_url_normalize_edge_cases(spark):
@@ -95,40 +83,3 @@ def test_url_dedup_keep_first(spark):
         for r in url_dedup(df, "doc_id", "url").collect()
     }
     assert got == {"https://a.com/x": (1, 2), "https://a.com/y": (9, 0)}, got
-
-
-def test_domain_cap_corpus_agrees_with_one_shot(spark):
-    """DomainCapCorpus over id-ordered batches must admit EXACTLY the
-    one-shot domain_filter's (doc, host) rows — the one-shot keeps each
-    host's cap smallest ids, which id-ordered arrival admits in order.
-    Also checks the corpus-class block discipline (previous output and
-    snapshot retired per ingest; close() frees everything)."""
-    from fiat2_spark.operators.web import domain_filter
-    from fiat2_spark.streaming.maintenance import DomainCapCorpus
-
-    rows = [
-        (i, f"https://h{i % 5}.example.com/{i}") for i in range(40)
-    ] + [(100 + i, "https://evil.example.com/x") for i in range(5)]
-    df = spark.createDataFrame(rows, "doc_id long, url string")
-    blocked = spark.createDataFrame([("evil.example.com",)], "host string")
-
-    one_shot = sorted(
-        (r["doc"], r["host"])
-        for r in domain_filter(df, "doc_id", "url", blocked, max_per_domain=3).collect()
-    )
-
-    corpus = DomainCapCorpus(spark, blocked, cap=3)
-    got = []
-    prev_out = frozenset()
-    for lo, hi in ((0, 7), (7, 30), (30, 1000)):
-        batch = df.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
-        out = corpus.ingest(batch, "doc_id", "url")
-        got.extend((r["doc"], r["host"]) for r in out.collect())
-        live = set(dict(spark.sparkContext._jsc.getPersistentRDDs()).keys())
-        assert not (prev_out & live), "previous batch's output blocks must retire"
-        prev_out = corpus._out_blocks
-    final = corpus._blocks | corpus._out_blocks | corpus._bl_blocks
-    corpus.close()
-    live = set(dict(spark.sparkContext._jsc.getPersistentRDDs()).keys())
-    assert not (final & live)
-    assert sorted(got) == one_shot

@@ -99,8 +99,8 @@ def main() -> None:
         )
     if not only:
         # full-registry run: emit the per-query transitive-code
-        # fingerprints that gate window rotation (tools/fingerprints.py);
-        # rounds commit this beside GATE_r0N as FINGERPRINTS_r0N.json
+        # fingerprints that gate window rotation (tools/fingerprints.py),
+        # committed beside the gate logs as FINGERPRINTS.json
         import json
 
         from tools.fingerprints import fingerprints

@@ -180,50 +180,6 @@ def minhash_pair_counts(spark, sf_dir: str) -> dict:
     return {"candidates": n_cand, "verified": n_ver}
 
 
-def corpus_growth_probe(spark, factor: int) -> dict:
-    """A LIVE SemanticDedupCorpus whose n grows ×factor (VERDICT r8
-    task 4's probe row): ingest the derived corpus replica-by-replica
-    (id-ordered slices, each the size of the original corpus) on two
-    paths — centroids FROZEN at construction k=8, vs `recluster(k ∝ n)`
-    at every corpus doubling (after batches 2, 4, 8). The number that
-    diverges when frozen k slides into the quadratic per-cluster
-    regime is the FINAL batch's ingest wall (pair work ≈ |state|·|batch|
-    / k); recluster totals INCLUDE the recluster calls themselves —
-    the path has to win with its maintenance cost counted."""
-    from fiat2_spark.operators.dedup import lloyd_centroids, quantize_embeddings
-    from fiat2_spark.streaming.maintenance import SemanticDedupCorpus
-
-    e = spark.read.parquet(os.path.join(DST, "embeddings.parquet"))
-    out = {}
-    for mode in ("frozen", "recluster"):
-        first = e.filter(F.col("vec_id") < OFFSET)
-        cent = lloyd_centroids(
-            quantize_embeddings(first, "vec_id", "embedding"), 8, 2
-        )
-        corpus = SemanticDedupCorpus(spark, cent)
-        times, recluster_s = [], 0.0
-        for r in range(factor):
-            batch = e.filter(
-                (F.col("vec_id") >= r * OFFSET) & (F.col("vec_id") < (r + 1) * OFFSET)
-            )
-            t0 = time.perf_counter()
-            corpus.ingest(batch, "vec_id", "embedding").write.format("noop").mode(
-                "overwrite"
-            ).save()
-            times.append(time.perf_counter() - t0)
-            if mode == "recluster" and r + 1 in (2, 4, 8):
-                t0 = time.perf_counter()
-                corpus.recluster(k=8 * (r + 1), iters=2)
-                recluster_s += time.perf_counter() - t0
-        corpus.close()
-        out[mode] = {
-            "total_s": round(sum(times) + recluster_s, 2),
-            "last_batch_s": round(times[-1], 2),
-            "recluster_s": round(recluster_s, 2),
-        }
-    return out
-
-
 def run_once(spark, name: str, sf_dir: str) -> tuple[float, int]:
     """(min wall-time of 2 noop-sink reps, output row count). The count
     runs OUTSIDE the timed region (one extra execution) — VERDICT r11
@@ -261,7 +217,6 @@ def main() -> None:
     n_docs = spark.read.parquet(os.path.join(DST, "documents.parquet")).count()
     rows = []
     pair_decomp = None
-    growth = None
     for name in queries:
         base, n_base = run_once(spark, name, SRC)
         big, n_big = run_once(spark, name, DST)
@@ -303,8 +258,6 @@ def main() -> None:
             print(json.dumps({"q": f"{name}@k{8 * factor}", "sf0.1": round(base, 2),
                               "sf1": round(scaled_k, 2),
                               "ratio": round(scaled_k / base, 2)}), flush=True)
-            growth = corpus_growth_probe(spark, factor)
-            print(json.dumps({"q": "semantic_corpus_growth", **growth}), flush=True)
         if name == "substring_dedup_apply":
             # doc-LENGTH axis: same doc count, ×factor tokens per doc
             build_longdocs(spark, factor)
@@ -348,22 +301,6 @@ def main() -> None:
                 "overhead; candidates outgrowing verified pairs would instead\n"
                 "flag banding that stopped pruning (re-tune bands/rows or add\n"
                 "the size-ratio prefilter `ngram_jaccard_pairs` uses).\n"
-            )
-        if growth is not None:
-            fr, rc = growth["frozen"], growth["recluster"]
-            fh.write(
-                "\n## live SemanticDedupCorpus growth (n ×" + str(factor) + ")\n\n"
-                "Replica-sized id-ordered batches ingested into a LIVE corpus;\n"
-                "frozen construction-time k=8 vs `recluster(k ∝ n)` at every\n"
-                "corpus doubling (recluster wall INCLUDED in its path's total).\n\n"
-                "| path | total (s) | final-batch ingest (s) | recluster cost (s) |\n"
-                "|---|---|---|---|\n"
-                f"| frozen k=8 | {fr['total_s']} | {fr['last_batch_s']} | — |\n"
-                f"| recluster k∝n | {rc['total_s']} | {rc['last_batch_s']} | {rc['recluster_s']} |\n\n"
-                "The final-batch column is the divergence signal: under frozen k\n"
-                "the per-batch pair work grows ~|state|/k linearly with corpus\n"
-                "age (quadratic cumulative), while the recluster path holds\n"
-                "cluster sizes — and therefore per-batch cost — bounded.\n"
             )
         fh.write(
             "\nInterpretation: a ratio ≲ 12× on a 10× corpus is at-or-below\n"
