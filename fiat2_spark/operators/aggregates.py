@@ -78,14 +78,13 @@ def dict_index(df: DataFrame, attr: str) -> DataFrame:
     )
 
 
-def fold_array(arr: Column, init: Column, step: Callable[[Column, Column], Column], right: bool = True) -> Column:
+def fold_array(arr: Column, init: Column, step: Callable[[Column, Column], Column]) -> Column:
     """EFold on an array column (Interpret.v:313-319). The reference fold
     is a *right* fold: fold f [a,b,c] i = f a (f b (f c i)); Spark's
     ``F.aggregate`` is a left fold, so reverse first. Arbitrary
     non-commutative bodies are fine — this runs per-row, JVM-side."""
-    seq = F.reverse(arr) if right else arr
     # F.aggregate(col, init, merge) folds left: merge(acc, x)
-    return F.aggregate(seq, init, lambda acc, x: step(x, acc) if right else step(acc, x))
+    return F.aggregate(F.reverse(arr), init, lambda acc, x: step(x, acc))
 
 
 def dict_fold(m: Column, init: Column, step: Callable[[Column, Column, Column], Column]) -> Column:

@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from fiat2_spark.operators.text import tokens
+from fiat2_spark.session import local_checkpoint_tracked, release_blocks
 
 
 def cpu_partitions(df: DataFrame, rows_per_task: int = 500) -> int:
@@ -245,8 +246,9 @@ def dup_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     one left join (keep own label when no neighbor improves it), all
     distributed; the driver reads only a has-anything-changed boolean.
     ``localCheckpoint`` per iteration truncates lineage (plan depth would
-    otherwise grow per round), and retired label snapshots unpersist
-    immediately. Iterations needed = component diameter; near-dup
+    otherwise grow per round), and each superseded label snapshot's
+    blocks are released as soon as the next round is materialized, so
+    the result holds exactly one checkpoint. Iterations needed = component diameter; near-dup
     clusters are shallow (dozens of docs), so this converges in a few
     rounds. At 100 TB-scale graphs with long chains, switch to the
     large-star/small-star contraction (Kiveris et al. 2014), which runs
@@ -261,7 +263,8 @@ def dup_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     # inside minhash bounded the recompute, but the joins above them
     # still ran once per branch). One checkpoint of the edge-list-sized
     # projection, then both union branches are block reads.
-    p = pairs.select("id_a", "id_b").localCheckpoint()
+    spark = pairs.sparkSession
+    p, p_ids = local_checkpoint_tracked(pairs.select("id_a", "id_b"))
     e = p.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     edges = e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -270,11 +273,10 @@ def dup_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     # lbl_0(x) = min(x, min neighbor). Near-dup components are mostly
     # 2-cliques, which are already converged here — the loop then runs a
     # single no-improvement verification round instead of hop + verify.
-    labels = (
+    labels, label_ids = local_checkpoint_tracked(
         edges.groupBy(F.col("src").alias("doc"))
         .agg(F.min("dst").alias("m"))
         .select("doc", F.least(F.col("doc"), F.col("m")).alias("lbl"))
-        .localCheckpoint()
     )
     converged = False
     for _ in range(max_iter):
@@ -289,21 +291,21 @@ def dup_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
         # update join already had side by side — here convergence is a
         # filter+isEmpty over the just-materialized checkpoint blocks,
         # one cheap scan instead of a join per round
-        new = (
+        new, new_ids = local_checkpoint_tracked(
             labels.join(nbr, labels.doc == nbr.dst, "left")
             .select(
                 F.col("doc"),
                 F.least(F.col("lbl"), F.coalesce(F.col("nlbl"), F.col("lbl"))).alias("lbl"),
                 (F.col("nlbl") < F.col("lbl")).alias("__imp"),
             )
-            .localCheckpoint()
         )
         converged = new.filter(F.col("__imp")).isEmpty()
-        labels.unpersist()
-        labels = new.drop("__imp")
+        release_blocks(spark, label_ids)
+        labels, label_ids = new.drop("__imp"), new_ids
         if converged:
             break
     edges.unpersist()
+    release_blocks(spark, p_ids)
     if not converged:
         # the "shallow clusters" assumption is data-dependent: a component
         # whose diameter exceeds max_iter would silently disagree with the
@@ -317,7 +319,7 @@ def dup_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     return labels.select("doc", F.col("lbl").alias("cluster"))
 
 
-def dup_clusters_star(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
+def dup_clusters_star(pairs: DataFrame) -> DataFrame:
     """Connected components by alternating large-star / small-star
     contraction (Kiveris et al. 2014, "Connected Components in
     MapReduce and Beyond") — the long-chain scale path `dup_clusters`'s
@@ -335,9 +337,11 @@ def dup_clusters_star(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
     Both are one symmetric-neighbor expansion, one groupBy-min, one
     join — all distributed, no driver-side state beyond the converged
     flag. Convergence = the edge set reaches the fixpoint where every
-    edge is (node → component-min); checked with exceptAll/isEmpty.
-    ``localCheckpoint`` per round truncates lineage exactly as in
-    `dup_clusters`.
+    edge is (node → component-min); checked with exceptAll/isEmpty,
+    within 50 rounds. ``localCheckpoint`` per round truncates lineage
+    and superseded rounds release their blocks exactly as in
+    `dup_clusters`; the result holds the node and final edge
+    checkpoints.
 
     Input: (id_a, id_b) pairs (directionless). Output: (doc, cluster),
     identical to `dup_clusters` — the same transitive-closure oracle
@@ -347,19 +351,20 @@ def dup_clusters_star(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
     # each re-evaluated the full `pairs` plan (minhash candidate +
     # verify joins) in their own checkpoint job — now both derive from
     # the same blocks.
-    p = pairs.select("id_a", "id_b").localCheckpoint()
+    spark = pairs.sparkSession
+    p, p_ids = local_checkpoint_tracked(pairs.select("id_a", "id_b"))
     nodes = (
         p.select(F.col("id_a").alias("doc"))
         .unionByName(p.select(F.col("id_b").alias("doc")))
         .distinct()
         .localCheckpoint()
     )
-    edges = (
+    edges, edge_ids = local_checkpoint_tracked(
         p.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint()
     )
+    release_blocks(spark, p_ids)
 
     def star(e: DataFrame, large: bool) -> DataFrame:
         sym = e.select(F.col("u").alias("c"), F.col("v").alias("n")).unionByName(
@@ -384,21 +389,22 @@ def dup_clusters_star(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
 
     converged = False
     n_edges = edges.count()
-    for _ in range(max_iter):
-        new = star(star(edges, large=True), large=False).localCheckpoint()
+    for _ in range(50):
+        new, new_ids = local_checkpoint_tracked(star(star(edges, large=True), large=False))
         # both sides are distinct sets, so equal counts + empty one-way
         # difference ⇒ set equality (count is a cheap metadata-ish job;
         # saves the second exceptAll scan per round)
         n_new = new.count()
         converged = n_new == n_edges and new.exceptAll(edges).isEmpty()
-        edges, n_edges = new, n_new
+        release_blocks(spark, edge_ids)
+        edges, edge_ids, n_edges = new, new_ids, n_new
         if converged:
             break
     if not converged:
         raise RuntimeError(
-            f"dup_clusters_star did not converge within max_iter={max_iter} "
-            "rounds — pathological for an O(log²)-round algorithm; check the "
-            "input for self-loops or raise max_iter"
+            "dup_clusters_star did not converge within 50 rounds — "
+            "pathological for an O(log²)-round algorithm; check the "
+            "input for self-loops"
         )
     return nodes.join(
         edges.select(F.col("u").alias("doc"), F.col("v").alias("lbl")), "doc", "left"
@@ -472,9 +478,9 @@ def simhash60_table(df: DataFrame, id_col: str, text_col: str, tokenizer=None) -
 
 
 def simhash_dedup_pairs(
-    df: DataFrame, id_col: str, text_col: str, max_dist: int = 3, tokenizer=None
+    df: DataFrame, id_col: str, text_col: str, tokenizer=None
 ) -> DataFrame:
-    """Near-dup pairs with Hamming(simhash) <= max_dist, found via
+    """Near-dup pairs with Hamming(simhash) <= 3, found via
     banding: 60 bits → 4 bands of 15; distance ≤ 3 pairs share ≥ 1
     intact band (pigeonhole) so the banded equi-join is lossless.
     Returns (id_a, id_b, dist). ``tokenizer`` as in `simhash60_table`.
@@ -482,7 +488,6 @@ def simhash_dedup_pairs(
     Scale note: band values range over 2^15, so random collisions are
     ~n²/2^16 per band — a 16-bit signature (2^4-value nibble bands) made
     the join quadratic at 5k docs (measured 6M+ candidate rows)."""
-    assert max_dist <= 3, "4-band banding is lossless only for dist <= 3"
     sh = simhash60_table(df, id_col, text_col, tokenizer).localCheckpoint()
     band = sh.select(
         "doc",
@@ -513,7 +518,7 @@ def simhash_dedup_pairs(
             F.col("r.doc").alias("id_b"),
             F.bit_count(F.col("l.sh").bitwiseXOR(F.col("r.sh"))).alias("dist"),
         )
-        .filter(F.col("dist") <= max_dist)
+        .filter(F.col("dist") <= 3)
         .distinct()
     )
     return cand
@@ -525,18 +530,16 @@ def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    shingle_n: int = 1,
-    threshold: float = 0.9,
     block_col: str | None = None,
     tokenizer=None,
 ) -> DataFrame:
-    """All-pairs n-gram Jaccard >= threshold, blocked on an optional
+    """All-pairs token-set Jaccard >= 0.9, blocked on an optional
     column (language) AND a **lossless length bucket** that is part of
     the equi-join key — within-bucket cost is bounded by the bucket
     width, never by the block's row count, so the plan survives a
     100× scale-up where a lang-only block is still ~n²/|langs|.
 
-    The bucket: jac(A,B) >= t forces max(|A|,|B|)/min(|A|,|B|) <= 1/t,
+    The bucket (t = 0.9): jac(A,B) >= t forces max(|A|,|B|)/min(|A|,|B|) <= 1/t,
     so with bucket = floor(ln|sh| / ln(1/t)) a qualifying pair lands in
     the same or an adjacent bucket. The left side probes {bkt, bkt+1}
     (a 2× explode, not a widened join), the hash-join key is
@@ -552,6 +555,7 @@ def ngram_jaccard_pairs(
     # num/den: the threshold as exact integer arithmetic (truncation keeps
     # num/den <= threshold, so both the ratio prefilter and the bucket base
     # derived from it are never stricter than the exact bound — lossless)
+    threshold = 0.9
     num, den = int(threshold * 1_000_000), 1_000_000
     # bucket base = the size-ratio bound 1/t exactly (tightest lossless
     # width); the +1e-9 widens buckets a hair so a ratio of exactly 1/t
@@ -562,7 +566,7 @@ def ngram_jaccard_pairs(
     # so size tasks smaller than the linear-pass operators)
     base = df.repartition(cpu_partitions(df, rows_per_task=200)).select(
         F.col(id_col).alias("doc"),
-        shingles(toks, shingle_n).alias("sh"),
+        shingles(toks, 1).alias("sh"),
         *( [F.col(block_col).alias("blk")] if block_col else [] ),
     ).withColumn("sz", F.size(F.col("sh")).cast("long"))
     base = base.withColumn(
@@ -612,15 +616,13 @@ def embedding_dedup_pairs_lsh(
     df: DataFrame,
     id_col: str,
     vec_col: str,
-    threshold: float = 0.4,
-    n_planes: int = 4,
-    dims: int = 64,
 ) -> DataFrame:
-    """Embedding near-dup pairs bounded to random-hyperplane LSH buckets
-    (Charikar 2002 sign-random-projection): each vector hashes to one of
-    2^n_planes buckets, pairs are compared only inside a bucket — the
+    """Embedding near-dup pairs (cosine >= 0.4) bounded to
+    random-hyperplane LSH buckets (Charikar 2002 sign-random-projection,
+    `similarity.ann_lsh_topk`'s planes): each vector hashes to one of
+    2^LSH_PLANES buckets, pairs are compared only inside a bucket — the
     self-join is an *equi*-join on the bucket id (hash join, never a
-    nested-loop), so comparisons scale as Σ|bucket|² ≈ n²/2^n_planes
+    nested-loop), so comparisons scale as Σ|bucket|² ≈ n²/2^LSH_PLANES
     instead of n². Recall is bounded by construction (a near-dup pair
     split across buckets is missed — the standard LSH trade; raise
     recall with more plane sets, i.e. band the buckets like MinHash).
@@ -629,9 +631,11 @@ def embedding_dedup_pairs_lsh(
 
     At 100 TB: the bucket id becomes a write-time partition column and
     the self-join runs per-partition with no cross-bucket shuffle."""
-    from fiat2_spark.operators.similarity import cosine_pre, lsh_bucket, lsh_planes, norm
+    from fiat2_spark.operators.similarity import (
+        LSH_DIMS, LSH_PLANES, cosine_pre, lsh_bucket, lsh_planes, norm,
+    )
 
-    planes = lsh_planes(dims, n_planes)
+    planes = lsh_planes(LSH_DIMS, LSH_PLANES)
     base = df.repartition(cpu_partitions(df, rows_per_task=200)).select(
         F.col(id_col).alias("doc"),
         F.col(vec_col).alias("v"),
@@ -639,7 +643,7 @@ def embedding_dedup_pairs_lsh(
         lsh_bucket(F.col(vec_col), planes).alias("bucket"),
     )
     # checkpoint (eager): both join sides and the verify read this —
-    # without it the n_planes×dims bucket fold (and the hoisted norm) is
+    # without it the planes×dims bucket fold (and the hoisted norm) is
     # recomputed per side (and racing stages each recompute a lazy
     # cache); blocks are sweep-reclaimable, not CacheManager-pinned
     base = base.localCheckpoint()
@@ -656,7 +660,7 @@ def embedding_dedup_pairs_lsh(
                 cosine_pre(F.col("l.v"), F.col("r.v"), F.col("l.nv"), F.col("r.nv")), 6
             ).alias("cos"),
         )
-        .filter(F.col("cos") >= threshold)
+        .filter(F.col("cos") >= 0.4)
     )
 
 
@@ -851,7 +855,7 @@ def substring_dedup_stats(
 
 def substring_dedup_apply(
     df: DataFrame, id_col: str, text_col: str, k: int = 8,
-    chunk_tokens: int = 4096, tokenizer=None,
+    chunk_tokens: int = 4096,
 ) -> DataFrame:
     """APPLY the arbitrary-offset substring dedup: return each document
     with its duplicated spans REMOVED (Lee et al. 2022's actual output
@@ -882,9 +886,8 @@ def substring_dedup_apply(
     explode carries one (doc, pos, tok) row per token but the span
     side is |spans| rows per doc (result-bounded); the anti-join and
     both re-assembly aggregations key on doc(, chunk) — one
-    partitioning family, one exchange. ``tokenizer`` as in
-    `_substring_dup_spans`."""
-    base, spans = _substring_dup_spans(df, id_col, text_col, k, tokenizer)
+    partitioning family, one exchange. Tokens are the ASCII `tokens`."""
+    base, spans = _substring_dup_spans(df, id_col, text_col, k)
     toks_pos = base.select(
         "doc", "n_tokens", F.posexplode("toks").alias("pos", "tok")
     )
@@ -1012,6 +1015,12 @@ def lloyd_centroids(qe: DataFrame, k: int, iters: int) -> DataFrame:
     return cent
 
 
+# The embedding near-duplicate threshold t = 0.4 as t² = 4/25.
+COS_T2_NUM, COS_T2_DEN = 4, 25
+# Lloyd rounds of `semantic_dedup`'s k-means.
+SEMDEDUP_ITERS = 2
+
+
 def cosine_near_pred(
     dot: Column, n2_l: Column, n2_r: Column, t2_num: int, t2_den: int
 ) -> Column:
@@ -1026,15 +1035,10 @@ def cosine_near_pred(
     ) & (dot > 0)
 
 
-def semantic_dedup_members(
-    members: DataFrame,
-    t2_num: int = 4,
-    t2_den: int = 25,
-    pair_salt: int = 16,
-) -> DataFrame:
+def semantic_dedup_members(members: DataFrame, pair_salt: int = 16) -> DataFrame:
     """The SemDeDup prune over a clustered membership relation
     (vid, cid, qv, n2): mark vid duplicate iff SOME same-cluster member
-    with a smaller vid is cosine-near.
+    with a smaller vid is cosine-near (t² = COS_T2_NUM/COS_T2_DEN).
 
     Salted pair join: the MEMBERS (witness) side keys
     (cid, pmod(vid, pair_salt)), the SCORED side replicates
@@ -1049,7 +1053,7 @@ def semantic_dedup_members(
     dot = F.expr(
         "aggregate(zip_with(l.qv, r.qv, (x, y) -> x * y), 0L, (acc, z) -> acc + z)"
     )
-    near = cosine_near_pred(dot, F.col("l.n2"), F.col("r.n2"), t2_num, t2_den)
+    near = cosine_near_pred(dot, F.col("l.n2"), F.col("r.n2"), COS_T2_NUM, COS_T2_DEN)
     l = members.withColumn(
         "salt", F.pmod(F.col("vid"), F.lit(pair_salt)).cast("int")
     ).alias("l")
@@ -1077,14 +1081,11 @@ def semantic_dedup(
     id_col: str,
     vec_col: str,
     k: int = 8,
-    iters: int = 2,
     q: int = 1_000_000,
-    t2_num: int = 4,
-    t2_den: int = 25,
     pair_salt: int = 16,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): cluster the
-    embedding corpus with k-means, then prune within-cluster
+    embedding corpus with SEMDEDUP_ITERS rounds of k-means, then prune within-cluster
     cosine-near-duplicates keeping one representative — a doc is marked
     duplicate iff SOME same-cluster doc with a smaller id has cosine
     similarity above the threshold (the deterministic keep-first rule).
@@ -1105,14 +1106,14 @@ def semantic_dedup(
     approximate): see `quantize_embeddings` / `cosine_near_pred` /
     `lloyd_centroids` — exact integer arithmetic end to end."""
     qe = quantize_embeddings(emb, id_col, vec_col, q)
-    cent = lloyd_centroids(qe, k, iters)
+    cent = lloyd_centroids(qe, k, SEMDEDUP_ITERS)
     af = lloyd_assign(qe, cent)
     # materialize the clustered membership once: it feeds THREE legs
     # (both pair-join sides and the final join-back), which would each
     # re-run the whole Lloyd chain; blocks, not a CacheManager pin
     # (the minhash-shingle discipline — swept by the session owner)
     members = qe.join(af, "vid").select("vid", "cid", "qv", "n2").localCheckpoint()
-    out = semantic_dedup_members(members, t2_num, t2_den, pair_salt)
+    out = semantic_dedup_members(members, pair_salt)
     return out.select(F.col("vid").alias(id_col), "cid", "is_dup")
 
 

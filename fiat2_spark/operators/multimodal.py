@@ -39,7 +39,7 @@ def to_binary_table(df: DataFrame, id_col: str, payload_col: str, kind: str) -> 
     )
 
 
-def extract_byte_features(binary_df: DataFrame, n_partitions: int | None = None) -> DataFrame:
+def extract_byte_features(binary_df: DataFrame) -> DataFrame:
     """Deterministic fake 'feature extraction' over binary payloads via
     mapInPandas: per-payload byte count, additive checksum mod 997, and
     head bytes as hex. Arrow-batched — the exact shape a real decoder
@@ -74,26 +74,17 @@ def extract_byte_features(binary_df: DataFrame, n_partitions: int | None = None)
                 }
             )
 
-    # mapInPandas parallelism = input partition count. Pass n_partitions
-    # (e.g. defaultParallelism) when the per-row work is heavy — a real
-    # image/audio decode — and the input has few partitions; for cheap
-    # extractors the Python-worker fan-out costs more than it saves
-    # (measured: 32-way repartition of a 5k-row byte checksum was 10×
-    # slower than the single-partition run).
-    slim = binary_df.select("doc_id", "payload")
-    if n_partitions is not None:
-        slim = slim.repartition(n_partitions)
-    return slim.mapInPandas(fe, FEATURE_SCHEMA)
+    # mapInPandas parallelism = input partition count. Repartition
+    # only when the per-row work is heavy (`frame_rms`'s n_partitions);
+    # for cheap extractors the Python-worker fan-out costs more than it
+    # saves (measured: 32-way repartition of a 5k-row byte checksum was
+    # 10× slower than the single-partition run).
+    return binary_df.select("doc_id", "payload").mapInPandas(fe, FEATURE_SCHEMA)
 
 
-def sample_frames(
-    binary_df: DataFrame,
-    frame_size: int = 256,
-    every: int = 4,
-    n_partitions: int | None = None,
-) -> DataFrame:
+def sample_frames(binary_df: DataFrame) -> DataFrame:
     """Frame sampling over 'video' payloads: split each payload into
-    fixed ``frame_size``-byte frames and keep every ``every``-th one —
+    fixed 256-byte frames and keep every 4th one —
     the 1→N mapInPandas shape a real frame sampler has (one input row
     fans out to many frame rows; the last frame may be short). Real
     video decode is not implemented; the frame arithmetic,
@@ -109,9 +100,9 @@ def sample_frames(
             ids, idxs, sizes, sums = [], [], [], []
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 buf = np.frombuffer(bytes(payload), dtype=np.uint8)
-                n_frames = -(-len(buf) // frame_size)
-                for f in range(0, n_frames, every):
-                    frame = buf[f * frame_size:(f + 1) * frame_size]
+                n_frames = -(-len(buf) // 256)
+                for f in range(0, n_frames, 4):
+                    frame = buf[f * 256:(f + 1) * 256]
                     ids.append(doc_id)
                     idxs.append(f)
                     sizes.append(len(frame))
@@ -121,24 +112,15 @@ def sample_frames(
                  "frame_checksum": sums}
             )
 
-    slim = binary_df.select("doc_id", "payload")
-    if n_partitions is not None:
-        slim = slim.repartition(n_partitions)
-    return slim.mapInPandas(fs, FRAME_SCHEMA)
+    return binary_df.select("doc_id", "payload").mapInPandas(fs, FRAME_SCHEMA)
 
 
-def resize_grid(
-    binary_df: DataFrame,
-    width: int = 64,
-    stride: int = 2,
-    n_partitions: int | None = None,
-) -> DataFrame:
+def resize_grid(binary_df: DataFrame) -> DataFrame:
     """'Resize' over grid payloads: view each payload as scanlines of
-    ``width`` bytes and keep every ``stride``-th byte of every
-    ``stride``-th row — strided decimation, the index arithmetic of a
-    nearest-neighbor image downsample, expressed purely on byte
-    positions (position p kept ⟺ (p÷width) mod stride = 0 ∧
-    (p mod width) mod stride = 0, so the oracle can recompute it in
+    64 bytes and keep every 2nd byte of every 2nd row — strided
+    decimation, the index arithmetic of a nearest-neighbor image
+    downsample, expressed purely on byte positions (position p kept ⟺
+    (p÷64) mod 2 = 0 ∧ (p mod 64) mod 2 = 0, so the oracle can recompute it in
     SQL). Real pixel decode is stubbed; swapping in a real resampler
     changes only the per-payload body. Output: (doc_id, n_bytes,
     ds_bytes, ds_checksum)."""
@@ -151,7 +133,7 @@ def resize_grid(
             for payload in pdf["payload"]:
                 buf = np.frombuffer(bytes(payload), dtype=np.uint8)
                 idx = np.arange(len(buf))
-                kept = buf[((idx // width) % stride == 0) & ((idx % width) % stride == 0)]
+                kept = buf[((idx // 64) % 2 == 0) & ((idx % 64) % 2 == 0)]
                 n_bytes.append(len(buf))
                 ds_bytes.append(len(kept))
                 ds_sums.append(int(kept.sum(dtype="int64")) % 997)
@@ -160,22 +142,15 @@ def resize_grid(
                  "ds_bytes": ds_bytes, "ds_checksum": ds_sums}
             )
 
-    slim = binary_df.select("doc_id", "payload")
-    if n_partitions is not None:
-        slim = slim.repartition(n_partitions)
-    return slim.mapInPandas(rs, RESIZE_SCHEMA)
+    return binary_df.select("doc_id", "payload").mapInPandas(rs, RESIZE_SCHEMA)
 
 
 AUDIO_SCHEMA = "doc_id bigint, frame_idx bigint, n_samples bigint, rms double"
 
 
-def frame_rms(
-    binary_df: DataFrame,
-    frame_size: int = 256,
-    n_partitions: int | None = None,
-) -> DataFrame:
+def frame_rms(binary_df: DataFrame, n_partitions: int | None = None) -> DataFrame:
     """Windowed RMS over 'audio' payloads: view each payload's bytes as
-    8-bit PCM samples, cut into non-overlapping ``frame_size``-sample
+    8-bit PCM samples, cut into non-overlapping 256-sample
     frames, and emit per-frame root-mean-square energy — the feature
     shape of an audio VAD / loudness pass. Real audio decode is not
     implemented; the framing, int64-exact sum of squares, and the
@@ -192,9 +167,9 @@ def frame_rms(
             ids, idxs, ns, rms = [], [], [], []
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 buf = np.frombuffer(bytes(payload), dtype=np.uint8).astype(np.int64)
-                n_frames = -(-len(buf) // frame_size)
+                n_frames = -(-len(buf) // 256)
                 for f in range(n_frames):
-                    frame = buf[f * frame_size:(f + 1) * frame_size]
+                    frame = buf[f * 256:(f + 1) * 256]
                     ids.append(doc_id)
                     idxs.append(f)
                     ns.append(len(frame))
@@ -271,11 +246,11 @@ def wav_decode(buf: bytes):
     return sample_rate, np.frombuffer(data, dtype="<i2")
 
 
-def audio_rms_wav(binary_df: DataFrame, frame_size: int = 128,
-                  n_partitions: int | None = None) -> DataFrame:
+def audio_rms_wav(binary_df: DataFrame) -> DataFrame:
     """`frame_rms`'s REAL-codec sibling: payloads are actual WAV files,
-    parsed by `wav_decode` (RIFF chunk walk) before the identical
-    framing + int64-exact sum-of-squares → one double division + sqrt.
+    parsed by `wav_decode` (RIFF chunk walk) before the same framing
+    (128-sample frames) + int64-exact sum-of-squares → one double
+    division + sqrt.
     Output: (doc_id, frame_idx, n_samples, rms)."""
 
     def fr(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -288,9 +263,9 @@ def audio_rms_wav(binary_df: DataFrame, frame_size: int = 128,
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 _rate, samples = wav_decode(bytes(payload))
                 buf = samples.astype(np.int64)
-                n_frames = -(-len(buf) // frame_size)
+                n_frames = -(-len(buf) // 128)
                 for f in range(n_frames):
-                    frame = buf[f * frame_size:(f + 1) * frame_size]
+                    frame = buf[f * 128:(f + 1) * 128]
                     ids.append(doc_id)
                     idxs.append(f)
                     ns.append(len(frame))
@@ -299,10 +274,7 @@ def audio_rms_wav(binary_df: DataFrame, frame_size: int = 128,
                 {"doc_id": ids, "frame_idx": idxs, "n_samples": ns, "rms": rms}
             )
 
-    slim = binary_df.select("doc_id", "payload")
-    if n_partitions is not None:
-        slim = slim.repartition(n_partitions)
-    return slim.mapInPandas(fr, WAV_RMS_SCHEMA)
+    return binary_df.select("doc_id", "payload").mapInPandas(fr, WAV_RMS_SCHEMA)
 
 
 def ppm_encode(width: int, height: int, rgb) -> bytes:
@@ -348,8 +320,7 @@ def ppm_decode(buf: bytes):
     return width, height, rgb
 
 
-def image_channel_stats_ppm(binary_df: DataFrame,
-                            n_partitions: int | None = None) -> DataFrame:
+def image_channel_stats_ppm(binary_df: DataFrame) -> DataFrame:
     """Per-channel pixel sums over REAL PPM payloads: `ppm_decode`
     parses the container, then int64-exact R/G/B plane sums — the
     feature shape of a channel-statistics / normalization pass. Output:
@@ -374,7 +345,4 @@ def image_channel_stats_ppm(binary_df: DataFrame,
                  "sum_r": sr, "sum_g": sg, "sum_b": sb}
             )
 
-    slim = binary_df.select("doc_id", "payload")
-    if n_partitions is not None:
-        slim = slim.repartition(n_partitions)
-    return slim.mapInPandas(stats, PPM_STATS_SCHEMA)
+    return binary_df.select("doc_id", "payload").mapInPandas(stats, PPM_STATS_SCHEMA)

@@ -34,24 +34,22 @@ def retag(df: DataFrame, tag: str) -> DataFrame:
 
 # -- EFilter (Language.v:141, Interpret.v:369-404) -------------------------
 
-def filter_rows(df: DataFrame, pred: Column, tag: str = LIKE_BAG) -> DataFrame:
+def filter_rows(df: DataFrame, pred: Column) -> DataFrame:
     """Keep rows satisfying ``pred``. Catalyst pushes the predicate to the
     parquet scan (PushedFilters) — the physical realization of the
     reference's ``filter_pushdown_head`` (RelTransf.v:441-448)."""
-    return retag(df.filter(pred), tag)
+    return df.filter(pred)
 
 
 # -- EProj (Language.v:143, Interpret.v:467-490) ---------------------------
 
-def project(df: DataFrame, cols: dict[str, Column] | Sequence[str], tag: str = LIKE_BAG) -> DataFrame:
+def project(df: DataFrame, cols: dict[str, Column] | Sequence[str]) -> DataFrame:
     """Generalized projection: map each row to a new record. ``cols`` maps
     output field name → expression (fiat2 records are name-sorted, so we
     emit fields in sorted order — Value.v:518-556 canonical form)."""
     if isinstance(cols, dict):
-        out = df.select(*(expr.alias(name) for name, expr in sorted(cols.items())))
-    else:
-        out = df.select(*cols)
-    return retag(out, tag)
+        return df.select(*(expr.alias(name) for name, expr in sorted(cols.items())))
+    return df.select(*cols)
 
 
 # -- EJoin (Language.v:142, Interpret.v:405-466) ---------------------------
@@ -61,7 +59,6 @@ def theta_join(
     right: DataFrame,
     pred: Column,
     result: dict[str, Column] | None = None,
-    tag: str = LIKE_BAG,
     broadcast_right: bool = False,
 ) -> DataFrame:
     """θ-join with fused projection, the reference's only join form.
@@ -77,7 +74,7 @@ def theta_join(
     joined = left.join(r, on=pred, how="inner")
     if result is not None:
         joined = joined.select(*(e.alias(n) for n, e in sorted(result.items())))
-    return retag(joined, tag)
+    return joined
 
 
 def salted_equi_join(
@@ -86,9 +83,8 @@ def salted_equi_join(
     left_key: str,
     right_key: str,
     salt: int = 16,
-    how: str = "inner",
 ) -> DataFrame:
-    """Skew-resistant equi-join: explode the left's hot keys across
+    """Skew-resistant inner equi-join: explode the left's hot keys across
     ``salt`` shuffle partitions by appending a random salt to the key,
     replicating each right row once per salt value. Use when one key
     holds a large share of the rows and the right side is too big to
@@ -107,7 +103,6 @@ def salted_equi_join(
             l_salted[left_key] == r_salted[right_key],
             l_salted["__salt"] == r_salted["__salt"],
         ],
-        how=how,
     )
     return joined.drop("__salt")
 
@@ -232,7 +227,7 @@ def flatmap2_zip(df: DataFrame, arr1: Column, arr2: Column, n1: str, n2: str, ke
 
 # -- ESort (Language.v:139, Interpret.v:351-367) ---------------------------
 
-def sort_canonical(df: DataFrame, cols: Sequence[str] | None = None, tag: str = LIKE_BAG) -> DataFrame:
+def sort_canonical(df: DataFrame, tag: str = LIKE_BAG) -> DataFrame:
     """Canonical whole-row sort by the total value order (Value.v:116-147):
     records compare field-by-field in sorted-name order, so ordering by
     all columns sorted by name reproduces ``value_sort`` (Value.v:499).
@@ -240,8 +235,7 @@ def sort_canonical(df: DataFrame, cols: Sequence[str] | None = None, tag: str = 
     the deduplicated rows."""
     if tag == LIKE_SET:
         df = df.distinct()
-    order = list(cols) if cols is not None else sorted(df.columns)
-    return df.orderBy(*order)
+    return df.orderBy(*sorted(df.columns))
 
 
 # -- EBagOf / ESetOf (Language.v:145-146) ----------------------------------
@@ -283,10 +277,9 @@ def int_range(spark, lo: int, hi: int) -> DataFrame:
 def global_row_number(
     df: DataFrame,
     order_col: str,
-    id_name: str = "rn",
     n_buckets: int | None = None,
 ) -> DataFrame:
-    """Consecutive 1-based ids in the total order of ``order_col``,
+    """Consecutive 1-based ids ``rn`` in the total order of ``order_col``,
     WITHOUT the single-partition global window: ``ROW_NUMBER() OVER
     (ORDER BY k)`` moves every row into one task — the one plan shape
     that cannot scale past a single executor core. This is the Spark
@@ -342,7 +335,7 @@ def global_row_number(
     off_map = F.create_map(*offsets)
     w = W.partitionBy("__bucket").orderBy(order_col)
     return bucketed.withColumn(
-        id_name,
+        "rn",
         F.row_number().over(w).cast("long")
         + F.element_at(off_map, F.col("__bucket")).cast("long"),
     ).drop("__bucket")
@@ -452,7 +445,6 @@ def grouped_rank_family(
     descending: bool = False,
     tiebreak: Sequence[Column] = (),
     n_buckets: int | None = None,
-    ntile_k: int = 4,
 ) -> DataFrame:
     """The ENTIRE ranking family — row_number, rank, dense_rank,
     percent_rank, ntile(k) — per group, without partitioning any heavy
@@ -514,7 +506,7 @@ def grouped_rank_family(
     prnk = F.when(
         n > 1, (rnk - 1).cast("double") / (n - 1).cast("double")
     ).otherwise(F.lit(0.0))
-    k = F.lit(ntile_k).cast("long")
+    k = F.lit(4).cast("long")
     # floor(double) division is exact while counts stay below 2^53 —
     # far beyond any per-group row count
     q, r = F.floor(n / k).cast("long"), n % k
@@ -596,9 +588,7 @@ def grouped_listagg(
     group_cols: Sequence[str],
     order_col: str,
     value_col: Column,
-    sep: str = ",",
     out_name: str = "listagg",
-    n_name: str = "n",
     n_buckets: int | None = None,
 ) -> DataFrame:
     """Ordered LISTAGG per group without any window at all — the
@@ -615,8 +605,8 @@ def grouped_listagg(
        n_buckets-element list — tiny).
 
     String concatenation is associative, so the bucket split is exact:
-    the result equals ``string_agg(value ORDER BY order_col, value)``.
-    Also emits the per-group row count ``n_name`` (summed from the
+    the result equals ``string_agg(value, ',' ORDER BY order_col, value)``.
+    Also emits the per-group row count ``n`` (summed from the
     per-bucket partials). Per-group output strings still materialize
     on one row — LISTAGG's inherent contract — but no single task ever
     holds more than a bucket's rows as a list."""
@@ -631,7 +621,7 @@ def grouped_listagg(
                 ),
                 lambda x: x["v"],
             ),
-            sep,
+            ","
         ).alias("__s"),
         F.count(F.lit(1)).alias("__cnt"),
     )
@@ -645,9 +635,9 @@ def grouped_listagg(
                 ),
                 lambda x: x["s"],
             ),
-            sep,
+            ",",
         ).alias(out_name),
-        F.sum("__cnt").alias(n_name),
+        F.sum("__cnt").alias("n"),
     )
 
 

@@ -46,10 +46,6 @@ def cosine_topk(
     emb: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    qid_col: str = "query_id",
-    qvec_col: str = "qvec",
 ) -> DataFrame:
     """Exact top-k neighbors per query: broadcast the (small) query set
     against the embedding table — the fact side streams, no shuffle of
@@ -62,16 +58,17 @@ def cosine_topk(
     n_queries × corpus scored set (plan-asserted in
     tests/test_plans.py). Don't interpose a projection between the
     filter and the window: the rewrite pattern-matches that exact shape.
+    Input columns: emb (vec_id, embedding), queries (query_id, qvec).
     Output: (query_id, vec_id, cos, rank)."""
     corpus = emb.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("__v"),
-        norm(F.col(vec_col)).alias("__nv"),
+        "vec_id",
+        F.col("embedding").alias("__v"),
+        norm(F.col("embedding")).alias("__nv"),
     )
     qs = queries.select(
-        F.col(qid_col).alias("query_id"),
-        F.col(qvec_col).alias("__qv"),
-        norm(F.col(qvec_col)).alias("__nq"),
+        "query_id",
+        F.col("qvec").alias("__qv"),
+        norm(F.col("qvec")).alias("__nq"),
     )
     scored = corpus.crossJoin(F.broadcast(qs)).select(
         "query_id",
@@ -123,18 +120,10 @@ def ann_ivf_topk(
     emb: DataFrame,
     queries: DataFrame,
     centroids: DataFrame,
-    k: int = 5,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    qid_col: str = "query_id",
-    qvec_col: str = "qvec",
-    cid_col: str = "cent_id",
-    cvec_col: str = "cvec",
 ) -> DataFrame:
     """IVF (inverted-file) ANN: a small centroid set coarse-quantizes the
     corpus — every vector joins the inverted list of its nearest
-    centroid — and a query probes only its ``nprobe`` nearest lists,
+    centroid — and a query probes only its 2 nearest lists,
     reranking exactly inside them. The data-adaptive counterpart of
     ``ann_lsh_topk``: buckets follow the corpus distribution, so a
     skewed embedding space can't collapse into one hash bucket.
@@ -142,51 +131,51 @@ def ann_ivf_topk(
     Both assignment and probing are broadcast joins against the tiny
     centroid table followed by per-vector argmax windows (partitioned —
     fully parallel). At 100 TB the assignment is a write-time partition
-    column (`PARTITIONED BY (cent_id)`): probing `nprobe` lists becomes
+    column (`PARTITIONED BY (cent_id)`): probing 2 lists becomes
     partition pruning and the rerank never touches the other
-    ``n_centroids - nprobe`` shards of the corpus. Centroids are
+    ``n_centroids - 2`` shards of the corpus. Centroids are
     caller-supplied (production: k-means over a sample; any fixed choice
     keeps the operator deterministic and oracle-checkable).
-    Output: (query_id, vec_id, cos, rank)."""
+    Input columns: emb (vec_id, embedding), queries (query_id, qvec),
+    centroids (cent_id, cvec). Output: (query_id, vec_id, cos, rank),
+    top 5 per query."""
     cents = F.broadcast(
-        centroids.select(
-            F.col(cid_col), F.col(cvec_col), norm(F.col(cvec_col)).alias("__nc")
-        )
+        centroids.select("cent_id", "cvec", norm(F.col("cvec")).alias("__nc"))
     )
 
     def nearest(df: DataFrame, ident: str, vcol: str, nvcol: str, keep: int) -> DataFrame:
         scored = df.crossJoin(cents).select(
             df["*"],
-            F.col(cid_col),
+            F.col("cent_id"),
             cosine_pre(
-                F.col(vcol), F.col(cvec_col), F.col(nvcol), F.col("__nc")
+                F.col(vcol), F.col("cvec"), F.col(nvcol), F.col("__nc")
             ).alias("__ccos"),
         )
-        w = W.partitionBy(ident).orderBy(F.col("__ccos").desc(), F.col(cid_col))
+        w = W.partitionBy(ident).orderBy(F.col("__ccos").desc(), F.col("cent_id"))
         return (
             scored.withColumn("__r", F.row_number().over(w))
             .filter(F.col("__r") <= keep)
-            .drop("__ccos", "__r", cvec_col, "__nc")
+            .drop("__ccos", "__r", "cvec", "__nc")
         )
 
     lists = nearest(
         emb.select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).alias("v"),
-            norm(F.col(vec_col)).alias("__nv"),
+            "vec_id",
+            F.col("embedding").alias("v"),
+            norm(F.col("embedding")).alias("__nv"),
         ),
         "vec_id", "v", "__nv", 1,
     )
     probes = nearest(
         queries.select(
-            F.col(qid_col).alias("query_id"),
-            F.col(qvec_col).alias("qv"),
-            norm(F.col(qvec_col)).alias("__nq"),
+            "query_id",
+            F.col("qvec").alias("qv"),
+            norm(F.col("qvec")).alias("__nq"),
         ),
-        "query_id", "qv", "__nq", nprobe,
+        "query_id", "qv", "__nq", 2,
     )
     scored = (
-        lists.join(F.broadcast(probes), cid_col)
+        lists.join(F.broadcast(probes), "cent_id")
         .filter(F.col("vec_id") != F.col("query_id"))
         .select(
             "query_id",
@@ -197,39 +186,35 @@ def ann_ivf_topk(
         )
     )
     w = W.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("vec_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= 5)
 
 
-def ann_lsh_topk(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    n_planes: int = 4,
-    dims: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    qid_col: str = "query_id",
-    qvec_col: str = "qvec",
-) -> DataFrame:
-    """Approximate top-k: candidates = same LSH bucket as the query, then
-    exact cosine rerank inside the bucket. With n_planes=4 each bucket
+# hyperplanes of `ann_lsh_topk` over the 64-dim embeddings (16 buckets)
+LSH_PLANES = 4
+LSH_DIMS = 64
+
+
+def ann_lsh_topk(emb: DataFrame, queries: DataFrame) -> DataFrame:
+    """Approximate top-5: candidates = same LSH bucket as the query, then
+    exact cosine rerank inside the bucket. With LSH_PLANES=4 each bucket
     holds ~1/16 of the corpus — the self-join cost drops 16× and recall
     is whatever the planes give (an *approximate* operator by contract).
     At 100 TB: partition the corpus by bucket once (write-time), and
     queries probe only their bucket's partitions — partition pruning
-    does the candidate generation for free."""
-    planes = lsh_planes(dims, n_planes)
+    does the candidate generation for free. Input columns as
+    `cosine_topk`."""
+    planes = lsh_planes(LSH_DIMS, LSH_PLANES)
     e = emb.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("v"),
-        norm(F.col(vec_col)).alias("__nv"),
-        lsh_bucket(F.col(vec_col), planes).alias("bucket"),
+        "vec_id",
+        F.col("embedding").alias("v"),
+        norm(F.col("embedding")).alias("__nv"),
+        lsh_bucket(F.col("embedding"), planes).alias("bucket"),
     )
     qs = queries.select(
-        F.col(qid_col).alias("query_id"),
-        F.col(qvec_col).alias("qv"),
-        norm(F.col(qvec_col)).alias("__nq"),
-        lsh_bucket(F.col(qvec_col), planes).alias("qbucket"),
+        "query_id",
+        F.col("qvec").alias("qv"),
+        norm(F.col("qvec")).alias("__nq"),
+        lsh_bucket(F.col("qvec"), planes).alias("qbucket"),
     )
     scored = (
         e.join(F.broadcast(qs), F.col("bucket") == F.col("qbucket"))
@@ -243,7 +228,7 @@ def ann_lsh_topk(
         )
     )
     w = W.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("vec_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= 5)
 
 
 # -- lexical retrieval (BM25) -----------------------------------------------
@@ -351,34 +336,28 @@ def tfidf_scores(
 def hard_negatives(
     emb: DataFrame,
     anchors: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-    qid_col: str = "query_id",
-    qvec_col: str = "qvec",
-    qlabel_col: str = "qlabel",
 ) -> DataFrame:
     """Hard-negative mining for retrieval/contrastive training: per
-    anchor, the top-k most-similar corpus vectors whose LABEL differs —
+    anchor, the top-5 most-similar corpus vectors whose LABEL differs —
     near-but-wrong examples, the standard negatives a dual-encoder is
     trained against. Same plan shape as `cosine_topk` (broadcast
     anchors, corpus streams, canonical row_number ≤ k so the grouped-
     limit rewrite keeps a partial WindowGroupLimit below the exchange);
     the label-mismatch filter sits BELOW the window, so the per-anchor
-    candidate set is already negatives-only when ranked. Output:
-    (query_id, neg_id, cos, rank)."""
+    candidate set is already negatives-only when ranked. Input columns:
+    emb (vec_id, embedding, label), anchors (query_id, qvec, qlabel).
+    Output: (query_id, neg_id, cos, rank)."""
     corpus = emb.select(
-        F.col(id_col).alias("neg_id"),
-        F.col(label_col).alias("__lbl"),
-        F.col(vec_col).alias("__v"),
-        norm(F.col(vec_col)).alias("__nv"),
+        F.col("vec_id").alias("neg_id"),
+        F.col("label").alias("__lbl"),
+        F.col("embedding").alias("__v"),
+        norm(F.col("embedding")).alias("__nv"),
     )
     qs = anchors.select(
-        F.col(qid_col).alias("query_id"),
-        F.col(qlabel_col).alias("__qlbl"),
-        F.col(qvec_col).alias("__qv"),
-        norm(F.col(qvec_col)).alias("__nq"),
+        "query_id",
+        F.col("qlabel").alias("__qlbl"),
+        F.col("qvec").alias("__qv"),
+        norm(F.col("qvec")).alias("__nq"),
     )
     scored = (
         corpus.crossJoin(F.broadcast(qs))
@@ -393,7 +372,7 @@ def hard_negatives(
         )
     )
     w = W.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neg_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= 5)
 
 
 def decontaminate_semantic(
@@ -401,9 +380,6 @@ def decontaminate_semantic(
     eval_set: DataFrame,
     id_col: str,
     vec_col: str,
-    q: int = 1_000_000,
-    t2_num: int = 4,
-    t2_den: int = 25,
 ) -> DataFrame:
     """Embedding-space benchmark decontamination: flag every corpus
     document whose embedding is cosine-near ANY held-out evaluation
@@ -420,15 +396,16 @@ def decontaminate_semantic(
     F.exists evaluates the exact-integer cosine predicate
     (`dedup.cosine_near_pred`'s DECIMAL(38,0) comparison — bitwise
     oracle parity, no sqrt) per eval entry with early exit on the first
-    hit. Per-row work is ≤ |eval|·dims integer ops; for an eval set too
+    hit; vectors quantize at 10⁶ and the threshold is t=0.4 (t²=4/25).
+    Per-row work is ≤ |eval|·dims integer ops; for an eval set too
     large to broadcast, the LSH-bucketed candidate path the
     `dedup_embedding` family uses is the swap-in. Returns
     (id, contaminated)."""
-    from fiat2_spark.operators.dedup import quantize_embeddings
+    from fiat2_spark.operators.dedup import COS_T2_DEN, COS_T2_NUM, quantize_embeddings
 
     dec = "decimal(38,0)"
-    qe_c = quantize_embeddings(corpus, id_col, vec_col, q)
-    qe_e = quantize_embeddings(eval_set, id_col, vec_col, q)
+    qe_c = quantize_embeddings(corpus, id_col, vec_col)
+    qe_e = quantize_embeddings(eval_set, id_col, vec_col)
     evals = qe_e.agg(F.collect_list(F.struct("qv", "n2")).alias("evs"))
     dots = F.transform(
         F.col("evs"),
@@ -444,8 +421,8 @@ def decontaminate_semantic(
     near = F.exists(
         "__dots",
         lambda s: (
-            F.lit(t2_den).cast(dec) * s["dot"].cast(dec) * s["dot"].cast(dec)
-            > F.lit(t2_num).cast(dec) * F.col("n2").cast(dec) * s["n2e"].cast(dec)
+            F.lit(COS_T2_DEN).cast(dec) * s["dot"].cast(dec) * s["dot"].cast(dec)
+            > F.lit(COS_T2_NUM).cast(dec) * F.col("n2").cast(dec) * s["n2e"].cast(dec)
         )
         & (s["dot"] > 0),
     )

@@ -26,22 +26,20 @@ CMS_DEPTH = 4
 CMS_WIDTH = 64
 
 
-def cms_cell(val: Column, d: int, width: int = CMS_WIDTH) -> Column:
-    """Row-d cell index: first 8 hex digits of md5('d#' ‖ value) mod width.
+def cms_cell(val: Column, d: int) -> Column:
+    """Row-d cell index: first 8 hex digits of md5('d#' ‖ value) mod CMS_WIDTH.
     32-bit base hash, always positive — identical in any md5-capable
     engine."""
     h = F.conv(F.substring(F.md5(F.concat(F.lit(f"{d}#"), val)), 1, 8), 16, 10).cast("long")
-    return h % width
+    return h % CMS_WIDTH
 
 
 def cms_build(
     df: DataFrame,
     val_col: str,
     weight_col: str | None = None,
-    width: int = CMS_WIDTH,
-    depth: int = CMS_DEPTH,
 ) -> DataFrame:
-    """Sketch table (d, cell, cnt), ≤ depth × width rows. One explode +
+    """Sketch table (d, cell, cnt), ≤ CMS_DEPTH × CMS_WIDTH rows. One explode +
     partial/final aggregate — the shuffle carries sub-sketches, never
     data. Prefer building from a pre-aggregated (value, count) table
     with ``weight_col``: the cell hashing then runs over the distinct
@@ -51,8 +49,8 @@ def cms_build(
         F.col(weight_col).alias("__w") if weight_col else F.lit(1).cast("long").alias("__w"),
         F.explode(
             F.array(*[
-                F.struct(F.lit(d).alias("d"), cms_cell(F.col(val_col), d, width).alias("cell"))
-                for d in range(depth)
+                F.struct(F.lit(d).alias("d"), cms_cell(F.col(val_col), d).alias("cell"))
+                for d in range(CMS_DEPTH)
             ])
         ).alias("dc"),
     )
@@ -61,28 +59,23 @@ def cms_build(
     )
 
 
-def cms_estimate(
-    sketch: DataFrame,
-    queries: DataFrame,
-    q_col: str = "tok",
-    width: int = CMS_WIDTH,
-    depth: int = CMS_DEPTH,
-) -> DataFrame:
-    """Point estimates: est(q) = min_d sketch[d][cell_d(q)] ≥ true count.
+def cms_estimate(sketch: DataFrame, queries: DataFrame) -> DataFrame:
+    """Point estimates per ``queries.tok``: est(q) = min_d
+    sketch[d][cell_d(q)] ≥ true count.
     A value the sketch never saw may still land in occupied cells — the
     estimate is then the (deterministic) CMS over-count, never an error.
     Broadcast-joins the tiny sketch; no shuffle of the query set."""
     qcells = queries.select(
-        F.col(q_col),
+        "tok",
         F.explode(
             F.array(*[
-                F.struct(F.lit(d).alias("d"), cms_cell(F.col(q_col), d, width).alias("cell"))
-                for d in range(depth)
+                F.struct(F.lit(d).alias("d"), cms_cell(F.col("tok"), d).alias("cell"))
+                for d in range(CMS_DEPTH)
             ])
         ).alias("dc"),
-    ).select(q_col, F.col("dc.d").alias("d"), F.col("dc.cell").alias("cell"))
+    ).select("tok", F.col("dc.d").alias("d"), F.col("dc.cell").alias("cell"))
     joined = qcells.join(F.broadcast(sketch), ["d", "cell"], "left")
-    return joined.groupBy(q_col).agg(
+    return joined.groupBy("tok").agg(
         F.min(F.coalesce(F.col("cnt"), F.lit(0).cast("long"))).alias("est")
     )
 

@@ -269,9 +269,8 @@ def bpe_ish_count(toks: Column) -> Column:
     )
 
 
-def stopword_ratio(toks: Column, lang: str = "en") -> Column:
-    sw = [F.lit(w) for w in STOPWORDS[lang]]
-    hits = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS[lang])))
+def stopword_ratio(toks: Column) -> Column:
+    hits = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS["en"])))
     return hits.cast("double") / F.greatest(F.size(toks), F.lit(1)).cast("double")
 
 
@@ -375,9 +374,9 @@ def trigram_scores_table(df, text_col: str, keys: list[str]):
     )
 
 
-def argmax_label(vec: Column, labels: list[str], none_label: str = "und") -> Column:
+def argmax_label(vec: Column, labels: list[str]) -> Column:
     """Deterministic argmax over an arbitrary score vector:
-    ``none_label`` when every score is zero, the EARLIEST label in
+    'und' when every score is zero, the EARLIEST label in
     ``labels`` order wins ties — `lang_argmax_vector` generalized to a
     caller-supplied label set (that function stays pinned to the
     module-global LANGS for the registered ASCII langid queries). Same
@@ -390,7 +389,7 @@ def argmax_label(vec: Column, labels: list[str], none_label: str = "und") -> Col
     )
     m = F.array_max(entries)
     names = F.array(*[F.lit(lab) for lab in labels])
-    return F.when(m["s"] == 0, F.lit(none_label)).otherwise(
+    return F.when(m["s"] == 0, F.lit("und")).otherwise(
         F.element_at(names, (-m["r"] + 1).cast("int"))
     )
 
@@ -602,39 +601,33 @@ def mean_token_len(toks: Column) -> Column:
     return total.cast("double") / F.greatest(F.size(toks), F.lit(1)).cast("double")
 
 
-def quality_score(text: Column, tokenizer=None) -> Column:
-    """Composite quality heuristic in [0,1]: length band + stopword
-    presence + low punctuation + sane word lengths. Weights fixed;
-    deterministic arithmetic only. ``tokenizer`` defaults to the ASCII
-    `tokens`; under `tokens_unicode` the length/band terms see whole
-    multilingual words while the stopword term remains English by
-    construction (see the `tokens_unicode` contract)."""
-    t = (tokenizer or tokens)(text)
+def quality_score(text: Column) -> Column:
+    """Composite quality heuristic in [0,1] over the ASCII `tokens`:
+    length band + English stopword presence + low punctuation + sane
+    word lengths. Weights fixed; deterministic arithmetic only."""
+    t = tokens(text)
     len_term = F.least(F.size(t).cast("double") / 50.0, F.lit(1.0))
-    sw_term = F.least(stopword_ratio(t, "en") * 5.0, F.lit(1.0))
+    sw_term = F.least(stopword_ratio(t) * 5.0, F.lit(1.0))
     punct_term = F.lit(1.0) - F.least(punct_ratio(text) * 4.0, F.lit(1.0))
     mlen = mean_token_len(t)
     len_band = F.when((mlen >= 3.0) & (mlen <= 8.0), 1.0).otherwise(0.5)
     return F.round(0.3 * len_term + 0.3 * sw_term + 0.2 * punct_term + 0.2 * len_band, 6)
 
 
-def fingerprint_md5(text: Column, tokenizer=None) -> Column:
+def fingerprint_md5(text: Column) -> Column:
     """Document fingerprint: md5 of the whitespace-normalized lowercase
-    text — the exact-dedup key. ``tokenizer`` (text → token array)
-    defaults to the ASCII `tokens`; under `tokens_unicode` two
-    documents differing only in non-Latin content get distinct
-    fingerprints instead of colliding on the empty token stream."""
-    return F.md5(F.concat_ws(" ", (tokenizer or tokens)(text)))
+    text (its ASCII `tokens`) — the exact-dedup key."""
+    return F.md5(F.concat_ws(" ", tokens(text)))
 
 
-def rolling_hash(toks: Column, mod: int = 1_000_000_007, mult: int = 31) -> Column:
+def rolling_hash(toks: Column) -> Column:
     """Polynomial rolling hash over the token stream (order-sensitive
-    fingerprint): h = (h*31 + len(tok)*7 + ascii(tok[0])) mod p.
+    fingerprint): h = (h*31 + len(tok)*7 + ascii(tok[0])) mod 1e9+7.
     A sequential left fold — order dependence is the point."""
     return F.aggregate(
         toks,
         F.lit(0).cast("long"),
-        lambda h, t: (h * mult + F.length(t) * 7 + F.ascii(t)) % mod,
+        lambda h, t: (h * 31 + F.length(t) * 7 + F.ascii(t)) % 1_000_000_007,
     )
 
 
@@ -757,16 +750,18 @@ def feature_bucket(feat: Column, buckets: int) -> Column:
     return F.conv(F.substring(F.md5(feat), 1, 8), 16, 10).cast("long") % buckets
 
 
-def dsir_scores(
-    raw, target, id_col: str, text_col: str,
-    buckets: int = 256, quant: int = 10_000, tokenizer=tokens,
-):
+# Every log-ratio and LM cost below is quantized to integer units of
+# 1/QUANT nat, so per-document scores are exact BIGINT sums.
+QUANT = 10_000
+
+
+def dsir_scores(raw, target, id_col: str, text_col: str, buckets: int = 256):
     """DSIR — Data Selection via Importance Resampling (Xie et al.
     2023): score each raw-pool document by how much its hashed n-gram
     distribution looks like the TARGET corpus, and keep the top k.
     Per-bucket importance log-ratio (add-1 smoothed):
 
-        lr[b] = round(ln((n_t[b]+1)·(N_r+B) / ((n_r[b]+1)·(N_t+B)))·quant)
+        lr[b] = round(ln((n_t[b]+1)·(N_r+B) / ((n_r[b]+1)·(N_t+B)))·QUANT)
 
     quantized to an exact BIGINT so the per-doc score Σ_features lr[b]
     is pure integer arithmetic (the repo's engine-parity discipline —
@@ -786,11 +781,7 @@ def dsir_scores(
     factor). The lr table is ≤B rows (broadcast); the totals are 1-row
     aggregates (broadcast); scoring is a broadcast join + per-doc sum;
     top-k is TakeOrderedAndProject — no global sort, no all-pairs
-    anything.
-
-    ``tokenizer``: `tokens` (ASCII default) or `tokens_unicode` — the
-    fit/score pairing contract (see `tokens_unicode`): BOTH corpora
-    featurize through the one tokenizer passed here."""
+    anything. Both corpora featurize through the ASCII `tokens`."""
     def bucketed(df):
         # the featurize pass is CPU-bound: spread the (often
         # single-row-group) scan across right-sized partitions first —
@@ -799,7 +790,7 @@ def dsir_scores(
 
         return df.repartition(cpu_partitions(df)).select(
             F.col(id_col).alias("doc"),
-            F.explode(ngram_strings(tokenizer(F.col(text_col)))).alias("feat"),
+            F.explode(ngram_strings(tokens(F.col(text_col)))).alias("feat"),
         ).select(
             "doc", feature_bucket(F.col("feat"), buckets).alias("bucket")
         ).localCheckpoint()
@@ -826,7 +817,7 @@ def dsir_scores(
                         * (F.col("tot_t") + buckets)
                     ).cast("double")
                 )
-                * quant
+                * QUANT
             )
             .cast("long")
             .alias("lr"),
@@ -841,27 +832,22 @@ def dsir_scores(
 
 
 def dsir_importance(
-    raw, target, id_col: str, text_col: str,
-    buckets: int = 256, quant: int = 10_000, k: int = 100, tokenizer=tokens,
+    raw, target, id_col: str, text_col: str, buckets: int = 256, k: int = 100,
 ):
     """Top-k selection by raw DSIR importance score (`dsir_scores`) —
     ties on doc id; TakeOrderedAndProject, no global sort."""
     return (
-        dsir_scores(raw, target, id_col, text_col, buckets, quant, tokenizer)
+        dsir_scores(raw, target, id_col, text_col, buckets)
         .orderBy(F.desc("score"), id_col)
         .limit(k)
     )
 
 
-def dsir_resample(
-    raw, target, id_col: str, text_col: str,
-    buckets: int = 256, quant: int = 10_000, k: int = 64, temp: float = 1.0,
-    tokenizer=tokens,
-):
-    """DSIR's actual RESAMPLING step (Xie et al. 2023 §3): draw k
-    documents with probability ∝ exp(score/T) WITHOUT replacement via
+def dsir_resample(raw, target, id_col: str, text_col: str):
+    """DSIR's actual RESAMPLING step (Xie et al. 2023 §3): draw 64
+    documents with probability ∝ exp(score/T), T=1, WITHOUT replacement via
     the Gumbel top-k trick — key = score/T + Gumbel(0,1), keep the k
-    largest keys. The Gumbel noise is deterministic and
+    largest keys, over `dsir_scores` with 256 buckets. The Gumbel noise is deterministic and
     engine-portable: u = (52 salted-md5 bits + 1)/(2⁵²+1), g =
     −ln(−ln u) (no RNG state — the Efraimidis–Spirakis discipline
     `sample_weighted` established). The +1 denominator keeps u in the
@@ -870,7 +856,7 @@ def dsir_resample(
     Keys round to 6 decimals so a last-ulp libm-ln difference cannot
     reorder near-equal keys; doc id breaks ties. Top-k is
     TakeOrderedAndProject — the exchange never carries the pool."""
-    scores = dsir_scores(raw, target, id_col, text_col, buckets, quant, tokenizer)
+    scores = dsir_scores(raw, target, id_col, text_col)
     u = (
         F.conv(
             F.substring(
@@ -882,25 +868,29 @@ def dsir_resample(
         + F.lit(1.0)
     ) / F.lit(float((1 << 52) + 1))
     key = F.round(
-        F.col("score").cast("double") / F.lit(float(quant) * temp) - F.log(-F.log(u)),
+        F.col("score").cast("double") / F.lit(float(QUANT)) - F.log(-F.log(u)),
         6,
     )
     return (
         scores.withColumn("gkey", key)
         .orderBy(F.desc("gkey"), id_col)
-        .limit(k)
+        .limit(64)
     )
 
 
-def _vocab_mapped(df, col: str, vocab, unk: str):
+# the out-of-vocabulary token of every LM vocab
+UNK = "<unk>"
+
+
+def _vocab_mapped(df, col: str, vocab):
     """Replace ``col`` with its vocab-mapped value: itself if in the
-    broadcast vocab relation, else the ``unk`` token — CCNet's
+    broadcast vocab relation, else the UNK token — CCNet's
     closed-vocabulary step that bounds every LM table by the vocab, not
     the corpus."""
     probe = vocab.select(F.col("w").alias(f"__v_{col}"))
     return (
         df.join(F.broadcast(probe), df[col] == F.col(f"__v_{col}"), "left")
-        .withColumn(col, F.coalesce(F.col(f"__v_{col}"), F.lit(unk)))
+        .withColumn(col, F.coalesce(F.col(f"__v_{col}"), F.lit(UNK)))
         .drop(f"__v_{col}")
     )
 
@@ -936,12 +926,7 @@ def _grams(df, n: int, key: list[str], text_col: str, tokenizer,
     )
 
 
-def lm_fit(
-    ref, text_col: str, order: int = 2,
-    vocab_size: int = 1024, quant: int = 10_000,
-    alpha_num: int = 2, alpha_den: int = 5, unk: str = "<unk>",
-    tokenizer=tokens,
-):
+def lm_fit(ref, text_col: str, order: int = 2, vocab_size: int = 1024, tokenizer=tokens):
     """Fit an order-n n-gram LM with stupid backoff (Brants et al.
     2007, "Large Language Models in Machine Translation" §4 — the
     distributed web-scale LM recipe: relative frequencies, no
@@ -952,15 +937,15 @@ def lm_fit(
     Model (everything integer until a single ln per TABLE row, the
     `dsir_scores` lr discipline — never a float op per token):
       vocab  = top ``vocab_size`` ref unigrams by (count desc, word);
-               every other token maps to ``unk``
+               every other token maps to UNK
       level k ≥ 2, seen k-gram:  S = α^(n−k) · c_k / c_{k−1}(context)
       level 1 (any word):        S = α^(n−1) · (c1(w)+1) / (N + V + 1)
-      α = alpha_num/alpha_den; add-1 on the vocab-closed unigram keeps
+      α = 2/5; add-1 on the vocab-closed unigram keeps
       S > 0; context counts are the plain (k−1)-gram counts — stupid
       backoff is deliberately unnormalized, so the document-edge count
       mismatch the paper accepts is accepted here too.
-      cost q_k = round(−ln S · quant), exact BIGINT: α_num^(n−k)·c_k and
-      α_den^(n−k)·c_{k−1} are formed in integers and each cast to double
+      cost q_k = round(−ln S · QUANT), exact BIGINT: 2^(n−k)·c_k and
+      5^(n−k)·c_{k−1} are formed in integers and each cast to double
       once, so every ln argument is an exact-integer ratio both engines
       form bit-identically.
     The bigram (n=2) is seen-bigram, else α·unigram; the trigram adds
@@ -988,10 +973,10 @@ def lm_fit(
     def cost(num, den, e: int):
         return F.round(
             -F.log(
-                (num * alpha_num**e).cast("double")
-                / (den * alpha_den**e).cast("double")
+                (num * 2**e).cast("double")
+                / (den * 5**e).cast("double")
             )
-            * quant
+            * QUANT
         ).cast("long")
 
     ref_uni = ref.select(
@@ -1004,16 +989,16 @@ def lm_fit(
     )
     tot = ref_uni.agg(F.count(F.lit(1)).alias("n_tot"))
     counts = [
-        _vocab_mapped(ref_uni, "w", vocab, unk)
+        _vocab_mapped(ref_uni, "w", vocab)
         .groupBy("w").agg(F.count(F.lit(1)).alias("n"))
     ]
     for k in range(2, order + 1):
         g = _grams(ref, k, [], text_col, tokenizer)
         for c in _gram_cols(k):
-            g = _vocab_mapped(g, c, vocab, unk)
+            g = _vocab_mapped(g, c, vocab)
         ck = g.groupBy(*_gram_cols(k)).agg(F.count(F.lit(1)).alias("n"))
         counts.append(ck.localCheckpoint() if k < order else ck)
-    dom = vocab.unionByName(spark.createDataFrame([(unk,)], "w string"))
+    dom = vocab.unionByName(spark.createDataFrame([(UNK,)], "w string"))
     add1 = F.coalesce("n", F.lit(0)) + 1
     denom = F.col("n_tot") + vocab_size + 1
     tables = [
@@ -1037,9 +1022,7 @@ def lm_fit(
 
 def lm_perplexity(
     raw, ref, id_col: str, text_col: str,
-    vocab_size: int = 1024, quant: int = 10_000,
-    alpha_num: int = 2, alpha_den: int = 5, unk: str = "<unk>",
-    tokenizer=tokens, order: int = 2,
+    vocab_size: int = 1024, tokenizer=tokens, order: int = 2,
 ):
     """CCNet-style n-gram LM scoring (Wenzek et al. 2019,
     arXiv:1911.00359 §4.3 "LM filtering"): score every RAW document by
@@ -1054,7 +1037,7 @@ def lm_perplexity(
 
     Returns (id, n_trans, nll_q) for EVERY raw document: n_trans =
     max(len(toks)−(n−1), 0) scored transitions, nll_q = Σ q as BIGINT
-    (mean NLL in nats = nll_q / (quant·n_trans)). Docs with < n tokens
+    (mean NLL in nats = nll_q / (QUANT·n_trans)). Docs with < n tokens
     score (0, 0).
 
     Scale: one explode + n broadcast probes + a per-doc
@@ -1070,14 +1053,12 @@ def lm_perplexity(
 
     ``tokenizer``: the ref LM is FIT and the raw corpus SCORED through
     the one tokenizer passed here (see `lm_fit`)."""
-    vocab, tables = lm_fit(
-        ref, text_col, order, vocab_size, quant, alpha_num, alpha_den, unk, tokenizer
-    )
+    vocab, tables = lm_fit(ref, text_col, order, vocab_size, tokenizer)
     rt = _grams(raw, order, [id_col], text_col, tokenizer, outer=True).withColumn(
         "__real", F.col("w").isNotNull()
     )
     for c in _gram_cols(order):
-        rt = _vocab_mapped(rt, c, vocab, unk)
+        rt = _vocab_mapped(rt, c, vocab)
     for k in range(order, 0, -1):
         rt = rt.join(F.broadcast(tables[k - 1]), _gram_cols(k), "left")
     real = F.col("__real")
@@ -1090,32 +1071,23 @@ def lm_perplexity(
 
 def perplexity_filter(
     raw, ref, id_col: str, text_col: str, threshold_q: int,
-    vocab_size: int = 1024, quant: int = 10_000,
-    alpha_num: int = 2, alpha_den: int = 5, tokenizer=tokens,
+    vocab_size: int = 1024, tokenizer=tokens,
 ):
     """CCNet's LM quality gate: keep a document iff its MEAN per-token
     NLL under the ref-fit bigram LM (`lm_fit`) is at most
-    threshold_q/quant nats — evaluated as the exact integer comparison
+    threshold_q/10⁴ nats — evaluated as the exact integer comparison
     ``nll_q ≤ threshold_q · n_trans`` (no float division, so the
     decision is engine-bitwise). Docs with no transitions keep
     trivially (0 ≤ 0 — nothing to judge them on; CCNet routes such
     fragments to its "middle" bucket, a threshold policy knob).
     Returns (id, n_trans, nll_q, keep)."""
-    s = lm_perplexity(
-        raw, ref, id_col, text_col, vocab_size, quant, alpha_num, alpha_den,
-        tokenizer=tokenizer,
-    )
+    s = lm_perplexity(raw, ref, id_col, text_col, vocab_size, tokenizer=tokenizer)
     return s.withColumn(
         "keep", F.col("nll_q") <= F.lit(threshold_q) * F.col("n_trans")
     )
 
 
-def ccnet_buckets(
-    raw, ref, id_col: str, text_col: str, lang_col: str,
-    vocab_size: int = 1024, quant: int = 10_000,
-    alpha_num: int = 2, alpha_den: int = 5, tokenizer=tokens,
-    mq_scale: int = 1_000_000,
-):
+def ccnet_buckets(raw, ref, id_col: str, text_col: str, lang_col: str):
     """CCNet's head/middle/tail perplexity bucketing (Wenzek et al.
     2019, arXiv:1911.00359 §4.3): rank every document by its mean
     per-transition NLL under the ref-fit LM (`lm_perplexity`) WITHIN
@@ -1126,7 +1098,7 @@ def ccnet_buckets(
     high-resource languages' perplexity range.
 
     Exactness discipline: the ranking key is the integer
-    mq = (nll_q · mq_scale) div n_trans (BIGINT division — never a
+    mq = (nll_q · 10⁶) div n_trans (BIGINT division — never a
     float mean whose last ulp could reorder near-ties), ties break on
     doc id, and the tercile cuts are integer cross-multiplications
     (3·rn ≤ n, 3·rn ≤ 2n) — rank-based, so both engines agree bitwise
@@ -1142,10 +1114,7 @@ def ccnet_buckets(
     1000-executor cluster. Returns (id, lang, mq, bucket)."""
     from fiat2_spark.operators.relational import grouped_row_number
 
-    s = lm_perplexity(
-        raw, ref, id_col, text_col, vocab_size, quant,
-        alpha_num, alpha_den, tokenizer=tokenizer,
-    ).filter(F.col("n_trans") > 0)
+    s = lm_perplexity(raw, ref, id_col, text_col).filter(F.col("n_trans") > 0)
     # checkpoint the scored relation (batch block contract): three
     # consumers read it — the ranking's quantile sketch (an ACTION),
     # the ranking itself, and the per-language totals — and each would
@@ -1155,7 +1124,7 @@ def ccnet_buckets(
         s.join(raw.select(id_col, lang_col), id_col)
         .withColumn(
             "mq",
-            F.expr(f"(nll_q * CAST({mq_scale} AS BIGINT)) div n_trans"),
+            F.expr("(nll_q * CAST(1000000 AS BIGINT)) div n_trans"),
         )
         .localCheckpoint()
     )
@@ -1190,7 +1159,6 @@ def gopher_rules(
     id_col: str,
     text_col: str,
     min_words: int = 50,
-    max_words: int = 100_000,
     tokenizer=tokens,
     alpha_pattern: str = "[a-z]",
 ):
@@ -1200,7 +1168,7 @@ def gopher_rules(
     each rule is a separate boolean column so a pipeline can bucket or
     ablate per rule, and `keep` is their conjunction.
 
-      r_word_count : min_words ≤ #words ≤ max_words
+      r_word_count : min_words ≤ #words ≤ 100,000
       r_mean_len   : mean word length in [3, 10]
       r_symbol     : (#'#' + #'...') / #words < 0.1
       r_bullet     : < 90% of lines start with a bullet
@@ -1259,7 +1227,7 @@ def gopher_rules(
     )
     sym = F.col("__hash_cnt") + F.col("__ell_cnt")
     rules = {
-        "r_word_count": (n >= min_words) & (n <= max_words),
+        "r_word_count": (n >= min_words) & (n <= 100_000),
         "r_mean_len": (F.lit(3) * n <= total_chars)
         & (total_chars <= F.lit(10) * n),
         "r_symbol": F.lit(10) * sym < n,
@@ -1350,11 +1318,11 @@ def nb_counts(train, id_col: str, text_col: str, label_col: str, buckets: int,
 
 def nb_score_from_counts(
     score, counts, ftot, dtot, id_col: str, text_col: str,
-    buckets: int = 256, quant: int = 10_000, tokenizer=tokens,
+    buckets: int = 256, tokenizer=tokens,
 ):
     """Classify with a model given as sufficient statistics: per-bucket
-    weight w[b] = round(ln((n_p+1)·(tot_n+B) / ((n_n+1)·(tot_p+B)))·quant)
-    and bias = round(ln((docs_p+1)/(docs_n+1))·quant) — the single ln
+    weight w[b] = round(ln((n_p+1)·(tot_n+B) / ((n_n+1)·(tot_p+B)))·QUANT)
+    and bias = round(ln((docs_p+1)/(docs_n+1))·QUANT) — the single ln
     per TABLE row immediately quantized to BIGINT, so per-doc scoring
     is pure integer sums and both engines agree bitwise. Buckets never
     observed in training contribute nothing (inner probe — the oracle
@@ -1375,7 +1343,7 @@ def nb_score_from_counts(
                     * (F.col("tot_p") + buckets)
                 ).cast("double")
             )
-            * quant
+            * QUANT
         )
         .cast("long")
         .alias("w"),
@@ -1386,7 +1354,7 @@ def nb_score_from_counts(
                 (F.col("docs_p") + 1).cast("double")
                 / (F.col("docs_n") + 1).cast("double")
             )
-            * quant
+            * QUANT
         )
         .cast("long")
         .alias("bias")
@@ -1420,9 +1388,7 @@ def nb_classifier_scores(
     score,
     id_col: str,
     text_col: str,
-    label_col: str = "label",
     buckets: int = 256,
-    quant: int = 10_000,
     tokenizer=tokens,
 ):
     """fastText-style linear text classifier (Joulin et al. 2016,
@@ -1438,16 +1404,16 @@ def nb_classifier_scores(
     Plan: one featurize pass per corpus; the model is a ≤B-row
     broadcast + a 1-row bias; scoring is a broadcast join + per-doc
     partial-agg sum; docs with zero features score the bare bias via
-    the final left join. Returns (id, logit_q, pred).
+    the final left join. ``train`` carries a boolean ``label``.
+    Returns (id, logit_q, pred).
 
     ``tokenizer``: `tokens` (ASCII default) or `tokens_unicode` — the
     fit/score pairing contract (see `tokens_unicode`): train and score
     corpora featurize through the one tokenizer passed here."""
-    counts, ftot, dtot = nb_counts(train, id_col, text_col, label_col, buckets,
+    counts, ftot, dtot = nb_counts(train, id_col, text_col, "label", buckets,
                                    tokenizer=tokenizer)
     return nb_score_from_counts(
-        score, counts, ftot, dtot, id_col, text_col, buckets, quant,
-        tokenizer=tokenizer,
+        score, counts, ftot, dtot, id_col, text_col, buckets, tokenizer=tokenizer,
     )
 
 
@@ -1492,25 +1458,22 @@ def token_budget_select(
     return cum.filter(F.col("cum_tokens") <= budget).drop("__g")
 
 
-def length_bucket_batches(
-    df, id_col: str, ntok_col: str,
-    band_width: int = 64, batch_size: int = 16,
-):
+def length_bucket_batches(df, id_col: str, ntok_col: str):
     """Length-bucketed batch construction — the padding-efficiency step
     of a padded-batch training pipeline (the bucket-by-length batching
     fairseq/T5-style loaders use; `pack_sequences` is the
     concat-and-cut alternative for decoder-only training): documents
-    land in fixed-width length BANDS (band = ⌊(n_tok−1)/band_width⌋ —
+    land in 64-token length BANDS (band = ⌊(n_tok−1)/64⌋ —
     pure integer arithmetic, no float-log band edges to disagree on),
     are ordered within a band by (n_tok desc, id), and cut into
-    ``batch_size``-document batches — so each batch pads to its own
+    16-document batches — so each batch pads to its own
     max length, which band-local ordering keeps close to every
     member's length. Documents with zero tokens are excluded (nothing
     to batch; mirrored by the oracle).
 
     Plan: the per-band numbering runs through `grouped_row_number`'s
     quantile-bucket scheme — bands are LOW-cardinality (corpus length
-    range / band_width), exactly the regime where a plain
+    range / 64), exactly the regime where a plain
     band-partitioned window would plan |bands| tasks on a
     1000-executor cluster; value-pure bucketing + the id tiebreak keep
     ranks deterministic. Everything else is codegen'd arithmetic.
@@ -1522,7 +1485,7 @@ def length_bucket_batches(
         .select(F.col(id_col), F.col(ntok_col).cast("long").alias("__nt"))
         .withColumn(
             "band",
-            F.floor((F.col("__nt") - 1) / F.lit(float(band_width))).cast("long"),
+            F.floor((F.col("__nt") - 1) / F.lit(64.0)).cast("long"),
         )
     )
     rn = grouped_row_number(
@@ -1533,7 +1496,7 @@ def length_bucket_batches(
         F.col(id_col),
         F.col("__nt").alias(ntok_col),
         "band",
-        F.floor((F.col("__rn") - 1) / F.lit(float(batch_size)))
+        F.floor((F.col("__rn") - 1) / F.lit(16.0))
         .cast("long")
         .alias("batch_id"),
     )
@@ -1541,14 +1504,18 @@ def length_bucket_batches(
 
 # --- DoReMi domain reweighting (Xie et al. 2023, arXiv:2305.10429) ---
 
+# Smoothing toward uniform, c = DOREMI_SMOOTH_NUM/DOREMI_SMOOTH_DEN;
+# the trajectory's exp-factor scale and its mixture's fixed-point
+# scale. `workloads/pipeline.py`'s trajectory oracle reads the same
+# constants.
+DOREMI_SMOOTH_NUM, DOREMI_SMOOTH_DEN = 1, 100
+DOREMI_TRAJ_ESCALE = 10**6
+DOREMI_ASCALE = 10**9
+
 
 def doremi_weights(
     pool, ref, id_col: str, text_col: str, domain_col: str,
-    vocab_size: int = 1024, quant: int = 10_000,
-    alpha_num: int = 2, alpha_den: int = 5,
-    eta_num: int = 1, eta_den: int = 1,
-    smooth_num: int = 1, smooth_den: int = 100,
-    escale: int = 10**9, tokenizer=tokens,
+    vocab_size: int = 1024,
 ):
     """DoReMi domain reweighting (Xie et al. 2023, arXiv:2305.10429):
     one Group-DRO multiplicative-weights step over the pool's domains.
@@ -1560,8 +1527,10 @@ def doremi_weights(
 
         exc(prev,w) = max(0, q_uni(w) − q_bi(prev,w))      [exact BIGINT]
         λq_k = round(Σ_k exc / Σ_k 1)        [quant-units/transition]
-        e_k  = round(exp(η·(λq_k − max λq)/quant) · escale) [≤ escale]
-        α_k  = (1−c) · e_k / Σ e  +  c / K,   rounded to 6 dp
+        e_k  = round(exp((λq_k − max λq)/QUANT) · escale) [≤ escale = 10⁹]
+        α_k  = (1−c) · e_k / Σ e  +  c / K,   rounded to 6 dp,  c = 1/100
+
+    (step size η = 1).
 
     The max-shift before the exp is softmax stabilization: it cancels
     in the normalization but bounds e_k ≤ escale, so the exact-integer
@@ -1569,12 +1538,12 @@ def doremi_weights(
     loss grows (un-shifted, λ > ~22.9 nats would).
 
     Engine-parity discipline: every per-token quantity is an integer
-    (q_uni/q_bi are the usual round(-ln(exact-int ratio)·quant)); the
+    (q_uni/q_bi are the usual round(-ln(exact-int ratio)·QUANT)); the
     per-domain exp runs ONCE per domain on an exact-integer-ratio
     argument and is immediately quantized to e_k, so the normalizing
     sum Σ e is exact integer arithmetic — no float summation-order
     hazard between engines. Domains with no scorable transition get
-    λ = 0 (so e = round(exp(-λ_max/quant)·escale), the minimum of the
+    λ = 0 (so e = round(exp(-λ_max/QUANT)·escale), the minimum of the
     softmax; e = escale only when λ_max = 0), never NULL.
 
     Scale: LM tables are MODEL-sized broadcasts (≤V+1 unigrams,
@@ -1595,10 +1564,7 @@ def doremi_weights(
     # probes + per-domain agg; only the ref-side fit inside
     # _doremi_domain_stats was checkpointed). Blocks, not a
     # CacheManager pin — the batch block contract.
-    per = _doremi_domain_stats(
-        pool, ref, text_col, domain_col,
-        vocab_size, quant, alpha_num, alpha_den, tokenizer=tokenizer,
-    ).localCheckpoint()
+    per = _doremi_domain_stats(pool, ref, text_col, domain_col, vocab_size).localCheckpoint()
     # λ quantized to integer quant-units per transition, then softmax-
     # stabilized by the max BEFORE the exp: e_k = round(exp(η·(λ_k −
     # λ_max))·escale) ≤ escale, so e never overflows BIGINT no matter
@@ -1617,33 +1583,29 @@ def doremi_weights(
         "e",
         F.round(
             F.exp(
-                ((F.col("lamq") - F.col("lam_max")) * eta_num).cast("double")
-                / F.lit(float(quant * eta_den))
+                (F.col("lamq") - F.col("lam_max")).cast("double") / F.lit(float(QUANT))
             )
-            * escale
+            * 10**9
         ).cast("long"),
     )
+    sn, sd = DOREMI_SMOOTH_NUM, DOREMI_SMOOTH_DEN
     return (
         per.withColumn("e_sum", F.sum("e").over(wk))
         .withColumn("k_dom", F.count(F.lit(1)).over(wk))
         .select(
             "domain", "n_docs", "n_trans", "excess_q",
             F.round(
-                (F.col("e") * (smooth_den - smooth_num)).cast("double")
-                / (F.col("e_sum") * smooth_den).cast("double")
-                + F.lit(smooth_num).cast("double")
-                / (F.col("k_dom") * smooth_den).cast("double"),
+                (F.col("e") * (sd - sn)).cast("double")
+                / (F.col("e_sum") * sd).cast("double")
+                + F.lit(sn).cast("double")
+                / (F.col("k_dom") * sd).cast("double"),
                 6,
             ).alias("weight"),
         )
     )
 
 
-def _doremi_domain_stats(
-    pool, ref, text_col: str, domain_col: str,
-    vocab_size: int = 1024, quant: int = 10_000,
-    alpha_num: int = 2, alpha_den: int = 5, tokenizer=tokens,
-):
+def _doremi_domain_stats(pool, ref, text_col: str, domain_col: str, vocab_size: int):
     """The shared DoReMi corpus pass: per-domain excess-loss statistics
     (domain, n_docs, n_trans, excess_q, lamq) with lamq the quantized
     integer mean excess per transition (0 for domains with no scorable
@@ -1654,16 +1616,13 @@ def _doremi_domain_stats(
     join back. `doremi_weights` (one step) and
     `doremi_weights_trajectory` (Algorithm 1's T rounds) both start
     here, so the expensive pass is defined once."""
-    unk = "<unk>"
-    vocab, (q1, q2) = lm_fit(
-        ref, text_col, 2, vocab_size, quant, alpha_num, alpha_den, unk, tokenizer
-    )
+    vocab, (q1, q2) = lm_fit(ref, text_col, 2, vocab_size)
     # score pool transitions: excess = max(0, baseline − reference).
     # The domain rides the explode itself — no corpus-keyed join back
     # to the pool (the one shuffle a doc-keyed formulation would add).
-    pt = _grams(pool, 2, [domain_col], text_col, tokenizer)
+    pt = _grams(pool, 2, [domain_col], text_col, tokens)
     for c in _gram_cols(2):
-        pt = _vocab_mapped(pt, c, vocab, unk)
+        pt = _vocab_mapped(pt, c, vocab)
     exc = (
         pt.join(F.broadcast(q2), ["p1", "w"], "left")
         .join(F.broadcast(q1), "w")
@@ -1698,12 +1657,7 @@ def _doremi_domain_stats(
 def doremi_weights_trajectory(
     pool, ref, id_col: str, text_col: str, domain_col: str,
     rounds: int = 5,
-    vocab_size: int = 1024, quant: int = 10_000,
-    alpha_num: int = 2, alpha_den: int = 5,
-    eta_num: int = 1, eta_den: int = 1,
-    smooth_num: int = 1, smooth_den: int = 100,
-    escale: int = 10**6, ascale: int = 10**9,
-    tokenizer=tokens,
+    vocab_size: int = 1024,
 ):
     """Multi-round DoReMi (Xie et al. 2023 Algorithm 1): iterate the
     Group-DRO multiplicative-weights update T times and return the
@@ -1717,17 +1671,18 @@ def doremi_weights_trajectory(
     is a genuine iteration, not a closed form.
 
     Integer discipline (the engine/oracle parity contract): α is
-    fixed-point in units of 1/ascale (a_k ≤ ascale always, since the
-    update is a convex combination scaled by ascale), the
-    multiplicative factor e_k = round(exp(η·(λ_k−λ_max)/quant)·escale)
-    ≤ escale = 10⁶ is quantized ONCE (λ static → e static), so the
+    fixed-point in units of 1/ascale, ascale = DOREMI_ASCALE = 10⁹
+    (a_k ≤ ascale always, since the update is a convex combination
+    scaled by ascale), the multiplicative factor
+    e_k = round(exp((λ_k−λ_max)/QUANT)·escale) ≤ escale =
+    DOREMI_TRAJ_ESCALE = 10⁶ is quantized ONCE (λ static → e static), so the
     per-round mass m_k = a_k·e_k ≤ 10¹⁵ and Σm ≤ K·10¹⁵ stay exact
     BIGINTs; the only floats are one division pair per round with a
     pinned evaluation order ((m·w1)/Σm + w2/(K·sd)) that Spark and
     DuckDB both execute as written, immediately re-quantized to a_k.
-    smooth_den must divide ascale·(smooth_den−smooth_num) and
-    ascale·smooth_num so w1/w2 are exact integer literals (asserted;
-    the defaults give w1 = 99·10⁷, w2 = 10⁹).
+    DOREMI_SMOOTH_DEN must divide ascale·(DOREMI_SMOOTH_DEN −
+    DOREMI_SMOOTH_NUM) so w1 = 99·10⁷ and w2 = 10⁹ are exact integer
+    literals (asserted).
 
     Scale: the corpus pass (`_doremi_domain_stats`) is shared and runs
     ONCE; each round is a K-row job (sum + crossJoin + arithmetic),
@@ -1736,17 +1691,15 @@ def doremi_weights_trajectory(
     The loop checkpoints (domain-stats + initial state + stride-4
     interior + final, so 3 + ⌊(rounds−1)/4⌋ of them) belong to the
     returned result; the session owner's sweep reclaims them."""
-    w1, r1 = divmod(ascale * (smooth_den - smooth_num), smooth_den)
-    w2 = ascale * smooth_num
-    assert r1 == 0, "smooth_den must divide ascale*(smooth_den-smooth_num)"
+    ascale, sd = DOREMI_ASCALE, DOREMI_SMOOTH_DEN
+    w1, r1 = divmod(ascale * (sd - DOREMI_SMOOTH_NUM), sd)
+    w2 = ascale * DOREMI_SMOOTH_NUM
+    assert r1 == 0, "DOREMI_SMOOTH_DEN must divide ascale*(sd-sn)"
 
     # materialize the K-row domain stats ONCE (r12, as in
     # doremi_weights): λ_max, k_dom, and the round-0 state would
     # otherwise each re-run the corpus pass.
-    per = _doremi_domain_stats(
-        pool, ref, text_col, domain_col,
-        vocab_size, quant, alpha_num, alpha_den, tokenizer=tokenizer,
-    ).localCheckpoint()
+    per = _doremi_domain_stats(pool, ref, text_col, domain_col, vocab_size).localCheckpoint()
     # constant-partition window over the K-row checkpoint, as in
     # doremi_weights (r12): λ_max and k_dom in the same stage as the
     # state projection, no per-aggregate broadcast jobs
@@ -1758,10 +1711,9 @@ def doremi_weights_trajectory(
             "e",
             F.round(
                 F.exp(
-                    ((F.col("lamq") - F.col("lam_max")) * eta_num).cast("double")
-                    / F.lit(float(quant * eta_den))
+                    (F.col("lamq") - F.col("lam_max")).cast("double") / F.lit(float(QUANT))
                 )
-                * escale
+                * DOREMI_TRAJ_ESCALE
             ).cast("long"),
         )
         .withColumn(
@@ -1783,7 +1735,7 @@ def doremi_weights_trajectory(
             * F.lit(float(w1))
             / F.col("m_sum").cast("double")
             + F.lit(float(w2))
-            / (F.col("k_dom") * F.lit(smooth_den)).cast("double")
+            / (F.col("k_dom") * F.lit(sd)).cast("double")
         ).cast("long")
         cur = (
             cur.withColumn("a", a_new)
@@ -1877,15 +1829,15 @@ def bpe_pair_stats(words):
     )
 
 
-def bpe_pair_counts(df, text_col: str, top_k: int = 32, tokenizer=tokens):
-    """Top-k first-iteration BPE pair counts over a corpus (count
+def bpe_pair_counts(df, text_col: str):
+    """Top-32 first-iteration BPE pair counts over a corpus (count
     desc, then lexicographic — the deterministic tie-break
     `bpe_learn` merges by). TakeOrderedAndProject over the vocab-sized
     pair relation."""
     return (
-        bpe_pair_stats(bpe_word_table(df, text_col, tokenizer))
+        bpe_pair_stats(bpe_word_table(df, text_col, tokens))
         .orderBy(F.desc("freq"), "lhs", "rhs")
-        .limit(top_k)
+        .limit(32)
     )
 
 
@@ -2092,7 +2044,7 @@ def bpe_encode(df, id_col: str, text_col: str, merges: list[tuple[str, str]],
 
 
 def bpe_encode_ids(df, id_col: str, text_col: str, merges: list[tuple[str, str]],
-                   tokenizer=tokens, words=None):
+                   words=None):
     """ORDER-PRESERVING BPE encode — the real tokenize endpoint
     (Sennrich et al. 2016 `apply_bpe` emitting input_ids, not counts):
     every document becomes its token-ID SEQUENCE (id, pos, token_id)
@@ -2147,7 +2099,7 @@ def bpe_encode_ids(df, id_col: str, text_col: str, merges: list[tuple[str, str]]
                 F.lit(BPE_LB + lhs + rhs + BPE_RB),
             )
         enc = (
-            df.select(F.explode(tokenizer(F.col(text_col))).alias("word"))
+            df.select(F.explode(tokens(F.col(text_col))).alias("word"))
             .distinct()
             .select("word", bpe_symbols(wrapped).alias("syms"))
             .localCheckpoint()
@@ -2162,7 +2114,7 @@ def bpe_encode_ids(df, id_col: str, text_col: str, merges: list[tuple[str, str]]
     )
     dt = df.select(
         F.col(id_col),
-        F.posexplode(tokenizer(F.col(text_col))).alias("word_idx", "word"),
+        F.posexplode(tokens(F.col(text_col))).alias("word_idx", "word"),
     )
     w = W.partitionBy(id_col).orderBy("word_idx")
     dw = (

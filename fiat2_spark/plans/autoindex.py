@@ -800,12 +800,10 @@ def apply_auto_index(
     return out, report
 
 
-def run_command_auto(
-    c: A.Command, store, env, spark, typecheck: bool = True, explain: bool = False
-):
+def run_command_auto(c: A.Command, store, env, spark, explain: bool = False):
     """`run_command` with automatic index selection: derive (Gstore,
     Genv) from the live store/env the way the interpreter's typecheck
-    entry does, choose indexes, rewrite, execute. Returns
+    entry does, choose indexes, rewrite, typecheck and execute. Returns
     (store, AutoIndexReport) — the report is the evidence surface for
     'the views were auto-introduced'. ``explain=True`` prints the
     decision (`AutoIndexReport.explain`) before executing, the way the
@@ -831,5 +829,5 @@ def run_command_auto(
     c2, report = apply_auto_index(c, gstore, genv, choices)
     if explain:
         print(report.explain(), flush=True)
-    run_command(c2, store, env, spark, typecheck=typecheck)
+    run_command(c2, store, env, spark)
     return store, report

@@ -37,57 +37,48 @@ def write_table(
     df: DataFrame,
     path: str,
     fmt: str = "parquet",
-    mode: str = "overwrite",
     partition_by: tuple[str, ...] = (),
     **options,
 ) -> None:
-    """Write a table; ``partition_by`` gives write-time partition pruning
+    """Write (overwrite) a table; ``partition_by`` gives write-time partition pruning
     for the columns the reference would bitmap-index (BitmapIndex.v
     intent → directory-level data skipping)."""
     if fmt == "csv":
         options.setdefault("header", "true")
-    w = df.write.mode(mode).options(**options)
+    w = df.write.mode("overwrite").options(**options)
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.format(fmt).save(path)
 
 
-def write_bucketed(
-    df: DataFrame, table_name: str, bucket_col: str, n_buckets: int = 32, mode: str = "overwrite"
-) -> None:
-    """Persisted hash index (DictIndexImpl.v to_idx intent): bucketing by
+def write_bucketed(df: DataFrame, table_name: str, bucket_col: str, n_buckets: int = 32) -> None:
+    """Persisted hash index (DictIndexImpl.v to_idx intent), written over
+    any existing table of that name: bucketing by
     the lookup attribute lets every later equi-join/point-lookup on it
     co-locate without a shuffle."""
     (
-        df.write.mode(mode)
+        df.write.mode("overwrite")
         .bucketBy(n_buckets, bucket_col)
         .sortBy(bucket_col)
         .saveAsTable(table_name)
     )
 
 
-def write_sorted(
-    df: DataFrame,
-    path: str,
-    sort_col: str,
-    n_ranges: int = 8,
-    rowgroup_bytes: int = 65536,
-    mode: str = "overwrite",
-) -> None:
+def write_sorted(df: DataFrame, path: str, sort_col: str) -> None:
     """Persisted ZONE-MAP index (the third physical-layout knob after
-    partitionBy and bucketBy): range-repartition + sort within
-    partitions on the scan attribute, written with small parquet row
-    groups, so every row group's min/max footer statistics become a
+    partitionBy and bucketBy): range-repartition into 8 ranges + sort
+    within partitions on the scan attribute, written (overwrite) with
+    64 KiB parquet row groups, so every row group's min/max footer statistics become a
     tight value interval — a later range/point predicate on
     ``sort_col`` skips whole row groups at the reader, before any
     Spark filtering. The BitmapIndex.v intent for RANGE predicates,
     where directory partitioning (categorical) doesn't apply.
     Verified by scan output-row metrics in test_plans.py."""
     (
-        df.repartitionByRange(n_ranges, sort_col)
+        df.repartitionByRange(8, sort_col)
         .sortWithinPartitions(sort_col)
-        .write.mode(mode)
-        .option("parquet.block.size", rowgroup_bytes)
+        .write.mode("overwrite")
+        .option("parquet.block.size", 65536)
         .parquet(path)
     )
 

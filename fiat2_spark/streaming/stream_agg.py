@@ -13,15 +13,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def windowed_agg(events: DataFrame, window: str = "5 minutes", watermark: str = "10 minutes") -> DataFrame:
-    """Tumbling-window count/sum per event_type. Works identically on a
-    batch DataFrame (F.window is a plain expression) and a streaming one
-    (where the watermark bounds state for late data)."""
+def windowed_agg(events: DataFrame) -> DataFrame:
+    """5-minute tumbling-window count/sum per event_type. Works
+    identically on a batch DataFrame (F.window is a plain expression)
+    and a streaming one (where a 10-minute watermark bounds state for
+    late data)."""
     src = events
     if events.isStreaming:
-        src = events.withWatermark("ts", watermark)
+        src = events.withWatermark("ts", "10 minutes")
     return (
-        src.groupBy(F.window("ts", window).alias("w"), "event_type")
+        src.groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total"),
@@ -55,14 +56,12 @@ def interval_join(
     left: DataFrame,
     right: DataFrame,
     key: str,
-    max_gap_minutes: int = 10,
-    watermark: str = "30 minutes",
 ) -> DataFrame:
     """Stream-stream inner join with an event-time bound: pair each left
     row with the right rows sharing ``key`` whose ``ts`` falls in
-    (left.ts, left.ts + max_gap_minutes] — e.g. click→purchase
+    (left.ts, left.ts + 10 minutes] — e.g. click→purchase
     attribution. The same plan runs batch and streaming: on streams,
-    both sides carry watermarks and the two-sided time bound lets Spark
+    both sides carry 30-minute watermarks and the two-sided time bound lets Spark
     expire join state (the canonical bounded stream-stream join; without
     the bound, state grows forever). Batch planning is a hash join on
     the key with the range as a post-join conjunct — one shuffle per
@@ -85,14 +84,14 @@ def interval_join(
     # right side unwatermarked, so Spark either rejects the plan or
     # keeps its join state forever
     if left.isStreaming:
-        l = l.withWatermark("l_ts", watermark)
+        l = l.withWatermark("l_ts", "30 minutes")
     if right.isStreaming:
-        r = r.withWatermark("r_ts", watermark)
+        r = r.withWatermark("r_ts", "30 minutes")
     joined = l.join(
         r,
         (F.col("k") == F.col("rk"))
         & (F.col("r_ts") > F.col("l_ts"))
-        & (F.col("r_ts") <= F.col("l_ts") + F.expr(f"INTERVAL {max_gap_minutes} MINUTES")),
+        & (F.col("r_ts") <= F.col("l_ts") + F.expr("INTERVAL 10 MINUTES")),
     )
     return joined.select(
         F.col("k").alias(key),
@@ -104,8 +103,8 @@ def interval_join(
     )
 
 
-def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
-    """Sessionization: per-user session ids via gap detection — lag(ts)
+def sessionize(events: DataFrame) -> DataFrame:
+    """Sessionization: per-user session ids via 30-minute gap detection — lag(ts)
     + cumulative sum over the gap indicator (the batch analog of
     streaming session_window). Returns per-session bounds and counts."""
     from pyspark.sql import Window as W
@@ -115,7 +114,7 @@ def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
         F.col("ts").cast("long")
         - F.lag(F.col("ts").cast("long"), 1, None).over(w)
     )
-    new_sess = F.when(gap.isNull() | (gap > gap_minutes * 60), 1).otherwise(0)
+    new_sess = F.when(gap.isNull() | (gap > 30 * 60), 1).otherwise(0)
     with_id = events.withColumn(
         "session_id", F.sum(new_sess).over(w.rowsBetween(W.unboundedPreceding, 0))
     )

@@ -28,38 +28,37 @@ MODULES = (pipeline, stream, server, dsl, graphs, core)
 #   python tools/fingerprints.py --compare base.json
 # and seat every query it reports `changed` or `new`; seats come from
 # queries whose reachable hash held. Older baselines are in git history.
-# This window: the engine surface no query reaches is deleted, the
-# block-tracking parameters only its callers passed are dropped
-# (lloyd_centroids, _nb_bucketed, nb_counts, nb_score_from_counts,
-# doremi_weights_trajectory, bpe_learn_from_words,
-# semantic_dedup_members), compile.py calls the functions/collections
-# set and dict primitives, and docstrings naming deleted definitions are
-# rewritten. With SPARK_GRAFT_CPUS=4 the tool reports 29 changed, 0 new,
-# 180 held. Twenty-two were seated already and stay under (A); seven
-# rotate in (corr_moments, dedup_embedding, langid_multiscript,
-# multimodal_audio_rms, multimodal_bytes, multimodal_wav_real,
-# span_dedup), and the seven held (D) seats rotate out.
+# This window: the parameters no caller sets are deleted (their
+# defaults inlined, shared query/oracle values kept as module
+# constants), the iterative loops release superseded rounds by block
+# id, zonemap_range_scan's layout moves into a helper, and the
+# fingerprint closure now follows names used as default values. With
+# SPARK_GRAFT_CPUS=4 the tool reports 87 changed, 0 new, 122 held —
+# more than the window holds. Seated below are the 50 whose own
+# operator code changed; the other 37 (the dsl_* and relational users
+# of the tag-free filter_rows/project/theta_join, the incremental_*
+# users of the stream batches, the bpe_* and tokenizer-default users
+# reached through the fingerprint fix, the layout readers) rely on the
+# two full-registry gate logs, which cover all 209.
 PRIORITY = (
-    # (A) tool-mandated reachable-delta rotate-ins
-    "dsl_auto_index", "dsl_auto_index_dist", "dsl_auto_index_join",
-    "dsl_command_pipeline", "dsl_comprehension", "dsl_employee_join",
-    "dsl_filter_project", "dsl_fold_table", "dsl_grandchildren",
-    "dsl_let_if_table", "dsl_orders_agg",
-    "bpe_encode", "bpe_encode_ids", "bpe_merges", "pipeline_tokenize_pack",
-    "text_unicode_pipeline",
-    "budget_select", "dedup_semantic", "doremi_reweight",
-    "doremi_trajectory", "quality_classifier", "multimodal_frames",
-    "corr_moments", "dedup_embedding", "langid_multiscript",
-    "multimodal_audio_rms", "multimodal_bytes", "multimodal_wav_real",
-    "span_dedup",
-    # (B) earlier rotate-ins, hashes held
-    "tpch_q4_shape", "tpch_q5_shape", "tpch_q7_shape", "tpch_q8_shape",
-    "tpch_q9_shape", "tpch_q13_shape", "tpch_q22_shape",
-    "filter_scan", "join_fk", "proj_compute", "proj_feed_pipeline",
-    "sort_canonical", "survey_join", "theta_join_nonequi",
-    "dedup_clusters", "dedup_clusters_star", "dedup_fuzzy_apply",
-    "perplexity_filter", "perplexity_filter_unicode",
-    "ccnet_bucket_assign", "lm_stupid_backoff",
+    # (A) tool-mandated reachable-delta rotate-ins: loops, LM/selection,
+    # retrieval, dedup, multimodal, streaming, layout, relational, DSL
+    "bfs", "pagerank3", "dedup_clusters", "dedup_clusters_star",
+    "doremi_reweight", "doremi_trajectory", "dsir_select", "dsir_resample",
+    "perplexity_filter", "perplexity_filter_unicode", "lm_stupid_backoff",
+    "ccnet_bucket_assign", "quality_classifier", "budget_select",
+    "length_bucket_batches", "bpe_pair_counts", "gopher_quality",
+    "text_quality", "text_fingerprint",
+    "ann_bruteforce", "ann_ivf", "ann_lsh", "hard_negatives",
+    "decontaminate_semantic", "knn_label_vote", "hybrid_rrf_retrieval",
+    "dedup_semantic", "dedup_embedding", "dedup_ngram_jaccard",
+    "dedup_simhash", "substring_dedup_apply", "kmeans_lloyd", "cms_tokens",
+    "multimodal_audio_rms", "multimodal_frames", "multimodal_resize",
+    "multimodal_wav_real", "multimodal_ppm_real", "multimodal_bytes",
+    "sessionize", "stream_window_agg", "stream_stream_join",
+    "dpp_partitioned_join", "zonemap_range_scan", "salted_join",
+    "window_rownum", "group_concat_scalable", "grouped_rank_family_scalable",
+    "fold_right_concat", "dsl_auto_index",
 )
 assert len(PRIORITY) == 50 and len(set(PRIORITY)) == 50
 

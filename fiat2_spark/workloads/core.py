@@ -979,7 +979,6 @@ def fold_right_concat(spark, sf_dir):
         F.col("names"),
         F.lit(""),
         lambda x, acc: F.concat(x, F.lit(":"), acc),
-        right=True,
     )
     return per_region.select("r_name", folded.alias("folded"))
 
@@ -1159,7 +1158,7 @@ def window_rownum(spark, sf_dir):
     from pyspark.sql import Window as W
 
     o = tbl(spark, sf_dir, "orders")
-    numbered = R.global_row_number(o, "o_orderkey", id_name="rn")
+    numbered = R.global_row_number(o, "o_orderkey")
     return numbered.select(
         "o_orderkey",
         "rn",
@@ -1597,6 +1596,25 @@ def _partitioned_events(spark, sf_dir):
     ev = tbl(spark, sf_dir, "events").select("event_id", "value", "event_type")
     if not os.path.exists(os.path.join(out, "_SUCCESS")):
         write_table(ev, out, partition_by=("event_type",))
+    return read_table(spark, out)
+
+
+def _sorted_events(spark, sf_dir):
+    """Materialize (once per sf) the (event_id, value) events written
+    by `sources.io.write_sorted` on value under spark-warehouse, and
+    return its read DataFrame — the layout behind `zonemap_range_scan`."""
+    from fiat2_spark.sources.io import read_table, write_sorted
+
+    out = os.path.normpath(
+        os.path.join(
+            os.path.dirname(os.path.abspath(__file__)),
+            "..", "..", "spark-warehouse",
+            f"events_by_value_{os.path.basename(os.path.normpath(sf_dir))}",
+        )
+    )
+    ev = tbl(spark, sf_dir, "events").select("event_id", "value")
+    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+        write_sorted(ev, out, "value")
     return read_table(spark, out)
 
 
@@ -2729,20 +2747,7 @@ def zonemap_range_scan(spark, sf_dir):
     read time, composing with partition (categorical) and bucket
     (equi-join) layout. The oracle recomputes from the unsorted
     original."""
-    from fiat2_spark.sources.io import read_table, write_sorted
-
-    out = os.path.normpath(
-        os.path.join(
-            os.path.dirname(os.path.abspath(__file__)),
-            "..", "..", "spark-warehouse",
-            f"events_by_value_{os.path.basename(os.path.normpath(sf_dir))}",
-        )
-    )
-    ev = tbl(spark, sf_dir, "events").select("event_id", "value")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        write_sorted(ev, out, "value")
-    sorted_ev = read_table(spark, out)
-    return sorted_ev.filter(
+    return _sorted_events(spark, sf_dir).filter(
         (F.col("value") >= 10.0) & (F.col("value") < 11.0)
     ).agg(
         F.count(F.lit(1)).cast("long").alias("n"),

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from fiat2_spark.operators import relational as R
+from fiat2_spark.session import local_checkpoint_tracked, release_blocks
 from fiat2_spark.workloads.util import registry, tbl
 
 QUERIES, ORACLES, q = registry()
@@ -130,34 +131,41 @@ def bfs(spark, sf_dir):
     # localCheckpoint (eager) per level truncates lineage: without it the
     # visited plan grows by one join+union per level and iteration k
     # re-derives all k-1 predecessors (unbounded plan depth — the classic
-    # iterative-algorithm failure at scale). Retired frontiers/visited
-    # snapshots are unpersisted as soon as superseded.
-    visited = spark.createDataFrame([(0, 0)], "node long, depth long").localCheckpoint()
-    frontier = visited
+    # iterative-algorithm failure at scale). Retired frontier/visited
+    # snapshots release their blocks as soon as superseded, so the
+    # result holds only the final visited checkpoint.
+    visited, vis_ids = local_checkpoint_tracked(
+        spark.createDataFrame([(0, 0)], "node long, depth long")
+    )
+    frontier, front_ids = visited, frozenset()
     depth = 0
     while depth < 15:
         depth += 1
-        nxt = (
+        nxt, nxt_ids = local_checkpoint_tracked(
             frontier.join(e, e.src == frontier.node)
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(visited, "node", "left_anti")
             .withColumn("depth", F.lit(depth).cast("long"))
-            .localCheckpoint()
         )
         if nxt.isEmpty():
+            release_blocks(spark, nxt_ids)
             break
-        retired = (visited, frontier)
-        visited = visited.unionByName(nxt).localCheckpoint()
-        for d in retired:
-            d.unpersist()
-        frontier = nxt
+        new_visited, new_ids = local_checkpoint_tracked(visited.unionByName(nxt))
+        release_blocks(spark, vis_ids | front_ids)
+        visited, vis_ids = new_visited, new_ids
+        frontier, front_ids = nxt, nxt_ids
+    release_blocks(spark, front_ids)
     out = visited.select("node", "depth")
     e.unpersist()
     return out
 
 
-def _pagerank_oracle(iters: int = 3) -> str:
+# PageRank rounds of `pagerank` and its oracle
+PAGERANK_ITERS = 3
+
+
+def _pagerank_oracle() -> str:
     """Unrolled PageRank iterations as chained CTEs — same rounding/
     DECIMAL discipline as the Spark side, so the floats match bitwise."""
     base = f"""
@@ -167,7 +175,7 @@ def _pagerank_oracle(iters: int = 3) -> str:
     nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM nodes),
     outdeg AS (SELECT src, CAST(COUNT(*) AS DOUBLE) AS deg FROM edges GROUP BY src),
     pr0 AS (SELECT node, round(1.0/n, 12) AS pr FROM nodes CROSS JOIN nn)"""
-    for k in range(1, iters + 1):
+    for k in range(1, PAGERANK_ITERS + 1):
         base += f""",
     c{k} AS (
       SELECT e.dst AS node,
@@ -182,10 +190,10 @@ def _pagerank_oracle(iters: int = 3) -> str:
       FROM nodes nd CROSS JOIN nn LEFT JOIN s{k} s ON s.node = nd.node
     )"""
     return base + f"""
-    SELECT node, pr FROM pr{iters}"""
+    SELECT node, pr FROM pr{PAGERANK_ITERS}"""
 
 
-@q("pagerank3", _pagerank_oracle(3))
+@q("pagerank3", _pagerank_oracle())
 def pagerank3(spark, sf_dir):
     """Three PageRank iterations (damping 0.85) over the derived edge
     graph — the canonical iterative-join algorithm, driver-orchestrated
@@ -201,18 +209,19 @@ def pagerank3(spark, sf_dir):
     partition by node and the edge exchange is reused across
     iterations — the iterative-state discipline (`localCheckpoint`
     lineage truncation) follows `bfs`."""
-    return pagerank(_edges(spark, sf_dir), iters=3)
+    return pagerank(_edges(spark, sf_dir))
 
 
-def pagerank(edges, iters: int = 3):
-    """The reusable iteration over an arbitrary (src, dst) edge
-    DataFrame — see `pagerank3` for the determinism contract."""
+def pagerank(edges):
+    """PAGERANK_ITERS rounds over an arbitrary (src, dst) edge
+    DataFrame — see `pagerank3` for the determinism contract. Every
+    checkpoint but the final rank snapshot is released before return."""
+    spark = edges.sparkSession
     e = edges.persist()
-    nodes = (
+    nodes, node_ids = local_checkpoint_tracked(
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint()
     )
     n = float(nodes.count())
     # attach each edge's out-degree ONCE before the loop (r12): the
@@ -221,16 +230,16 @@ def pagerank(edges, iters: int = 3):
     # change between iterations. Checkpoint blocks (batch contract);
     # at scale this is the reusable node-partitioned edge relation the
     # docstring's "edge exchange reused across iterations" refers to.
-    ej = (
+    ej, ej_ids = local_checkpoint_tracked(
         e.join(
             e.groupBy("src").agg(F.count(F.lit(1)).cast("double").alias("deg")),
             "src",
         )
         .select("src", "dst", "deg")
-        .localCheckpoint()
     )
     pr = nodes.select("node", F.round(F.lit(1.0) / F.lit(n), 12).alias("pr"))
-    for _ in range(iters):
+    pr_ids = frozenset()
+    for _ in range(PAGERANK_ITERS):
         contribs = (
             ej.join(pr, pr.node == ej.src)
             .select(
@@ -241,8 +250,8 @@ def pagerank(edges, iters: int = 3):
             )
         )
         sums = contribs.groupBy("node").agg(F.sum("c").alias("sc"))
-        prev = pr
-        pr = (
+        prev_ids = pr_ids
+        pr, pr_ids = local_checkpoint_tracked(
             nodes.join(sums, "node", "left")
             .select(
                 "node",
@@ -252,13 +261,12 @@ def pagerank(edges, iters: int = 3):
                     12,
                 ).alias("pr"),
             )
-            .localCheckpoint()
         )
         # release the superseded snapshot (bfs discipline: lineage is
         # truncated per round AND retired state is dropped per round;
-        # the first pr is unpersisted-as-noop, never checkpointed)
-        prev.unpersist()
-    nodes.unpersist()
+        # the first pr is a projection of `nodes`, never checkpointed)
+        release_blocks(spark, prev_ids)
+    release_blocks(spark, node_ids | ej_ids)
     e.unpersist()
     return pr
 

@@ -431,7 +431,7 @@ def cms_tokens(spark, sf_dir):
     queries = spark.createDataFrame(
         [("join",), ("scan",), ("window",), ("zzz_absent",)], ["tok"]
     )
-    est = SK.cms_estimate(sketch, queries, "tok")
+    est = SK.cms_estimate(sketch, queries)
     return (
         est.join(tc, est["tok"] == tc["t"], "left")
         .select("tok", "est", F.coalesce(F.col("c"), F.lit(0).cast("long")).alias("true_cnt"))
@@ -548,7 +548,9 @@ def dedup_exact(spark, sf_dir):
     return D.exact_dedup(d, TX.fingerprint_md5(F.col("text")), "doc_id")
 
 
-def _minhash_oracle(n_hashes: int = 16, n_bands: int = 4, threshold: float = 0.7) -> str:
+def _minhash_oracle() -> str:
+    # the minhash queries' n_hashes / n_bands / threshold arguments
+    n_hashes, n_bands, threshold = 16, 4, 0.7
     rows = n_hashes // n_bands
     # lane-split signatures (dedup.MINHASH_LANES): hash 4k+j is the j-th
     # 8-hex lane of md5('k#' || s) — identical construction to the Spark
@@ -758,7 +760,7 @@ def dedup_simhash(spark, sf_dir):
     md5(token)); the oracle brute-forces all pairs — banding must lose
     nothing."""
     d = tbl(spark, sf_dir, "documents")
-    pairs = D.simhash_dedup_pairs(d, "doc_id", "text", max_dist=3)
+    pairs = D.simhash_dedup_pairs(d, "doc_id", "text")
     return pairs.select("id_a", "id_b", F.col("dist").cast("int").alias("dist"))
 
 
@@ -785,7 +787,7 @@ def dedup_ngram_jaccard(spark, sf_dir):
     its language by construction of the tokenizer, and its set sizes
     within a factor 1/t, so both conjuncts are lossless.)"""
     d = tbl(spark, sf_dir, "documents")
-    return D.ngram_jaccard_pairs(d, "doc_id", "text", shingle_n=1, threshold=0.9, block_col="lang")
+    return D.ngram_jaccard_pairs(d, "doc_id", "text", block_col="lang")
 
 
 _COS_SQL = """list_reduce(list_transform(a.e, (x, i) -> CAST(x AS DOUBLE) * CAST(b.e[i] AS DOUBLE)), (p, q) -> p + q)
@@ -828,7 +830,7 @@ def dedup_embedding(spark, sf_dir):
     approximate path is checked exactly. Sequential-fold double math
     matches the oracle bit-for-bit before the 6-decimal rounding."""
     e = tbl(spark, sf_dir, "embeddings")
-    return D.embedding_dedup_pairs_lsh(e, "vec_id", "embedding", threshold=0.4, n_planes=4, dims=64)
+    return D.embedding_dedup_pairs_lsh(e, "vec_id", "embedding")
 
 
 # ---------------------------------------------------------------------------
@@ -956,7 +958,7 @@ def knn_label_vote(spark, sf_dir):
     )
 
 
-def _lsh_oracle(n_planes: int = 4) -> str:
+def _lsh_oracle() -> str:
     plane_case = (
         "CASE WHEN substr(md5(p || '#' || CAST(i - 1 AS VARCHAR)), 1, 1) "
         "IN ('0','2','4','6','8','a','c','e') THEN 1.0 ELSE -1.0 END"
@@ -966,7 +968,7 @@ def _lsh_oracle(n_planes: int = 4) -> str:
       SELECT vec_id, embedding, p,
              list_reduce(list_transform(embedding,
                (x, i) -> CAST(x AS DOUBLE) * ({plane_case})), (a, b) -> a + b) AS dp
-      FROM embeddings, unnest(generate_series(0, {n_planes - 1})) AS g(p)
+      FROM embeddings, unnest(generate_series(0, {SIM.LSH_PLANES - 1})) AS g(p)
     ),
     buckets AS (
       SELECT vec_id, embedding,
@@ -998,7 +1000,7 @@ def ann_lsh(spark, sf_dir):
     queries = e.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
-    return SIM.ann_lsh_topk(e, queries, k=5, n_planes=4, dims=64)
+    return SIM.ann_lsh_topk(e, queries)
 
 
 def _cos_sql(a: str, b: str) -> str:
@@ -1060,7 +1062,7 @@ def ann_ivf(spark, sf_dir):
     cents = e.filter(F.col("vec_id").between(100, 107)).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cvec")
     )
-    return SIM.ann_ivf_topk(e, queries, cents, k=5, nprobe=2)
+    return SIM.ann_ivf_topk(e, queries, cents)
 
 
 # ---------------------------------------------------------------------------
@@ -1138,7 +1140,7 @@ def multimodal_frames(spark, sf_dir):
     chars == bytes)."""
     d = tbl(spark, sf_dir, "documents")
     bin_tbl = M.to_binary_table(d, "doc_id", "text", "text")
-    return M.sample_frames(bin_tbl, frame_size=256, every=4)
+    return M.sample_frames(bin_tbl)
 
 
 @q(
@@ -1162,7 +1164,7 @@ def multimodal_resize(spark, sf_dir):
     pure byte positions."""
     d = tbl(spark, sf_dir, "documents")
     bin_tbl = M.to_binary_table(d, "doc_id", "text", "text")
-    return M.resize_grid(bin_tbl, width=64, stride=2)
+    return M.resize_grid(bin_tbl)
 
 
 @q(
@@ -2259,7 +2261,11 @@ def dedup_fuzzy_apply(spark, sf_dir):
     )
 
 
-def _kmeans_oracle(k: int = 4, iters: int = 3, dims: int = 64, q: int = 1_000_000) -> str:
+# k-means clusters and Lloyd rounds of `kmeans_lloyd` and its oracle
+_KMEANS_K, _KMEANS_ITERS = 4, 3
+
+
+def _kmeans_oracle() -> str:
     """Unrolled Lloyd's k-means in quantized-integer space (see
     `kmeans_lloyd`): every arithmetic step is exact BIGINT or a
     deterministic double op (floor of an exact-int division), so the
@@ -2268,14 +2274,14 @@ def _kmeans_oracle(k: int = 4, iters: int = 3, dims: int = 64, q: int = 1_000_00
         f"""
     WITH qe AS (
       SELECT vec_id, CAST(i.i AS INTEGER) AS dim,
-             CAST(round(CAST(embedding[CAST(i.i AS INTEGER) + 1] AS DOUBLE) * {q}) AS BIGINT) AS qv
-      FROM embeddings, unnest(generate_series(0, {dims - 1})) AS i(i)
+             CAST(round(CAST(embedding[CAST(i.i AS INTEGER) + 1] AS DOUBLE) * 1000000) AS BIGINT) AS qv
+      FROM embeddings, unnest(generate_series(0, 63)) AS i(i)
     ),
     c0 AS (SELECT vec_id AS cid, dim, qv AS qc FROM qe
-           WHERE vec_id IN (SELECT DISTINCT vec_id FROM qe ORDER BY vec_id LIMIT {k}))"""
+           WHERE vec_id IN (SELECT DISTINCT vec_id FROM qe ORDER BY vec_id LIMIT {_KMEANS_K}))"""
     ]
     prev = "c0"
-    for it in range(1, iters + 1):
+    for it in range(1, _KMEANS_ITERS + 1):
         sql.append(
             f""",
     d{it} AS (
@@ -2325,7 +2331,7 @@ def kmeans_lloyd(spark, sf_dir):
     broadcast."""
     from pyspark.sql import Window as W
 
-    k, iters = 4, 3  # frozen to match the registered _kmeans_oracle()
+    k, iters = _KMEANS_K, _KMEANS_ITERS
     e = tbl(spark, sf_dir, "embeddings")
     qe = e.select(
         "vec_id", F.posexplode("embedding").alias("dim", "v")
@@ -2421,7 +2427,7 @@ def multimodal_wav_real(spark, sf_dir):
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
     wavs = docs.mapInPandas(encode, "doc_id bigint, payload binary")
-    return M.audio_rms_wav(wavs, frame_size=128)
+    return M.audio_rms_wav(wavs)
 
 
 @q(
@@ -2744,13 +2750,14 @@ def hard_negatives(spark, sf_dir):
         F.col("embedding").alias("qvec"),
         F.col("label").alias("qlabel"),
     )
-    return SIM.hard_negatives(e, anchors, k=5)
+    return SIM.hard_negatives(e, anchors)
 
 
-def _semantic_dedup_oracle(
-    k: int = 8, iters: int = 2, dims: int = 64, q: int = 1_000_000,
-    t2_num: int = 4, t2_den: int = 25,
-) -> str:
+# k-means clusters of `dedup_semantic` and its oracle
+_SEMDEDUP_K = 8
+
+
+def _semantic_dedup_oracle() -> str:
     """Unrolled SemDeDup in quantized-integer space (see
     `dedup.semantic_dedup`): the Lloyd iterations are `_kmeans_oracle`'s
     exact-BIGINT scheme, the cosine threshold is the integer comparison
@@ -2762,18 +2769,18 @@ def _semantic_dedup_oracle(
         f"""
     WITH qe AS (
       SELECT vec_id,
-             list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * {q}) AS BIGINT)) AS qv
+             list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS qv
       FROM embeddings
     ),
     qx AS (
       SELECT vec_id, CAST(i.i AS INTEGER) AS dim, qv[CAST(i.i AS INTEGER) + 1] AS v
-      FROM qe, unnest(generate_series(0, {dims - 1})) AS i(i)
+      FROM qe, unnest(generate_series(0, 63)) AS i(i)
     ),
     c0 AS (SELECT vec_id AS cid, dim, v AS qc FROM qx
-           WHERE vec_id IN (SELECT vec_id FROM qe ORDER BY vec_id LIMIT {k}))"""
+           WHERE vec_id IN (SELECT vec_id FROM qe ORDER BY vec_id LIMIT {_SEMDEDUP_K}))"""
     ]
     prev = "c0"
-    for it in range(1, iters + 1):
+    for it in range(1, D.SEMDEDUP_ITERS + 1):
         sql.append(
             f""",
     d{it} AS (
@@ -2809,8 +2816,8 @@ def _semantic_dedup_oracle(
     dups AS (
       SELECT DISTINCT r.vec_id
       FROM mem l JOIN mem r ON l.cid = r.cid AND l.vec_id < r.vec_id
-      WHERE {t2_den} * CAST({lr} AS HUGEINT) * CAST({lr} AS HUGEINT)
-              > {t2_num} * l.n2 * r.n2
+      WHERE {D.COS_T2_DEN} * CAST({lr} AS HUGEINT) * CAST({lr} AS HUGEINT)
+              > {D.COS_T2_NUM} * l.n2 * r.n2
         AND {lr} > 0
     )
     SELECT m.vec_id, m.cid, (d.vec_id IS NOT NULL) AS is_dup
@@ -2831,7 +2838,7 @@ def dedup_semantic(spark, sf_dir):
     t=0.4 (t²=4/25) matches the `dedup_embedding` family's corpus
     calibration."""
     e = tbl(spark, sf_dir, "embeddings")
-    return D.semantic_dedup(e, "vec_id", "embedding", k=8, iters=2)
+    return D.semantic_dedup(e, "vec_id", "embedding", k=_SEMDEDUP_K)
 
 
 _DSIR_ORACLE = """
@@ -2913,7 +2920,7 @@ def dsir_select(spark, sf_dir):
     return TX.dsir_importance(
         d.filter(F.col("source") != "src0"),
         d.filter(F.col("source") == "src0"),
-        "doc_id", "text", buckets=256, quant=10_000, k=100,
+        "doc_id", "text",
     )
 
 
@@ -2931,7 +2938,7 @@ def dsir_resample(spark, sf_dir):
     return TX.dsir_resample(
         d.filter(F.col("source") != "src0"),
         d.filter(F.col("source") == "src0"),
-        "doc_id", "text", buckets=256, quant=10_000, k=64,
+        "doc_id", "text",
     )
 
 
@@ -3012,7 +3019,6 @@ def perplexity_filter(spark, sf_dir):
         d.filter(F.col("source") != "src0"),
         d.filter(F.col("source") == "src0"),
         "doc_id", "text", threshold_q=36_500,
-        vocab_size=1024, quant=10_000,
     )
 
 
@@ -3388,7 +3394,7 @@ def quality_classifier(spark, sf_dir):
     )
     score = d.filter(F.col("doc_id") % 2 == 1)
     return TX.nb_classifier_scores(
-        train, score, "doc_id", "text", "label", buckets=256, quant=10_000
+        train, score, "doc_id", "text"
     )
 
 
@@ -3423,7 +3429,7 @@ def budget_select(spark, sf_dir):
     )
     score = d.filter(F.col("doc_id") % 2 == 1)
     scored = TX.nb_classifier_scores(
-        train, score, "doc_id", "text", "label", buckets=256, quant=10_000
+        train, score, "doc_id", "text"
     )
     ntok = score.select(
         "doc_id", F.size(TX.tokens(F.col("text"))).alias("ntok")
@@ -3493,17 +3499,17 @@ _DOREMI_ORACLE = _LM_CTES + _DOREMI_STATS_CTES + """
 """
 
 
-def _doremi_trajectory_oracle(
-    rounds: int, escale: int = 10**6, ascale: int = 10**9,
-    smooth_num: int = 1, smooth_den: int = 100,
-) -> str:
+def _doremi_trajectory_oracle(rounds: int) -> str:
     """Xie et al. 2023 Algorithm 1 unrolled to SQL: the shared
     excess-loss stats, ONE quantized exp per domain (λ static, so the
     multiplicative factor e is fixed across rounds), then per round a
     mass CTE, a 1-row Σm, and the convex-combination update — every
     intermediate a BIGINT, the only doubles the same pinned-order
     division pair the Spark side evaluates (see
-    operators/text.py:doremi_weights_trajectory)."""
+    operators/text.py:doremi_weights_trajectory, whose constants it
+    reads)."""
+    escale, ascale = TX.DOREMI_TRAJ_ESCALE, TX.DOREMI_ASCALE
+    smooth_num, smooth_den = TX.DOREMI_SMOOTH_NUM, TX.DOREMI_SMOOTH_DEN
     w1 = ascale * (smooth_den - smooth_num) // smooth_den
     w2 = ascale * smooth_num
     # round CTEs are t-prefixed (tm/ts/tn/ta): _LM_CTES already owns
@@ -3560,7 +3566,6 @@ def doremi_reweight(spark, sf_dir):
         d.filter(F.col("source") != "src0"),
         d.filter(F.col("source") == "src0"),
         "doc_id", "text", "source",
-        vocab_size=1024, quant=10_000,
     )
 
 
@@ -3578,8 +3583,7 @@ def doremi_trajectory(spark, sf_dir):
     return TX.doremi_weights_trajectory(
         d.filter(F.col("source") != "src0"),
         d.filter(F.col("source") == "src0"),
-        "doc_id", "text", "source",
-        rounds=5, vocab_size=1024, quant=10_000,
+        "doc_id", "text", "source", rounds=5,
     )
 
 
@@ -3666,7 +3670,7 @@ def bpe_pair_counts(spark, sf_dir):
     TakeOrderedAndProject top-k (see operators/text.py:bpe_pair_counts
     for why the corpus is touched exactly once)."""
     d = tbl(spark, sf_dir, "documents")
-    return TX.bpe_pair_counts(d, "text", top_k=32)
+    return TX.bpe_pair_counts(d, "text")
 
 
 @q("bpe_merges", _bpe_merges_oracle(8))
@@ -3938,7 +3942,7 @@ _UNICODE_ROWS = [
 ]
 
 
-def _unicode_pipeline_oracle(n_merges: int = 4) -> str:
+def _unicode_pipeline_oracle(n_merges: int) -> str:
     """The unicode-tokenizer contract oracle: the crafted rows as a
     VALUES table, \\p{L}\\p{N} splitting (RE2's and Java's general
     categories agree; both engines' lower() is Unicode-aware), the
@@ -4083,9 +4087,7 @@ def length_bucket_batches(spark, sf_dir):
     # un-materialized input re-ran the tokenize projection for the
     # sketch action AND both ranking legs. Blocks, session sweep.
     d = d.repartition(D.cpu_partitions(d, rows_per_task=200)).localCheckpoint()
-    assigned = TX.length_bucket_batches(
-        d, "doc_id", "n_tok", band_width=64, batch_size=16
-    )
+    assigned = TX.length_bucket_batches(d, "doc_id", "n_tok")
     return assigned.groupBy("band", "batch_id").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.max("n_tok").alias("max_len"),
@@ -4276,7 +4278,7 @@ def ccnet_bucket_assign(spark, sf_dir):
     return TX.ccnet_buckets(
         d.filter(F.col("source") != "src0"),
         d.filter(F.col("source") == "src0"),
-        "doc_id", "text", "lang", vocab_size=1024, quant=10_000,
+        "doc_id", "text", "lang",
     )
 
 
@@ -4294,7 +4296,7 @@ _MINHASH_U_ORACLE = (
     "\n    WITH "
     + _DOCS_U_SQL.strip()
     + ",\n    "
-    + _minhash_oracle(n_hashes=16, n_bands=4, threshold=0.7)
+    + _minhash_oracle()
     .replace("WITH toks AS (", "toks AS (", 1)
     .replace(_TOKS, _TOKS_U)
     .lstrip()
@@ -4340,8 +4342,7 @@ def perplexity_filter_unicode(spark, sf_dir):
     return TX.perplexity_filter(
         d.filter(F.col("source") != "src0"),
         d.filter(F.col("source") == "src0"),
-        "doc_id", "text", threshold_q=36_500,
-        vocab_size=1024, quant=10_000, tokenizer=TX.tokens_unicode,
+        "doc_id", "text", threshold_q=36_500, tokenizer=TX.tokens_unicode,
     )
 
 
@@ -4633,5 +4634,5 @@ def lm_stupid_backoff(spark, sf_dir):
     return TX.lm_perplexity(
         d.filter(F.col("source") != "src0"),
         d.filter(F.col("source") == "src0"),
-        "doc_id", "text", vocab_size=1024, quant=10_000, order=3,
+        "doc_id", "text", order=3,
     )

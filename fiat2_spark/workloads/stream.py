@@ -26,8 +26,9 @@ from fiat2_spark.workloads.util import registry, tbl
 QUERIES, ORACLES, q = registry()
 
 
-def _batches(df, col, n=4):
-    return [df.filter((F.col(col) % n) == i) for i in range(n)]
+def _batches(df, col):
+    """Four insert batches: the rows with ``col % 4 == i``."""
+    return [df.filter((F.col(col) % 4) == i) for i in range(4)]
 
 
 @q(
@@ -157,7 +158,7 @@ def sessionize_events(spark, sf_dir):
     """Sessionization via gap detection (lag + running sum) — the batch
     analog of streaming session_window, 30-minute gap."""
     ev = tbl(spark, sf_dir, "events")
-    out = sessionize(ev, gap_minutes=30)
+    out = sessionize(ev)
     return out.select(
         "user_id",
         F.col("session_id").cast("long").alias("session_id"),
@@ -543,7 +544,6 @@ def stream_stream_join(spark, sf_dir):
         ev.filter(F.col("event_type") == "click"),
         ev.filter(F.col("event_type") == "purchase"),
         "user_id",
-        max_gap_minutes=10,
     )
 
 

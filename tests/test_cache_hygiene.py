@@ -87,3 +87,51 @@ def test_group_index_insert_retires_superseded_snapshots(spark):
     rows = {r["g"]: (r["n"], r["s"]) for r in idx.read().collect()}
     assert rows == {"a": (6, 1 + 10 + 11 + 12 + 13 + 14), "b": (1, 2)}
     release_blocks(spark, idx._blocks)
+
+
+_CHAIN = [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11)]
+
+
+def _loops(spark, sf_dir):
+    """(name, run, blocks its result reads, check) for each iterative
+    loop on a small fixed graph."""
+    from fiat2_spark.operators.dedup import dup_clusters, dup_clusters_star
+    from fiat2_spark.workloads.graphs import bfs, pagerank
+
+    pairs = lambda: spark.createDataFrame(_CHAIN, "id_a long, id_b long")  # noqa: E731
+    clusters = {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10}
+    as_clusters = lambda df: {r["doc"]: r["cluster"] for r in df.collect()}  # noqa: E731
+    return [
+        ("bfs", lambda: bfs(spark, sf_dir), 1,
+         lambda df: {r["node"]: r["depth"] for r in df.collect()}[0] == 0),
+        ("pagerank", lambda: pagerank(
+            spark.createDataFrame([(1, 2), (2, 3), (3, 1), (3, 2)], "src long, dst long")
+        ), 1, lambda df: df.count() == 3),
+        ("dup_clusters", lambda: dup_clusters(pairs()), 1,
+         lambda df: as_clusters(df) == clusters),
+        ("dup_clusters_star", lambda: dup_clusters_star(pairs()), 2,
+         lambda df: as_clusters(df) == clusters),
+    ]
+
+
+def test_iterative_loops_release_superseded_rounds(spark, sf_dir):
+    """bfs, pagerank, dup_clusters and dup_clusters_star checkpoint each
+    round; DataFrame.unpersist() frees none of those blocks (see above),
+    so each loop releases the superseded round by block id. After each
+    returns, the only new resident checkpoint blocks are those its result
+    reads, and the result still reads back."""
+    from fiat2_spark.session import _is_checkpoint_block
+
+    def ckpt_ids():
+        return {
+            rid for rid, rdd in dict(spark.sparkContext._jsc.getPersistentRDDs()).items()
+            if _is_checkpoint_block(rdd)
+        }
+
+    for name, run, held, check in _loops(spark, sf_dir):
+        before = ckpt_ids()
+        out = run()
+        new = ckpt_ids() - before
+        assert len(new) == held, (name, len(new))
+        assert check(out), name
+        release_blocks(spark, new)

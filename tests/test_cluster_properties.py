@@ -116,7 +116,7 @@ def test_pagerank_matches_python_model(spark, edges):
         }
 
     e = spark.createDataFrame(sorted(edges), "src long, dst long")
-    got = {r["node"]: r["pr"] for r in pagerank(e, iters=3).collect()}
+    got = {r["node"]: r["pr"] for r in pagerank(e).collect()}
     assert got == pr
 
 
@@ -194,7 +194,7 @@ def test_semantic_dedup_matches_python_model(spark, vecs):
     got = {
         r["vec_id"]: (r["cid"], r["is_dup"])
         for r in semantic_dedup(
-            df, "vec_id", "embedding", k=3, iters=2, q=1, pair_salt=4
+            df, "vec_id", "embedding", k=3, q=1, pair_salt=4
         ).collect()
     }
     want = _py_semantic(table, k=3, iters=2)
@@ -226,7 +226,7 @@ def test_semantic_dedup_sparse_negative_ids(spark):
     got = {
         r["vec_id"]: (r["cid"], r["is_dup"])
         for r in semantic_dedup(
-            df, "vec_id", "embedding", k=3, iters=2, q=1, pair_salt=4
+            df, "vec_id", "embedding", k=3, q=1, pair_salt=4
         ).collect()
     }
     want = _py_semantic(table, k=3, iters=2)

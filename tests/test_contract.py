@@ -239,16 +239,10 @@ def _script_roots(path: str) -> list:
     return roots
 
 
-def test_every_engine_definition_is_reached():
-    """Every top-level fiat2_spark function and class is reachable from
-    what runs: the registered queries, every definition in `workloads/`
-    (oracle builders run at import), `serving.make_server`/`main`,
-    `get_spark`, and what `examples/` and `perfbench/` use. The closure
-    is the one the rotation fingerprints hash
-    (`tools.fingerprints._reachable_sources`). Code reached only by
-    tests is unchecked by the gate and the benchmark: delete it with
-    its tests, make a query reach it, or list it in ALLOW with a
-    reason."""
+def _reached(repo: str):
+    """(defs, whole, reached): the engine's top-level definitions by
+    module, the modules reached whole, and the labels
+    `tools.fingerprints._reachable_sources` reaches from what runs."""
     import importlib
     import os
 
@@ -257,7 +251,6 @@ def test_every_engine_definition_is_reached():
     from fiat2_spark.workloads import QUERIES
     from tools.fingerprints import _reachable_sources
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     defs = _engine_defs(repo)
     roots = [*QUERIES.values(), serving.make_server, serving.main, get_spark]
     for mod, names in defs.items():
@@ -268,10 +261,25 @@ def test_every_engine_definition_is_reached():
         for f in sorted(os.listdir(os.path.join(repo, d))):
             if f.endswith(".py"):
                 roots += _script_roots(os.path.join(repo, d, f))
-
     labels = [lbl for lbl, _ in _reachable_sources(*roots)]
     whole = {lbl.removeprefix("module:") for lbl in labels if lbl.startswith("module:")}
-    reached = set(labels)
+    return defs, whole, set(labels)
+
+
+def test_every_engine_definition_is_reached():
+    """Every top-level fiat2_spark function and class is reachable from
+    what runs: the registered queries, every definition in `workloads/`
+    (oracle builders run at import), `serving.make_server`/`main`,
+    `get_spark`, and what `examples/` and `perfbench/` use. The closure
+    is the one the rotation fingerprints hash
+    (`tools.fingerprints._reachable_sources`). Code reached only by
+    tests is unchecked by the gate and the benchmark: delete it with
+    its tests, make a query reach it, or list it in ALLOW with a
+    reason."""
+    import os
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    defs, whole, reached = _reached(repo)
     unreached = sorted(
         f"{mod}.{n}"
         for mod, names in defs.items() if mod not in whole
@@ -281,3 +289,307 @@ def test_every_engine_definition_is_reached():
     )
     assert sorted(set(unreached) - set(ALLOW)) == [], "unreached engine definitions"
     assert sorted(set(ALLOW) - set(unreached)) == [], "stale ALLOW entries"
+
+
+# Defaulted parameters of reached definitions that no caller outside the
+# tests sets to a non-default value, kept on purpose: deployment settings,
+# and knobs a test sets (the reason names that test).
+PARAM_ALLOW = {
+    "fiat2_spark.session.get_spark(master)":
+        "deployment setting: the cluster master",
+    "fiat2_spark.session.get_spark(shuffle_partitions)":
+        "deployment setting: shuffle width",
+    "fiat2_spark.operators.dedup.boilerplate_remove(min_docs)":
+        "test_cluster_ops.py::test_boilerplate_remove_threshold_and_order",
+    "fiat2_spark.operators.dedup.boilerplate_remove(seg_len)":
+        "test_pipeline_late_ops.py::test_dedup_family_tokenizer_threading",
+    "fiat2_spark.operators.dedup.boilerplate_remove(tokenizer)":
+        "test_pipeline_late_ops.py::test_dedup_family_tokenizer_threading",
+    "fiat2_spark.operators.dedup.dup_clusters(max_iter)":
+        "test_cluster_properties.py::test_dup_clusters_chain_diameter",
+    "fiat2_spark.operators.dedup.minhash_dedup_pairs(n_bands)":
+        "test_pipeline_late_ops.py::test_minhash_tokenizer_default_equals_explicit",
+    "fiat2_spark.operators.dedup.ngram_jaccard_pairs(tokenizer)":
+        "test_pipeline_late_ops.py::test_dedup_family_tokenizer_threading",
+    "fiat2_spark.operators.dedup.semantic_dedup(pair_salt)":
+        "test_cluster_properties.py::test_semantic_dedup_matches_python_model",
+    "fiat2_spark.operators.dedup.semantic_dedup(q)":
+        "test_cluster_properties.py::test_semantic_dedup_matches_python_model",
+    "fiat2_spark.operators.dedup.simhash_dedup_pairs(tokenizer)":
+        "test_pipeline_late_ops.py::test_dedup_family_tokenizer_threading",
+    "fiat2_spark.operators.dedup.span_dedup_stats(seg_len)":
+        "test_pipeline_late_ops.py::test_span_dedup_matches_python_model",
+    "fiat2_spark.operators.dedup.span_dedup_stats(tokenizer)":
+        "test_pipeline_late_ops.py::test_dedup_family_tokenizer_threading",
+    "fiat2_spark.operators.dedup.substring_dedup_apply(chunk_tokens)":
+        "test_cluster_ops.py::test_substring_dedup_apply_chunked_reassembly_exact",
+    "fiat2_spark.operators.dedup.substring_dedup_apply(k)":
+        "test_cluster_ops.py::test_substring_dedup_apply_agrees_with_stats",
+    "fiat2_spark.operators.dedup.substring_dedup_stats(k)":
+        "test_cluster_ops.py::test_substring_dedup_stats_hand_case",
+    "fiat2_spark.operators.dedup.substring_dedup_stats(tokenizer)":
+        "test_pipeline_late_ops.py::test_dedup_family_tokenizer_threading",
+    "fiat2_spark.operators.multimodal.wav_encode(sample_rate)":
+        "test_multimodal_codecs.py::test_wav_roundtrip",
+    "fiat2_spark.operators.relational.global_row_number(n_buckets)":
+        "test_plans.py::test_global_rownum_matches_window",
+    "fiat2_spark.operators.relational.grouped_listagg(n_buckets)":
+        "test_bucket_properties.py::test_grouped_listagg_matches_plain_concat",
+    "fiat2_spark.operators.relational.grouped_percentiles(n_buckets)":
+        "test_bucket_properties.py::test_grouped_percentiles_match_numpy",
+    "fiat2_spark.operators.relational.grouped_rank_family(n_buckets)":
+        "test_bucket_properties.py::test_grouped_rank_family_matches_plain_windows_prop",
+    "fiat2_spark.operators.relational.grouped_row_number(n_buckets)":
+        "test_bucket_properties.py::test_grouped_row_number_matches_plain_window",
+    "fiat2_spark.operators.similarity.bm25_scores(b)":
+        "test_pipeline_late_ops.py::test_bm25_matches_python_model",
+    "fiat2_spark.operators.similarity.bm25_scores(k1)":
+        "test_pipeline_late_ops.py::test_bm25_matches_python_model",
+    "fiat2_spark.operators.text.bpe_learn(checkpoint_every)":
+        "test_text_properties.py::test_bpe_learn_driver_matches_distributed",
+    "fiat2_spark.operators.text.doremi_weights(vocab_size)":
+        "test_text_properties.py::test_doremi_weights_match_python_model",
+    "fiat2_spark.operators.text.doremi_weights_trajectory(rounds)":
+        "test_text_properties.py::test_doremi_trajectory_matches_python_model",
+    "fiat2_spark.operators.text.doremi_weights_trajectory(vocab_size)":
+        "test_text_properties.py::test_doremi_trajectory_matches_python_model",
+    "fiat2_spark.operators.text.dsir_importance(buckets)":
+        "test_text_properties.py::test_dsir_scores_rank_target_like_docs_first",
+    "fiat2_spark.operators.text.dsir_importance(k)":
+        "test_text_properties.py::test_dsir_scores_rank_target_like_docs_first",
+    "fiat2_spark.operators.text.gopher_rules(alpha_pattern)":
+        "test_text_properties.py::test_gopher_rules_unicode_alpha_pairing",
+    "fiat2_spark.operators.text.gopher_rules(min_words)":
+        "test_text_properties.py::test_gopher_rules_each_rule_fires",
+    "fiat2_spark.operators.text.gopher_rules(tokenizer)":
+        "test_text_properties.py::test_gopher_rules_unicode_alpha_pairing",
+    "fiat2_spark.operators.text.nb_classifier_scores(buckets)":
+        "test_text_properties.py::test_nb_classifier_match_python_model",
+    "fiat2_spark.operators.text.nb_classifier_scores(tokenizer)":
+        "test_text_properties.py::test_nb_classifier_unicode_fit_score_pairing",
+    "fiat2_spark.operators.text.perplexity_filter(vocab_size)":
+        "test_text_properties.py::test_perplexity_filter_ranks_fluent_text_first",
+    "fiat2_spark.operators.text.token_budget_select(n_buckets)":
+        "test_text_properties.py::test_token_budget_select_matches_plain_window",
+    "fiat2_spark.sources.io.to_json_records(n)":
+        "test_sources.py::test_json_records_server_boundary",
+}
+
+
+def _caller_files(repo: str):
+    """(path, is_test) for every Python file that can call the engine."""
+    import os
+
+    for d in ("fiat2_spark", "tools", "examples", "perfbench", "tests"):
+        for root, _, files in os.walk(os.path.join(repo, d)):
+            for f in sorted(files):
+                if f.endswith(".py"):
+                    yield os.path.join(root, f), d == "tests" or f.startswith("test_")
+    for f in ("bench.py", "__spark_entry__.py"):
+        yield os.path.join(repo, f), False
+
+
+def _file_namespace(path: str, repo: str, tree) -> dict:
+    """Names a file can call engine code through: its module globals
+    (engine modules only) plus every fiat2_spark import in it, also the
+    function-local ones."""
+    import ast
+    import importlib
+    import os
+
+    ns: dict = {}
+    rel = os.path.relpath(path, repo)
+    if rel.startswith("fiat2_spark"):
+        mod = rel[:-3].replace(os.sep, ".").removesuffix(".__init__")
+        ns.update(vars(importlib.import_module(mod)))
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and (node.module or "").startswith("fiat2_spark"):
+            base = importlib.import_module(node.module)
+            for a in node.names:
+                if a.name == "*":
+                    ns.update((k, v) for k, v in vars(base).items() if not k.startswith("_"))
+                    continue
+                obj = getattr(base, a.name, None)
+                if obj is None:
+                    obj = importlib.import_module(f"{node.module}.{a.name}")
+                ns[a.asname or a.name] = obj
+        elif isinstance(node, ast.Import):
+            for a in node.names:
+                if a.name.startswith("fiat2_spark"):
+                    mod = importlib.import_module(a.name)
+                    ns[a.asname or "fiat2_spark"] = (
+                        mod if a.asname else importlib.import_module("fiat2_spark")
+                    )
+    return ns
+
+
+_UNRESOLVED = object()
+
+
+def _resolve(node, ns):
+    """The object an ast.Name / attribute chain names in ``ns``, following
+    attributes through modules and classes; _UNRESOLVED otherwise."""
+    import ast
+    import types
+
+    parts = []
+    while isinstance(node, ast.Attribute):
+        parts.append(node.attr)
+        node = node.value
+    if not isinstance(node, ast.Name) or node.id not in ns:
+        return _UNRESOLVED
+    obj = ns[node.id]
+    for p in reversed(parts):
+        if not isinstance(obj, (types.ModuleType, type)):
+            return _UNRESOLVED
+        obj = getattr(obj, p, _UNRESOLVED)
+        if obj is _UNRESOLVED:
+            return _UNRESOLVED
+    return obj
+
+
+def _value(node, ns):
+    """A call-site argument's value when it is a literal or a name that
+    resolves; _UNRESOLVED for any computed expression."""
+    import ast
+
+    try:
+        return ast.literal_eval(node)
+    except (ValueError, TypeError, SyntaxError, MemoryError, RecursionError):
+        return _resolve(node, ns)
+
+
+def _is_default(value, default) -> bool:
+    if value is _UNRESOLVED:
+        return False
+    if value is default:
+        return True
+    try:
+        return type(value) is type(default) and bool(value == default)
+    except Exception:  # noqa: BLE001 — incomparable values are not the default
+        return False
+
+
+def _defaulted(fn, bound: bool) -> list[tuple[str, int | None, object]]:
+    """(name, positional index at the call site or None, default) for
+    every defaulted parameter of ``fn``."""
+    import inspect
+
+    out, pos = [], 0
+    for p in inspect.signature(fn).parameters.values():
+        positional = p.kind in (p.POSITIONAL_ONLY, p.POSITIONAL_OR_KEYWORD)
+        if p.default is not p.empty:
+            out.append((p.name, pos - bound if positional else None, p.default))
+        pos += positional
+    return out
+
+
+def _parameter_scan(repo: str):
+    """(params, setters): every defaulted parameter of a reached engine
+    function or method, labelled "mod.qualname(param)", and for each the
+    set of (file, is_test) that pass it a value that is not its default."""
+    import ast
+    import importlib
+    import inspect
+    import os
+
+    defs, whole, reached = _reached(repo)
+
+    # id(function) → its label; methods also by name, for calls on instances
+    fns: dict[int, str] = {}
+    methods: dict[str, list[tuple[str, object]]] = {}
+    params: dict[str, None] = {}
+    for mod, names in defs.items():
+        m = importlib.import_module(mod)
+        for n in names:
+            if mod not in whole and f"{mod}.{n}" not in reached:
+                continue
+            obj = getattr(m, n)
+            members = [(n, inspect.unwrap(obj), False)] if inspect.isfunction(obj) else []
+            if inspect.isclass(obj):
+                for attr, raw in vars(obj).items():
+                    fn = getattr(raw, "__func__", raw)
+                    if inspect.isfunction(fn) and fn.__module__ == mod:
+                        members.append((f"{n}.{attr}", fn, not isinstance(raw, staticmethod)))
+            for qual, fn, bound in members:
+                fns[id(fn)] = f"{mod}.{qual}"
+                if bound:
+                    methods.setdefault(fn.__name__, []).append((f"{mod}.{qual}", fn))
+                for p, _, _ in _defaulted(fn, False):
+                    params[f"{mod}.{qual}({p})"] = None
+
+    setters: dict[str, set] = {}
+    for path, is_test in _caller_files(repo):
+        with open(path, encoding="utf-8") as fh:
+            tree = ast.parse(fh.read())
+        ns = _file_namespace(path, repo, tree)
+        rel = os.path.relpath(path, repo)
+        for call in ast.walk(tree):
+            if not isinstance(call, ast.Call):
+                continue
+            obj = _resolve(call.func, ns)
+            if obj is _UNRESOLVED:
+                if not isinstance(call.func, ast.Attribute):
+                    continue
+                targets = [(lbl, fn, True) for lbl, fn in methods.get(call.func.attr, [])]
+            elif inspect.isclass(obj):
+                init = f"{obj.__module__}.{obj.__qualname__}.__init__"
+                targets = [(lbl, fn, True) for lbl, fn in methods.get("__init__", []) if lbl == init]
+            else:
+                fn = inspect.unwrap(getattr(obj, "__func__", obj))
+                lbl = fns.get(id(fn))
+                targets = [(lbl, fn, hasattr(obj, "__self__"))] if lbl else []
+            for lbl, fn, bound in targets:
+                for p, idx, default in _defaulted(fn, bound):
+                    hit = False
+                    for j, a in enumerate(call.args):
+                        if isinstance(a, ast.Starred):
+                            hit |= idx is not None and j <= idx
+                            break
+                        if j == idx and not _is_default(_value(a, ns), default):
+                            hit = True
+                    for kw in call.keywords:
+                        if kw.arg is None or (
+                            kw.arg == p and not _is_default(_value(kw.value, ns), default)
+                        ):
+                            hit = True
+                    if hit:
+                        setters.setdefault(f"{lbl}({p})", set()).add((rel, is_test))
+    return params, setters
+
+
+def test_every_engine_parameter_is_set():
+    """Every defaulted parameter of a reached engine definition is set,
+    by position or keyword and to a value other than its default, by
+    some caller outside the tests: a query, an oracle builder, the
+    server, an example, a `perfbench/` file or a tool. A parameter only
+    ever run at its default is a constant: inline it. Deployment
+    settings and parameters only tests set go in PARAM_ALLOW with a
+    reason."""
+    import os
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    params, setters = _parameter_scan(repo)
+    unset = sorted(
+        p for p in params if not any(not t for _, t in setters.get(p, ()))
+    )
+    assert sorted(set(unset) - set(PARAM_ALLOW)) == [], "unset engine parameters"
+    assert sorted(set(PARAM_ALLOW) - set(unset)) == [], "stale PARAM_ALLOW entries"
+
+
+def test_api_index_is_current():
+    """docs/API.md is what `tools/gen_api_index.py` prints for the
+    current tree: a changed signature or docstring first line needs a
+    regenerated index (`python tools/gen_api_index.py > docs/API.md`)."""
+    import contextlib
+    import io
+    import os
+
+    from tools.gen_api_index import main
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = io.StringIO()
+    with contextlib.redirect_stdout(out):
+        main()
+    with open(os.path.join(repo, "docs", "API.md"), encoding="utf-8") as fh:
+        assert out.getvalue() == fh.read(), "docs/API.md is stale: regenerate it"

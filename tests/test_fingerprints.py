@@ -84,6 +84,24 @@ def test_reachable_edits_delta(tmp_path):
     assert _fp_of(tmp_path, _V5) != fp1, "reached constant edit must delta"
 
 
+_V_DEFAULT = """
+def helper(x):
+    return x + 1
+
+def query(x, g=helper):
+    return g(x)
+"""
+
+
+def test_default_value_function_is_reached(tmp_path):
+    """A function used only as a parameter's default value is part of
+    the closure: defaults are evaluated in the defining module, so the
+    name is absent from the function's own co_names, yet the query runs
+    it."""
+    fp1 = _fp_of(tmp_path, _V_DEFAULT)
+    assert _fp_of(tmp_path, _V_DEFAULT.replace("x + 1", "x + 2")) != fp1
+
+
 def test_oracle_string_deltas():
     from fiat2_spark.workloads import QUERIES
 

@@ -438,10 +438,10 @@ def test_dedup_family_tokenizer_threading(spark):
     # n-gram jaccard: jac(1,2) = 1.0 under unicode, nothing under ASCII
     # (zero-token docs have empty shingle sets → jac 0 by definition)
     uni = ngram_jaccard_pairs(
-        cyr, "doc_id", "text", threshold=0.9, tokenizer=tokens_unicode
+        cyr, "doc_id", "text", tokenizer=tokens_unicode
     ).collect()
     assert [(r["id_a"], r["id_b"], r["jac"]) for r in uni] == [(1, 2, 1.0)], uni
-    assert ngram_jaccard_pairs(cyr, "doc_id", "text", threshold=0.9).collect() == []
+    assert ngram_jaccard_pairs(cyr, "doc_id", "text").collect() == []
 
     # span dedup: doc 2's every segment is a non-first occurrence under
     # unicode; under ASCII every doc tokenizes to zero segments

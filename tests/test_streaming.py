@@ -122,7 +122,7 @@ def test_sessionize_matches_native_session_window(spark):
     ev = tbl(spark, SF_SMOKE, "events")
     ours = {
         (r["user_id"], r["session_start"]): (r["n_events"], r["session_end"])
-        for r in sessionize(ev, gap_minutes=30).collect()
+        for r in sessionize(ev).collect()
     }
     native = {
         (r["user_id"], r["first_ts"]): (r["n"], r["last_ts"])
@@ -204,7 +204,7 @@ def test_watermark_drops_late_rows_in_append_mode(spark):
     )
     sink = f"late_sink_{id(stage)}"
     q = (
-        windowed_agg(stream, window="5 minutes", watermark="10 minutes")
+        windowed_agg(stream)
         .writeStream.outputMode("append")
         .format("memory")
         .queryName(sink)

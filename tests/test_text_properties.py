@@ -393,7 +393,7 @@ def test_nb_classifier_match_python_model(spark, pos, neg, pool):
     got = {
         r["doc_id"]: (r["logit_q"], r["pred"])
         for r in nb_classifier_scores(
-            tdf, sdf, "doc_id", "text", "label", buckets=64
+            tdf, sdf, "doc_id", "text", buckets=64
         ).collect()
     }
     want = _py_nb_classifier(train, score, buckets=64)
@@ -1195,7 +1195,7 @@ def test_doremi_trajectory_loop_checkpoints_release(spark):
         "doc_id long, text string, dom string",
     )
     _, fit_blocks = new_blocks(lambda: _doremi_domain_stats(
-        pool, ref, "text", "dom", 16, 10_000, 2, 5,
+        pool, ref, "text", "dom", 16,
     ))
     rows, traj_blocks = new_blocks(lambda: {
         r["domain"]: r["weight"]

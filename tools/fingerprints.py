@@ -243,16 +243,39 @@ def _global_names(obj) -> set[str] | None:
     return _co_names(code) if code is not None else None
 
 
+def _default_names(tree) -> set[int]:
+    """ids of the Name nodes in the default values of the parsed
+    function (or of a parsed class's methods). Defaults are evaluated in
+    the defining scope, so their names are not in the function's own
+    ``co_names`` — ``def f(x, tokenizer=tokens)`` reaches ``tokens``."""
+    top = tree.body[0] if tree.body else None
+    if isinstance(top, pyast.ClassDef):
+        fns = [n for n in top.body if isinstance(n, (pyast.FunctionDef, pyast.AsyncFunctionDef))]
+    elif isinstance(top, (pyast.FunctionDef, pyast.AsyncFunctionDef)):
+        fns = [top]
+    else:
+        return set()
+    return {
+        id(n)
+        for f in fns
+        for d in [*f.args.defaults, *f.args.kw_defaults]
+        if d is not None
+        for n in pyast.walk(d)
+        if isinstance(n, pyast.Name)
+    }
+
+
 def _names_in(src: str, mod, allowed: set[str] | None = None):
     """Yield every object a source block can reach in ``mod``'s
     namespace: resolved attribute chains, bare names that are not a
     chain's base (filtered to ``allowed`` — the code object's true
-    global names — when available), and function-local fiat2_spark
-    imports."""
+    global names — when available, except names in default values),
+    and function-local fiat2_spark imports."""
     try:
         tree = pyast.parse(textwrap.dedent(src))
     except SyntaxError:
         return
+    in_defaults = _default_names(tree)
     # decorators are import-time registration, not query-runtime code:
     # walking @q would reach the module's QUERIES/ORACLES registries,
     # whose VALUES are every query in the module — collapsing the
@@ -322,7 +345,7 @@ def _names_in(src: str, mod, allowed: set[str] | None = None):
             isinstance(node, pyast.Name)
             and id(node) not in chain_bases
             and not (node.id.startswith("__") and node.id.endswith("__"))
-            and (allowed is None or node.id in allowed)
+            and (allowed is None or node.id in allowed or id(node) in in_defaults)
         ):
             got = aliases.get(node.id, _MISSING)
             if got is _MISSING:

@@ -244,7 +244,7 @@ def main() -> None:
                 for _ in range(2):
                     t0 = time.perf_counter()
                     e = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-                    semantic_dedup(e, "vec_id", "embedding", k=kk, iters=2).write.format(
+                    semantic_dedup(e, "vec_id", "embedding", k=kk).write.format(
                         "noop"
                     ).mode("overwrite").save()
                     dt = time.perf_counter() - t0
