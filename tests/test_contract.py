@@ -192,35 +192,17 @@ def _engine_defs(repo: str) -> dict[str, list[str]]:
     return out
 
 
-def _script_roots(path: str) -> list:
+def _script_roots(path: str, repo: str) -> list:
     """Engine objects a script imports from fiat2_spark or reaches by
     attribute access on an imported fiat2_spark module."""
     import ast
-    import importlib
     import types
 
     with open(path, encoding="utf-8") as fh:
         tree = ast.parse(fh.read())
-    roots, modules = [], {}
-    for node in ast.walk(tree):
-        if isinstance(node, ast.ImportFrom) and (node.module or "").startswith("fiat2_spark"):
-            base = importlib.import_module(node.module)
-            for a in node.names:
-                obj = getattr(base, a.name, None)
-                if obj is None:
-                    obj = importlib.import_module(f"{node.module}.{a.name}")
-                if isinstance(obj, types.ModuleType):
-                    modules[a.asname or a.name] = obj
-                else:
-                    roots.append(obj)
-        elif isinstance(node, ast.Import):
-            for a in node.names:
-                if a.name.startswith("fiat2_spark"):
-                    mod = importlib.import_module(a.name)
-                    if a.asname:
-                        modules[a.asname] = mod
-                    else:
-                        modules["fiat2_spark"] = importlib.import_module("fiat2_spark")
+    ns = _file_namespace(path, repo, tree)
+    modules = {k: v for k, v in ns.items() if isinstance(v, types.ModuleType)}
+    roots = [v for v in ns.values() if not isinstance(v, types.ModuleType)]
     for node in ast.walk(tree):
         if isinstance(node, ast.Attribute):
             chain = []
@@ -260,7 +242,7 @@ def _reached(repo: str):
     for d in ("examples", "perfbench"):
         for f in sorted(os.listdir(os.path.join(repo, d))):
             if f.endswith(".py"):
-                roots += _script_roots(os.path.join(repo, d, f))
+                roots += _script_roots(os.path.join(repo, d, f), repo)
     labels = [lbl for lbl, _ in _reachable_sources(*roots)]
     whole = {lbl.removeprefix("module:") for lbl in labels if lbl.startswith("module:")}
     return defs, whole, set(labels)
