@@ -1902,17 +1902,20 @@ def test_bpe_learn_driver_path_runs_no_jobs_per_merge(spark):
     """The driver path's job count is independent of n_merges: learning
     2 vs 10 merges on the same tiny vocabulary costs the same number of
     Spark jobs (the checkpoint materialization + the bounded probe) —
-    the per-merge argmax jobs are gone."""
+    the per-merge argmax jobs are gone. Counted under a job group of
+    its own: the session's ungrouped job list is trimmed by 10% each
+    time the status store passes spark.ui.retainedJobs, which a long
+    test session does mid-measurement."""
     from fiat2_spark.operators.text import bpe_learn
+    from tests.conftest import jobs_in_group
 
     df = spark.createDataFrame(
         [("aaaa aaa abab the cat sat on the mat",)], "text string"
     )
-    sc = spark.sparkContext
 
     def jobs(n_merges: int) -> int:
-        j0 = len(sc.statusTracker().getJobIdsForGroup(None) or [])
-        bpe_learn(df, "text", n_merges=n_merges)
-        return len(sc.statusTracker().getJobIdsForGroup(None) or []) - j0
+        return jobs_in_group(
+            spark, f"bpe_learn_{n_merges}", lambda: bpe_learn(df, "text", n_merges=n_merges)
+        )[1]
 
     assert jobs(10) == jobs(2)
