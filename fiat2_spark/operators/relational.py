@@ -621,7 +621,7 @@ def grouped_listagg(
                 ),
                 lambda x: x["v"],
             ),
-            ","
+            ",",
         ).alias("__s"),
         F.count(F.lit(1)).alias("__cnt"),
     )

@@ -37,8 +37,8 @@ class SumIndex:
     """Materialized SUM(attr) — SumAgg.v:17-18 (to_idx = current sum),
     83-92 (read rewrite), 150-156 (cons_to_add maintenance)."""
 
-    def __init__(self, expr: Column, alias: str = "sum"):
-        self.expr, self.alias = expr, alias
+    def __init__(self, expr: Column):
+        self.expr = expr
         self.state: Any = 0
 
     def init(self, base: DataFrame) -> None:
@@ -58,8 +58,8 @@ class MinIndex:
     Monotone under insert-only (the streaming-safe case): new_min =
     min(old_min, min(batch))."""
 
-    def __init__(self, expr: Column, alias: str = "min"):
-        self.expr, self.alias = expr, alias
+    def __init__(self, expr: Column):
+        self.expr = expr
         self.state: Any = None
 
     def _merge(self, v):

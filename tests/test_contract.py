@@ -491,7 +491,12 @@ def _parameter_scan(repo: str):
             if inspect.isclass(obj):
                 for attr, raw in vars(obj).items():
                     fn = getattr(raw, "__func__", raw)
-                    if inspect.isfunction(fn) and fn.__module__ == mod:
+                    # a dataclass's generated __init__ (no source file)
+                    # takes the record's fields: a data format, not options
+                    if (
+                        inspect.isfunction(fn) and fn.__module__ == mod
+                        and fn.__code__.co_filename == m.__file__
+                    ):
                         members.append((f"{n}.{attr}", fn, not isinstance(raw, staticmethod)))
             for qual, fn, bound in members:
                 fns[id(fn)] = f"{mod}.{qual}"
@@ -511,7 +516,9 @@ def _parameter_scan(repo: str):
                 continue
             obj = _resolve(call.func, ns)
             if obj is _UNRESOLVED:
-                if not isinstance(call.func, ast.Attribute):
+                # a method called on an instance: match by name, except
+                # constructors, which engine code calls by class name
+                if not isinstance(call.func, ast.Attribute) or call.func.attr == "__init__":
                     continue
                 targets = [(lbl, fn, True) for lbl, fn in methods.get(call.func.attr, [])]
             elif inspect.isclass(obj):
