@@ -15,8 +15,15 @@ both the DataFrame API and ``spark.sql`` see the same relations.
 Every corpus read (``tbl`` and the streaming sources) takes its schema
 from ``table_meta``, which infers it once per SparkContext (inference is
 one Spark job per read otherwise), and its timestamps from
-``normalize_ts``. The cache holds schemas only, never data, so each read
-is a fresh relation.
+``normalize_ts``. That cache holds schemas only, so each ``tbl`` read is
+a fresh scan.
+
+``resident`` is fiat2's index introduction for a small table that is
+probed by key: it keeps the table's rows on the driver, as an Arrow
+table read once per SparkContext and again only after its files change,
+and serves each read as a fresh local relation that plans and runs
+without a Spark job. Only tables of at most ``RESIDENT_ROWS`` rows are
+kept.
 """
 
 from __future__ import annotations
@@ -204,3 +211,58 @@ def tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     meta = table_meta(spark, path)
     return normalize_ts(spark.read.schema(meta.schema).parquet(path), meta, "ts" if name == "events" else None)
+
+
+# The most rows ``resident`` keeps on the driver for one table.
+RESIDENT_ROWS = 10_000
+
+# SparkContext → {abs path: (file signature, pyarrow.Table, StructType)},
+# keyed weakly on the context like ``_META``. The lock is held while a
+# table is read, so threads racing on its first read run one job.
+_RESIDENT: "weakref.WeakKeyDictionary[SparkContext, dict]" = weakref.WeakKeyDictionary()
+_RESIDENT_LOCK = threading.Lock()
+
+
+def _too_many_rows(path: str, rows: str) -> ValueError:
+    return ValueError(
+        f"{path} holds {rows} rows; a resident table holds at most RESIDENT_ROWS = {RESIDENT_ROWS}"
+    )
+
+
+def _footer_rows(files: list[str]) -> int:
+    """The row count the parquet footers under a path declare."""
+    import pyarrow.parquet as pq
+
+    data = [f for f in files if not os.path.basename(f).startswith(("_", "."))]
+    return sum(pq.read_metadata(f).num_rows for f in data)
+
+
+def resident(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """One small corpus table served from the driver: read with one
+    ``toArrow()`` job on its first read in this SparkContext and again
+    only after the files at its path change, then returned on every call
+    as a fresh LocalRelation over the kept Arrow table, which a filter,
+    projection or collect runs without a Spark job. Raises ``ValueError``
+    naming ``RESIDENT_ROWS`` when the table has more rows than that; for
+    a local path the parquet footers are counted before any job runs. A
+    path off the local filesystem has no signature and is read (at most
+    ``RESIDENT_ROWS + 1`` rows) on every call."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    files = _files(path)
+    if not files:
+        df = tbl(spark, sf_dir, name)
+        table = df.limit(RESIDENT_ROWS + 1).toArrow()
+        if table.num_rows > RESIDENT_ROWS:
+            raise _too_many_rows(path, f"more than {RESIDENT_ROWS}")
+        return spark.createDataFrame(table, df.schema)
+    key, sig = os.path.abspath(path), _signature(files)
+    with _RESIDENT_LOCK:
+        cache = _RESIDENT.setdefault(spark.sparkContext, {})
+        hit = cache.get(key)
+        if hit is None or hit[0] != sig:
+            rows = _footer_rows(files)
+            if rows > RESIDENT_ROWS:
+                raise _too_many_rows(path, str(rows))
+            df = tbl(spark, sf_dir, name)
+            hit = cache[key] = (sig, df.toArrow(), df.schema)
+    return spark.createDataFrame(hit[1], hit[2])

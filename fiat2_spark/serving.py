@@ -5,11 +5,13 @@ Capture :n, JSON string responses, port 8080), over the same two queries
 
 A stdlib ``ThreadingHTTPServer``: each request compiles the
 :n-parameterized DataFrame plan and serializes the (small, filtered)
-result through ``sources.io.to_json_records`` — the read path stays
-Spark; only the JSON boundary is driver-side, exactly as in the
-reference (its handlers return pre-extracted JSON strings). This is a
-demo boundary, not a production server: one SparkSession, results must
-fit the driver, no auth.
+result through ``sources.io.to_json_records``, as the reference's
+handlers return pre-extracted JSON strings. The artist table both
+routes probe is resident on the driver (``catalog.resident``): an
+artist request runs no Spark job, and an album request runs one, the
+``supplier`` scan. This is a demo boundary, not a production server:
+one SparkSession, results and the artist table must fit the driver, no
+auth.
 
 Run: ``python -m fiat2_spark.serving [port] [sf_dir]``.
 """

@@ -14,6 +14,7 @@ bucket key skip the shuffle).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from fiat2_spark.catalog import TPCH_TABLES, Catalog
 
@@ -88,14 +89,10 @@ def register_views(spark: SparkSession, sf_dir: str, tables=TPCH_TABLES) -> None
     Catalog.from_sf_dir(spark, sf_dir, tables)
 
 
-def to_json_records(df: DataFrame, n: int | None = None) -> list[str]:
+def to_json_records(df: DataFrame) -> list[str]:
     """JSON record serialization — the extracted server's generate_json
     output shape (Extracted.hs:3035-3038): one JSON object per row.
-    Driver-side by design (it's the HTTP boundary, small results)."""
-    it = df.toJSON().toLocalIterator()
-    out = []
-    for i, rec in enumerate(it):
-        if n is not None and i >= n:
-            break
-        out.append(rec)
-    return out
+    Driver-side by design (it's the HTTP boundary, small results): one
+    ``collect`` of ``to_json(struct(*))``, which runs no Spark job over a
+    local relation and one job otherwise."""
+    return [r[0] for r in df.select(F.to_json(F.struct("*"))).collect()]

@@ -15,13 +15,15 @@ SF_CORRECT = "/root/testdata/sf0.01"
 
 
 def jobs_in_group(spark, group: str, fn):
-    """(fn(), number of Spark jobs fn started), counted under a job group."""
+    """(fn(), number of Spark jobs fn started), counted under a job group
+    once the listener bus has delivered every job-start event."""
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
     try:
         out = fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 

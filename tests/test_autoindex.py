@@ -619,15 +619,17 @@ def test_dist_index_selected_above_fold_collect_limit(spark, monkeypatch):
 def test_dist_index_insert_is_o1_pending(spark, monkeypatch):
     """insert_row is a driver-list append — no Spark job per insert."""
     from fiat2_spark.streaming.maintenance import DistDictIndex
+    from tests.conftest import jobs_in_group
 
     base = spark.createDataFrame([(2, 20), (7, 70)], "id long, price long")
     idx = DistDictIndex(base, "id")
-    tracker = spark.sparkContext.statusTracker()
-    before = len(tracker.getJobIdsForGroup(None) or [])
-    for i in range(50):
-        idx.insert_row(2 * i, {"id": 2 * i, "price": 100 + i})
-    after = len(tracker.getJobIdsForGroup(None) or [])
-    assert after == before, "insert_row launched Spark jobs"
+
+    def insert_50():
+        for i in range(50):
+            idx.insert_row(2 * i, {"id": 2 * i, "price": 100 + i})
+
+    _, jobs = jobs_in_group(spark, "dist_index_insert_rows", insert_50)
+    assert jobs == 0, "insert_row launched Spark jobs"
     assert len(idx.pending) == 50
     # lookup sees pending prepended before base rows
     got = idx.lookup(2)

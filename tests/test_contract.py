@@ -353,8 +353,6 @@ PARAM_ALLOW = {
         "test_text_properties.py::test_perplexity_filter_ranks_fluent_text_first",
     "fiat2_spark.operators.text.token_budget_select(n_buckets)":
         "test_text_properties.py::test_token_budget_select_matches_plain_window",
-    "fiat2_spark.sources.io.to_json_records(n)":
-        "test_sources.py::test_json_records_server_boundary",
 }
 
 

@@ -71,7 +71,7 @@ def test_bucketed_join_skips_shuffle(spark):
 
 def test_json_records_server_boundary(spark):
     n = tbl(spark, SF_SMOKE, "nation").select("n_nationkey", "n_name").orderBy("n_nationkey")
-    recs = to_json_records(n, n=3)
+    recs = to_json_records(n.limit(3))
     assert len(recs) == 3
     first = json.loads(recs[0])
     assert first == {"n_nationkey": 0, "n_name": first["n_name"]}
@@ -142,13 +142,9 @@ def test_tbl_adapts_all_historical_events_ts_encodings(spark):
 
 def _read_jobs(spark, sf_dir, name, group):
     """tbl() under its own job group → (DataFrame, jobs it started)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        df = tbl(spark, sf_dir, name)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return df, len(sc.statusTracker().getJobIdsForGroup(group))
+    from tests.conftest import jobs_in_group
+
+    return jobs_in_group(spark, group, lambda: tbl(spark, sf_dir, name))
 
 
 def _write(path, **cols):
@@ -310,6 +306,139 @@ def test_http_serving_shim_matches_query(spark):
         assert albums and {"album_id", "title", "artist"} <= set(albums[0])
     finally:
         srv.shutdown()
+
+
+def _resident_nation_copy(tmp_path) -> str:
+    """An sf dir holding only a copy of the smoke nation table, so the
+    resident cache meets it for the first time."""
+    import shutil
+
+    shutil.copy(os.path.join(SF_SMOKE, "nation.parquet"), tmp_path / "nation.parquet")
+    return str(tmp_path)
+
+
+def test_resident_routes_run_0_and_1_jobs(spark):
+    """Once nation is resident, an artist request (plan, collect, JSON)
+    runs no Spark job and an album request runs one, the supplier scan."""
+    from fiat2_spark.catalog import resident
+    from fiat2_spark.serving import _dispatch
+    from tests.conftest import jobs_in_group
+
+    resident(spark, SF_SMOKE, "nation")
+    tbl(spark, SF_SMOKE, "supplier")  # its schema, inferred once per context
+    artists, jobs = jobs_in_group(
+        spark, "resident_artist_route", lambda: _dispatch(spark, SF_SMOKE, "get_artist_less_than", 10)
+    )
+    assert jobs == 0 and len(artists) == 10
+    albums, jobs = jobs_in_group(
+        spark, "resident_album_route", lambda: _dispatch(spark, SF_SMOKE, "get_album_and_artist", 25)
+    )
+    assert jobs == 1 and len(albums) == tbl(spark, SF_SMOKE, "supplier").count()
+
+
+def test_resident_table_rebuilds_after_rewrite(spark, tmp_path):
+    """Rewriting nation at the same path makes the next read rebuild the
+    resident table and serve the new rows; the read after that is a hit."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from fiat2_spark.workloads.server import artist_less_than
+    from tests.conftest import jobs_in_group
+
+    def write(names):
+        keys = pa.array(range(len(names)), pa.int32())
+        pq.write_table(
+            pa.table({"n_nationkey": keys, "n_name": names, "n_regionkey": keys}),
+            tmp_path / "nation.parquet",
+        )
+
+    def names():
+        return [r["name"] for r in artist_less_than(spark, str(tmp_path), 10).collect()]
+
+    write(["A", "B"])
+    assert names() == ["A", "B"]
+    write(["C", "D", "E"])
+    got, jobs = jobs_in_group(spark, "resident_rebuild", names)
+    assert got == ["C", "D", "E"] and jobs >= 1
+    got, jobs = jobs_in_group(spark, "resident_rebuilt_hit", names)
+    assert got == ["C", "D", "E"] and jobs == 0
+
+
+def test_resident_first_read_race(spark, tmp_path):
+    """Threads racing on a table's first read all get its rows, and the
+    table is read once: one schema job and one toArrow job in all."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from fiat2_spark.catalog import resident
+
+    sf_dir = _resident_nation_copy(tmp_path)
+    want = [tuple(r) for r in tbl(spark, SF_SMOKE, "nation").collect()]
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        first = scheduler.numTotalJobs()
+        with ThreadPoolExecutor(8) as pool:
+            futures = [
+                pool.submit(lambda: [tuple(r) for r in resident(spark, sf_dir, "nation").collect()])
+                for _ in range(8)
+            ]
+            got = [f.result(timeout=120) for f in futures]
+        jobs = scheduler.numTotalJobs() - first
+    finally:
+        sys.setswitchinterval(switch)
+    assert got == [want] * 8
+    assert jobs == 2
+
+
+def test_resident_refuses_table_over_resident_rows(spark, tmp_path, monkeypatch):
+    """A table with more rows than RESIDENT_ROWS fails with an error that
+    names the constant, and the footer count runs before any Spark job."""
+    import pytest
+
+    from fiat2_spark import catalog
+    from tests.conftest import jobs_in_group
+
+    sf_dir = _resident_nation_copy(tmp_path)
+    monkeypatch.setattr(catalog, "RESIDENT_ROWS", 24)
+
+    def read():
+        with pytest.raises(ValueError, match="RESIDENT_ROWS = 24"):
+            catalog.resident(spark, sf_dir, "nation")
+
+    _, jobs = jobs_in_group(spark, "resident_over_cap", read)
+    assert jobs == 0
+
+
+def test_resident_routes_match_broadcast_join_plan(spark):
+    """Both routes' JSON is byte-identical to the parquet plans they
+    replace (nation filter; supplier ⋈ broadcast nation) serialized with
+    DataFrame.toJSON, including the empty results of n <= 0."""
+    from pyspark.sql import functions as F
+
+    from fiat2_spark.workloads.server import album_and_artist, artist_less_than
+
+    def parquet_artists(n):
+        nat = tbl(spark, SF_SMOKE, "nation").filter(F.col("n_nationkey") < n)
+        return nat.select(
+            F.col("n_nationkey").cast("long").alias("artist_id"), F.col("n_name").alias("name")
+        )
+
+    def parquet_albums(n):
+        s = tbl(spark, SF_SMOKE, "supplier")
+        nat = tbl(spark, SF_SMOKE, "nation").filter(F.col("n_nationkey") < n)
+        return s.join(F.broadcast(nat), F.col("s_nationkey") == F.col("n_nationkey")).select(
+            F.col("s_suppkey").alias("album_id"),
+            F.col("s_name").alias("title"),
+            F.col("n_name").alias("artist"),
+        )
+
+    for n in (-1, 0, 1, 10, 25, 26):
+        for route, parquet in ((artist_less_than, parquet_artists), (album_and_artist, parquet_albums)):
+            got = to_json_records(route(spark, SF_SMOKE, n))
+            assert got == parquet(n).toJSON().collect(), (route.__name__, n)
+            assert n > 0 or got == [], (route.__name__, n)
 
 
 def test_schema_evolution_merge_read(spark):

@@ -1752,21 +1752,15 @@ def test_lm_fit_eager_jobs(spark):
     fit that materializes more (or re-runs the unigram pass per order)
     shows up here before it shows up as a slower query."""
     from fiat2_spark.operators.text import lm_fit
+    from tests.conftest import jobs_in_group
 
     ref = spark.createDataFrame(
         [(1, "the cat sat on the mat"), (2, "the dog sat"), (3, "a cat")],
         "doc_id long, text string",
     )
-    sc = spark.sparkContext
 
     def jobs(order: int) -> int:
-        group = f"lm_fit_eager_jobs_{order}"
-        sc.setJobGroup(group, group)
-        try:
-            lm_fit(ref, "text", order=order)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return len(sc.statusTracker().getJobIdsForGroup(group))
+        return jobs_in_group(spark, f"lm_fit_eager_jobs_{order}", lambda: lm_fit(ref, "text", order=order))[1]
 
     assert jobs(2) == 3
     assert jobs(3) == 6

@@ -45,14 +45,24 @@ def main() -> None:
     except OSError:
         print(f"gate-commit: (git unavailable)  sf_dir={sf_dir}", flush=True)
     spark = get_spark(app_name="fiat2-gate")
-    # dpp_partitioned_join, partition_pruned_lookup and
-    # zonemap_range_scan read layouts written once per sf under
-    # spark-warehouse/: write them here, outside every query's job
-    # group, so a fresh checkout logs the same jobs= as a warm one
+    # Work whose cost would otherwise fall on whichever query runs it
+    # first runs here, outside every query's job group, so a query's
+    # jobs= is the same in a fresh checkout, a subset run and a full run:
+    # - dpp_partitioned_join, partition_pruned_lookup and
+    #   zonemap_range_scan read layouts written once per sf under
+    #   spark-warehouse/;
+    # - every table's schema is inferred once per SparkContext;
+    # - the server routes read the resident nation table.
+    from fiat2_spark.catalog import resident, table_meta
     from fiat2_spark.workloads.core import _partitioned_events, _sorted_events
 
     _partitioned_events(spark, sf_dir)
     _sorted_events(spark, sf_dir)
+    for f in sorted(os.listdir(sf_dir)):
+        if f.endswith(".parquet"):
+            table_meta(spark, os.path.join(sf_dir, f))
+    if os.path.exists(os.path.join(sf_dir, "nation.parquet")):
+        resident(spark, sf_dir, "nation")
     con = duck_conn(sf_dir)
     failures = []
     names = [n for n in sorted(QUERIES) if not only or n in only]
@@ -71,6 +81,8 @@ def main() -> None:
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         dt = time.perf_counter() - t0
+        # a job whose start event is still queued is not in the group yet
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
         jobs = len(sc.statusTracker().getJobIdsForGroup(name))
         print(f"{'PASS' if ok else 'FAIL'} {name:28s} {dt:6.1f}s  {detail}  jobs={jobs}", flush=True)
         if not ok:
