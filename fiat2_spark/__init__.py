@@ -10,15 +10,15 @@ search, text analysis, multimodal columns).
 
 Layout:
   session    — SparkSession bootstrap tuned for local testing / cluster scale
-  catalog    — the mutable store (fiat2 Gstore): name → DataFrame
+  catalog    — table reads over the test corpus, and ``resident``
   functions  — scalar semantics (Coq floor div/mod, word arith, null-safe eq)
   operators  — relational + aggregate + data-pipeline operators
-  plans      — the fiat2 expression/command AST, typechecker, and compiler
-               to DataFrame plans (Catalyst does the physical optimization)
+  plans      — the fiat2 expression/command AST, typechecker, compiler
+               to DataFrame plans (Catalyst does the physical optimization),
+               and the command interpreter over the Gstore (``interp.Store``)
   streaming  — incremental view maintenance + Structured Streaming surface
 """
 
 from fiat2_spark.session import get_spark  # noqa: F401
-from fiat2_spark.catalog import Catalog  # noqa: F401
 
 __version__ = "0.1.0"

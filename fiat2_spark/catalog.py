@@ -1,16 +1,6 @@
-"""The mutable store — fiat2's ``Gstore`` (reference:
-fiat2/src/fiat2/Interpret.v:501-524 interprets commands against a map of
-mutable locations; fiat2/src/fiat2/Language.v:123 ``ELoc`` reads one).
-
-In Spark terms the store is a catalog of named DataFrames: reading a
-location is a (lazy) plan reference, assignment rebinds the name, and
-``let_mut`` scoping creates/restores bindings around a block. DataFrames
-are immutable, so "mutation" is rebinding — which is exactly fiat2's
-semantics (CAssign replaces the stored value wholesale).
-
-The catalog also fronts the test corpus: ``Catalog.from_sf_dir`` loads
-the driver's parquet tables (TESTDATA.md) and registers temp views so
-both the DataFrame API and ``spark.sql`` see the same relations.
+"""Table reads over the test corpus (TESTDATA.md): the driver's parquet
+tables, one directory per scale factor. fiat2's Gstore, the store a
+command runs against, is `plans.interp.Store`.
 
 Every corpus read (``tbl`` and the streaming sources) takes its schema
 from ``table_meta``, which infers it once per SparkContext (inference is
@@ -32,7 +22,6 @@ import json
 import os
 import threading
 import weakref
-from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark import SparkContext
@@ -52,59 +41,6 @@ TPCH_TABLES = (
     "documents",
     "embeddings",
 )
-
-
-class Catalog:
-    """name → DataFrame store with fiat2 command-layer scoping."""
-
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
-        self._store: dict[str, DataFrame] = {}
-
-    # -- store primitives (fiat2 ELoc / CAssign / CLetMut) -----------------
-
-    def get(self, name: str) -> DataFrame:
-        """ELoc: read a mutable store location (Interpret.v:262)."""
-        if name not in self._store:
-            raise KeyError(f"unbound store location {name!r}")
-        return self._store[name]
-
-    def assign(self, name: str, df: DataFrame) -> None:
-        """CAssign: rebind a store location (Interpret.v:514)."""
-        self._store[name] = df
-        df.createOrReplaceTempView(name)
-
-    def __contains__(self, name: str) -> bool:
-        return name in self._store
-
-    def names(self) -> list[str]:
-        return sorted(self._store)
-
-    @contextmanager
-    def let_mut(self, name: str, df: DataFrame):
-        """CLetMut: bind ``name`` for the dynamic extent of the block,
-        restoring any previous binding afterwards (Interpret.v:510-513)."""
-        saved = self._store.get(name)
-        self.assign(name, df)
-        try:
-            yield self
-        finally:
-            if saved is None:
-                del self._store[name]
-                self.spark.catalog.dropTempView(name)
-            else:
-                self.assign(name, saved)
-
-    # -- data loading ------------------------------------------------------
-
-    @classmethod
-    def from_sf_dir(cls, spark: SparkSession, sf_dir: str, tables=TPCH_TABLES) -> "Catalog":
-        """Load the driver's parquet tables for one scale factor."""
-        cat = cls(spark)
-        for t in tables:
-            if os.path.exists(os.path.join(sf_dir, f"{t}.parquet")):
-                cat.assign(t, tbl(spark, sf_dir, t))
-        return cat
 
 
 # -- table reads ------------------------------------------------------------

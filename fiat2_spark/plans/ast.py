@@ -5,7 +5,7 @@ Constructor-for-constructor parity with the reference language
 Language.v:210-217 commands). This is the *logical* surface a reference
 user writes; `compile.py` lowers it to DataFrame plans (tables) and
 Column expressions (rows/scalars), and `interp.py` runs the command
-layer against the catalog.
+layer against the Gstore, `interp.Store`.
 
 Types (Language.v:4-15) are represented structurally for the checker;
 records keep their canonical sorted-field invariant
@@ -14,7 +14,7 @@ records keep their canonical sorted-field invariant
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, fields, replace
 from typing import Optional, Tuple, Union
 
 
@@ -387,6 +387,75 @@ class CForeach(Command):
     e: Expr
     x: str
     c: Command
+
+
+# -- the one structural traversal (the reference's fold_expr,
+#    TransfUtils.v:58-84): every rewrite and analysis over the
+#    expression tree walks it through `children` / `map_children` ------
+
+def _expr_slots(e: Expr):
+    """(field name, value) per Expr-holding field of ``e``; ERecord's
+    ``(name, expr)`` pairs are one slot whose value is the pair tuple."""
+    for f in fields(e):
+        v = getattr(e, f.name)
+        if isinstance(v, (Expr, tuple)):  # a tuple is ERecord's pairs
+            yield f.name, v
+
+
+def children(e: Expr):
+    """The immediate sub-expressions of ``e``, in field order."""
+    for _, v in _expr_slots(e):
+        if isinstance(v, Expr):
+            yield v
+        else:
+            yield from (fe for _, fe in v)
+
+
+def map_children(e: Expr, f) -> Expr:
+    """``e`` with ``f`` applied to each immediate sub-expression; ``e``
+    itself when ``f`` returned every child unchanged."""
+    changed = {}
+    for name, v in _expr_slots(e):
+        if isinstance(v, Expr):
+            nv = f(v)
+            if nv is not v:
+                changed[name] = nv
+        else:
+            nv = tuple((n, f(fe)) for n, fe in v)
+            if any(a[1] is not b[1] for a, b in zip(nv, v)):
+                changed[name] = nv
+    return replace(e, **changed) if changed else e
+
+
+def subexprs(e: Expr):
+    """``e`` and every expression below it, pre-order."""
+    yield e
+    for c in children(e):
+        yield from subexprs(c)
+
+
+def mentions(e: Expr, x: str | None, t: str | None) -> bool:
+    """Does ``e`` read variable ``x`` or store location ``t`` anywhere
+    (binders not considered)?"""
+    return any(
+        (isinstance(s, EVar) and s.x == x) or (isinstance(s, ELoc) and s.x == t)
+        for s in subexprs(e)
+    )
+
+
+def is_nil(e: Expr) -> bool:
+    """An empty-collection literal: the ``[]`` of ``if p then [r] else []``."""
+    return isinstance(e, EAtom) and isinstance(e.a, (ANil, AEmptyBag, AEmptySet))
+
+
+def insert_pattern(c: Command):
+    """``t := OCons(row, !t)`` with a ``row`` that does not read ``t``
+    — the insert shape every cons_to_* maintenance head requires
+    (SumAgg.v:150-156, DictIndexImpl.v:571-588). Returns ``row``."""
+    match c:
+        case CAssign(t, EBinop("OCons", row, ELoc(t2))) if t == t2 and not mentions(row, None, t):
+            return row
+    return None
 
 
 # -- free-variable analysis (the `cols`/free-vars used by the reference's

@@ -147,12 +147,6 @@ def _attr_access(e: A.Expr, x: str) -> str | None:
     return None
 
 
-def _is_nil(e: A.Expr) -> bool:
-    return isinstance(e, A.EAtom) and isinstance(
-        e.a, (A.ANil, A.AEmptyBag, A.AEmptySet)
-    )
-
-
 def _proj_attr(e: A.Expr, t: str) -> str | None:
     """Projection-of-one-attribute over ``ELoc t`` — either the explicit
     ``EProj`` or the flatmap-ret comprehension the reference's notation
@@ -160,7 +154,7 @@ def _proj_attr(e: A.Expr, t: str) -> str | None:
     match e:
         case A.EProj(_, l, x, r) if _is_loc(l, t):
             return _attr_access(r, x)
-        case A.EFlatmap(_, l, x, A.EBinop("OCons", r, nil)) if _is_loc(l, t) and _is_nil(nil):
+        case A.EFlatmap(_, l, x, A.EBinop("OCons", r, nil)) if _is_loc(l, t) and A.is_nil(nil):
             return _attr_access(r, x)
     return None
 
@@ -240,13 +234,13 @@ def _eq_lookup(e: A.Expr, t: str):
                     if key is None:
                         a = _attr_access(rhs, x)
                         key = lhs if a is not None else None
-                    if a is not None and key is not None and not _mentions(key, x, t):
+                    if a is not None and key is not None and not A.mentions(key, x, t):
                         rest = cs[:i] + cs[i + 1:]
                         residual = None
                         for r in rest:
                             residual = r if residual is None else A.EBinop("OAnd", residual, r)
                         # residual must not re-touch the table
-                        if residual is not None and _mentions(residual, None, t):
+                        if residual is not None and A.mentions(residual, None, t):
                             return None
                         return a, key, residual
         return None
@@ -256,7 +250,7 @@ def _eq_lookup(e: A.Expr, t: str):
             hit = eq_key(p, x)
             if hit:
                 return hit[0], hit[1], x, None, tag, None, hit[2]
-        case A.EFlatmap(tag, l, x, A.EIf(p, body, nil)) if _is_loc(l, t) and _is_nil(nil):
+        case A.EFlatmap(tag, l, x, A.EIf(p, body, nil)) if _is_loc(l, t) and A.is_nil(nil):
             hit = eq_key(p, x)
             if hit:
                 return hit[0], hit[1], x, body, tag, nil, hit[2]
@@ -266,34 +260,6 @@ def _eq_lookup(e: A.Expr, t: str):
 def _const_str(e: A.Expr) -> str | None:
     if isinstance(e, A.EAtom) and isinstance(e.a, A.AString):
         return e.a.s
-    return None
-
-
-def _mentions(e, x: str | None, t: str | None) -> bool:
-    """Does ``e`` reference variable ``x`` or location ``t``?"""
-    import dataclasses
-
-    if isinstance(e, A.EVar) and e.x == x:
-        return True
-    if isinstance(e, A.ELoc) and e.x == t:
-        return True
-    if dataclasses.is_dataclass(e):
-        vals = [getattr(e, f.name) for f in dataclasses.fields(e)]
-    elif isinstance(e, (tuple, list)):
-        vals = list(e)
-    else:
-        return False
-    return any(_mentions(v, x, t) for v in vals)
-
-
-def _insert_pattern(c: A.Command, t: str):
-    """``t := OCons(row, !t)`` with a row that does not read ``t`` —
-    the insert shape every cons_to_* maintenance head requires
-    (SumAgg.v:150-156, DictIndexImpl.v:571-588)."""
-    match c:
-        case A.CAssign(x, A.EBinop("OCons", row, A.ELoc(x2))) if x == t and x2 == t:
-            if not _mentions(row, None, t):
-                return row
     return None
 
 
@@ -327,23 +293,6 @@ def _walk_exprs(c: A.Command):
     yield from go(c, False)
 
 
-def _subexprs(e: A.Expr):
-    import dataclasses
-
-    yield e
-    if dataclasses.is_dataclass(e):
-        for f in dataclasses.fields(e):
-            v = getattr(e, f.name)
-            if isinstance(v, A.Expr):
-                yield from _subexprs(v)
-            elif isinstance(v, tuple):
-                for item in v:
-                    if isinstance(item, tuple) and len(item) == 2 and isinstance(item[1], A.Expr):
-                        yield from _subexprs(item[1])
-                    elif isinstance(item, A.Expr):
-                        yield from _subexprs(item)
-
-
 def _tables_of(c: A.Command, store_tables: set[str]) -> dict[str, dict]:
     """Per-table facts: CLetMut-bound?, insert-mutated?, disqualified?
     (non-insert reassignment or shadowing rebind)."""
@@ -368,7 +317,7 @@ def _tables_of(c: A.Command, store_tables: set[str]) -> dict[str, dict]:
                 f["letmut"] = True
                 go(body, bound | {x})
             case A.CAssign(x, _):
-                if _insert_pattern(cmd, x) is not None:
+                if A.insert_pattern(cmd) is not None:
                     note(x)["inserted"] = True
                 elif x in bound or x in store_tables:
                     note(x)["bad"] = True  # arbitrary reassignment
@@ -417,11 +366,9 @@ def choose_indexes(c: A.Command, store_tables: set[str] | None = None) -> dict[s
                     # composed under IndexTransf.v:862-872)
                     bitmap_keys.add((attr, cv))
                 elif cv is None and (
-                    in_loop or any(_mentions(key, b, None) for b in binders)
+                    in_loop or any(A.mentions(key, b, None) for b in binders)
                 ):
                     dict_attrs.add(attr)
-            import dataclasses
-
             match sub:
                 case A.EFlatmap(_, l, x, body) | A.EFilter(_, l, x, body) | A.EProj(_, l, x, body):
                     scan_eq(l, binders, in_loop)
@@ -435,21 +382,13 @@ def choose_indexes(c: A.Command, store_tables: set[str] | None = None) -> dict[s
                     scan_eq(e1, binders, in_loop)
                     scan_eq(e2, binders, in_loop)
                     scan_eq(e3, binders | {v, acc}, in_loop)
-                case _ if dataclasses.is_dataclass(sub):
-                    for fd in dataclasses.fields(sub):
-                        v = getattr(sub, fd.name)
-                        if isinstance(v, A.Expr):
-                            scan_eq(v, binders, in_loop)
-                        elif isinstance(v, tuple):
-                            for item in v:
-                                if isinstance(item, tuple) and len(item) == 2 and isinstance(item[1], A.Expr):
-                                    scan_eq(item[1], binders, in_loop)
-                                elif isinstance(item, A.Expr):
-                                    scan_eq(item, binders, in_loop)
+                case _:
+                    for child in A.children(sub):
+                        scan_eq(child, binders, in_loop)
 
         for e, in_loop in _walk_exprs(c):
             scan_eq(e, frozenset(), in_loop)
-            for sub in _subexprs(e):
+            for sub in A.subexprs(e):
                 a = _sum_read(sub, t)
                 if a is not None and f["inserted"]:
                     sum_attrs.add(a)
@@ -694,30 +633,7 @@ def apply_auto_index(
                                 nil,
                             )
                         return A.EFlatmap(tag, A.ELoc(aux), x, new_body)
-        # structural recursion
-        import dataclasses
-
-        if not dataclasses.is_dataclass(e):
-            return e
-        changed = False
-        kwargs = {}
-        for f in dataclasses.fields(e):
-            v = getattr(e, f.name)
-            if isinstance(v, A.Expr):
-                nv = rewrite_expr(v, active, row_tys)
-                kwargs[f.name] = nv
-                changed = changed or nv is not v
-            elif isinstance(v, tuple) and v and all(
-                isinstance(i, tuple) and len(i) == 2 for i in v
-            ):
-                nv = tuple(
-                    (n, rewrite_expr(fe, active, row_tys)) for n, fe in v
-                )
-                kwargs[f.name] = nv
-                changed = changed or nv != v
-            else:
-                kwargs[f.name] = v
-        return dataclasses.replace(e, **kwargs) if changed else e
+        return A.map_children(e, lambda c: rewrite_expr(c, active, row_tys))
 
     def wrap_aux(t: str, body: A.Command, gstore_now: dict) -> A.Command:
         row_ty = row_type_of(t, gstore_now)
@@ -755,7 +671,7 @@ def apply_auto_index(
                 )
             case A.CAssign(x, e):
                 if x in active:
-                    row = _insert_pattern(cmd, x)
+                    row = A.insert_pattern(cmd)
                     if row is not None:
                         row_ty = row_tys[x]
                         if not isinstance(row_ty, A.TRecord):
@@ -802,29 +718,18 @@ def apply_auto_index(
 
 def run_command_auto(c: A.Command, store, env, spark, explain: bool = False):
     """`run_command` with automatic index selection: derive (Gstore,
-    Genv) from the live store/env the way the interpreter's typecheck
-    entry does, choose indexes, rewrite, typecheck and execute. Returns
+    Genv) from the live store/env (`interp.static_types`), choose
+    indexes, rewrite, typecheck and execute. Returns
     (store, AutoIndexReport) — the report is the evidence surface for
     'the views were auto-introduced'. ``explain=True`` prints the
     decision (`AutoIndexReport.explain`) before executing, the way the
     reference surfaces its per-program ``heuristics`` lists."""
-    from pyspark.sql import DataFrame
+    from fiat2_spark.plans.interp import run_command, static_types
 
-    from fiat2_spark.plans.interp import run_command
-    from fiat2_spark.plans.typecheck import schema_type, type_of_value
-
-    gstore = {
-        k: schema_type(v) if isinstance(v, DataFrame) else type_of_value(v)
-        for k, v in store.snapshot().items()
-    }
-    genv = {}
-    for x, b in env.items():
-        if b[0] == "df":
-            genv[x] = schema_type(b[1])
-        elif b[0] == "py":
-            genv[x] = type_of_value(b[1])
-        else:
-            raise TypeError("run_command_auto needs a statically-typed env")
+    types = static_types(store, env)
+    if types is None:
+        raise TypeError("run_command_auto needs a statically-typed env")
+    gstore, genv = types
     choices = choose_indexes(c, set(gstore))
     c2, report = apply_auto_index(c, gstore, genv, choices)
     if explain:

@@ -118,16 +118,12 @@ def _as_singleton(e: A.Expr):
     return None
 
 
-def _is_nil(e: A.Expr) -> bool:
-    return isinstance(e, A.EAtom) and isinstance(e.a, (A.ANil, A.AEmptyBag, A.AEmptySet))
-
-
 def _as_guarded_singleton(e: A.Expr):
     """``if p then [r] else []`` → (p, r); plain ``[r]`` → (None, r)."""
     r = _as_singleton(e)
     if r is not None:
         return None, r
-    if isinstance(e, A.EIf) and _is_nil(e.e2):
+    if isinstance(e, A.EIf) and A.is_nil(e.e2):
         r = _as_singleton(e.e1)
         if r is not None:
             return e.p, r
@@ -479,6 +475,19 @@ def _project_dedup_uids(
     return out.dropDuplicates().drop(*uid_names)
 
 
+def _explode_rows(df: DataFrame, arr: Column) -> DataFrame:
+    """One row per element of the array column ``arr`` over ``df``: a
+    struct element splats into its fields, any other lands in
+    ``value``."""
+    from pyspark.sql import types as T
+
+    exploded = df.select(F.explode(arr).alias("_fm"))
+    it = exploded.schema["_fm"].dataType
+    if isinstance(it, T.StructType):
+        return exploded.select(*[F.col(f"_fm.{f.name}").alias(f.name) for f in it.fields])
+    return exploded.select(F.col("_fm").alias("value"))
+
+
 def compile_expr(e: A.Expr, env: dict, store, spark: SparkSession) -> DataFrame:
     """Lower a table-typed expression to a DataFrame plan."""
     ce = lambda x, env2=None: compile_expr(x, env2 if env2 is not None else env, store, spark)  # noqa: E731
@@ -555,26 +564,12 @@ def compile_expr(e: A.Expr, env: dict, store, spark: SparkSession) -> DataFrame:
             lo_v = eval_value(lo, env, store, spark)
             hi_v = eval_value(hi, env, store, spark)
             return spark.range(lo_v, max(lo_v, hi_v)).toDF("value")
-        case A.EAtom(a) if isinstance(a, (A.ANil, A.AEmptyBag, A.AEmptySet)):
+        case A.EAtom(a) if A.is_nil(e):
             t = a.t
-            from fiat2_spark.plans.typecheck import TDouble
-
-            def spark_type(ft) -> str:
-                m = {
-                    A.TInt(): "long", A.TBool(): "boolean", A.TString(): "string",
-                    A.TWord(): "long", TDouble(): "double",
-                }
-                if ft in m:
-                    return m[ft]
-                if isinstance(ft, A.TRecord):
-                    inner = ", ".join(f"{n} {spark_type(t2)}" for n, t2 in ft.fields)
-                    return f"struct<{inner}>"
-                raise CompileError(f"cannot build empty table of {ft}")
-
             if isinstance(t, A.TRecord):
-                schema = ", ".join(f"{n} {spark_type(t2)}" for n, t2 in t.fields)
+                schema = ", ".join(f"{n} {_spark_type_str(t2)}" for n, t2 in t.fields)
             else:
-                schema = f"value {spark_type(t) if t else 'long'}"
+                schema = f"value {_spark_type_str(t) if t else 'bigint'}"
             return spark.createDataFrame([], schema)
     raise CompileError(f"cannot compile to table plan: {e!r}")
 
@@ -584,11 +579,7 @@ def _as_dict_lookup(e: A.Expr):
     (D, k) — the read shape the auto-index DictIdx rewrite emits
     (plans/autoindex.py, DictIndexImpl.v:384-386)."""
     match e:
-        case A.EOptMatch(A.EBinop("OLookup", d, k), nil, b, A.EVar(b2)) if (
-            b == b2
-            and isinstance(nil, A.EAtom)
-            and isinstance(nil.a, (A.ANil, A.AEmptyBag, A.AEmptySet))
-        ):
+        case A.EOptMatch(A.EBinop("OLookup", d, k), nil, b, A.EVar(b2)) if b == b2 and A.is_nil(nil):
             return d, k
     return None
 
@@ -644,46 +635,16 @@ def _compile_flatmap(tag, e1, x, e2, env, store, spark) -> DataFrame:
         df = df1 if p is None else df1.filter(compile_column(p, env_row))
         return R.retag(_project_record(df, r, env_row, spark), tag)
 
-    # to_join: flatmap t1 x (flatmap t2 y (if p then [r] else [])).
-    # An inner LikeSet tag dedupes the body's results PER OUTER BINDING
-    # (Interpret.v retag-per-evaluation; the relational fuzzer's mixed-
-    # tag shapes pin this) — realized by tagging each outer row with a
-    # uid and deduping (uid, r) after the join. When the outermost tag
-    # is itself LikeSet, the global distinct subsumes it.
-    if isinstance(e2, A.EFlatmap) and x not in A.free_vars(e2.e1):
-        inner = _as_guarded_singleton(e2.e2)
-        if inner is not None and is_table_expr(e2.e1, env, store):
-            p, r = inner
-            y = e2.x
-            a1, a2 = f"j{next(_alias_counter)}", f"j{next(_alias_counter)}"
-            env2 = {**env, x: _bind_row(df1, a1)}
-            need_uid = e2.tag == "LikeSet" and tag != "LikeSet"
-            d1s = (
-                df1.withColumn("__fm_uid", F.monotonically_increasing_id())
-                if need_uid
-                else df1
-            ).alias(a1)
-            d2 = compile_expr(e2.e1, env, store, spark).alias(a2)
-            env2[y] = _bind_row(d2, a2)
-            joined = (
-                d1s.join(d2, on=compile_column(p, env2), how="inner")
-                if p is not None
-                else d1s.crossJoin(d2)
-            )
-            if need_uid:
-                out = _project_dedup_uids(joined, r, env2, [f"{a1}.__fm_uid"])
-            else:
-                out = _project_record(joined, r, env2, spark)
-            return R.retag(out, tag)
-
-    # to_join (n-ary, depth ≥ 3): flatmap t1 x1 (flatmap t2 x2 (… (if p
-    # then [r] else []))) — the Ex_Triangle.v-style chained
-    # comprehension. All generators must be independent tables; the
-    # single innermost guard is applied as a filter over the chained
-    # cross join, which Catalyst's predicate-into-join pushdown turns
-    # into hash joins for the equi conjuncts (found by the relational
-    # fuzzer: the 2-level recognizer above left the 3-level shape to the
-    # column path, which cannot host a table scan).
+    # to_join (to_join_head, RelTransf.v:357-367): flatmap t1 x1
+    # (flatmap t2 x2 (… (if p then [r] else []))) over independent
+    # tables, two generators or more (the Ex_Triangle.v-style chained
+    # comprehension). The generators are cross joined and the innermost
+    # one is joined on the guard, which Catalyst's predicate pushdown
+    # splits into hash joins for the equi conjuncts. An inner LikeSet tag
+    # dedupes the body's results PER OUTER BINDING (Interpret.v
+    # retag-per-evaluation; the relational fuzzer's mixed-tag shapes pin
+    # this) — realized by tagging the rows of the generators outside it
+    # with a uid and deduping (uids, r) after the join.
     def _chain(body: A.Expr, bound: frozenset):
         g2 = _as_guarded_singleton(body)
         if g2 is not None:
@@ -701,7 +662,7 @@ def _compile_flatmap(tag, e1, x, e2, env, store, spark) -> DataFrame:
 
     if isinstance(e2, A.EFlatmap):
         chain = _chain(e2, frozenset({x}))
-        if chain is not None and len(chain[0]) >= 2:
+        if chain is not None:
             binders, p, r = chain
             # shallowest inner LikeSet tag (binders[i] tags the flatmap
             # nested under generators 0..i, generator 0 = df1): dedupe
@@ -729,9 +690,10 @@ def _compile_flatmap(tag, e1, x, e2, env, store, spark) -> DataFrame:
                 if s is not None and i < s:
                     di = di.withColumn("__fm_uid", F.monotonically_increasing_id())
                     uid_refs.append(f"{ai}.__fm_uid")
-                joined = joined.crossJoin(di.alias(ai))
-            if p is not None:
-                joined = joined.filter(compile_column(p, env2))
+                if p is not None and i == len(binders) - 1:
+                    joined = joined.join(di.alias(ai), on=compile_column(p, env2), how="inner")
+                else:
+                    joined = joined.crossJoin(di.alias(ai))
             if uid_refs:
                 out = _project_dedup_uids(joined, r, env2, uid_refs)
             else:
@@ -800,34 +762,14 @@ def _compile_flatmap(tag, e1, x, e2, env, store, spark) -> DataFrame:
                     if p2 is not None:
                         joined = joined.filter(compile_column(p2, env2))
                     return R.retag(_project_record(joined, r2, env2, spark), tag)
-                arr2 = compile_column(e2.e2, env2)
-                exploded2 = joined.select(F.explode(arr2).alias("_fm"))
-                from pyspark.sql import types as T
-
-                it = exploded2.schema["_fm"].dataType
-                if isinstance(it, T.StructType):
-                    out2 = exploded2.select(
-                        *[F.col(f"_fm.{f.name}").alias(f.name) for f in it.fields]
-                    )
-                else:
-                    out2 = exploded2.select(F.col("_fm").alias("value"))
-                return R.retag(out2, tag)
+                return R.retag(_explode_rows(joined, compile_column(e2.e2, env2)), tag)
 
     # independent table body → cross product
     if x not in A.free_vars(e2) and is_table_expr(e2, env, store):
         return R.retag(df1.crossJoin(compile_expr(e2, env, store, spark)), tag)
 
     # correlated collection-valued body → lateral explode
-    arr = compile_column(e2, env_row)
-    exploded = df1.select(F.explode(arr).alias("_fm"))
-    inner_fields = exploded.schema["_fm"].dataType
-    from pyspark.sql import types as T
-
-    if isinstance(inner_fields, T.StructType):
-        out = exploded.select(*[F.col(f"_fm.{f.name}").alias(f.name) for f in inner_fields.fields])
-    else:
-        out = exploded.select(F.col("_fm").alias("value"))
-    return R.retag(out, tag)
+    return R.retag(_explode_rows(df1, compile_column(e2, env_row)), tag)
 
 
 # -- driver-side evaluation (scalar contexts of the command layer) ---------
@@ -1178,8 +1120,7 @@ def _as_to_idx_fold(init: A.Expr, v: str, acc: str, body: A.Expr) -> str | None:
             and rx == v
             and attr == attr2
             and b == b2
-            and isinstance(nil, A.EAtom)
-            and isinstance(nil.a, (A.ANil, A.AEmptyBag, A.AEmptySet))
+            and A.is_nil(nil)
         ):
             return attr
     return None

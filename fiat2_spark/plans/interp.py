@@ -1,6 +1,6 @@
 """Command-layer interpreter — fiat2's imperative driver layer
 (fiat2/src/fiat2/Language.v:210-217, Interpret.v:501-524) over the
-catalog.
+engine's Gstore, `Store`.
 
 Commands are driver-side orchestration: the store maps names to
 DataFrames (tables) or Python values (scalars); expressions compile to
@@ -19,11 +19,15 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 from fiat2_spark.plans import ast as A
-from fiat2_spark.plans.compile import compile_expr, eval_value, is_table_expr
+from fiat2_spark.plans import typecheck
+from fiat2_spark.plans.compile import _AFoldVal, compile_expr, eval_value, is_table_expr
 
 
 class Store:
-    """Mutable store (Gstore): name → DataFrame | Python value."""
+    """The mutable store, fiat2's Gstore (Interpret.v:501-524; ``ELoc``
+    reads one location, Language.v:123): name → DataFrame | Python
+    value. DataFrames are immutable, so a CAssign rebinds the name
+    wholesale, which is fiat2's semantics."""
 
     def __init__(self):
         self._m: dict[str, Any] = {}
@@ -45,11 +49,8 @@ class Store:
     def snapshot(self):
         return dict(self._m)
 
-    def restore(self, snap):
-        self._m = snap
 
-
-def _subst_scalar_locs(e, store: Store):
+def _subst_scalar_locs(e: A.Expr, store: Store) -> A.Expr:
     """Substitute ``ELoc x`` where the store holds a DRIVER-SIDE value
     (scalar / option / record / dict / list — anything but a DataFrame)
     with its literal — Interpret.v's get_local over Gstore for scalar
@@ -57,33 +58,11 @@ def _subst_scalar_locs(e, store: Store):
     table-typed locations stay symbolic so compile_expr can plan them).
     Store values follow Spark collect() conventions (Row = record,
     dict = map), so the splice uses compile's ``_AFoldVal`` atom."""
-    import dataclasses
-
-    from fiat2_spark.plans.compile import _AFoldVal
-
     if isinstance(e, A.ELoc):
         if e.x in store and not isinstance(store.get(e.x), DataFrame):
             return A.EAtom(_AFoldVal(store.get(e.x)))
         return e
-    if not (dataclasses.is_dataclass(e) and isinstance(e, (A.Expr,))):
-        return e
-    changed = False
-    kwargs = {}
-    for f in dataclasses.fields(e):
-        v = getattr(e, f.name)
-        if isinstance(v, A.Expr):
-            nv = _subst_scalar_locs(v, store)
-            kwargs[f.name] = nv
-            changed = changed or nv is not v
-        elif isinstance(v, tuple) and v and all(
-            isinstance(i, tuple) and len(i) == 2 for i in v
-        ):
-            nv = tuple((n, _subst_scalar_locs(fe, store)) for n, fe in v)
-            kwargs[f.name] = nv
-            changed = changed or nv != v
-        else:
-            kwargs[f.name] = v
-    return dataclasses.replace(e, **kwargs) if changed else e
+    return A.map_children(e, lambda c: _subst_scalar_locs(c, store))
 
 
 def _eval(e: A.Expr, env: dict, store: Store, spark: SparkSession):
@@ -93,71 +72,66 @@ def _eval(e: A.Expr, env: dict, store: Store, spark: SparkSession):
     return eval_value(e, env, store, spark)
 
 
-def _typecheck_entry(c: A.Command, store: Store, env: dict) -> None:
-    """Typecheck a command before execution (TypeSystem.v:1393-1420 via
-    typecheck_command): Gstore is derived from the live store (DataFrame
-    schemas / Python value shapes), Genv from the env bindings. Skipped
-    when the env carries Column bindings (an internal compile context —
-    no static type is recoverable)."""
-    from fiat2_spark.plans.typecheck import (
-        schema_type,
-        type_of_value,
-        typecheck_command,
+def static_types(store: Store, env: dict) -> tuple[dict, dict] | None:
+    """The (Gstore, Genv) types of a live store and env: DataFrame
+    schemas and Python value shapes. None when the env carries a Column
+    binding (an internal compile context — no static type is
+    recoverable)."""
+    def ty(v):
+        if isinstance(v, DataFrame):
+            return typecheck.schema_type(v)
+        return typecheck.type_of_value(v)
+
+    if any(b[0] not in ("df", "py") for b in env.values()):
+        return None
+    return (
+        {k: ty(v) for k, v in store.snapshot().items()},
+        {x: ty(b[1]) for x, b in env.items()},
     )
 
-    genv = {}
-    for x, b in env.items():
-        if b[0] == "df":
-            genv[x] = schema_type(b[1])
-        elif b[0] == "py":
-            genv[x] = type_of_value(b[1])
-        else:  # ("col", …): no static type — bail out of checking
-            return
-    gstore = {
-        k: schema_type(v) if isinstance(v, DataFrame) else type_of_value(v)
-        for k, v in store.snapshot().items()
-    }
-    typecheck_command(c, gstore, genv)
 
-
-def run_command(
-    c: A.Command, store: Store, env: dict, spark: SparkSession, typecheck: bool = True
-) -> Store:
+def run_command(c: A.Command, store: Store, env: dict, spark: SparkSession) -> Store:
     """Big-step execution of a command against the store
-    (Interpret.v:501-524). By default the whole command is statically
-    typechecked first — an ill-typed program raises TypeError2 before
-    any Spark job is launched (the reference's command typecheck,
-    TypeSystem.v:1393-1420)."""
-    if typecheck:
-        _typecheck_entry(c, store, env)
+    (Interpret.v:501-524). The whole command is statically typechecked
+    first — an ill-typed program raises TypeError2 before any Spark job
+    is launched (the reference's command typecheck,
+    TypeSystem.v:1393-1420). Skipped when the env has no static types
+    (see `static_types`)."""
+    types = static_types(store, env)
+    if types is not None:
+        typecheck.typecheck_command(c, *types)
+    return _run(c, store, env, spark)
+
+
+def _run(c: A.Command, store: Store, env: dict, spark: SparkSession) -> Store:
     match c:
         case A.CSkip():
             return store
         case A.CSeq(c1, c2):
-            run_command(c1, store, env, spark, typecheck=False)
-            return run_command(c2, store, env, spark, typecheck=False)
+            _run(c1, store, env, spark)
+            return _run(c2, store, env, spark)
         case A.CLet(e, x, body):
             v = _eval(e, env, store, spark)
             binding = ("df", v) if isinstance(v, DataFrame) else ("py", v)
-            return run_command(body, store, {**env, x: binding}, spark, typecheck=False)
+            return _run(body, store, {**env, x: binding}, spark)
         case A.CLetMut(e, x, body):
             # bind x in the store for the extent of body, then restore
             # (Interpret.v:510-513)
-            saved = store._m.get(x, _MISSING)
+            saved = store.get(x) if x in store else _MISSING
             store.assign(x, _eval(e, env, store, spark))
             try:
-                return run_command(body, store, env, spark, typecheck=False)
+                return _run(body, store, env, spark)
             finally:
                 if saved is _MISSING:
-                    del store._m[x]
+                    store.remove(x)
                 else:
-                    store._m[x] = saved
+                    store.assign(x, saved)
         case A.CAssign(x, e):
             store.assign(x, _eval(e, env, store, spark))
             return store
         case A.CIf(e, c1, c2):
             cond = eval_value(_subst_scalar_locs(e, store), env, store, spark)
-            return run_command(c1 if cond else c2, store, env, spark, typecheck=False)
+            return _run(c1 if cond else c2, store, env, spark)
         case A.CForeach(e, x, body):
             v = _eval(e, env, store, spark)
             if isinstance(v, DataFrame):
@@ -170,24 +144,9 @@ def run_command(
             else:
                 rows = list(v)
             for row in rows:
-                run_command(body, store, {**env, x: ("py", row)}, spark, typecheck=False)
+                _run(body, store, {**env, x: ("py", row)}, spark)
             return store
     raise TypeError(f"unknown command {c!r}")
-
-
-def _mentions_loc(e, name: str) -> bool:
-    """Does expression ``e`` reference ``ELoc(name)`` anywhere?"""
-    import dataclasses
-
-    if isinstance(e, A.ELoc):
-        return e.x == name
-    if dataclasses.is_dataclass(e):
-        vals = [getattr(e, f.name) for f in dataclasses.fields(e)]
-    elif isinstance(e, (tuple, list)):
-        vals = list(e)
-    else:
-        return False
-    return any(_mentions_loc(v, name) for v in vals)
 
 
 def _foreach_bulk_insert(x, body, env, store, spark, v: DataFrame) -> bool:
@@ -203,30 +162,29 @@ def _foreach_bulk_insert(x, body, env, store, spark, v: DataFrame) -> bool:
     prepends ≡ one union. Applies only when ``f`` never reads the target
     table (a self-referential body still runs the sequential reference
     semantics). Returns True when the rewrite fired."""
-    match body:
-        case A.CAssign(t, A.EBinop("OCons", e_row, A.ELoc(t2))) if t == t2:
-            if t not in store or _mentions_loc(e_row, t):
-                return False
-            cur = store.get(t)
-            if not isinstance(cur, DataFrame):
-                return False
-            import uuid
+    e_row = A.insert_pattern(body)
+    if e_row is None or body.x not in store:
+        return False
+    t = body.x
+    cur = store.get(t)
+    if not isinstance(cur, DataFrame):
+        return False
+    import uuid
 
-            tmp = f"__foreach_{uuid.uuid4().hex[:8]}"
-            store.assign(tmp, v)
-            try:
-                proj = compile_expr(
-                    A.EProj("LikeBag", A.ELoc(tmp), x, e_row), env, store, spark
-                )
-            except Exception:
-                return False
-            finally:
-                store.remove(tmp)
-            if proj.columns != cur.columns:
-                return False  # shape mismatch — let the loop's semantics decide
-            store.assign(t, cur.unionByName(proj))
-            return True
-    return False
+    tmp = f"__foreach_{uuid.uuid4().hex[:8]}"
+    store.assign(tmp, v)
+    try:
+        proj = compile_expr(
+            A.EProj("LikeBag", A.ELoc(tmp), x, e_row), env, store, spark
+        )
+    except Exception:
+        return False
+    finally:
+        store.remove(tmp)
+    if proj.columns != cur.columns:
+        return False  # shape mismatch — let the loop's semantics decide
+    store.assign(t, cur.unionByName(proj))
+    return True
 
 
 _MISSING = object()

@@ -89,7 +89,7 @@ def v(name: str) -> A.Expr:
 
 
 def loc(name: str) -> A.Expr:
-    """``mut x`` — a store location (a table in the catalog)."""
+    """``mut x`` — a store location (a name bound in `interp.Store`)."""
     return A.ELoc(name)
 
 

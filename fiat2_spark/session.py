@@ -116,10 +116,12 @@ def release_checkpoint_blocks(spark: SparkSession) -> int:
     DataFrame returned by an engine operator is still live — checkpoint
     blocks are the sole copy of their data (lineage is truncated), so a
     later action on a swept DataFrame fails. This is the session owner's
-    between-batches reclamation hook: on this Spark build, dropping the
-    Python references does NOT drain the blocks (measured: the JVM holds
-    the checkpointed RDDs strongly; GC/ContextCleaner never fires), so
-    reclamation must be explicit. Returns the number of RDDs freed."""
+    between-batches reclamation hook: dropping the Python references
+    does not drain the blocks at any predictable time — ContextCleaner
+    frees a block only after a JVM GC collects its RDD, so a gate's
+    end-of-run sweep has found 0, 2 and 4 blocks over the same query
+    code — so reclamation must be explicit. Returns the number of RDDs
+    freed."""
     n = 0
     for _rid, rdd in dict(spark.sparkContext._jsc.getPersistentRDDs()).items():
         if _is_checkpoint_block(rdd):

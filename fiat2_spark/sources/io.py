@@ -13,10 +13,12 @@ bucket key skip the shuffle).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fiat2_spark.catalog import TPCH_TABLES, Catalog
+from fiat2_spark.catalog import TPCH_TABLES, tbl
 
 _FORMATS = ("parquet", "orc", "json", "csv")
 
@@ -85,8 +87,11 @@ def write_sorted(df: DataFrame, path: str, sort_col: str) -> None:
 
 
 def register_views(spark: SparkSession, sf_dir: str, tables=TPCH_TABLES) -> None:
-    """Register the testdata tables as temp views for spark.sql use."""
-    Catalog.from_sf_dir(spark, sf_dir, tables)
+    """Register the testdata tables present under ``sf_dir`` as temp
+    views for spark.sql use."""
+    for t in tables:
+        if os.path.exists(os.path.join(sf_dir, f"{t}.parquet")):
+            tbl(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
 def to_json_records(df: DataFrame) -> list[str]:

@@ -28,37 +28,37 @@ MODULES = (pipeline, stream, server, dsl, graphs, core)
 #   python tools/fingerprints.py --compare base.json
 # and seat every query it reports `changed` or `new`; seats come from
 # queries whose reachable hash held. Older baselines are in git history.
-# This window: the parameters no caller sets are deleted (their
-# defaults inlined, shared query/oracle values kept as module
-# constants), the iterative loops release superseded rounds by block
-# id, zonemap_range_scan's layout moves into a helper, and the
-# fingerprint closure now follows names used as default values. With
-# SPARK_GRAFT_CPUS=4 the tool reports 87 changed, 0 new, 122 held —
-# more than the window holds. Seated below are the 50 whose own
-# operator code changed; the other 37 (the dsl_* and relational users
-# of the tag-free filter_rows/project/theta_join, the incremental_*
-# users of the stream batches, the bpe_* and tokenizer-default users
-# reached through the fingerprint fix, the layout readers) rely on the
-# two full-registry gate logs, which cover all 209.
+# This window: plans/ keeps one AST traversal, one to_join lowering and
+# one Gstore (`interp.Store`; `catalog.Catalog` is deleted and
+# `sources.io.register_views` registers the views itself). With
+# SPARK_GRAFT_CPUS=4 the tool reports 12 changed, 0 new, 197 held: the
+# 11 dsl_* queries, which reach plans/, and bfs_recursive_cte, which
+# reaches register_views. All 12 are seated; the 11 new seats come from
+# held queries of families that keep other members in the window.
 PRIORITY = (
-    # (A) tool-mandated reachable-delta rotate-ins: loops, LM/selection,
-    # retrieval, dedup, multimodal, streaming, layout, relational, DSL
-    "bfs", "pagerank3", "dedup_clusters", "dedup_clusters_star",
-    "doremi_reweight", "doremi_trajectory", "dsir_select", "dsir_resample",
-    "perplexity_filter", "perplexity_filter_unicode", "lm_stupid_backoff",
+    # (A) tool-mandated reachable-delta rotate-ins: the DSL suite and
+    # the recursive-CTE walk
+    "dsl_auto_index", "dsl_auto_index_dist", "dsl_auto_index_join",
+    "dsl_command_pipeline", "dsl_comprehension", "dsl_employee_join",
+    "dsl_filter_project", "dsl_fold_table", "dsl_grandchildren",
+    "dsl_let_if_table", "dsl_orders_agg", "bfs_recursive_cte",
+    # (B) held: loops, LM/selection, retrieval, dedup, multimodal,
+    # streaming, layout, relational
+    "bfs", "pagerank3", "dedup_clusters",
+    "doremi_reweight", "dsir_select",
+    "perplexity_filter", "lm_stupid_backoff",
     "ccnet_bucket_assign", "quality_classifier", "budget_select",
     "length_bucket_batches", "bpe_pair_counts", "gopher_quality",
-    "text_quality", "text_fingerprint",
-    "ann_bruteforce", "ann_ivf", "ann_lsh", "hard_negatives",
+    "text_quality",
+    "ann_ivf", "ann_lsh", "hard_negatives",
     "decontaminate_semantic", "knn_label_vote", "hybrid_rrf_retrieval",
     "dedup_semantic", "dedup_embedding", "dedup_ngram_jaccard",
-    "dedup_simhash", "substring_dedup_apply", "kmeans_lloyd", "cms_tokens",
+    "dedup_simhash", "substring_dedup_apply", "kmeans_lloyd",
     "multimodal_audio_rms", "multimodal_frames", "multimodal_resize",
-    "multimodal_wav_real", "multimodal_ppm_real", "multimodal_bytes",
     "sessionize", "stream_window_agg", "stream_stream_join",
     "dpp_partitioned_join", "zonemap_range_scan", "salted_join",
-    "window_rownum", "group_concat_scalable", "grouped_rank_family_scalable",
-    "fold_right_concat", "dsl_auto_index",
+    "group_concat_scalable", "grouped_rank_family_scalable",
+    "fold_right_concat",
 )
 assert len(PRIORITY) == 50 and len(set(PRIORITY)) == 50
 

@@ -168,6 +168,11 @@ def test_cif_and_cletmut_scoping(spark):
     run_command(prog, st, {}, spark)
     assert st.get("flag") == "big"
     assert "tmp" not in st
+    # a CLetMut of a bound location restores its binding on exit
+    t_before = st.get("t")
+    inner = A.CAssign("flag", A.EAtom(A.AString("inner")))
+    run_command(A.CLetMut(A.EAtom(A.AInt(7)), "t", inner), st, {}, spark)
+    assert st.get("t") is t_before and st.get("flag") == "inner"
 
 
 def test_foreach_pure_insert_is_bulk(spark):

@@ -446,7 +446,8 @@ def test_inner_likeset_tag_dedupes_per_outer_binding(spark):
     results PER OUTER BINDING before concatenation (Interpret.v's retag
     applies per body evaluation). The r6 join recognizers discarded
     inner tags, so two t2 matches for the same t1 row producing the
-    same record survived as join duplicates. Pinned at both depths."""
+    same record survived as join duplicates. Pinned at both depths, with
+    the plan each depth executes."""
     nil = A.EAtom(A.ANil(A.TRecord((("u", A.TInt()),))))
     r = A.ERecord((("u", A.EAccess(A.EVar("x"), "a")),))
     p = A.EBinop("OEq", A.EAccess(A.EVar("x"), "a"), A.EAccess(A.EVar("y"), "k"))
@@ -473,9 +474,12 @@ def test_inner_likeset_tag_dedupes_per_outer_binding(spark):
         ),
     )
     for prog in (two, three):
-        got = [
-            row.asDict()
-            for row in compile_expr(prog, {}, _store(spark), spark).collect()
-        ]
+        df = compile_expr(prog, {}, _store(spark), spark)
+        got = [row.asDict() for row in df.collect()]
         want = ev(prog, {})
         assert _canon(got) == _canon(want), f"\nprog={prog}\ngot={got}\nwant={want}"
+        # one to_join lowering at both depths: the guard's equi
+        # conjuncts become hash joins, never a nested-loop product
+        executed = df._jdf.queryExecution().executedPlan().toString()
+        assert "HashJoin" in executed, executed
+        assert "CartesianProduct" not in executed and "BroadcastNestedLoopJoin" not in executed, executed

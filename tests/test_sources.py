@@ -77,25 +77,6 @@ def test_json_records_server_boundary(spark):
     assert first == {"n_nationkey": 0, "n_name": first["n_name"]}
 
 
-def test_catalog_store_and_let_mut_scoping(spark):
-    """Catalog = the Gstore: assign registers a temp view (ELoc readable
-    from both APIs), let_mut binds for the block and restores after —
-    including the previous binding when shadowing."""
-    from fiat2_spark.catalog import Catalog
-
-    cat = Catalog.from_sf_dir(spark, SF_SMOKE, tables=("region", "nation"))
-    assert cat.get("region").count() == spark.sql("SELECT count(*) FROM region").collect()[0][0]
-
-    small = cat.get("region").limit(2)
-    with cat.let_mut("region", small):
-        assert cat.get("region").count() == 2
-        assert spark.sql("SELECT count(*) FROM region").collect()[0][0] == 2
-        with cat.let_mut("scratch", cat.get("nation")):
-            assert "scratch" in cat
-        assert "scratch" not in cat
-    assert cat.get("region").count() == 5
-
-
 def test_tbl_adapts_all_historical_events_ts_encodings(spark):
     """Driver testdata has shipped events.ts under three parquet
     encodings across rounds: TIMESTAMP(NANOS) (Spark surfaces long

@@ -1,8 +1,10 @@
 #!/usr/bin/env python
 """Replicate the driver's correctness gate locally: run every queries()
 entry at a given sf dir and compare with its oracle_sql() via DuckDB.
-Each PASS/FAIL line ends with ``jobs=N``: the Spark jobs the query
-started (plan build plus the comparison's collect), counted under a job
+Each PASS/FAIL line ends with ``blocks=N jobs=N``. ``blocks`` counts the
+localCheckpoint block RDDs resident after the query's comparison that
+were not resident before the query. ``jobs`` counts the Spark jobs the
+query started (plan build plus the comparison's collect) under a job
 group named after the query, so two gate logs diff job counts per query.
 
 Usage: python tools/run_gate.py [sf_dir] [query_name ...]
@@ -16,7 +18,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from fiat2_spark.session import get_spark
+from fiat2_spark.session import _is_checkpoint_block, get_spark
 from fiat2_spark.workloads import ORACLES, QUERIES
 from tests.oracle import compare, duck_conn
 
@@ -67,7 +69,15 @@ def main() -> None:
     failures = []
     names = [n for n in sorted(QUERIES) if not only or n in only]
     sc = spark.sparkContext
+
+    def blocks() -> set:
+        return {
+            rid for rid, rdd in dict(sc._jsc.getPersistentRDDs()).items()
+            if _is_checkpoint_block(rdd)
+        }
+
     for name in names:
+        before = blocks()
         t0 = time.perf_counter()
         sc.setJobGroup(name, name)
         try:
@@ -84,20 +94,27 @@ def main() -> None:
         # a job whose start event is still queued is not in the group yet
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         jobs = len(sc.statusTracker().getJobIdsForGroup(name))
-        print(f"{'PASS' if ok else 'FAIL'} {name:28s} {dt:6.1f}s  {detail}  jobs={jobs}", flush=True)
+        new_blocks = len(blocks() - before)
+        print(
+            f"{'PASS' if ok else 'FAIL'} {name:28s} {dt:6.1f}s  {detail}  "
+            f"blocks={new_blocks} jobs={jobs}",
+            flush=True,
+        )
         if not ok:
             failures.append(name)
     print(f"\n{len(names) - len(failures)}/{len(names)} passed", flush=True)
 
-    # Cache hygiene (VERDICT r5 task 5): no query may leave a
-    # DataFrame-level cache entry behind — those are pinned by Spark's
-    # CacheManager for the session's life and only explicit unpersist
-    # releases them (GC/ContextCleaner reclamation does not fire on this
-    # build — measured in session.release_checkpoint_blocks). Shared
+    # Cache hygiene: no query may leave a DataFrame-level cache entry
+    # behind — those are pinned by Spark's CacheManager for the
+    # session's life and only explicit unpersist releases them. Shared
     # intermediates ride localCheckpoint BLOCKS instead, owned by the
-    # returned results; the gate is the session owner here, so after all
-    # results are consumed it sweeps them and the map must drain to
-    # EMPTY — any survivor would be a persist leak.
+    # returned results. GC/ContextCleaner reclaims some of those blocks
+    # once their results are dropped, but at no predictable time (the
+    # sweep count below varies between runs of the same code; each
+    # line's blocks= names the queries that left blocks resident). The
+    # gate is the session owner here, so after all results are consumed
+    # it sweeps them and the map must drain to EMPTY — any survivor
+    # would be a persist leak.
     from fiat2_spark.session import cache_entries, release_checkpoint_blocks
 
     ckpt, cache = cache_entries(spark)
