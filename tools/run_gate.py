@@ -6,6 +6,8 @@ localCheckpoint block RDDs resident after the query's comparison that
 were not resident before the query. ``jobs`` counts the Spark jobs the
 query started (plan build plus the comparison's collect) under a job
 group named after the query, so two gate logs diff job counts per query.
+The closing cache-hygiene line names the query that left each block its
+sweep frees.
 
 Usage: python tools/run_gate.py [sf_dir] [query_name ...]
 """
@@ -15,10 +17,11 @@ from __future__ import annotations
 import os
 import sys
 import time
+from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from fiat2_spark.session import _is_checkpoint_block, get_spark
+from fiat2_spark.session import get_spark
 from fiat2_spark.workloads import ORACLES, QUERIES
 from tests.oracle import compare, duck_conn
 
@@ -71,11 +74,27 @@ def main() -> None:
     sc = spark.sparkContext
 
     def blocks() -> set:
-        return {
-            rid for rid, rdd in dict(sc._jsc.getPersistentRDDs()).items()
-            if _is_checkpoint_block(rdd)
-        }
+        """Ids of the resident localCheckpoint block RDDs. Each py4j proxy
+        made here is detached before returning: a proxy left to Python's
+        cycle collector pins its RDD in the JVM until that runs, which
+        keeps blocks resident that ContextCleaner would free."""
+        jmap = sc._jsc.getPersistentRDDs()
+        keys = jmap.keySet()
+        out = set()
+        try:
+            for rid in list(keys):
+                jrdd = jmap.get(rid)
+                rdd = jrdd.rdd()
+                if rdd.isLocallyCheckpointed():
+                    out.add(rid)
+                sc._gateway.detach(rdd)
+                sc._gateway.detach(jrdd)
+        finally:
+            sc._gateway.detach(keys)
+            sc._gateway.detach(jmap)
+        return out
 
+    owner = {}  # block RDD id -> the query that left it resident
     for name in names:
         before = blocks()
         t0 = time.perf_counter()
@@ -94,10 +113,11 @@ def main() -> None:
         # a job whose start event is still queued is not in the group yet
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         jobs = len(sc.statusTracker().getJobIdsForGroup(name))
-        new_blocks = len(blocks() - before)
+        new_blocks = blocks() - before
+        owner.update(dict.fromkeys(new_blocks, name))
         print(
             f"{'PASS' if ok else 'FAIL'} {name:28s} {dt:6.1f}s  {detail}  "
-            f"blocks={new_blocks} jobs={jobs}",
+            f"blocks={len(new_blocks)} jobs={jobs}",
             flush=True,
         )
         if not ok:
@@ -110,11 +130,11 @@ def main() -> None:
     # intermediates ride localCheckpoint BLOCKS instead, owned by the
     # returned results. GC/ContextCleaner reclaims some of those blocks
     # once their results are dropped, but at no predictable time (the
-    # sweep count below varies between runs of the same code; each
-    # line's blocks= names the queries that left blocks resident). The
-    # gate is the session owner here, so after all results are consumed
-    # it sweeps them and the map must drain to EMPTY — any survivor
-    # would be a persist leak.
+    # sweep count below varies between runs of the same code, so the
+    # line names the query that left each swept block). The gate is the
+    # session owner here, so after all results are consumed it sweeps
+    # them and the map must drain to EMPTY — any survivor would be a
+    # persist leak.
     from fiat2_spark.session import cache_entries, release_checkpoint_blocks
 
     ckpt, cache = cache_entries(spark)
@@ -123,15 +143,18 @@ def main() -> None:
         for c in cache:
             print(f"  {c}", flush=True)
         failures.append("__cache_hygiene__")
+    swept_from = Counter(owner.get(rid, "(before the query loop)") for rid in blocks())
     freed = release_checkpoint_blocks(spark)
     leftover = dict(spark.sparkContext._jsc.getPersistentRDDs())
     if leftover:
         print(f"FAIL cache-hygiene: {len(leftover)} RDD(s) resident after sweep", flush=True)
         failures.append("__cache_hygiene_sweep__")
     else:
+        owners = ", ".join(f"{q} {n}" for q, n in sorted(swept_from.items()))
         print(
             f"cache-hygiene: 0 CacheManager entries post-gate; "
-            f"{freed} checkpoint block RDD(s) swept; 0 resident",
+            f"{freed} checkpoint block RDD(s) swept; 0 resident"
+            + (f" (swept from: {owners})" if owners else ""),
             flush=True,
         )
     if not only:
