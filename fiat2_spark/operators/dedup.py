@@ -28,7 +28,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from fiat2_spark.operators.text import tokens
-from fiat2_spark.session import local_checkpoint_tracked, release_blocks
+from fiat2_spark.session import block_ids, release_blocks
 
 
 def cpu_partitions(df: DataFrame, rows_per_task: int = 500) -> int:
@@ -138,11 +138,12 @@ def minhash_candidates(
     # materialize NOW via localCheckpoint (eager): the downstream plan
     # reads it from three stages (band-left, band-right, verify) that
     # otherwise race to populate a lazy cache and each recompute the
-    # shingle pass. Checkpoint blocks (not a CacheManager entry) so the
-    # shared intermediate is reclaimable by the session owner's
-    # `release_checkpoint_blocks` sweep once results are consumed —
-    # a DataFrame-level persist would pin it in the CacheManager for
-    # the life of the session (run_gate asserts zero such entries).
+    # shingle pass. Checkpoint blocks (not a CacheManager entry): the
+    # result reads them, so they belong to it and the session owner's
+    # `release_checkpoint_blocks` sweep reclaims them once results are
+    # consumed — a DataFrame-level persist would pin it in the
+    # CacheManager for the life of the session (run_gate asserts zero
+    # such entries).
     sh = sh.localCheckpoint()
 
     # per-seed lane-min folds: ONE md5 transform + ONE aggregate per seed
@@ -264,7 +265,7 @@ def dup_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     # still ran once per branch). One checkpoint of the edge-list-sized
     # projection, then both union branches are block reads.
     spark = pairs.sparkSession
-    p, p_ids = local_checkpoint_tracked(pairs.select("id_a", "id_b"))
+    p = pairs.select("id_a", "id_b").localCheckpoint()
     e = p.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     edges = e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -273,10 +274,11 @@ def dup_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     # lbl_0(x) = min(x, min neighbor). Near-dup components are mostly
     # 2-cliques, which are already converged here — the loop then runs a
     # single no-improvement verification round instead of hop + verify.
-    labels, label_ids = local_checkpoint_tracked(
+    labels = (
         edges.groupBy(F.col("src").alias("doc"))
         .agg(F.min("dst").alias("m"))
         .select("doc", F.least(F.col("doc"), F.col("m")).alias("lbl"))
+        .localCheckpoint()
     )
     converged = False
     for _ in range(max_iter):
@@ -290,22 +292,25 @@ def dup_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
         # label snapshots every round just to compare a column the
         # update join already had side by side — here convergence is a
         # filter+isEmpty over the just-materialized checkpoint blocks,
-        # one cheap scan instead of a join per round
-        new, new_ids = local_checkpoint_tracked(
+        # one cheap scan instead of a join per round. The checkpoint
+        # itself becomes `labels` (the flag column rides along unread),
+        # so the next round can release it by its block id.
+        new = (
             labels.join(nbr, labels.doc == nbr.dst, "left")
             .select(
                 F.col("doc"),
                 F.least(F.col("lbl"), F.coalesce(F.col("nlbl"), F.col("lbl"))).alias("lbl"),
                 (F.col("nlbl") < F.col("lbl")).alias("__imp"),
             )
+            .localCheckpoint()
         )
         converged = new.filter(F.col("__imp")).isEmpty()
-        release_blocks(spark, label_ids)
-        labels, label_ids = new.drop("__imp"), new_ids
+        release_blocks(spark, block_ids(labels))
+        labels = new
         if converged:
             break
     edges.unpersist()
-    release_blocks(spark, p_ids)
+    release_blocks(spark, block_ids(p))
     if not converged:
         # the "shallow clusters" assumption is data-dependent: a component
         # whose diameter exceeds max_iter would silently disagree with the
@@ -352,19 +357,20 @@ def dup_clusters_star(pairs: DataFrame) -> DataFrame:
     # verify joins) in their own checkpoint job — now both derive from
     # the same blocks.
     spark = pairs.sparkSession
-    p, p_ids = local_checkpoint_tracked(pairs.select("id_a", "id_b"))
+    p = pairs.select("id_a", "id_b").localCheckpoint()
     nodes = (
         p.select(F.col("id_a").alias("doc"))
         .unionByName(p.select(F.col("id_b").alias("doc")))
         .distinct()
         .localCheckpoint()
     )
-    edges, edge_ids = local_checkpoint_tracked(
+    edges = (
         p.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
+        .localCheckpoint()
     )
-    release_blocks(spark, p_ids)
+    release_blocks(spark, block_ids(p))
 
     def star(e: DataFrame, large: bool) -> DataFrame:
         sym = e.select(F.col("u").alias("c"), F.col("v").alias("n")).unionByName(
@@ -390,14 +396,14 @@ def dup_clusters_star(pairs: DataFrame) -> DataFrame:
     converged = False
     n_edges = edges.count()
     for _ in range(50):
-        new, new_ids = local_checkpoint_tracked(star(star(edges, large=True), large=False))
+        new = star(star(edges, large=True), large=False).localCheckpoint()
         # both sides are distinct sets, so equal counts + empty one-way
         # difference ⇒ set equality (count is a cheap metadata-ish job;
         # saves the second exceptAll scan per round)
         n_new = new.count()
         converged = n_new == n_edges and new.exceptAll(edges).isEmpty()
-        release_blocks(spark, edge_ids)
-        edges, edge_ids, n_edges = new, new_ids, n_new
+        release_blocks(spark, block_ids(edges))
+        edges, n_edges = new, n_new
         if converged:
             break
     if not converged:

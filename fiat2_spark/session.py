@@ -83,14 +83,35 @@ def get_spark(
     return spark
 
 
-def _is_checkpoint_block(jrdd) -> bool:
-    """Structural classification of a resident RDD: a ``localCheckpoint``
+def _resident(spark: SparkSession, ids=None) -> dict[int, tuple[bool, str]]:
+    """The session's resident persistent RDDs as ``{rdd id: (is a
+    localCheckpoint block, description)}``, or only those among ``ids``
+    when given. A block classifies structurally: a ``localCheckpoint``
     materialization answers ``isLocallyCheckpointed`` on the underlying
-    Scala RDD. (The previous classifier substring-matched the RDD's
-    callsite string — brittle across Spark builds and spoofable by a
-    user callsite containing the text.)"""
-    r = jrdd.rdd() if hasattr(jrdd, "rdd") else jrdd
-    return bool(r.isLocallyCheckpointed())
+    Scala RDD. Each py4j proxy made here is detached before returning: a
+    proxy left to Python's cycle collector pins its RDD in the JVM until
+    that runs, which keeps blocks resident that ContextCleaner would
+    free."""
+    gw = spark.sparkContext._gateway
+    jmap = spark.sparkContext._jsc.getPersistentRDDs()
+    keys = jmap.keySet()
+    # an array, not the set's iterator: py4j gives no handle to detach
+    # the iterator that `for rid in keys` would make
+    arr = keys.toArray()
+    out = {}
+    try:
+        for rid in arr:
+            if ids is not None and rid not in ids:
+                continue
+            jrdd = jmap.get(rid)
+            rdd = jrdd.rdd()
+            out[rid] = (bool(rdd.isLocallyCheckpointed()), jrdd.toString()[:80])
+            gw.detach(rdd)
+            gw.detach(jrdd)
+    finally:
+        for proxy in (arr, keys, jmap):
+            gw.detach(proxy)
+    return out
 
 
 def cache_entries(spark: SparkSession) -> tuple[list[str], list[str]]:
@@ -104,10 +125,8 @@ def cache_entries(spark: SparkSession) -> tuple[list[str], list[str]]:
     entry that survives a query's return as a leak (run_gate asserts
     zero)."""
     ckpt, cache = [], []
-    for rid, rdd in dict(spark.sparkContext._jsc.getPersistentRDDs()).items():
-        (ckpt if _is_checkpoint_block(rdd) else cache).append(
-            f"[{rid}] {rdd.toString()[:80]}"
-        )
+    for rid, (is_block, desc) in _resident(spark).items():
+        (ckpt if is_block else cache).append(f"[{rid}] {desc}")
     return ckpt, cache
 
 
@@ -122,38 +141,45 @@ def release_checkpoint_blocks(spark: SparkSession) -> int:
     end-of-run sweep has found 0, 2 and 4 blocks over the same query
     code — so reclamation must be explicit. Returns the number of RDDs
     freed."""
-    n = 0
-    for _rid, rdd in dict(spark.sparkContext._jsc.getPersistentRDDs()).items():
-        if _is_checkpoint_block(rdd):
-            rdd.unpersist(False)
-            n += 1
-    return n
+    return release_blocks(
+        spark, [rid for rid, (is_block, _) in _resident(spark).items() if is_block]
+    )
 
 
-def local_checkpoint_tracked(df) -> tuple:
-    """Eagerly ``localCheckpoint`` a DataFrame and return
-    ``(checkpointed_df, frozenset_of_new_block_ids)``. Long-lived
-    stateful indexes (streaming.maintenance) retire a superseded state
-    snapshot per insert; ``DataFrame.unpersist()`` does NOT free
-    localCheckpoint blocks on this build (measured — the blocks stay in
-    ``getPersistentRDDs``), so targeted reclamation must go through
-    ``release_blocks`` with the ids captured here. The global
-    ``release_checkpoint_blocks`` sweep is NOT safe while such an index
-    is live: it would free the index's own state blocks, whose lineage
-    is truncated."""
-    sc = df.sparkSession.sparkContext
-    before = set(dict(sc._jsc.getPersistentRDDs()).keys())
-    out = df.localCheckpoint()
-    after = set(dict(sc._jsc.getPersistentRDDs()).keys())
-    return out, frozenset(after - before)
+def block_ids(*frames) -> frozenset:
+    """The block RDD ids of ``localCheckpoint()`` results: such a frame's
+    plan is a ``LogicalRDD`` over the checkpointed RDD, whose id is the
+    block's. ``DataFrame.unpersist()`` does NOT free localCheckpoint
+    blocks on this build (tests/test_cache_hygiene.py), so an owner that
+    retires a checkpoint frees it with ``release_blocks(spark,
+    block_ids(old))``. A frame that is not a checkpoint result (say, a
+    projection of one) raises ``ValueError``."""
+    ids = set()
+    for df in frames:
+        gw = df.sparkSession.sparkContext._gateway
+        plan = df._jdf.logicalPlan()
+        rdd = plan.rdd() if plan.nodeName() == "LogicalRDD" else None
+        try:
+            if rdd is None or not rdd.isLocallyCheckpointed():
+                raise ValueError(
+                    f"not a localCheckpoint() result: {plan.simpleString(1)}"
+                )
+            ids.add(rdd.id())
+        finally:
+            if rdd is not None:
+                gw.detach(rdd)
+            gw.detach(plan)
+    return frozenset(ids)
 
 
 def release_blocks(spark: SparkSession, ids) -> int:
     """Free exactly the checkpoint blocks with the given ids (from
-    ``local_checkpoint_tracked``). Returns the number freed."""
-    n = 0
-    for rid, rdd in dict(spark.sparkContext._jsc.getPersistentRDDs()).items():
-        if rid in ids:
-            rdd.unpersist(False)
-            n += 1
-    return n
+    ``block_ids``). Returns the number freed."""
+    held = _resident(spark, frozenset(ids))
+    jsc = spark.sparkContext._jsc.sc()
+    try:
+        for rid in held:
+            jsc.unpersistRDD(rid, False)
+    finally:
+        spark.sparkContext._gateway.detach(jsc)
+    return len(held)

@@ -30,7 +30,7 @@ from typing import Any
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from fiat2_spark.session import local_checkpoint_tracked, release_blocks
+from fiat2_spark.session import block_ids, release_blocks
 
 
 class SumIndex:
@@ -108,7 +108,6 @@ class GroupIndex:
         self.keys = keys
         self.aggs = aggs
         self.state: DataFrame | None = None
-        self._blocks: frozenset = frozenset()
 
     def _partial(self, df: DataFrame) -> DataFrame:
         cols = []
@@ -130,22 +129,20 @@ class GroupIndex:
     def init(self, base: DataFrame) -> None:
         # eager localCheckpoint, not a DataFrame persist: blocks (not a
         # CacheManager entry that would pin the state plan for the
-        # session's life). Each insert RETIRES the superseded snapshot's
-        # blocks immediately (they are no longer needed once the new
-        # eager checkpoint has materialized) — the global
+        # session's life). The index owns its state's blocks: each insert
+        # RETIRES the superseded snapshot's blocks by id as soon as the
+        # new eager checkpoint has materialized — the global
         # release_checkpoint_blocks sweep must never run while the index
         # is live, since it would free the live state too.
-        self.state, self._blocks = local_checkpoint_tracked(self._partial(base))
+        self.state = self._partial(base).localCheckpoint()
 
     def insert(self, batch: DataFrame) -> None:
         assert self.state is not None
-        prev_blocks = self._blocks
-        self.state, self._blocks = local_checkpoint_tracked(
-            self._merge(self.state, self._partial(batch))
-        )
+        prev = self.state
+        self.state = self._merge(prev, self._partial(batch)).localCheckpoint()
         # DataFrames returned by read() before this insert become
         # invalid here (snapshot-until-next-insert contract)
-        release_blocks(self.state.sparkSession, prev_blocks)
+        release_blocks(prev.sparkSession, block_ids(prev))
 
     def read(self) -> DataFrame:
         """Current state snapshot — valid until the next insert()."""
@@ -186,9 +183,9 @@ class JoinAggView:
         self.group = group
         # localCheckpoint bounds the union lineage of the seen sides as
         # batches accumulate (same hygiene as workloads.graphs.bfs);
-        # each insert retires the superseded side's blocks
-        self.left, self._lblocks = local_checkpoint_tracked(left)
-        self.right, self._rblocks = local_checkpoint_tracked(right)
+        # each insert retires the superseded side's blocks by id
+        self.left = left.localCheckpoint()
+        self.right = right.localCheckpoint()
         self.group.init(self.left.join(self.right, on))
 
     def _fold(self, joined_delta: DataFrame) -> None:
@@ -196,19 +193,15 @@ class JoinAggView:
 
     def insert_left(self, batch: DataFrame) -> None:
         self._fold(batch.join(self.right, self.on))
-        prev = self._lblocks
-        self.left, self._lblocks = local_checkpoint_tracked(
-            self.left.unionByName(batch)
-        )
-        release_blocks(self.left.sparkSession, prev)
+        prev = self.left
+        self.left = prev.unionByName(batch).localCheckpoint()
+        release_blocks(prev.sparkSession, block_ids(prev))
 
     def insert_right(self, batch: DataFrame) -> None:
         self._fold(self.left.join(batch, self.on))
-        prev = self._rblocks
-        self.right, self._rblocks = local_checkpoint_tracked(
-            self.right.unionByName(batch)
-        )
-        release_blocks(self.right.sparkSession, prev)
+        prev = self.right
+        self.right = prev.unionByName(batch).localCheckpoint()
+        release_blocks(prev.sparkSession, block_ids(prev))
 
     def read(self) -> DataFrame:
         return self.group.read()

@@ -1970,8 +1970,9 @@ def agg_reuse(spark, sf_dir):
     mean). The |groups|-row aggregate is materialized eagerly
     (localCheckpoint — checkpoint blocks both consumers scan, NOT a
     CacheManager persist: a DataFrame-level cache would pin the entry
-    for the life of the session, while blocks are reclaimable by
-    `session.release_checkpoint_blocks` once results are consumed;
+    for the life of the session, while blocks belong to the result and
+    are reclaimed by `session.release_checkpoint_blocks` once results
+    are consumed;
     run_gate asserts zero CacheManager entries post-gate), so the
     orders⋈customer scan-join-aggregate runs exactly once — the
     engine-native 'pay the heavy pass once' that the reference gets by
@@ -3072,8 +3073,8 @@ def tpch_q15_shape(spark, sf_dir):
     once as rows equi-filtered against that max — so the heavy
     lineitem pass runs exactly once: the |suppliers|-row aggregate is
     materialized eagerly as CHECKPOINT BLOCKS (localCheckpoint — the
-    `agg_reuse` pattern; blocks are reclaimable by
-    `session.release_checkpoint_blocks` once results are consumed,
+    `agg_reuse` pattern; blocks belong to the result and are reclaimed
+    by `session.release_checkpoint_blocks` once results are consumed,
     unlike a CacheManager persist pinned for the session's life —
     run_gate asserts zero cache entries post-gate; AQE does not
     canonically match the two aggregate subtrees, measured not

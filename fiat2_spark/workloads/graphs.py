@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from fiat2_spark.operators import relational as R
-from fiat2_spark.session import local_checkpoint_tracked, release_blocks
+from fiat2_spark.session import block_ids, release_blocks
 from fiat2_spark.workloads.util import registry, tbl
 
 QUERIES, ORACLES, q = registry()
@@ -131,31 +131,31 @@ def bfs(spark, sf_dir):
     # localCheckpoint (eager) per level truncates lineage: without it the
     # visited plan grows by one join+union per level and iteration k
     # re-derives all k-1 predecessors (unbounded plan depth — the classic
-    # iterative-algorithm failure at scale). Retired frontier/visited
-    # snapshots release their blocks as soon as superseded, so the
-    # result holds only the final visited checkpoint.
-    visited, vis_ids = local_checkpoint_tracked(
-        spark.createDataFrame([(0, 0)], "node long, depth long")
-    )
-    frontier, front_ids = visited, frozenset()
+    # iterative-algorithm failure at scale). The loop owns its rounds'
+    # blocks: a retired frontier/visited snapshot releases them by id as
+    # soon as it is superseded, so the result holds only the final
+    # visited checkpoint.
+    visited = spark.createDataFrame([(0, 0)], "node long, depth long").localCheckpoint()
+    frontier = visited
     depth = 0
     while depth < 15:
         depth += 1
-        nxt, nxt_ids = local_checkpoint_tracked(
+        nxt = (
             frontier.join(e, e.src == frontier.node)
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(visited, "node", "left_anti")
             .withColumn("depth", F.lit(depth).cast("long"))
+            .localCheckpoint()
         )
         if nxt.isEmpty():
-            release_blocks(spark, nxt_ids)
+            release_blocks(spark, block_ids(nxt))
             break
-        new_visited, new_ids = local_checkpoint_tracked(visited.unionByName(nxt))
-        release_blocks(spark, vis_ids | front_ids)
-        visited, vis_ids = new_visited, new_ids
-        frontier, front_ids = nxt, nxt_ids
-    release_blocks(spark, front_ids)
+        new_visited = visited.unionByName(nxt).localCheckpoint()
+        release_blocks(spark, block_ids(visited, frontier))
+        visited, frontier = new_visited, nxt
+    if frontier is not visited:
+        release_blocks(spark, block_ids(frontier))
     out = visited.select("node", "depth")
     e.unpersist()
     return out
@@ -218,10 +218,11 @@ def pagerank(edges):
     checkpoint but the final rank snapshot is released before return."""
     spark = edges.sparkSession
     e = edges.persist()
-    nodes, node_ids = local_checkpoint_tracked(
+    nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
+        .localCheckpoint()
     )
     n = float(nodes.count())
     # attach each edge's out-degree ONCE before the loop (r12): the
@@ -230,16 +231,16 @@ def pagerank(edges):
     # change between iterations. Checkpoint blocks (batch contract);
     # at scale this is the reusable node-partitioned edge relation the
     # docstring's "edge exchange reused across iterations" refers to.
-    ej, ej_ids = local_checkpoint_tracked(
+    ej = (
         e.join(
             e.groupBy("src").agg(F.count(F.lit(1)).cast("double").alias("deg")),
             "src",
         )
         .select("src", "dst", "deg")
+        .localCheckpoint()
     )
     pr = nodes.select("node", F.round(F.lit(1.0) / F.lit(n), 12).alias("pr"))
-    pr_ids = frozenset()
-    for _ in range(PAGERANK_ITERS):
+    for i in range(PAGERANK_ITERS):
         contribs = (
             ej.join(pr, pr.node == ej.src)
             .select(
@@ -250,8 +251,7 @@ def pagerank(edges):
             )
         )
         sums = contribs.groupBy("node").agg(F.sum("c").alias("sc"))
-        prev_ids = pr_ids
-        pr, pr_ids = local_checkpoint_tracked(
+        prev, pr = pr, (
             nodes.join(sums, "node", "left")
             .select(
                 "node",
@@ -261,12 +261,14 @@ def pagerank(edges):
                     12,
                 ).alias("pr"),
             )
+            .localCheckpoint()
         )
         # release the superseded snapshot (bfs discipline: lineage is
         # truncated per round AND retired state is dropped per round;
         # the first pr is a projection of `nodes`, never checkpointed)
-        release_blocks(spark, prev_ids)
-    release_blocks(spark, node_ids | ej_ids)
+        if i:
+            release_blocks(spark, block_ids(prev))
+    release_blocks(spark, block_ids(nodes, ej))
     e.unpersist()
     return pr
 

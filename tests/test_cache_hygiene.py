@@ -10,18 +10,28 @@ as a cache entry (the leak class run_gate asserts to zero)."""
 
 from __future__ import annotations
 
+import gc
+import threading
+import time
+
+import pytest
 from pyspark.sql import functions as F
 
 from fiat2_spark.session import (
+    _resident,
+    block_ids,
     cache_entries,
-    local_checkpoint_tracked,
     release_blocks,
     release_checkpoint_blocks,
 )
 
 
 def _resident_ids(spark):
-    return set(dict(spark.sparkContext._jsc.getPersistentRDDs()).keys())
+    return set(_resident(spark))
+
+
+def _ckpt_ids(spark):
+    return {rid for rid, (is_block, _) in _resident(spark).items() if is_block}
 
 
 def test_persist_classifies_as_cache_entry_not_checkpoint(spark):
@@ -59,10 +69,12 @@ def test_checkpoint_block_classifies_structurally(spark):
 def test_dataframe_unpersist_does_not_free_checkpoint_blocks(spark):
     """The property that forces targeted release by block id: on this
     build DataFrame.unpersist() leaves localCheckpoint blocks resident
-    (so a retire path built on it silently leaks). If a Spark upgrade makes this pass start
-    failing, local_checkpoint_tracked/release_blocks can be simplified."""
+    (so a retire path built on it silently leaks). If a Spark upgrade
+    makes this test start failing, owners can retire a checkpoint with
+    unpersist() instead of release_blocks(spark, block_ids(old))."""
     release_checkpoint_blocks(spark)
-    ck, blocks = local_checkpoint_tracked(spark.range(100).selectExpr("id"))
+    ck = spark.range(100).selectExpr("id").localCheckpoint()
+    blocks = block_ids(ck)
     assert blocks and blocks <= _resident_ids(spark)
     ck.unpersist(False)
     assert blocks <= _resident_ids(spark), "unpersist freed blocks — simplify!"
@@ -86,7 +98,7 @@ def test_group_index_insert_retires_superseded_snapshots(spark):
         assert len(_resident_ids(spark)) == len(after_init), f"insert {i} leaked"
     rows = {r["g"]: (r["n"], r["s"]) for r in idx.read().collect()}
     assert rows == {"a": (6, 1 + 10 + 11 + 12 + 13 + 14), "b": (1, 2)}
-    release_blocks(spark, idx._blocks)
+    release_blocks(spark, block_ids(idx.read()))
 
 
 _CHAIN = [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11)]
@@ -120,18 +132,78 @@ def test_iterative_loops_release_superseded_rounds(spark, sf_dir):
     so each loop releases the superseded round by block id. After each
     returns, the only new resident checkpoint blocks are those its result
     reads, and the result still reads back."""
-    from fiat2_spark.session import _is_checkpoint_block
-
-    def ckpt_ids():
-        return {
-            rid for rid, rdd in dict(spark.sparkContext._jsc.getPersistentRDDs()).items()
-            if _is_checkpoint_block(rdd)
-        }
-
     for name, run, held, check in _loops(spark, sf_dir):
-        before = ckpt_ids()
+        before = _ckpt_ids(spark)
         out = run()
-        new = ckpt_ids() - before
+        new = _ckpt_ids(spark) - before
         assert len(new) == held, (name, len(new))
         assert check(out), name
         release_blocks(spark, new)
+
+
+def test_block_probes_do_not_pin_dropped_checkpoints(spark):
+    """Enumerating the resident RDDs makes py4j proxies. Left to
+    Python's cycle collector, those proxies keep the RDDs alive in the
+    JVM, so ContextCleaner never frees the blocks of a checkpoint whose
+    DataFrame was dropped. With the cycle collector off, 8 checkpoints
+    probed by cache_entries after each must all drain once the frames
+    are dropped and the JVM collects. py4j delivers a released proxy to
+    the JVM from a worker that polls once a second, so each poll waits
+    out the previous probe's proxies before asking for a JVM GC."""
+    release_checkpoint_blocks(spark)
+    jvm = spark.sparkContext._jvm
+    gc.collect()
+    gc.disable()
+    try:
+        frames = []
+        for i in range(8):
+            frames.append(spark.range(10 + i).localCheckpoint())
+            cache_entries(spark)
+        assert len(cache_entries(spark)[0]) == 8
+        del frames
+        for _ in range(6):
+            time.sleep(1.5)
+            jvm.System.gc()
+            time.sleep(0.5)
+            resident = len(cache_entries(spark)[0])
+            if not resident:
+                break
+    finally:
+        gc.enable()
+    assert resident == 0, f"{resident} dropped checkpoint(s) still resident"
+
+
+def test_block_ids_of_concurrent_checkpoints(spark):
+    """Two threads checkpointing at once each get exactly the block
+    their own frame reads: a whole-map diff around each checkpoint
+    would also claim the other thread's block."""
+    before = _ckpt_ids(spark)
+    start = threading.Barrier(2)
+    got = {}
+
+    def run(n):
+        start.wait()
+        ck = spark.range(n).localCheckpoint()
+        got[n] = (ck, block_ids(ck))
+
+    threads = [threading.Thread(target=run, args=(n,)) for n in (1000, 2000)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    (a, a_ids), (b, b_ids) = got[1000], got[2000]
+    assert len(a_ids) == len(b_ids) == 1 and not (a_ids & b_ids)
+    assert a_ids | b_ids == _ckpt_ids(spark) - before
+    assert release_blocks(spark, a_ids) == 1
+    assert b.count() == 2000, "freeing one thread's block freed the other's"
+    assert release_blocks(spark, b_ids) == 1
+    assert not ((a_ids | b_ids) & _resident_ids(spark))
+
+
+def test_block_ids_rejects_a_non_checkpoint_frame(spark):
+    ck = spark.range(10).localCheckpoint()
+    try:
+        with pytest.raises(ValueError, match="Project"):
+            block_ids(ck.select("id"))
+    finally:
+        release_blocks(spark, block_ids(ck))

@@ -1175,10 +1175,10 @@ def test_doremi_trajectory_loop_checkpoints_release(spark):
         _doremi_domain_stats,
         doremi_weights_trajectory,
     )
-    from fiat2_spark.session import cache_entries, release_blocks
+    from fiat2_spark.session import _resident, release_blocks
 
     def ckpt_ids():
-        return {int(e[1:e.index("]")]) for e in cache_entries(spark)[0]}
+        return {rid for rid, (is_block, _) in _resident(spark).items() if is_block}
 
     def new_blocks(fn):
         before = ckpt_ids()

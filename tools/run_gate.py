@@ -21,7 +21,7 @@ from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from fiat2_spark.session import get_spark
+from fiat2_spark.session import _resident, cache_entries, get_spark, release_checkpoint_blocks
 from fiat2_spark.workloads import ORACLES, QUERIES
 from tests.oracle import compare, duck_conn
 
@@ -74,25 +74,8 @@ def main() -> None:
     sc = spark.sparkContext
 
     def blocks() -> set:
-        """Ids of the resident localCheckpoint block RDDs. Each py4j proxy
-        made here is detached before returning: a proxy left to Python's
-        cycle collector pins its RDD in the JVM until that runs, which
-        keeps blocks resident that ContextCleaner would free."""
-        jmap = sc._jsc.getPersistentRDDs()
-        keys = jmap.keySet()
-        out = set()
-        try:
-            for rid in list(keys):
-                jrdd = jmap.get(rid)
-                rdd = jrdd.rdd()
-                if rdd.isLocallyCheckpointed():
-                    out.add(rid)
-                sc._gateway.detach(rdd)
-                sc._gateway.detach(jrdd)
-        finally:
-            sc._gateway.detach(keys)
-            sc._gateway.detach(jmap)
-        return out
+        """Ids of the resident localCheckpoint block RDDs."""
+        return {rid for rid, (is_block, _) in _resident(spark).items() if is_block}
 
     owner = {}  # block RDD id -> the query that left it resident
     for name in names:
@@ -135,8 +118,6 @@ def main() -> None:
     # session owner here, so after all results are consumed it sweeps
     # them and the map must drain to EMPTY — any survivor would be a
     # persist leak.
-    from fiat2_spark.session import cache_entries, release_checkpoint_blocks
-
     ckpt, cache = cache_entries(spark)
     if cache:
         print(f"FAIL cache-hygiene: {len(cache)} CacheManager entr(ies) survive the gate:", flush=True)
@@ -145,7 +126,7 @@ def main() -> None:
         failures.append("__cache_hygiene__")
     swept_from = Counter(owner.get(rid, "(before the query loop)") for rid in blocks())
     freed = release_checkpoint_blocks(spark)
-    leftover = dict(spark.sparkContext._jsc.getPersistentRDDs())
+    leftover = _resident(spark)
     if leftover:
         print(f"FAIL cache-hygiene: {len(leftover)} RDD(s) resident after sweep", flush=True)
         failures.append("__cache_hygiene_sweep__")
