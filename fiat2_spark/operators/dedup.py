@@ -138,12 +138,11 @@ def minhash_candidates(
     # materialize NOW via localCheckpoint (eager): the downstream plan
     # reads it from three stages (band-left, band-right, verify) that
     # otherwise race to populate a lazy cache and each recompute the
-    # shingle pass. Checkpoint blocks (not a CacheManager entry): the
-    # result reads them, so they belong to it and the session owner's
+    # shingle pass. Checkpoint blocks (not a CacheManager entry) that the
+    # result reads, so they belong to it: the session owner's
     # `release_checkpoint_blocks` sweep reclaims them once results are
     # consumed — a DataFrame-level persist would pin it in the
-    # CacheManager for the life of the session (run_gate asserts zero
-    # such entries).
+    # CacheManager for the session's life (run_gate asserts none).
     sh = sh.localCheckpoint()
 
     # per-seed lane-min folds: ONE md5 transform + ONE aggregate per seed
@@ -277,8 +276,7 @@ def dup_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     labels = (
         edges.groupBy(F.col("src").alias("doc"))
         .agg(F.min("dst").alias("m"))
-        .select("doc", F.least(F.col("doc"), F.col("m")).alias("lbl"))
-        .localCheckpoint()
+        .select("doc", F.least(F.col("doc"), F.col("m")).alias("lbl")).localCheckpoint()
     )
     converged = False
     for _ in range(max_iter):
@@ -292,17 +290,15 @@ def dup_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
         # label snapshots every round just to compare a column the
         # update join already had side by side — here convergence is a
         # filter+isEmpty over the just-materialized checkpoint blocks,
-        # one cheap scan instead of a join per round. The checkpoint
-        # itself becomes `labels` (the flag column rides along unread),
-        # so the next round can release it by its block id.
+        # one cheap scan instead of a join per round. `labels` is the
+        # checkpoint itself (flag unread) so it releases by block id.
         new = (
             labels.join(nbr, labels.doc == nbr.dst, "left")
             .select(
                 F.col("doc"),
                 F.least(F.col("lbl"), F.coalesce(F.col("nlbl"), F.col("lbl"))).alias("lbl"),
                 (F.col("nlbl") < F.col("lbl")).alias("__imp"),
-            )
-            .localCheckpoint()
+            ).localCheckpoint()
         )
         converged = new.filter(F.col("__imp")).isEmpty()
         release_blocks(spark, block_ids(labels))
@@ -367,8 +363,7 @@ def dup_clusters_star(pairs: DataFrame) -> DataFrame:
     edges = (
         p.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
         .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()
+        .distinct().localCheckpoint()
     )
     release_blocks(spark, block_ids(p))
 

@@ -1555,10 +1555,8 @@ def doremi_weights(
 
     NOTE (ADVICE r12): the K-row stats checkpoint below makes this
     function EAGER — the full pool pass runs at call time, not at the
-    first action — and its blocks belong to the returned result (batch
-    contract: the session owner's `release_checkpoint_blocks` sweep
-    reclaims them; only a checkpoint the function itself retires is
-    freed early, by `release_blocks(spark, block_ids(old))`)."""
+    first action — and its blocks belong to the result (batch contract:
+    the session owner's `release_checkpoint_blocks` sweep reclaims them)."""
     # materialize the K-row domain stats ONCE (r12): three consumers
     # read `per` — the λ_max aggregate, the normalizing-sum aggregate,
     # and the final select — and each un-materialized reference re-ran

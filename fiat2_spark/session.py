@@ -84,30 +84,22 @@ def get_spark(
 
 
 def _resident(spark: SparkSession, ids=None) -> dict[int, tuple[bool, str]]:
-    """The session's resident persistent RDDs as ``{rdd id: (is a
-    localCheckpoint block, description)}``, or only those among ``ids``
-    when given. A block classifies structurally: a ``localCheckpoint``
-    materialization answers ``isLocallyCheckpointed`` on the underlying
-    Scala RDD. Each py4j proxy made here is detached before returning: a
-    proxy left to Python's cycle collector pins its RDD in the JVM until
-    that runs, which keeps blocks resident that ContextCleaner would
-    free."""
-    gw = spark.sparkContext._gateway
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
+    """``{rdd id: (is a localCheckpoint block, description)}`` of the
+    resident persistent RDDs (of those among ``ids`` when given). Every
+    py4j proxy made here is detached: one left to Python's cycle collector
+    keeps its RDD alive in the JVM, so ContextCleaner cannot free it."""
+    gw, jmap = spark.sparkContext._gateway, spark.sparkContext._jsc.getPersistentRDDs()
     keys = jmap.keySet()
-    # an array, not the set's iterator: py4j gives no handle to detach
-    # the iterator that `for rid in keys` would make
-    arr = keys.toArray()
+    arr = keys.toArray()  # not `for rid in keys`: py4j keeps that iterator
     out = {}
     try:
         for rid in arr:
-            if ids is not None and rid not in ids:
-                continue
-            jrdd = jmap.get(rid)
-            rdd = jrdd.rdd()
-            out[rid] = (bool(rdd.isLocallyCheckpointed()), jrdd.toString()[:80])
-            gw.detach(rdd)
-            gw.detach(jrdd)
+            if ids is None or rid in ids:
+                jrdd = jmap.get(rid)
+                rdd = jrdd.rdd()
+                out[rid] = (bool(rdd.isLocallyCheckpointed()), jrdd.toString()[:80])
+                gw.detach(rdd)
+                gw.detach(jrdd)
     finally:
         for proxy in (arr, keys, jmap):
             gw.detach(proxy)
@@ -131,44 +123,35 @@ def cache_entries(spark: SparkSession) -> tuple[list[str], list[str]]:
 
 
 def release_checkpoint_blocks(spark: SparkSession) -> int:
-    """Free every resident localCheckpoint block. Call ONLY when no
-    DataFrame returned by an engine operator is still live — checkpoint
-    blocks are the sole copy of their data (lineage is truncated), so a
-    later action on a swept DataFrame fails. This is the session owner's
-    between-batches reclamation hook: dropping the Python references
-    does not drain the blocks at any predictable time — ContextCleaner
-    frees a block only after a JVM GC collects its RDD, so a gate's
-    end-of-run sweep has found 0, 2 and 4 blocks over the same query
-    code — so reclamation must be explicit. Returns the number of RDDs
-    freed."""
+    """Free every resident localCheckpoint block: the session owner's
+    between-batches sweep. Call ONLY when no DataFrame returned by an
+    engine operator is still live — a block is the sole copy of its data
+    (lineage is truncated). Dropping the references frees a block only
+    once a JVM GC collects its RDD, at no predictable time, so
+    reclamation must be explicit. Returns the number of RDDs freed."""
     return release_blocks(
         spark, [rid for rid, (is_block, _) in _resident(spark).items() if is_block]
     )
 
 
 def block_ids(*frames) -> frozenset:
-    """The block RDD ids of ``localCheckpoint()`` results: such a frame's
-    plan is a ``LogicalRDD`` over the checkpointed RDD, whose id is the
-    block's. ``DataFrame.unpersist()`` does NOT free localCheckpoint
-    blocks on this build (tests/test_cache_hygiene.py), so an owner that
-    retires a checkpoint frees it with ``release_blocks(spark,
-    block_ids(old))``. A frame that is not a checkpoint result (say, a
-    projection of one) raises ``ValueError``."""
+    """Block RDD ids of ``localCheckpoint()`` results, read from each
+    frame's plan (a ``LogicalRDD`` over the block RDD). An owner retires a
+    checkpoint with ``release_blocks(spark, block_ids(old))``, since
+    ``DataFrame.unpersist()`` leaves its blocks resident. Raises
+    ``ValueError`` naming a frame that is not a checkpoint result."""
     ids = set()
     for df in frames:
-        gw = df.sparkSession.sparkContext._gateway
-        plan = df._jdf.logicalPlan()
+        gw, plan = df.sparkSession.sparkContext._gateway, df._jdf.logicalPlan()
         rdd = plan.rdd() if plan.nodeName() == "LogicalRDD" else None
         try:
             if rdd is None or not rdd.isLocallyCheckpointed():
-                raise ValueError(
-                    f"not a localCheckpoint() result: {plan.simpleString(1)}"
-                )
+                raise ValueError(f"not a localCheckpoint() result: {plan.simpleString(1)}")
             ids.add(rdd.id())
         finally:
-            if rdd is not None:
-                gw.detach(rdd)
-            gw.detach(plan)
+            for proxy in (rdd, plan):
+                if proxy is not None:
+                    gw.detach(proxy)
     return frozenset(ids)
 
 
@@ -177,9 +160,6 @@ def release_blocks(spark: SparkSession, ids) -> int:
     ``block_ids``). Returns the number freed."""
     held = _resident(spark, frozenset(ids))
     jsc = spark.sparkContext._jsc.sc()
-    try:
-        for rid in held:
-            jsc.unpersistRDD(rid, False)
-    finally:
-        spark.sparkContext._gateway.detach(jsc)
+    for rid in held:
+        jsc.unpersistRDD(rid, False)
     return len(held)

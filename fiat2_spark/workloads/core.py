@@ -1970,9 +1970,8 @@ def agg_reuse(spark, sf_dir):
     mean). The |groups|-row aggregate is materialized eagerly
     (localCheckpoint — checkpoint blocks both consumers scan, NOT a
     CacheManager persist: a DataFrame-level cache would pin the entry
-    for the life of the session, while blocks belong to the result and
-    are reclaimed by `session.release_checkpoint_blocks` once results
-    are consumed;
+    for the session's life, while blocks belong to the result, freed by
+    `session.release_checkpoint_blocks` once results are consumed;
     run_gate asserts zero CacheManager entries post-gate), so the
     orders⋈customer scan-join-aggregate runs exactly once — the
     engine-native 'pay the heavy pass once' that the reference gets by

@@ -131,10 +131,9 @@ def bfs(spark, sf_dir):
     # localCheckpoint (eager) per level truncates lineage: without it the
     # visited plan grows by one join+union per level and iteration k
     # re-derives all k-1 predecessors (unbounded plan depth — the classic
-    # iterative-algorithm failure at scale). The loop owns its rounds'
-    # blocks: a retired frontier/visited snapshot releases them by id as
-    # soon as it is superseded, so the result holds only the final
-    # visited checkpoint.
+    # iterative-algorithm failure at scale). The loop owns its rounds: a
+    # retired frontier/visited snapshot releases its blocks by id as soon
+    # as superseded, so the result holds only the final visited one.
     visited = spark.createDataFrame([(0, 0)], "node long, depth long").localCheckpoint()
     frontier = visited
     depth = 0
@@ -145,8 +144,7 @@ def bfs(spark, sf_dir):
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(visited, "node", "left_anti")
-            .withColumn("depth", F.lit(depth).cast("long"))
-            .localCheckpoint()
+            .withColumn("depth", F.lit(depth).cast("long")).localCheckpoint()
         )
         if nxt.isEmpty():
             release_blocks(spark, block_ids(nxt))
@@ -221,8 +219,7 @@ def pagerank(edges):
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
+        .distinct().localCheckpoint()
     )
     n = float(nodes.count())
     # attach each edge's out-degree ONCE before the loop (r12): the
@@ -236,8 +233,7 @@ def pagerank(edges):
             e.groupBy("src").agg(F.count(F.lit(1)).cast("double").alias("deg")),
             "src",
         )
-        .select("src", "dst", "deg")
-        .localCheckpoint()
+        .select("src", "dst", "deg").localCheckpoint()
     )
     pr = nodes.select("node", F.round(F.lit(1.0) / F.lit(n), 12).alias("pr"))
     for i in range(PAGERANK_ITERS):
@@ -260,8 +256,7 @@ def pagerank(edges):
                     + F.lit(0.85) * F.coalesce(F.col("sc").cast("double"), F.lit(0.0)),
                     12,
                 ).alias("pr"),
-            )
-            .localCheckpoint()
+            ).localCheckpoint()
         )
         # release the superseded snapshot (bfs discipline: lineage is
         # truncated per round AND retired state is dropped per round;
