@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, Window
 from pyspark.sql import functions as F
 
+from fiat2_spark.session import block_ids, release_blocks
+
 # Minimal stopword sets per language for the n-gram/stopword heuristic
 # language-ID. Deterministic and tiny by design (broadcastable as
 # literals into the plan, not a lookup table).
@@ -1932,6 +1934,7 @@ def bpe_learn_from_words(words, n_merges: int, checkpoint_every: int = 8):
         # vocabulary and the loop needs no further Spark jobs
         probe = words.coalesce(1).limit(BPE_DRIVER_VOCAB_LIMIT + 1).collect()
         if len(probe) <= BPE_DRIVER_VOCAB_LIMIT:
+            release_blocks(spark, block_ids(words))  # nothing reads it now
             return _bpe_learn_driver(spark, words.schema, probe, n_merges)
     merges: list[tuple[int, str, str, int]] = []
     pending = 0

@@ -129,9 +129,8 @@ def release_checkpoint_blocks(spark: SparkSession) -> int:
     (lineage is truncated). Dropping the references frees a block only
     once a JVM GC collects its RDD, at no predictable time, so
     reclamation must be explicit. Returns the number of RDDs freed."""
-    return release_blocks(
-        spark, [rid for rid, (is_block, _) in _resident(spark).items() if is_block]
-    )
+    blocks = [rid for rid, (is_block, _) in _resident(spark).items() if is_block]
+    return release_blocks(spark, blocks)
 
 
 def block_ids(*frames) -> frozenset:
