@@ -28,37 +28,35 @@ MODULES = (pipeline, stream, server, dsl, graphs, core)
 #   python tools/fingerprints.py --compare base.json
 # and seat every query it reports `changed` or `new`; seats come from
 # queries whose reachable hash held. Older baselines are in git history.
-# This window: plans/ keeps one AST traversal, one to_join lowering and
-# one Gstore (`interp.Store`; `catalog.Catalog` is deleted and
-# `sources.io.register_views` registers the views itself). With
-# SPARK_GRAFT_CPUS=4 the tool reports 12 changed, 0 new, 197 held: the
-# 11 dsl_* queries, which reach plans/, and bfs_recursive_cte, which
-# reaches register_views. All 12 are seated; the 11 new seats come from
-# held queries of families that keep other members in the window.
+# This window: checkpoint owners read their block ids from their frames
+# (`session.block_ids`). With SPARK_GRAFT_CPUS=4 the tool reports 18
+# changed, 0 new, 191 held: the queries that reach the six owners
+# (`bfs`, `pagerank`, `dup_clusters`, `dup_clusters_star`, `GroupIndex`,
+# `JoinAggView`), `bpe_learn` or a reworded docstring. All 18 are seated;
+# the 14 new seats come from held queries of families that keep other
+# members in the window.
 PRIORITY = (
-    # (A) tool-mandated reachable-delta rotate-ins: the DSL suite and
-    # the recursive-CTE walk
-    "dsl_auto_index", "dsl_auto_index_dist", "dsl_auto_index_join",
-    "dsl_command_pipeline", "dsl_comprehension", "dsl_employee_join",
-    "dsl_filter_project", "dsl_fold_table", "dsl_grandchildren",
-    "dsl_let_if_table", "dsl_orders_agg", "bfs_recursive_cte",
-    # (B) held: loops, LM/selection, retrieval, dedup, multimodal,
+    # (A) tool-mandated reachable-delta rotate-ins: the checkpoint
+    # owners and their callers
+    "agg_reuse", "bfs", "bpe_encode", "bpe_encode_ids", "bpe_merges",
+    "dedup_clusters", "dedup_clusters_star", "dedup_fuzzy_apply",
+    "dedup_minhash", "dedup_minhash_unicode", "doremi_reweight",
+    "incremental_groupby", "incremental_join", "incremental_multi_index",
+    "pagerank3", "pipeline_tokenize_pack", "text_unicode_pipeline",
+    "tpch_q15_shape",
+    # (B) held: DSL, LM/selection, retrieval, dedup, multimodal,
     # streaming, layout, relational
-    "bfs", "pagerank3", "dedup_clusters",
-    "doremi_reweight", "dsir_select",
-    "perplexity_filter", "lm_stupid_backoff",
+    "dsl_auto_index", "dsl_auto_index_dist", "dsl_auto_index_join",
+    "dsl_comprehension", "dsl_employee_join", "dsl_grandchildren",
+    "dsl_orders_agg", "bfs_recursive_cte", "dsir_select",
     "ccnet_bucket_assign", "quality_classifier", "budget_select",
     "length_bucket_batches", "bpe_pair_counts", "gopher_quality",
-    "text_quality",
-    "ann_ivf", "ann_lsh", "hard_negatives",
-    "decontaminate_semantic", "knn_label_vote", "hybrid_rrf_retrieval",
-    "dedup_semantic", "dedup_embedding", "dedup_ngram_jaccard",
-    "dedup_simhash", "substring_dedup_apply", "kmeans_lloyd",
-    "multimodal_audio_rms", "multimodal_frames", "multimodal_resize",
+    "text_quality", "ann_ivf", "hard_negatives", "decontaminate_semantic",
+    "dedup_semantic", "dedup_embedding", "substring_dedup_apply", "kmeans_lloyd",
+    "multimodal_audio_rms", "multimodal_frames",
     "sessionize", "stream_window_agg", "stream_stream_join",
-    "dpp_partitioned_join", "zonemap_range_scan", "salted_join",
-    "group_concat_scalable", "grouped_rank_family_scalable",
-    "fold_right_concat",
+    "dpp_partitioned_join", "zonemap_range_scan",
+    "group_concat_scalable", "fold_right_concat",
 )
 assert len(PRIORITY) == 50 and len(set(PRIORITY)) == 50
 
