@@ -6,9 +6,8 @@ Stages (each is a registered, oracle-checked operator — see
 `fiat2_spark/workloads/pipeline.py` for the gate entries):
 
 1. profile   — per-document quality signals: composite score
-               (`text.quality_score`), Gopher-style repetition stats
-               (`text.repetition_stats`), language ID
-               (`text.trigram_scores_table`);
+               (`text.quality_score`) and Gopher-style repetition stats
+               (`text.repetition_stats`);
 2. gate      — drop low-quality / repetitive documents;
 3. dedup     — exact fingerprint dedup, then MinHash+LSH near-dup pair
                generation and connected-components clustering (keep the

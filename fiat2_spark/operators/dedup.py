@@ -994,16 +994,16 @@ def lloyd_centroids(qe: DataFrame, k: int, iters: int) -> DataFrame:
     (r12): un-materialized, round t's plan nested every previous
     round's assign→argmin-window→update chain under the next round's
     broadcast, and the consumer's one action re-planned and re-executed
-    a t-deep tree. The blocks belong to the returned result (session
-    owner's sweep)."""
+    a t-deep tree. Each round releases the checkpoint it replaces; the
+    last one belongs to the returned result (session owner's sweep)."""
     qx = qe.select("vid", F.posexplode("qv").alias("dim", "v"))
     seeds = qe.select("vid").orderBy("vid").limit(k)
     cent = qx.join(F.broadcast(seeds), "vid").select(
         F.col("vid").alias("cid"), "dim", F.col("v").alias("qc")
     )
-    for _ in range(iters):
+    for i in range(iters):
         a = lloyd_assign(qe, cent)
-        cent = (
+        new = (
             qx.join(a, "vid")
             .groupBy("cid", "dim")
             .agg(
@@ -1013,6 +1013,9 @@ def lloyd_centroids(qe: DataFrame, k: int, iters: int) -> DataFrame:
             )
             .localCheckpoint()
         )
+        if i:  # the seed relation is a projection, not a checkpoint
+            release_blocks(qe.sparkSession, block_ids(cent))
+        cent = new
     return cent
 
 

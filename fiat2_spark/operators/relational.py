@@ -305,31 +305,14 @@ def global_row_number(
     """
     from pyspark.sql import Window as W
 
-    b = n_buckets or df.sparkSession.sparkContext.defaultParallelism
-    probs = [i / b for i in range(1, b)]
-    # b == 1 -> no cut points; Spark's approxQuantile NPEs on an empty
-    # probability list, so skip the call (single-bucket degenerate case).
-    # relativeError 0.01, not 0.001: cut points only affect bucket
-    # BALANCE (value-pure bucketing is what correctness rests on), so a
-    # 1%-of-n worst-case size skew buys a ~2.5x cheaper sketch pass —
-    # the Greenwald-Khanna summary size scales with 1/eps (measured
-    # 0.63s -> 0.25s per action at sf0.1)
-    cuts = sorted(set(df.approxQuantile(order_col, probs, 0.01))) if probs else []
-    if cuts:
-        # when-sum, not a filter-HOF: see _value_buckets — the lambda
-        # form trips Catalyst binding when inlined into a window spec,
-        # and the when-chain codegens
-        terms = [F.when(F.lit(c) < F.col(order_col), 1).otherwise(0) for c in cuts]
-        bucket = sum(terms[1:], terms[0])
-    else:
-        bucket = F.lit(0)
-    bucketed = df.withColumn("__bucket", bucket)
+    bucketed = _value_buckets(df, order_col, False, n_buckets)
     counts = {
         r["__bucket"]: r["cnt"]
         for r in bucketed.groupBy("__bucket").agg(F.count(F.lit(1)).alias("cnt")).collect()
     }
+    # buckets above the highest occupied one hold no row to offset
     offsets, acc = [], 0
-    for i in range(len(cuts) + 1):
+    for i in range(max(counts, default=0) + 1):
         offsets.extend((F.lit(i), F.lit(acc)))
         acc += counts.get(i, 0)
     off_map = F.create_map(*offsets)

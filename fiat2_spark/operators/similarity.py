@@ -233,6 +233,49 @@ def ann_lsh_topk(emb: DataFrame, queries: DataFrame) -> DataFrame:
 
 # -- lexical retrieval (BM25) -----------------------------------------------
 
+def _term_scores(
+    docs: DataFrame,
+    id_col: str,
+    toks_col: "Column",
+    terms: list[str],
+    stats,
+    contrib: "Column",
+    out: str,
+) -> DataFrame:
+    """The term-statistics skeleton BM25 and TF-IDF share: (doc, ``out``)
+    = Σ over the query terms a document hits of ``contrib``, a column
+    over the per-(doc, term) ``tf``, the document length ``dl``, the
+    term's document frequency ``df`` and the columns of
+    ``stats(base)``, the one-row corpus statistics over
+    base = (doc, toks, dl).
+
+    Spark shape: the token array is filtered to the query terms BEFORE
+    the explode, so the shuffle to the (doc, term) tf aggregate carries
+    only query-term hits — at 100 TB with a handful of terms that is a
+    vanishing fraction of the corpus. The df and corpus stats are
+    `|terms|`-row/one-row aggregates joined back by BROADCAST; the
+    corpus never re-shuffles. The contributions are summed in DECIMAL
+    so partial-agg order cannot change the result; the score is
+    rounded to 6dp."""
+    base = docs.select(F.col(id_col).alias("doc"), toks_col.alias("toks"))
+    base = base.select("doc", "toks", F.size("toks").cast("double").alias("dl"))
+    hits = base.select(
+        "doc",
+        "dl",
+        F.explode(F.filter("toks", lambda t: t.isin(*terms))).alias("term"),
+    )
+    tf = hits.groupBy("doc", "dl", "term").agg(
+        F.count(F.lit(1)).cast("double").alias("tf")
+    )
+    df_t = tf.groupBy("term").agg(F.count(F.lit(1)).cast("double").alias("df"))
+    scored = tf.join(F.broadcast(df_t), "term").join(F.broadcast(stats(base)))
+    return (
+        scored.select("doc", contrib.cast("decimal(20,9)").alias("c"))
+        .groupBy("doc")
+        .agg(F.round(F.sum("c").cast("double"), 6).alias(out))
+    )
+
+
 def bm25_scores(
     docs: DataFrame,
     id_col: str,
@@ -244,49 +287,26 @@ def bm25_scores(
     """Okapi BM25 (Robertson & Walker 1994) of every document against a
     fixed bag of query terms — the lexical-retrieval half of a
     training-data search stack. Returns (doc, bm25) for every document
-    with at least one hit.
-
-    Spark shape: the token array is filtered to the query terms BEFORE
-    the explode, so the shuffle to the (doc, term) tf aggregate carries
-    only query-term hits — at 100 TB with a handful of terms that is a
-    vanishing fraction of the corpus. Document-frequency and corpus
-    stats (N, avgdl) are one-row/`|terms|`-row aggregates joined back by
-    BROADCAST; the corpus never re-shuffles.
+    with at least one hit; the corpus stats are N and avgdl, and the
+    Spark shape is `_term_scores`'.
 
     Float discipline: idf = ln((N - df + 0.5)/(df + 0.5) + 1) is
     rounded to 9 decimals (libm ln may differ in the last ulp between
     engines); every remaining op is IEEE-deterministic on identical
     inputs, and the per-term contributions are summed in DECIMAL so
     partial-agg order cannot change the result."""
-    base = docs.select(F.col(id_col).alias("doc"), toks_col.alias("toks"))
-    base = base.select(
-        "doc", "toks", F.size("toks").cast("double").alias("dl")
-    )
-    stats = base.agg(
-        F.count(F.lit(1)).cast("double").alias("n_docs"),
-        F.sum("dl").alias("tot_dl"),
-    ).select("n_docs", (F.col("tot_dl") / F.col("n_docs")).alias("avgdl"))
-
-    hits = base.select(
-        "doc",
-        "dl",
-        F.explode(F.filter("toks", lambda t: t.isin(*terms))).alias("term"),
-    )
-    tf = hits.groupBy("doc", "dl", "term").agg(
-        F.count(F.lit(1)).cast("double").alias("tf")
-    )
-    df_t = tf.groupBy("term").agg(F.count(F.lit(1)).cast("double").alias("df"))
-
-    scored = tf.join(F.broadcast(df_t), "term").join(F.broadcast(stats))
     idf = F.round(
         F.log((F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0), 9
     )
     denom = F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))
-    contrib = F.round(idf * (F.col("tf") * (k1 + 1.0)) / denom, 9)
-    return (
-        scored.select("doc", contrib.cast("decimal(20,9)").alias("c"))
-        .groupBy("doc")
-        .agg(F.round(F.sum("c").cast("double"), 6).alias("bm25"))
+    return _term_scores(
+        docs, id_col, toks_col, terms,
+        lambda base: base.agg(
+            F.count(F.lit(1)).cast("double").alias("n_docs"),
+            F.sum("dl").alias("tot_dl"),
+        ).select("n_docs", (F.col("tot_dl") / F.col("n_docs")).alias("avgdl")),
+        F.round(idf * (F.col("tf") * (k1 + 1.0)) / denom, 9),
+        "bm25",
     )
 
 
@@ -301,35 +321,17 @@ def tfidf_scores(
     against a fixed bag of query terms — BM25's classical sibling, kept
     because corpus pipelines often want BOTH (BM25 for retrieval,
     TF-IDF for salience/feature vectors). Returns (doc, tfidf) for
-    documents with at least one hit.
-
-    Same Spark shape as `bm25_scores` (the scale posture is identical):
-    query-term filter BEFORE the explode so the (doc, term) shuffle
-    carries only hits; df/N stats broadcast back; corpus never
-    re-shuffles. Float discipline: idf = ln(N/df) rounded at the libm
-    boundary, contribution = idf · tf/dl rounded to 9dp, summed in
-    DECIMAL, final score rounded to 6dp — bitwise oracle agreement."""
-    base = docs.select(F.col(id_col).alias("doc"), toks_col.alias("toks"))
-    base = base.select("doc", "toks", F.size("toks").cast("double").alias("dl"))
-    stats = base.agg(F.count(F.lit(1)).cast("double").alias("n_docs"))
-
-    hits = base.select(
-        "doc",
-        "dl",
-        F.explode(F.filter("toks", lambda t: t.isin(*terms))).alias("term"),
-    )
-    tf = hits.groupBy("doc", "dl", "term").agg(
-        F.count(F.lit(1)).cast("double").alias("tf")
-    )
-    df_t = tf.groupBy("term").agg(F.count(F.lit(1)).cast("double").alias("df"))
-
-    scored = tf.join(F.broadcast(df_t), "term").join(F.broadcast(stats))
+    documents with at least one hit, through the same `_term_scores`
+    skeleton as `bm25_scores` with N the only corpus stat. Float
+    discipline: idf = ln(N/df) rounded at the libm boundary,
+    contribution = idf · tf/dl rounded to 9dp, summed in DECIMAL, final
+    score rounded to 6dp — bitwise oracle agreement."""
     idf = F.round(F.log(F.col("n_docs") / F.col("df")), 9)
-    contrib = F.round(idf * F.col("tf") / F.col("dl"), 9)
-    return (
-        scored.select("doc", contrib.cast("decimal(20,9)").alias("c"))
-        .groupBy("doc")
-        .agg(F.round(F.sum("c").cast("double"), 6).alias("tfidf"))
+    return _term_scores(
+        docs, id_col, toks_col, terms,
+        lambda base: base.agg(F.count(F.lit(1)).cast("double").alias("n_docs")),
+        F.round(idf * F.col("tf") / F.col("dl"), 9),
+        "tfidf",
     )
 
 

@@ -184,14 +184,14 @@ def tokens_unicode(text: Column) -> Column:
 
     TOKENIZER CONTRACT (which operators accept which tokenizer):
     the ASCII ``[a-z0-9]+`` `tokens` contract is the corpus-wide
-    DEFAULT; every operator that tokenizes internally accepts
-    ``tokenizer=`` explicitly (threaded r11) — the BPE family
-    (`bpe_word_table` / `bpe_pair_counts` / `bpe_learn` / `bpe_encode`
-    / `bpe_encode_ids`), the model-based selection stack (`dsir_*`,
-    `nb_*`, `lm_perplexity`/`perplexity_filter`, `doremi_*`) and the
-    heuristic scorers (`quality_score`, `gopher_rules`). Operators that
-    take a TOKEN COLUMN (`lang_scores`, `stopword_ratio`, `token_count`,
-    `repetition_stats`) compose with either tokenizer unchanged.
+    DEFAULT. These operators that tokenize internally accept
+    ``tokenizer=`` explicitly: `bpe_word_table` / `bpe_learn` /
+    `bpe_encode`, `nb_*`, `lm_perplexity`/`perplexity_filter` and
+    `gopher_rules`. `bpe_pair_counts`, `bpe_encode_ids`, `dsir_*`,
+    `doremi_*` and `quality_score` tokenize with `tokens` only.
+    Operators that take a TOKEN COLUMN (`lang_scores`,
+    `stopword_ratio`, `token_count`, `repetition_stats`) compose with
+    either tokenizer unchanged.
     Two residual English/Latin specifics survive a `tokens_unicode`
     corpus: the STOPWORDS lists are ASCII function words (langid and
     the stopword quality term score 0 on non-Latin scripts), and
@@ -284,37 +284,12 @@ def lang_scores(toks: Column) -> dict[str, Column]:
     }
 
 
-def lang_argmax_vector(vec: Column) -> Column:
-    """Deterministic argmax over a |LANGS|-length score vector: 'und'
-    when every score is zero, earliest sorted language wins ties.
-    ONE array_max over (score, -rank) structs — lexicographic struct
-    comparison picks the max score and, among equals, the largest
-    -rank = smallest rank. ``vec`` is embedded twice (array_max result
-    read for both fields); crucially NOT once per language — a
-    when-chain fold that threads a running best references it twice
-    per language, doubling the Catalyst tree each step (~2^|LANGS|
-    subtrees: at 10 languages Catalyst ground for minutes before any
-    task ran)."""
-    idx = F.sequence(F.lit(0), F.lit(len(LANGS) - 1))
-    entries = F.zip_with(
-        vec, idx, lambda s, i: F.struct(s.alias("s"), (-i).alias("r"))
-    )
-    m = F.array_max(entries)
-    names = F.array(*[F.lit(lang) for lang in LANGS])
-    return F.when(m["s"] == 0, F.lit("und")).otherwise(
-        F.element_at(names, (-m["r"] + 1).cast("int"))
-    )
-
-
-def _lang_argmax(scores: dict[str, Column]) -> Column:
-    return lang_argmax_vector(F.array(*[scores[lang] for lang in LANGS]))
-
-
 def lang_id(toks: Column) -> Column:
     """Argmax of stopword hits in fixed language order; 'und'
     (undetermined) when no stopword fires. Ties go to the first language
     in sorted order — deterministic by construction."""
-    return _lang_argmax(lang_scores(toks))
+    scores = lang_scores(toks)
+    return argmax_label(F.array(*[scores[lang] for lang in LANGS]), LANGS)
 
 
 def char_trigrams(text: Column) -> Column:
@@ -340,51 +315,17 @@ def char_trigrams(text: Column) -> Column:
     )
 
 
-def trigram_scores_table(df, text_col: str, keys: list[str]):
-    """Relational trigram scorer — the table-scale path: explode the
-    documents' trigrams, broadcast-join the (≈900-row) profile relation,
-    and partial-aggregate per-language hit sums back to one row per
-    document. Explode preserves partitioning, so the map-side partial
-    aggregate collapses each document's trigrams within its partition
-    and the shuffle carries |docs| × |LANGS| ints — while the profile
-    ships ONCE per executor as a broadcast, not once per task inside a
-    codegen'd literal (the expression form's cost). ``explode_outer``
-    keeps trigram-less documents (they score all-zero → 'und').
-
-    Returns ``keys`` + ``__sv`` (the |LANGS| score vector for
-    ``lang_argmax_vector``)."""
-    onehot: dict[str, list[int]] = {}
-    for i, lang in enumerate(LANGS):
-        for t in TRIGRAM_PROFILES[lang]:
-            onehot.setdefault(t, [0] * len(LANGS))[i] = 1
-    spark = df.sparkSession
-    prof = spark.createDataFrame(
-        [(t, *onehot[t]) for t in sorted(onehot)],
-        "t string, " + ", ".join(f"b_{i} int" for i in range(len(LANGS))),
-    )
-    ex = df.select(
-        *keys, F.explode_outer(char_trigrams(F.col(text_col))).alias("t")
-    )
-    agg = ex.join(F.broadcast(prof), "t", "left").groupBy(*keys).agg(
-        *[
-            F.coalesce(F.sum(f"b_{i}"), F.lit(0)).cast("int").alias(f"__s_{i}")
-            for i in range(len(LANGS))
-        ]
-    )
-    return agg.select(
-        *keys, F.array(*[F.col(f"__s_{i}") for i in range(len(LANGS))]).alias("__sv")
-    )
-
-
 def argmax_label(vec: Column, labels: list[str]) -> Column:
-    """Deterministic argmax over an arbitrary score vector:
-    'und' when every score is zero, the EARLIEST label in
-    ``labels`` order wins ties — `lang_argmax_vector` generalized to a
-    caller-supplied label set (that function stays pinned to the
-    module-global LANGS for the registered ASCII langid queries). Same
-    single-array_max construction: one (score, -rank) struct max, the
-    vector referenced a constant number of times (a when-chain fold
-    doubles the Catalyst tree per label)."""
+    """Deterministic argmax over a score vector aligned with ``labels``:
+    'und' when every score is zero, the EARLIEST label in ``labels``
+    order wins ties. ONE array_max over (score, -rank) structs —
+    lexicographic struct comparison picks the max score and, among
+    equals, the largest -rank = smallest rank. ``vec`` is embedded
+    twice (array_max result read for both fields); crucially NOT once
+    per label — a when-chain fold that threads a running best
+    references it twice per label, doubling the Catalyst tree each
+    step (~2^|labels| subtrees: at 10 languages Catalyst ground for
+    minutes before any task ran)."""
     idx = F.sequence(F.lit(0), F.lit(len(labels) - 1))
     entries = F.zip_with(
         vec, idx, lambda s, i: F.struct(s.alias("s"), (-i).alias("r"))
@@ -451,15 +392,17 @@ def script_id(text: Column) -> Column:
 
 
 def stopword_scores_table(df, toks: Column, keys: list[str], table: dict[str, list[str]]):
-    """Relational stopword scorer over an arbitrary {label: [words]}
-    table — the table-scale path (`trigram_scores_table`'s design one
-    level up): explode the documents' tokens, broadcast-join the
-    word → membership-vector relation (|distinct words| rows, shipped
-    once per executor — never a per-task codegen literal), and
-    partial-aggregate per-label hit sums back to one row per document.
-    Explode preserves partitioning, so the map-side combine collapses
-    each document's tokens within its partition and the one exchange
-    carries |docs| × |labels| ints. ``explode_outer`` keeps token-less
+    """Relational membership-vote scorer over an arbitrary
+    {label: [words]} table — the table-scale path for stopword lists
+    and, with ``toks`` = `char_trigrams` and ``table`` =
+    `TRIGRAM_PROFILES`, for trigram profiles: explode the documents'
+    tokens, broadcast-join the word → membership-vector relation
+    (|distinct words| rows, shipped once per executor — never a
+    per-task codegen literal), and partial-aggregate per-label hit
+    sums back to one row per document. Explode preserves
+    partitioning, so the map-side combine collapses each document's
+    tokens within its partition and the one exchange carries
+    |docs| × |labels| ints. ``explode_outer`` keeps token-less
     documents (they score all-zero → 'und' downstream). Returns
     ``keys`` + ``__sv`` (the sorted-label score vector for
     `argmax_label(…, sorted(table))`; agreement-tested against a
@@ -532,7 +475,7 @@ def repetition_stats(df, toks_col: str, id_col: str):
     pathological 10M-token document costs O(tokens) across its
     partition, not O(tokens²) in a higher-order-function scan. At 100
     TB this is the same embarrassingly-parallel explode→partial-agg
-    shape as ``trigram_scores_table``; map-side combine collapses each
+    shape as ``stopword_scores_table``; map-side combine collapses each
     document's grams before the exchange. All-double outputs rounded to
     6dp on both engines for the str-render gate."""
     toks = F.col(toks_col)
@@ -757,6 +700,68 @@ def feature_bucket(feat: Column, buckets: int) -> Column:
 QUANT = 10_000
 
 
+def _bucket_log_ratio(n_a: str, tot_a: str, n_b: str, tot_b: str, buckets: int) -> Column:
+    """Add-1 smoothed per-bucket log-ratio of corpus A over corpus B,
+    quantized to BIGINT:
+
+        round(ln((n_a+1)·(tot_b+B) / ((n_b+1)·(tot_a+B)))·QUANT)
+
+    with a NULL bucket count read as 0 (a bucket one corpus never
+    hit). The single ln is the only float op, immediately quantized;
+    its argument is an exact-integer ratio both engines compute
+    bit-identically. DSIR's importance weight and naive Bayes' class
+    weight are both this ratio."""
+    return (
+        F.round(
+            F.log(
+                ((F.coalesce(n_a, F.lit(0)) + 1) * (F.col(tot_b) + buckets)).cast("double")
+                / ((F.coalesce(n_b, F.lit(0)) + 1) * (F.col(tot_a) + buckets)).cast("double")
+            )
+            * QUANT
+        )
+        .cast("long")
+    )
+
+
+def _hashed_features(df, id_col: str, text_col: str, buckets: int, extra=(),
+                     tokenizer=tokens, outer=False):
+    """One featurize pass: hashed unigram+bigram buckets per doc,
+    (doc, *extra, bucket). The pass is CPU-bound, so the (often
+    single-row-group) scan is first spread across right-sized
+    partitions (`dedup.cpu_partitions`); the md5 bucketing runs
+    post-explode as a codegen'd projection; the result is
+    localCheckpointed because every consumer (counts, totals, scoring)
+    would otherwise re-run the pass. DSIR's two corpora and the
+    classifier's training and scoring sides all featurize here, so they
+    realize the identical feature map. The checkpoint blocks belong to
+    the returned result and are reclaimed by the session owner's global
+    sweep.
+
+    ``outer`` (r12, scoring side only): keep zero-feature docs as one
+    (doc, NULL-bucket) placeholder row via ``explode_outer``, so the
+    every-doc bias contract rides the featurize pass itself instead of
+    a corpus-keyed join-back (the `lm_perplexity` rewrite). NEVER set
+    it on a TRAINING corpus — a placeholder row would enter the
+    per-bucket counts as a NULL bucket and change the model."""
+    from fiat2_spark.operators.dedup import cpu_partitions
+
+    ex = F.explode_outer if outer else F.explode
+    out = (
+        df.repartition(cpu_partitions(df))
+        .select(
+            F.col(id_col).alias("doc"),
+            *[F.col(c) for c in extra],
+            ex(ngram_strings(tokenizer(F.col(text_col)))).alias("feat"),
+        )
+        .select(
+            "doc",
+            *extra,
+            feature_bucket(F.col("feat"), buckets).alias("bucket"),
+        )
+    )
+    return out.localCheckpoint()
+
+
 def dsir_scores(raw, target, id_col: str, text_col: str, buckets: int = 256):
     """DSIR — Data Selection via Importance Resampling (Xie et al.
     2023): score each raw-pool document by how much its hashed n-gram
@@ -765,39 +770,21 @@ def dsir_scores(raw, target, id_col: str, text_col: str, buckets: int = 256):
 
         lr[b] = round(ln((n_t[b]+1)·(N_r+B) / ((n_r[b]+1)·(N_t+B)))·QUANT)
 
-    quantized to an exact BIGINT so the per-doc score Σ_features lr[b]
-    is pure integer arithmetic (the repo's engine-parity discipline —
-    the single ln per bucket is the only float op, immediately
-    quantized; its argument is an exact-integer ratio both engines
-    compute bit-identically). Returns (id, score) for EVERY raw-pool
-    document; top-k selection lives in `dsir_importance`.
+    quantized to an exact BIGINT (`_bucket_log_ratio`) so the per-doc
+    score Σ_features lr[b] is pure integer arithmetic. Returns (id,
+    score) for EVERY raw-pool document; top-k selection lives in
+    `dsir_importance`.
 
-    Scale: the feature explode is ONE pass per corpus — materialized
-    eagerly via localCheckpoint (the minhash-shingle discipline:
-    blocks, not a CacheManager pin, reclaimable by the session owner's
-    sweep) because the counts, totals, and scoring legs would otherwise
-    each re-run the featurize pass. The md5 bucketing runs AFTER the
-    explode as a codegen'd top-level projection (`feature_bucket`) —
-    the HOF emits only the n-gram strings, so the hot hash loop is
-    Tungsten, not interpreted (the r8 profile's one flagged constant
-    factor). The lr table is ≤B rows (broadcast); the totals are 1-row
+    Scale: the feature explode is ONE checkpointed pass per corpus
+    (`_hashed_features`). The md5 bucketing runs AFTER the explode as
+    a codegen'd top-level projection (`feature_bucket`) — the HOF
+    emits only the n-gram strings, so the hot hash loop is Tungsten,
+    not interpreted. The lr table is ≤B rows (broadcast); the totals are 1-row
     aggregates (broadcast); scoring is a broadcast join + per-doc sum;
     top-k is TakeOrderedAndProject — no global sort, no all-pairs
     anything. Both corpora featurize through the ASCII `tokens`."""
-    def bucketed(df):
-        # the featurize pass is CPU-bound: spread the (often
-        # single-row-group) scan across right-sized partitions first —
-        # the minhash-signature discipline (dedup.cpu_partitions)
-        from fiat2_spark.operators.dedup import cpu_partitions
-
-        return df.repartition(cpu_partitions(df)).select(
-            F.col(id_col).alias("doc"),
-            F.explode(ngram_strings(tokens(F.col(text_col)))).alias("feat"),
-        ).select(
-            "doc", feature_bucket(F.col("feat"), buckets).alias("bucket")
-        ).localCheckpoint()
-
-    tb, rb = bucketed(target), bucketed(raw)
+    tb = _hashed_features(target, id_col, text_col, buckets)
+    rb = _hashed_features(raw, id_col, text_col, buckets)
     tc = tb.groupBy("bucket").agg(F.count(F.lit(1)).alias("n_t"))
     rc = rb.groupBy("bucket").agg(F.count(F.lit(1)).alias("n_r"))
     tot = tb.agg(F.count(F.lit(1)).alias("tot_t")).crossJoin(
@@ -808,21 +795,7 @@ def dsir_scores(raw, target, id_col: str, text_col: str, buckets: int = 256):
         .crossJoin(F.broadcast(tot))
         .select(
             "bucket",
-            F.round(
-                F.log(
-                    (
-                        (F.coalesce("n_t", F.lit(0)) + 1)
-                        * (F.col("tot_r") + buckets)
-                    ).cast("double")
-                    / (
-                        (F.coalesce("n_r", F.lit(0)) + 1)
-                        * (F.col("tot_t") + buckets)
-                    ).cast("double")
-                )
-                * QUANT
-            )
-            .cast("long")
-            .alias("lr"),
+            _bucket_log_ratio("n_t", "tot_t", "n_r", "tot_r", buckets).alias("lr"),
         )
     )
     scored = (
@@ -1249,40 +1222,6 @@ def gopher_rules(
     )
 
 
-def _nb_bucketed(df, id_col: str, text_col: str, buckets: int, extra=(),
-                 tokenizer=tokens, outer=False):
-    """One featurize pass: hashed unigram+bigram buckets per doc
-    (post-explode codegen'd md5 bucketing, localCheckpointed —
-    `dsir_scores`' discipline). Shared by the training and scoring
-    sides of the classifier so both realize the identical feature map.
-    The checkpoint blocks belong to the returned result and are
-    reclaimed by the session owner's global sweep.
-
-    ``outer`` (r12, scoring side only): keep zero-feature docs as one
-    (doc, NULL-bucket) placeholder row via ``explode_outer``, so the
-    every-doc bias contract rides the featurize pass itself instead of
-    a corpus-keyed join-back (the `lm_perplexity` rewrite). NEVER set
-    it on a TRAINING corpus — a placeholder row would enter the
-    per-bucket counts as a NULL bucket and change the model."""
-    from fiat2_spark.operators.dedup import cpu_partitions
-
-    ex = F.explode_outer if outer else F.explode
-    out = (
-        df.repartition(cpu_partitions(df))
-        .select(
-            F.col(id_col).alias("doc"),
-            *[F.col(c) for c in extra],
-            ex(ngram_strings(tokenizer(F.col(text_col)))).alias("feat"),
-        )
-        .select(
-            "doc",
-            *extra,
-            feature_bucket(F.col("feat"), buckets).alias("bucket"),
-        )
-    )
-    return out.localCheckpoint()
-
-
 def nb_counts(train, id_col: str, text_col: str, label_col: str, buckets: int,
               tokenizer=tokens):
     """The naive-Bayes sufficient statistics of a labeled corpus:
@@ -1296,7 +1235,7 @@ def nb_counts(train, id_col: str, text_col: str, label_col: str, buckets: int,
     the bias reads one train scan — fusing them into one crossJoined
     row made BOTH broadcast subtrees pay BOTH aggregations, serially,
     measured ~1.5x on the classifier queries)."""
-    tb = _nb_bucketed(train, id_col, text_col, buckets, extra=(label_col,),
+    tb = _hashed_features(train, id_col, text_col, buckets, extra=(label_col,),
                       tokenizer=tokenizer)
     counts = tb.groupBy("bucket").agg(
         F.sum(F.col(label_col).cast("long")).alias("n_p"),
@@ -1324,7 +1263,7 @@ def nb_score_from_counts(
 ):
     """Classify with a model given as sufficient statistics: per-bucket
     weight w[b] = round(ln((n_p+1)·(tot_n+B) / ((n_n+1)·(tot_p+B)))·QUANT)
-    and bias = round(ln((docs_p+1)/(docs_n+1))·QUANT) — the single ln
+    (`_bucket_log_ratio`) and bias = round(ln((docs_p+1)/(docs_n+1))·QUANT) — the single ln
     per TABLE row immediately quantized to BIGINT, so per-doc scoring
     is pure integer sums and both engines agree bitwise. Buckets never
     observed in training contribute nothing (inner probe — the oracle
@@ -1333,22 +1272,7 @@ def nb_score_from_counts(
     aggregate into a single score row; callers needing per-input-row
     scores must key by a unique id)."""
     w = counts.crossJoin(F.broadcast(ftot)).select(
-        "bucket",
-        F.round(
-            F.log(
-                (
-                    (F.coalesce("n_p", F.lit(0)) + 1)
-                    * (F.col("tot_n") + buckets)
-                ).cast("double")
-                / (
-                    (F.coalesce("n_n", F.lit(0)) + 1)
-                    * (F.col("tot_p") + buckets)
-                ).cast("double")
-            )
-            * QUANT
-        )
-        .cast("long")
-        .alias("w"),
+        "bucket", _bucket_log_ratio("n_p", "tot_p", "n_n", "tot_n", buckets).alias("w")
     )
     bias = dtot.select(
         F.round(
@@ -1368,7 +1292,7 @@ def nb_score_from_counts(
     # the per-doc aggregate covers every doc — no corpus-keyed
     # join-back against the score relation (the `lm_perplexity`
     # rewrite, one corpus join fewer per scoring query)
-    sb = _nb_bucketed(score, id_col, text_col, buckets, tokenizer=tokenizer,
+    sb = _hashed_features(score, id_col, text_col, buckets, tokenizer=tokenizer,
                       outer=True)
     doc_sums = (
         sb.join(F.broadcast(w), "bucket", "left")
@@ -1690,9 +1614,11 @@ def doremi_weights_trajectory(
     ONCE; each round is a K-row job (sum + crossJoin + arithmetic),
     localCheckpoint-truncated so the T-round lineage stays flat.
     Returns (domain, n_docs, n_trans, excess_q, weight), Σ weight ≈ 1.
-    The loop checkpoints (domain-stats + initial state + stride-4
-    interior + final, so 3 + ⌊(rounds−1)/4⌋ of them) belong to the
-    returned result; the session owner's sweep reclaims them."""
+    The loop checkpoints the domain stats, the initial state, every
+    4th interior round and the final state; each is released as soon
+    as the next one replaces it, so only the final state's block
+    belongs to the returned result (the session owner's sweep reclaims
+    it)."""
     ascale, sd = DOREMI_ASCALE, DOREMI_SMOOTH_DEN
     w1, r1 = divmod(ascale * (sd - DOREMI_SMOOTH_NUM), sd)
     w2 = ascale * DOREMI_SMOOTH_NUM
@@ -1724,6 +1650,9 @@ def doremi_weights_trajectory(
         )
         .withColumn("asum", F.lit(0).cast("long"))
     ).localCheckpoint()
+    spark = pool.sparkSession
+    release_blocks(spark, block_ids(per))
+    held = cur  # the checkpoint the loop state reads
     for _t in range(rounds):
         # per-round Σm as the same constant-partition window (r12):
         # each round's checkpoint is ONE K-row stage instead of an
@@ -1750,7 +1679,10 @@ def doremi_weights_trajectory(
         # per round, while lineage stays bounded for any T
         if (_t + 1) % 4 == 0 and _t + 1 < rounds:
             cur = cur.localCheckpoint()
+            release_blocks(spark, block_ids(held))
+            held = cur
     cur = cur.localCheckpoint()
+    release_blocks(spark, block_ids(held))
     return cur.select(
         "domain", "n_docs", "n_trans", "excess_q",
         F.round(
@@ -1781,6 +1713,22 @@ def bpe_symbolize(word: Column) -> Column:
         F.regexp_replace(word, "(.)", BPE_LB + "$1" + BPE_RB),
         F.lit(BPE_LB + BPE_EOW + BPE_RB),
     )
+
+
+def _bpe_merge_rule(lhs: str, rhs: str) -> tuple[str, str]:
+    """(pattern, replacement) of merge (lhs, rhs) on a wrapped symbol
+    string: LB lhs RB LB rhs RB → LB lhs+rhs RB (LB/RB =
+    `BPE_LB`/`BPE_RB`), applied as one non-regex replace."""
+    return BPE_LB + lhs + BPE_RB + BPE_LB + rhs + BPE_RB, BPE_LB + lhs + rhs + BPE_RB
+
+
+def _bpe_replay(merges: list[tuple[str, str]]) -> Column:
+    """The ``word`` column's symbol string after every merge in learned
+    order: one chained projection of non-regex replaces."""
+    wrapped = bpe_symbolize(F.col("word"))
+    for lhs, rhs in merges:
+        wrapped = F.replace(wrapped, *map(F.lit, _bpe_merge_rule(lhs, rhs)))
+    return wrapped
 
 
 def bpe_symbols(wrapped: Column) -> Column:
@@ -1884,8 +1832,7 @@ def _bpe_learn_driver(spark, schema, rows, n_merges: int):
             break
         (lhs, rhs), freq = min(pc.items(), key=lambda kv: (-kv[1], kv[0]))
         merges.append((step, lhs, rhs, freq))
-        pattern = BPE_LB + lhs + BPE_RB + BPE_LB + rhs + BPE_RB
-        repl = BPE_LB + lhs + rhs + BPE_RB
+        pattern, repl = _bpe_merge_rule(lhs, rhs)
         wrapped = [w.replace(pattern, repl) for w in wrapped]
     out = [
         tuple(r)[:wi] + (w,) + tuple(r)[wi + 1:]
@@ -1920,8 +1867,9 @@ def bpe_learn_from_words(words, n_merges: int, checkpoint_every: int = 8):
     argmax job is cheap), while an eager checkpoint is a full
     materialization JOB per merge — at a real tokenizer's ~30k merges
     the per-merge checkpoint dominates the loop, and lineage must
-    still be bounded, hence the stride. The loop checkpoints belong to
-    the returned result (session owner's sweep). Returns
+    still be bounded, hence the stride. Each loop checkpoint is
+    released once the next one replaces it; the last belongs to the
+    returned result (session owner's sweep). Returns
     (words, merges) where merges is [(step, lhs, rhs, freq)] and words
     is the final symbolized vocab (always checkpoint-materialized)."""
     spark = words.sparkSession
@@ -1937,7 +1885,7 @@ def bpe_learn_from_words(words, n_merges: int, checkpoint_every: int = 8):
             release_blocks(spark, block_ids(words))  # nothing reads it now
             return _bpe_learn_driver(spark, words.schema, probe, n_merges)
     merges: list[tuple[int, str, str, int]] = []
-    pending = 0
+    held, pending = words, 0  # held: the checkpoint `words` reads
     for step in range(1, n_merges + 1):
         top = (
             bpe_pair_stats(words)
@@ -1949,17 +1897,17 @@ def bpe_learn_from_words(words, n_merges: int, checkpoint_every: int = 8):
             break
         lhs, rhs, freq = top[0]["lhs"], top[0]["rhs"], top[0]["freq"]
         merges.append((step, lhs, rhs, freq))
-        pattern = BPE_LB + lhs + BPE_RB + BPE_LB + rhs + BPE_RB
-        repl = BPE_LB + lhs + rhs + BPE_RB
         words = words.withColumn(
-            "wrapped", F.replace(F.col("wrapped"), F.lit(pattern), F.lit(repl))
+            "wrapped", F.replace(F.col("wrapped"), *map(F.lit, _bpe_merge_rule(lhs, rhs)))
         )
         pending += 1
         if pending >= checkpoint_every:
             words = words.localCheckpoint()
-            pending = 0
+            release_blocks(spark, block_ids(held))
+            held, pending = words, 0
     if pending:
         words = words.localCheckpoint()
+        release_blocks(spark, block_ids(held))
     mdf = spark.createDataFrame(
         merges, "step int, lhs string, rhs string, freq bigint"
     )
@@ -2023,17 +1971,10 @@ def bpe_encode(df, id_col: str, text_col: str, merges: list[tuple[str, str]],
             "word", F.size(bpe_symbols(F.col("wrapped"))).alias("n_sym")
         )
     else:
-        wrapped = bpe_symbolize(F.col("word"))
-        for lhs, rhs in merges:
-            wrapped = F.replace(
-                wrapped,
-                F.lit(BPE_LB + lhs + BPE_RB + BPE_LB + rhs + BPE_RB),
-                F.lit(BPE_LB + lhs + rhs + BPE_RB),
-            )
         toks_per_word = (
             df.select(F.explode(tokenizer(F.col(text_col))).alias("word"))
             .distinct()
-            .select("word", F.size(bpe_symbols(wrapped)).alias("n_sym"))
+            .select("word", F.size(bpe_symbols(_bpe_replay(merges))).alias("n_sym"))
         )
     return (
         df.select(F.col(id_col), F.explode(tokenizer(F.col(text_col))).alias("word"))
@@ -2094,17 +2035,10 @@ def bpe_encode_ids(df, id_col: str, text_col: str, merges: list[tuple[str, str]]
         # corpus pass, no replay, and no second materialization job
         enc = words.select("word", bpe_symbols(F.col("wrapped")).alias("syms"))
     else:
-        wrapped = bpe_symbolize(F.col("word"))
-        for lhs, rhs in merges:
-            wrapped = F.replace(
-                wrapped,
-                F.lit(BPE_LB + lhs + BPE_RB + BPE_LB + rhs + BPE_RB),
-                F.lit(BPE_LB + lhs + rhs + BPE_RB),
-            )
         enc = (
             df.select(F.explode(tokens(F.col(text_col))).alias("word"))
             .distinct()
-            .select("word", bpe_symbols(wrapped).alias("syms"))
+            .select("word", bpe_symbols(_bpe_replay(merges)).alias("syms"))
             .localCheckpoint()
         )
     vocab_ids = (

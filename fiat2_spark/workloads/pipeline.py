@@ -163,18 +163,22 @@ def text_langid_trigram(spark, sf_dir):
     each profile, argmax as in `text_langid`. Catches inflected forms
     whole-token matching misses; deterministic and fully
     oracle-recomputable (profiles are the literal VALUES relation in
-    the oracle and a broadcast relation here — `trigram_scores_table`,
-    the explode → broadcast-join → partial-agg plan that scales where
-    the expression form's per-task literal map does not)."""
+    the oracle and a broadcast relation here — `stopword_scores_table`
+    over `char_trigrams`, the explode → broadcast-join → partial-agg
+    plan that scales where the expression form's per-task literal map
+    does not)."""
     d = tbl(spark, sf_dir, "documents").select(
         "doc_id", F.col("lang").alias("labeled_lang"), "text"
     )
     d = d.repartition(D.cpu_partitions(d, rows_per_task=100))
-    scored = TX.trigram_scores_table(d, "text", ["doc_id", "labeled_lang"])
+    scored = TX.stopword_scores_table(
+        d, TX.char_trigrams(F.col("text")), ["doc_id", "labeled_lang"],
+        TX.TRIGRAM_PROFILES,
+    )
     return scored.select(
         "doc_id",
         "labeled_lang",
-        TX.lang_argmax_vector(F.col("__sv")).alias("pred_lang"),
+        TX.argmax_label(F.col("__sv"), TX.LANGS).alias("pred_lang"),
     )
 
 

@@ -104,15 +104,38 @@ def test_group_index_insert_retires_superseded_snapshots(spark):
 _CHAIN = [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11)]
 
 
-def _loops(spark, sf_dir):
-    """(name, run, blocks its result reads, check) for each iterative
-    loop on a small fixed graph."""
-    from fiat2_spark.operators.dedup import dup_clusters, dup_clusters_star
+def _loops(spark, sf_dir, monkeypatch):
+    """(name, run, blocks left resident, check) for each iterative loop
+    on a small fixed input. The blocks left resident are those its
+    result reads, plus, for doremi_weights_trajectory, the two
+    checkpoints of its bigram fit (`lm_fit`)."""
+    import fiat2_spark.operators.text as TX
+    from fiat2_spark.operators.dedup import (
+        dup_clusters,
+        dup_clusters_star,
+        lloyd_centroids,
+    )
     from fiat2_spark.workloads.graphs import bfs, pagerank
 
     pairs = lambda: spark.createDataFrame(_CHAIN, "id_a long, id_b long")  # noqa: E731
     clusters = {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10}
     as_clusters = lambda df: {r["doc"]: r["cluster"] for r in df.collect()}  # noqa: E731
+    ref = spark.createDataFrame(
+        [(100, "the cat sat on the mat the cat ran")], "doc_id long, text string"
+    )
+    pool = spark.createDataFrame(
+        [(1, "the cat sat on the mat", "seen"), (2, "blork flem grup snee wub", "salad")],
+        "doc_id long, text string, dom string",
+    )
+    corpus = spark.createDataFrame(
+        [("low lower lowest",), ("newer newest wider",)], "text string"
+    )
+    qe = spark.createDataFrame(
+        [(1, [0, 0]), (2, [1, 1]), (3, [10, 10]), (4, [11, 11])],
+        "vid long, qv array<long>",
+    )
+    # the distributed merge loop, not the driver-side one
+    monkeypatch.setattr(TX, "BPE_DRIVER_VOCAB_LIMIT", 0)
     return [
         ("bfs", lambda: bfs(spark, sf_dir), 1,
          lambda df: {r["node"]: r["depth"] for r in df.collect()}[0] == 0),
@@ -123,16 +146,26 @@ def _loops(spark, sf_dir):
          lambda df: as_clusters(df) == clusters),
         ("dup_clusters_star", lambda: dup_clusters_star(pairs()), 2,
          lambda df: as_clusters(df) == clusters),
+        ("doremi_weights_trajectory", lambda: TX.doremi_weights_trajectory(
+            pool, ref, "doc_id", "text", "dom", rounds=5, vocab_size=16,
+        ), 1 + 2, lambda df: {r["domain"] for r in df.collect()} == {"seen", "salad"}),
+        ("bpe_learn", lambda: TX.bpe_learn(corpus, "text", 4, checkpoint_every=2), 1,
+         lambda out: out[0].count() == 6 and out[1].count() == 4),
+        ("lloyd_centroids", lambda: lloyd_centroids(qe, 2, 3), 1,
+         lambda df: {(r["cid"], r["dim"]): r["qc"] for r in df.collect()}
+         == {(1, 0): 0, (1, 1): 0, (2, 0): 10, (2, 1): 10}),
     ]
 
 
-def test_iterative_loops_release_superseded_rounds(spark, sf_dir):
-    """bfs, pagerank, dup_clusters and dup_clusters_star checkpoint each
-    round; DataFrame.unpersist() frees none of those blocks (see above),
-    so each loop releases the superseded round by block id. After each
+def test_iterative_loops_release_superseded_rounds(spark, sf_dir, monkeypatch):
+    """bfs, pagerank, dup_clusters, dup_clusters_star,
+    doremi_weights_trajectory, bpe_learn's distributed loop and
+    lloyd_centroids checkpoint their state as they go;
+    DataFrame.unpersist() frees none of those blocks (see above), so
+    each loop releases a superseded checkpoint by block id. After each
     returns, the only new resident checkpoint blocks are those its result
     reads, and the result still reads back."""
-    for name, run, held, check in _loops(spark, sf_dir):
+    for name, run, held, check in _loops(spark, sf_dir, monkeypatch):
         before = _ckpt_ids(spark)
         out = run()
         new = _ckpt_ids(spark) - before
