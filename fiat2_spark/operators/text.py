@@ -906,8 +906,12 @@ def lm_fit(ref, text_col: str, order: int = 2, vocab_size: int = 1024, tokenizer
     2007, "Large Language Models in Machine Translation" §4 — the
     distributed web-scale LM recipe: relative frequencies, no
     normalization, a fixed backoff penalty α per level) on the REF
-    corpus. Returns (vocab, tables): ``tables[k-1]`` is level k's cost
-    table keyed by the last k `_gram_cols`, cost column ``q{k}``.
+    corpus. Returns (vocab, tables, checkpoints): ``tables[k-1]`` is
+    level k's cost table keyed by the last k `_gram_cols`, cost column
+    ``q{k}``; ``checkpoints`` are the fit's localCheckpoint frames, which
+    ``vocab`` and ``tables`` read. A caller that has materialized all it
+    reads from the fit retires them with
+    ``release_blocks(spark, block_ids(*checkpoints))``.
 
     Model (everything integer until a single ln per TABLE row, the
     `dsir_scores` lr discipline — never a float op per token):
@@ -973,6 +977,7 @@ def lm_fit(ref, text_col: str, order: int = 2, vocab_size: int = 1024, tokenizer
             g = _vocab_mapped(g, c, vocab)
         ck = g.groupBy(*_gram_cols(k)).agg(F.count(F.lit(1)).alias("n"))
         counts.append(ck.localCheckpoint() if k < order else ck)
+    checkpoints = (ref_uni, vocab, *counts[1:order - 1])
     dom = vocab.unionByName(spark.createDataFrame([(UNK,)], "w string"))
     add1 = F.coalesce("n", F.lit(0)) + 1
     denom = F.col("n_tot") + vocab_size + 1
@@ -992,7 +997,7 @@ def lm_fit(ref, text_col: str, order: int = 2, vocab_size: int = 1024, tokenizer
             counts[k - 1].join(ctx, cols[:-1])
             .select(*cols, cost(F.col("n"), F.col("n_ctx"), order - k).alias(f"q{k}"))
         )
-    return vocab, tables
+    return vocab, tables, checkpoints
 
 
 def lm_perplexity(
@@ -1028,7 +1033,7 @@ def lm_perplexity(
 
     ``tokenizer``: the ref LM is FIT and the raw corpus SCORED through
     the one tokenizer passed here (see `lm_fit`)."""
-    vocab, tables = lm_fit(ref, text_col, order, vocab_size, tokenizer)
+    vocab, tables, _ = lm_fit(ref, text_col, order, vocab_size, tokenizer)
     rt = _grams(raw, order, [id_col], text_col, tokenizer, outer=True).withColumn(
         "__real", F.col("w").isNotNull()
     )
@@ -1479,18 +1484,14 @@ def doremi_weights(
     shuffle, no window. Returns
     (domain, n_docs, n_trans, excess_q, weight).
 
-    NOTE (ADVICE r12): the K-row stats checkpoint below makes this
-    function EAGER — the full pool pass runs at call time, not at the
-    first action — and its blocks belong to the result (batch contract:
-    the session owner's `release_checkpoint_blocks` sweep reclaims them)."""
-    # materialize the K-row domain stats ONCE (r12): three consumers
-    # read `per` — the λ_max aggregate, the normalizing-sum aggregate,
-    # and the final select — and each un-materialized reference re-ran
-    # the ENTIRE corpus pass (pool transition explode + broadcast
-    # probes + per-domain agg; only the ref-side fit inside
-    # _doremi_domain_stats was checkpointed). Blocks, not a
-    # CacheManager pin — the batch block contract.
-    per = _doremi_domain_stats(pool, ref, text_col, domain_col, vocab_size).localCheckpoint()
+    NOTE (ADVICE r12): the K-row stats checkpoint makes this function
+    EAGER — the full pool pass runs at call time, not at the first
+    action — and its block belongs to the result (batch contract: the
+    session owner's `release_checkpoint_blocks` sweep reclaims it)."""
+    # three consumers read the checkpointed K-row stats `per` — the
+    # λ_max aggregate, the normalizing-sum aggregate, and the final
+    # select — so the corpus pass runs once
+    per = _doremi_domain_stats(pool, ref, text_col, domain_col, vocab_size)
     # λ quantized to integer quant-units per transition, then softmax-
     # stabilized by the max BEFORE the exp: e_k = round(exp(η·(λ_k −
     # λ_max))·escale) ≤ escale, so e never overflows BIGINT no matter
@@ -1541,8 +1542,11 @@ def _doremi_domain_stats(pool, ref, text_col: str, domain_col: str, vocab_size: 
     explode with the domain riding the explode itself — no corpus-keyed
     join back. `doremi_weights` (one step) and
     `doremi_weights_trajectory` (Algorithm 1's T rounds) both start
-    here, so the expensive pass is defined once."""
-    vocab, (q1, q2) = lm_fit(ref, text_col, 2, vocab_size)
+    here, so the expensive pass is defined once. EAGER: the K-row stats
+    are localCheckpointed here (every caller reads them more than once),
+    and the fit's own checkpoints, which nothing reads after that, are
+    released, so the stats' block is the only one this leaves resident."""
+    vocab, (q1, q2), fit = lm_fit(ref, text_col, 2, vocab_size)
     # score pool transitions: excess = max(0, baseline − reference).
     # The domain rides the explode itself — no corpus-keyed join back
     # to the pool (the one shuffle a doc-keyed formulation would add).
@@ -1577,7 +1581,9 @@ def _doremi_domain_stats(pool, ref, text_col: str, domain_col: str, vocab_size: 
         F.col("n_trans") > 0,
         F.round(F.col("excess_q") / F.col("n_trans").cast("double")).cast("long"),
     ).otherwise(F.lit(0).cast("long"))
-    return per.withColumn("lamq", lamq)
+    per = per.withColumn("lamq", lamq).localCheckpoint()
+    release_blocks(pool.sparkSession, block_ids(*fit))
+    return per
 
 
 def doremi_weights_trajectory(
@@ -1614,8 +1620,8 @@ def doremi_weights_trajectory(
     ONCE; each round is a K-row job (sum + crossJoin + arithmetic),
     localCheckpoint-truncated so the T-round lineage stays flat.
     Returns (domain, n_docs, n_trans, excess_q, weight), Σ weight ≈ 1.
-    The loop checkpoints the domain stats, the initial state, every
-    4th interior round and the final state; each is released as soon
+    The domain stats, the initial state, every 4th interior round and
+    the final state are checkpointed; each is released as soon
     as the next one replaces it, so only the final state's block
     belongs to the returned result (the session owner's sweep reclaims
     it)."""
@@ -1624,10 +1630,9 @@ def doremi_weights_trajectory(
     w2 = ascale * DOREMI_SMOOTH_NUM
     assert r1 == 0, "DOREMI_SMOOTH_DEN must divide ascale*(sd-sn)"
 
-    # materialize the K-row domain stats ONCE (r12, as in
-    # doremi_weights): λ_max, k_dom, and the round-0 state would
-    # otherwise each re-run the corpus pass.
-    per = _doremi_domain_stats(pool, ref, text_col, domain_col, vocab_size).localCheckpoint()
+    # the checkpointed K-row domain stats: λ_max, k_dom, and the
+    # round-0 state read them without re-running the corpus pass
+    per = _doremi_domain_stats(pool, ref, text_col, domain_col, vocab_size)
     # constant-partition window over the K-row checkpoint, as in
     # doremi_weights (r12): λ_max and k_dom in the same stage as the
     # state projection, no per-aggregate broadcast jobs

@@ -6,12 +6,11 @@ Capture :n, JSON string responses, port 8080), over the same two queries
 A stdlib ``ThreadingHTTPServer``: each request compiles the
 :n-parameterized DataFrame plan and serializes the (small, filtered)
 result through ``sources.io.to_json_records``, as the reference's
-handlers return pre-extracted JSON strings. The artist table both
-routes probe is resident on the driver (``catalog.resident``): an
-artist request runs no Spark job, and an album request runs one, the
-``supplier`` scan. This is a demo boundary, not a production server:
-one SparkSession, results and the artist table must fit the driver, no
-auth.
+handlers return pre-extracted JSON strings. The artist and album tables
+are resident on the driver (``catalog.resident``), as the reference's
+tables are held in memory: once each has been read, a request runs no
+Spark job. This is a demo boundary, not a production server: one
+SparkSession, results and both tables must fit the driver, no auth.
 
 Run: ``python -m fiat2_spark.serving [port] [sf_dir]``.
 """

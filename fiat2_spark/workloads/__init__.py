@@ -28,31 +28,31 @@ MODULES = (pipeline, stream, server, dsl, graphs, core)
 #   python tools/fingerprints.py --compare base.json
 # and seat every query it reports `changed` or `new`; seats come from
 # queries whose reachable hash held. Older baselines are in git history.
-# This window: each operator algorithm in operators/ has one
-# implementation (argmax with tie rule, membership-vote scorer, hashed
-# featurize pass, bucket log-ratio, value bucketing, term-statistics
-# skeleton, BPE merge rule), and three loops release the checkpoints
-# they supersede. With SPARK_GRAFT_CPUS=4 the tool reports 23 changed,
-# 0 new, 186 held: the queries that reach a folded twin, a released
-# loop checkpoint or the corrected tokenizer docstring. All 23 are
-# seated; the 27 other seats are held queries of the families the
-# previous window kept.
+# This window: the album route reads a resident supplier table, and the
+# DoReMi corpus pass checkpoints its own stats and releases the bigram
+# fit's checkpoints (lm_fit now hands them to its caller). With
+# SPARK_GRAFT_CPUS=4 the tool reports 7 changed, 0 new, 202 held: the
+# queries that reach album_and_artist, lm_fit or _doremi_domain_stats.
+# All 7 are seated (4 already were); the 43 other seats are held
+# queries the previous window kept, less three of its unicode/retrieval
+# rotate-ins.
 PRIORITY = (
     # (A) tool-mandated reachable-delta rotate-ins
+    "ccnet_bucket_assign", "doremi_reweight", "doremi_trajectory",
+    "lm_stupid_backoff", "perplexity_filter", "perplexity_filter_unicode",
+    "server_album_join",
+    # (B) held: tokenizers, dedup, selection, retrieval, loops, DSL,
+    # incremental, multimodal, streaming, layout, relational
     "bm25_retrieval", "bpe_encode", "bpe_encode_ids", "bpe_merges",
     "budget_select", "cjk_segment_tokens", "dedup_minhash_unicode",
-    "dedup_semantic", "doremi_trajectory", "dsir_resample", "dsir_select",
-    "hybrid_rrf_retrieval", "langid_multiscript",
-    "perplexity_filter_unicode", "pipeline_tokenize_pack",
+    "dedup_semantic", "dsir_resample", "dsir_select",
+    "hybrid_rrf_retrieval", "langid_multiscript", "pipeline_tokenize_pack",
     "quality_classifier", "text_langid", "text_langid_trigram",
-    "text_repetition", "text_unicode_pipeline", "tfidf_retrieval",
-    "unicode_corpus_tokens", "window_rownum",
-    # (B) held: loops, DSL, incremental, LM/selection, dedup,
-    # multimodal, streaming, layout, relational
-    "bfs", "dedup_clusters", "dedup_clusters_star", "doremi_reweight",
+    "text_repetition", "window_rownum",
+    "bfs", "dedup_clusters", "dedup_clusters_star",
     "incremental_groupby", "incremental_multi_index", "pagerank3",
     "tpch_q15_shape", "dsl_auto_index", "dsl_employee_join",
-    "dsl_grandchildren", "bfs_recursive_cte", "ccnet_bucket_assign",
+    "dsl_grandchildren", "bfs_recursive_cte",
     "length_bucket_batches", "bpe_pair_counts", "gopher_quality",
     "text_quality", "hard_negatives", "decontaminate_semantic",
     "dedup_embedding", "substring_dedup_apply", "kmeans_lloyd",

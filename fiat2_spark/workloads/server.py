@@ -4,11 +4,10 @@ Extracted.hs:3035-3074): artist filter by id, album⋈artist FK join.
 Artist/album stand-ins derive from nation/supplier; the JSON boundary
 (generate_json) is `sources.io.to_json_records`, unit-tested separately.
 
-The artist table is probed by key on every request, so both routes read
-it through `catalog.resident` (fiat2's index introduction): the artist
-route runs no Spark job once it is resident, and the album route scans
-only `supplier`, looking each album's artist up in a literal map instead
-of joining.
+Both routes read their tables through `catalog.resident` (fiat2's index
+introduction): once `nation` and `supplier` are resident, neither route
+runs a Spark job. The album route looks each album's artist up in a
+literal map instead of joining.
 """
 
 from __future__ import annotations
@@ -16,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from fiat2_spark.catalog import resident
-from fiat2_spark.workloads.util import registry, tbl
+from fiat2_spark.workloads.util import registry
 
 QUERIES, ORACLES, q = registry()
 
@@ -35,14 +34,16 @@ def artist_less_than(spark, sf_dir, n: int):
 
 
 def album_and_artist(spark, sf_dir, n: int):
-    """The :n-parameterized body behind GET /get_album_and_artist/:n: one
-    `supplier` scan, kept where its nation key is in a literal id → name
-    map of `artist_less_than(n)`'s rows, and named from it. Requires `nation` to hold at
-    most `catalog.RESIDENT_ROWS` rows (ValueError naming it otherwise)
-    and unique keys (Spark's duplicate-map-key error otherwise)."""
+    """The :n-parameterized body behind GET /get_album_and_artist/:n: the
+    resident `supplier` rows whose nation key is in a literal id → name
+    map of `artist_less_than(n)`'s rows, named from it. Requires `nation`
+    and `supplier` to hold at most `catalog.RESIDENT_ROWS` rows each
+    (ValueError naming it otherwise, before any Spark job) and `nation`
+    to have unique keys (Spark's duplicate-map-key error otherwise); once
+    both are resident, the result drains without a Spark job."""
+    s = resident(spark, sf_dir, "supplier")
     artists = artist_less_than(spark, sf_dir, n).collect()
     lut = F.create_map(*[F.lit(v) for row in artists for v in row]).cast("map<bigint,string>")
-    s = tbl(spark, sf_dir, "supplier")
     return s.filter(F.map_contains_key(lut, F.col("s_nationkey"))).select(
         F.col("s_suppkey").alias("album_id"),
         F.col("s_name").alias("title"),

@@ -107,8 +107,7 @@ _CHAIN = [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11)]
 def _loops(spark, sf_dir, monkeypatch):
     """(name, run, blocks left resident, check) for each iterative loop
     on a small fixed input. The blocks left resident are those its
-    result reads, plus, for doremi_weights_trajectory, the two
-    checkpoints of its bigram fit (`lm_fit`)."""
+    result reads."""
     import fiat2_spark.operators.text as TX
     from fiat2_spark.operators.dedup import (
         dup_clusters,
@@ -148,7 +147,7 @@ def _loops(spark, sf_dir, monkeypatch):
          lambda df: as_clusters(df) == clusters),
         ("doremi_weights_trajectory", lambda: TX.doremi_weights_trajectory(
             pool, ref, "doc_id", "text", "dom", rounds=5, vocab_size=16,
-        ), 1 + 2, lambda df: {r["domain"] for r in df.collect()} == {"seen", "salad"}),
+        ), 1, lambda df: {r["domain"] for r in df.collect()} == {"seen", "salad"}),
         ("bpe_learn", lambda: TX.bpe_learn(corpus, "text", 4, checkpoint_every=2), 1,
          lambda out: out[0].count() == 6 and out[1].count() == 4),
         ("lloyd_centroids", lambda: lloyd_centroids(qe, 2, 3), 1,

@@ -289,24 +289,25 @@ def test_http_serving_shim_matches_query(spark):
         srv.shutdown()
 
 
-def _resident_nation_copy(tmp_path) -> str:
-    """An sf dir holding only a copy of the smoke nation table, so the
-    resident cache meets it for the first time."""
+def _resident_copy(tmp_path, tables=("nation",)) -> str:
+    """An sf dir holding only copies of the smoke tables (nation by
+    default), so the resident cache meets them for the first time."""
     import shutil
 
-    shutil.copy(os.path.join(SF_SMOKE, "nation.parquet"), tmp_path / "nation.parquet")
+    for t in tables:
+        shutil.copy(os.path.join(SF_SMOKE, f"{t}.parquet"), tmp_path / f"{t}.parquet")
     return str(tmp_path)
 
 
-def test_resident_routes_run_0_and_1_jobs(spark):
-    """Once nation is resident, an artist request (plan, collect, JSON)
-    runs no Spark job and an album request runs one, the supplier scan."""
+def test_resident_routes_run_no_job(spark):
+    """Once nation and supplier are resident, an artist request and an
+    album request (plan, collect, JSON) each run no Spark job."""
     from fiat2_spark.catalog import resident
     from fiat2_spark.serving import _dispatch
     from tests.conftest import jobs_in_group
 
     resident(spark, SF_SMOKE, "nation")
-    tbl(spark, SF_SMOKE, "supplier")  # its schema, inferred once per context
+    resident(spark, SF_SMOKE, "supplier")
     artists, jobs = jobs_in_group(
         spark, "resident_artist_route", lambda: _dispatch(spark, SF_SMOKE, "get_artist_less_than", 10)
     )
@@ -314,7 +315,7 @@ def test_resident_routes_run_0_and_1_jobs(spark):
     albums, jobs = jobs_in_group(
         spark, "resident_album_route", lambda: _dispatch(spark, SF_SMOKE, "get_album_and_artist", 25)
     )
-    assert jobs == 1 and len(albums) == tbl(spark, SF_SMOKE, "supplier").count()
+    assert jobs == 0 and len(albums) == tbl(spark, SF_SMOKE, "supplier").count()
 
 
 def test_resident_table_rebuilds_after_rewrite(spark, tmp_path):
@@ -353,7 +354,7 @@ def test_resident_first_read_race(spark, tmp_path):
 
     from fiat2_spark.catalog import resident
 
-    sf_dir = _resident_nation_copy(tmp_path)
+    sf_dir = _resident_copy(tmp_path)
     want = [tuple(r) for r in tbl(spark, SF_SMOKE, "nation").collect()]
     scheduler = spark.sparkContext._jsc.sc().dagScheduler()
     switch = sys.getswitchinterval()
@@ -375,21 +376,30 @@ def test_resident_first_read_race(spark, tmp_path):
 
 def test_resident_refuses_table_over_resident_rows(spark, tmp_path, monkeypatch):
     """A table with more rows than RESIDENT_ROWS fails with an error that
-    names the constant, and the footer count runs before any Spark job."""
+    names the table and the constant, and the footer count runs before
+    any Spark job: nation (25 rows) read directly, and supplier (10 rows)
+    read by the album route, which reads it before nation."""
     import pytest
 
     from fiat2_spark import catalog
+    from fiat2_spark.workloads.server import album_and_artist
     from tests.conftest import jobs_in_group
 
-    sf_dir = _resident_nation_copy(tmp_path)
-    monkeypatch.setattr(catalog, "RESIDENT_ROWS", 24)
+    cases = (
+        ("nation", 24, lambda sf_dir: catalog.resident(spark, sf_dir, "nation")),
+        ("supplier", 9, lambda sf_dir: album_and_artist(spark, sf_dir, 10)),
+    )
+    for table, cap, run in cases:
+        (tmp_path / table).mkdir()
+        sf_dir = _resident_copy(tmp_path / table, ("nation", "supplier"))
+        monkeypatch.setattr(catalog, "RESIDENT_ROWS", cap)
 
-    def read():
-        with pytest.raises(ValueError, match="RESIDENT_ROWS = 24"):
-            catalog.resident(spark, sf_dir, "nation")
+        def read():
+            with pytest.raises(ValueError, match=rf"{table}\.parquet holds .*RESIDENT_ROWS = {cap}$"):
+                run(sf_dir)
 
-    _, jobs = jobs_in_group(spark, "resident_over_cap", read)
-    assert jobs == 0
+        _, jobs = jobs_in_group(spark, f"resident_over_cap_{table}", read)
+        assert jobs == 0, table
 
 
 def test_resident_routes_match_broadcast_join_plan(spark):

@@ -1166,16 +1166,18 @@ def test_translate_fixture_differential_fuzz(spark, texts, pick):
 
 
 def test_doremi_trajectory_loop_checkpoints_release(spark):
-    """doremi_weights_trajectory's loop materializes 3 checkpoints for
-    rounds=3 (domain-stats + initial state + final; interior checkpoints
-    land every 4th round) and releases each one the next replaces, so
-    only the final state stays resident beyond the LM fit's own blocks,
+    """The shared corpus pass leaves exactly its own K-row stats block
+    resident (the bigram fit's checkpoints are released once the stats
+    are materialized). doremi_weights_trajectory's loop materializes 2
+    more checkpoints for rounds=3 (initial state + final; interior
+    checkpoints land every 4th round) and releases each one the next
+    replaces, stats included, so only the final state stays resident,
     and targeted release leaves none of them resident."""
     from fiat2_spark.operators.text import (
         _doremi_domain_stats,
         doremi_weights_trajectory,
     )
-    from fiat2_spark.session import _resident, release_blocks
+    from fiat2_spark.session import _resident, block_ids, release_blocks
 
     def ckpt_ids():
         return {rid for rid, (is_block, _) in _resident(spark).items() if is_block}
@@ -1194,19 +1196,20 @@ def test_doremi_trajectory_loop_checkpoints_release(spark):
          (2, "blork flem grup snee wub", "salad")],
         "doc_id long, text string, dom string",
     )
-    _, fit_blocks = new_blocks(lambda: _doremi_domain_stats(
+    stats, stats_blocks = new_blocks(lambda: _doremi_domain_stats(
         pool, ref, "text", "dom", 16,
     ))
+    assert stats_blocks == block_ids(stats)
     rows, traj_blocks = new_blocks(lambda: {
         r["domain"]: r["weight"]
         for r in doremi_weights_trajectory(
             pool, ref, "doc_id", "text", "dom", rounds=3, vocab_size=16,
         ).collect()
     })
-    assert len(traj_blocks) - len(fit_blocks) == 1
+    assert len(traj_blocks) == 1
     assert set(rows) == {"seen", "salad"}
     assert abs(sum(rows.values()) - 1.0) < 1e-5
-    released = fit_blocks | traj_blocks
+    released = stats_blocks | traj_blocks
     release_blocks(spark, frozenset(released))
     assert not (released & ckpt_ids()), "loop blocks must release"
 

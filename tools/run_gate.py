@@ -3,11 +3,11 @@
 entry at a given sf dir and compare with its oracle_sql() via DuckDB.
 Each PASS/FAIL line ends with ``blocks=N jobs=N``. ``blocks`` counts the
 localCheckpoint block RDDs resident after the query's comparison that
-were not resident before the query. ``jobs`` counts the Spark jobs the
-query started (plan build plus the comparison's collect) under a job
-group named after the query, so two gate logs diff job counts per query.
-The closing cache-hygiene line names the query that left each block its
-sweep frees.
+were not resident before the query; the gate then releases them by id,
+so the closing cache-hygiene sweep frees none. ``jobs`` counts the Spark
+jobs the query started (plan build plus the comparison's collect) under
+a job group named after the query, so two gate logs diff job counts per
+query.
 
 Usage: python tools/run_gate.py [sf_dir] [query_name ...]
 """
@@ -17,11 +17,10 @@ from __future__ import annotations
 import os
 import sys
 import time
-from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from fiat2_spark.session import _resident, cache_entries, get_spark, release_checkpoint_blocks
+from fiat2_spark.session import _resident, cache_entries, get_spark, release_blocks, release_checkpoint_blocks
 from fiat2_spark.workloads import ORACLES, QUERIES
 from tests.oracle import compare, duck_conn
 
@@ -57,7 +56,7 @@ def main() -> None:
     #   zonemap_range_scan read layouts written once per sf under
     #   spark-warehouse/;
     # - every table's schema is inferred once per SparkContext;
-    # - the server routes read the resident nation table.
+    # - the server routes read the resident nation and supplier tables.
     from fiat2_spark.catalog import resident, table_meta
     from fiat2_spark.workloads.core import _partitioned_events, _sorted_events
 
@@ -66,8 +65,9 @@ def main() -> None:
     for f in sorted(os.listdir(sf_dir)):
         if f.endswith(".parquet"):
             table_meta(spark, os.path.join(sf_dir, f))
-    if os.path.exists(os.path.join(sf_dir, "nation.parquet")):
-        resident(spark, sf_dir, "nation")
+    for t in ("nation", "supplier"):
+        if os.path.exists(os.path.join(sf_dir, f"{t}.parquet")):
+            resident(spark, sf_dir, t)
     con = duck_conn(sf_dir)
     failures = []
     names = [n for n in sorted(QUERIES) if not only or n in only]
@@ -77,7 +77,6 @@ def main() -> None:
         """Ids of the resident localCheckpoint block RDDs."""
         return {rid for rid, (is_block, _) in _resident(spark).items() if is_block}
 
-    owner = {}  # block RDD id -> the query that left it resident
     for name in names:
         before = blocks()
         t0 = time.perf_counter()
@@ -97,7 +96,9 @@ def main() -> None:
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         jobs = len(sc.statusTracker().getJobIdsForGroup(name))
         new_blocks = blocks() - before
-        owner.update(dict.fromkeys(new_blocks, name))
+        # the query's result is consumed: free the blocks it left, so the
+        # next query starts from the same resident set in every run
+        release_blocks(spark, new_blocks)
         print(
             f"{'PASS' if ok else 'FAIL'} {name:28s} {dt:6.1f}s  {detail}  "
             f"blocks={len(new_blocks)} jobs={jobs}",
@@ -111,31 +112,26 @@ def main() -> None:
     # behind — those are pinned by Spark's CacheManager for the
     # session's life and only explicit unpersist releases them. Shared
     # intermediates ride localCheckpoint BLOCKS instead, owned by the
-    # returned results. GC/ContextCleaner reclaims some of those blocks
-    # once their results are dropped, but at no predictable time (the
-    # sweep count below varies between runs of the same code, so the
-    # line names the query that left each swept block). The gate is the
-    # session owner here, so after all results are consumed it sweeps
-    # them and the map must drain to EMPTY — any survivor would be a
-    # persist leak.
+    # returned results, and the loop above released each query's blocks
+    # by id (GC/ContextCleaner would reclaim them at no predictable
+    # time). The gate is the session owner here, so it sweeps once more,
+    # expecting to free none, and the map must drain to EMPTY — any
+    # survivor would be a persist leak.
     ckpt, cache = cache_entries(spark)
     if cache:
         print(f"FAIL cache-hygiene: {len(cache)} CacheManager entr(ies) survive the gate:", flush=True)
         for c in cache:
             print(f"  {c}", flush=True)
         failures.append("__cache_hygiene__")
-    swept_from = Counter(owner.get(rid, "(before the query loop)") for rid in blocks())
     freed = release_checkpoint_blocks(spark)
     leftover = _resident(spark)
     if leftover:
         print(f"FAIL cache-hygiene: {len(leftover)} RDD(s) resident after sweep", flush=True)
         failures.append("__cache_hygiene_sweep__")
     else:
-        owners = ", ".join(f"{q} {n}" for q, n in sorted(swept_from.items()))
         print(
             f"cache-hygiene: 0 CacheManager entries post-gate; "
-            f"{freed} checkpoint block RDD(s) swept; 0 resident"
-            + (f" (swept from: {owners})" if owners else ""),
+            f"{freed} checkpoint block RDD(s) swept; 0 resident",
             flush=True,
         )
     if not only:
